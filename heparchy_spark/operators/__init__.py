@@ -7,6 +7,7 @@ algebra genuinely can't express the semantics (SURVEY.md §2.11).
 Modules:
 - ``asof``       — as-of join (union + single window, no range explosion)
 - ``dedup``      — exact, MinHash+LSH, SimHash, n-gram Jaccard
+- ``banding``    — Hamming multi-index banding (SimHash/dHash/pHash pairs)
 - ``similarity`` — cosine top-k, hyperplane LSH, IVF index
 - ``text``       — token counts, char stats, quality, lang-id, fingerprints
 - ``multimodal`` — binary payload columns: sniff/stats/decode/frames
@@ -33,6 +34,7 @@ Modules:
 
 from heparchy_spark.operators import (  # noqa: F401
     asof,
+    banding,
     classifier,
     clustering,
     dataset,
@@ -61,6 +63,7 @@ from heparchy_spark.operators.asof import asof_join  # noqa: F401
 
 __all__ = [
     "asof",
+    "banding",
     "classifier",
     "clustering",
     "dataset",

@@ -23,14 +23,14 @@ import typing as ty
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from heparchy_spark.operators.banding import hamming_pairs
+
 __all__ = [
     "normalize_text",
     "shingles",
     "exact_dedup",
     "shingle_hash_stream",
     "hashed_shingles_df",
-    "minhash_signature",
-    "minhash_signature_from_hashes",
     "minhash_near_dup_pairs",
     "lsh_threshold_audit",
     "simhash",
@@ -99,51 +99,6 @@ def exact_dedup(
             F.min(id_col).alias("rep_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
-    )
-
-
-def minhash_signature_from_hashes(
-    h1: Column | str, h2: Column | str, num_perm: int = 64
-) -> Column:
-    """Array of num_perm minhash values from two base-hash array columns.
-
-    Broder double-hashing: permutation j minimizes ``h1 + j * h2`` (64-bit
-    wrap is fine for hash semantics).  Callers materialize h1/h2 once via a
-    select so the num_perm zip_withs read columns instead of recomputing the
-    shingle pipeline.
-    """
-    # Mask base hashes to 32 bits so h1 + j*h2 stays well inside int64 under
-    # ANSI overflow checking (j < 2^6, h2 < 2^32 -> sum < 2^39).
-    mask = F.lit((1 << 32) - 1).cast("long")
-    c1 = (F.col(h1) if isinstance(h1, str) else h1)
-    c2 = (F.col(h2) if isinstance(h2, str) else h2)
-    m1 = F.transform(c1, lambda x: x.bitwiseAND(mask))
-    m2 = F.transform(c2, lambda x: x.bitwiseAND(mask))
-
-    def perm_min(j: int) -> Column:
-        return F.array_min(
-            F.zip_with(m1, m2, lambda a, b: a + F.lit(j).cast("long") * b)
-        )
-
-    sig = F.array(*[perm_min(j) for j in range(num_perm)])
-    return F.when(F.size(c1) > 0, sig).otherwise(
-        F.array(*[F.lit(None).cast("long") for _ in range(num_perm)])
-    )
-
-
-def minhash_signature(
-    col: Column | str, num_perm: int = 64, shingle_n: int = 3
-) -> Column:
-    """Inline minhash signature over word-shingles (empty-safe).
-
-    Prefer the materialized two-step (shingles -> base hashes -> signature)
-    used by ``minhash_near_dup_pairs`` in hot paths.
-    """
-    sh = shingles(col, shingle_n)
-    return minhash_signature_from_hashes(
-        F.transform(sh, lambda s: F.xxhash64(s)),
-        F.transform(sh, lambda s: F.xxhash64(s, F.lit(1))),
-        num_perm,
     )
 
 
@@ -458,14 +413,10 @@ def minhash_near_dup_pairs(
     bands: int = 16,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.8,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate id pairs via MinHash + LSH banding + exact verification.
 
     Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
-    ``materialize`` persists the shingle stream (MEMORY_AND_DISK) for the
-    duration of the query since three consumers read it; pass False for
-    a purely lazy plan (recomputes the stream per consumer).
     """
     if num_perm % bands:
         raise ValueError(
@@ -480,25 +431,26 @@ def minhash_near_dup_pairs(
     # (one row per doc — not the fat exploded stream, whose cache write
     # costs more than its recompute): sets once, signature derived from the
     # cached sets. The same staging MLlib's LSH does.
-    sets = hashed_shingles_df(df, text_col, id_col, shingle_n)
-    banded = _band_table(sets, num_perm, bands)
-    if materialize:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        sets = sets.persist(StorageLevel.MEMORY_AND_DISK)
-        # The band table is ALSO per-doc bounded (bands rows/doc) and its
-        # vectorized signature pass is the pipeline's hottest CPU; the
-        # self-join below reads it twice — persisting computes the
-        # signature once (measured ~2x the signature CPU without it).
-        # The cache is HASH-PARTITIONED ON THE JOIN KEY first (the r10
-        # PPJoin prefix pattern): InMemoryRelation keeps the cached
-        # plan's output partitioning, so the merge self-join below reads
-        # both sides already (band, bucket)-distributed and inserts no
-        # exchange.  repartition(cols) with no explicit N stays
-        # AQE-coalescible (scale-adaptive).
-        banded = banded.repartition("band", "bucket").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+    sets = hashed_shingles_df(df, text_col, id_col, shingle_n).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    # The band table is ALSO per-doc bounded (bands rows/doc) and its
+    # vectorized signature pass is the pipeline's hottest CPU; the
+    # self-join below reads it twice — persisting computes the
+    # signature once (measured ~2x the signature CPU without it).
+    # The cache is HASH-PARTITIONED ON THE JOIN KEY first (the r10
+    # PPJoin prefix pattern): InMemoryRelation keeps the cached
+    # plan's output partitioning, so the merge self-join below reads
+    # both sides already (band, bucket)-distributed and inserts no
+    # exchange.  repartition(cols) with no explicit N stays
+    # AQE-coalescible (scale-adaptive).
+    banded = (
+        _band_table(sets, num_perm, bands)
+        .repartition("band", "bucket")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
 
     a = banded.alias("a")
     # merge demotion hint (always allowed undeclared per plan-gate
@@ -657,7 +609,6 @@ def incremental_minhash_near_dups(
     bands: int = 16,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.8,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicates of a NEW batch against an already-ingested SEEN
     corpus: (new_id, seen_id, jaccard), jaccard >= threshold — the
@@ -685,13 +636,14 @@ def incremental_minhash_near_dups(
             "the banding would silently ignore the remainder permutations "
             "while still paying to compute them"
         )
-    new_sets = hashed_shingles_df(new_df, text_col, id_col, shingle_n)
-    seen_sets = hashed_shingles_df(seen_df, text_col, id_col, shingle_n)
-    if materialize:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        new_sets = new_sets.persist(StorageLevel.MEMORY_AND_DISK)
-        seen_sets = seen_sets.persist(StorageLevel.MEMORY_AND_DISK)
+    new_sets = hashed_shingles_df(new_df, text_col, id_col, shingle_n).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    seen_sets = hashed_shingles_df(
+        seen_df, text_col, id_col, shingle_n
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     nb = _band_table(new_sets, num_perm, bands).withColumnsRenamed(
         {"__id": "new_id"}
     )
@@ -837,139 +789,45 @@ def simhash_near_dup_pairs(
     text_col: str,
     id_col: str,
     max_hamming: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-dup id pairs at Hamming distance <= max_hamming on 64-bit SimHash.
 
-    Candidate generation is multi-index banding, exact by pigeonhole,
-    with the block width chosen for the 100-TB collision floor:
+    Candidates come from the Hamming multi-index banding of
+    ``operators/banding.py`` (exact by pigeonhole), with the band width
+    chosen for the corpus size:
 
-    * ``max_hamming <= 5`` (the curation regime; default 3): TWO 32-bit
-      blocks, one side probing every key within per-block Hamming radius
-      ``max_hamming // 2`` (distribute d errors over 2 blocks: the best
-      block carries <= floor(d/2), so its probe ball contains the other
-      side's exact key).  The r9 10x rehearsal measured the narrow
-      construction's floor — 16-bit keys saturate as n approaches 2^16,
-      candidates ~n^2/2^16 per block; 32-bit keys push the random floor
-      down ~2^16x for a probe cost of C(32,<=1)=33 (d=3) or
-      C(32,<=2)=529 (d=4..5) keys per block on ONE side, linear in n.
-    * larger radii: the classic (max_hamming+1)-block exact-match
-      banding (radius-0 probe), where the ball for 2 wide blocks would
-      exceed the 16-bit saturation cost itself.
+    * wide — TWO 32-bit bands probed at radius ``max_hamming // 2``
+      (33 keys per band at the default 3, 529 at 4-5): the scale-safe
+      shape, since 16-bit keys saturate as n approaches 2^16
+      (candidates ~n^2/2^16 per band, r9 10x rehearsal).
+    * narrow — ``max_hamming + 1`` exact-match bands (radius 0, no
+      probe explode), used for larger radii, where the wide ball would
+      exceed the saturation cost itself, and below the size gate.
 
-    Both constructions return IDENTICAL pairs (recall is exact either
-    way; the popcount verify bounds distance), so the cutover is purely
-    a physical-plan choice.  The wide path additionally gates on corpus
-    size (r11, measured): its Hamming-ball probe explodes
-    2*C(32,<=radius) rows per doc (66 at the default radius 1), which
-    dominates the narrow path's collision floor until roughly
-    4n + 4n^2/2^16 = 66n  =>  n ~ 1M docs — measured narrow vs wide
-    candidates 1.26M vs 324k at sf0.1 yet wall 0.50 vs 0.73 s, and
-    2.4 vs 4.1 s at the 10x rehearsal scale (50k docs).  Below the
-    gate the narrow banding wins on wall at every measured scale;
-    above it the 16-bit saturation (~n^2/2^16 candidates) takes over
-    and the wide path's linear probe cost is the only scalable shape.
+    Both return IDENTICAL pairs, so the cutover is purely a
+    physical-plan choice.  The wide path gates on corpus size (r11,
+    measured): its probe explodes 2*C(32,<=radius) rows per doc (66 at
+    the default radius 1), which dominates the narrow path's collision
+    floor until roughly 4n + 4n^2/2^16 = 66n  =>  n ~ 1M docs —
+    measured narrow vs wide candidates 1.26M vs 324k at sf0.1 yet wall
+    0.50 vs 0.73 s, and 2.4 vs 4.1 s at the 10x rehearsal scale (50k
+    docs).  Narrow-below-gate applies only while its bands stay >= 16
+    bits wide (max_hamming <= 3); at 4-5 the (mh+1)-band keys drop to
+    12/10 bits and saturate ~100x earlier, so wide applies at any size.
     The gate errs LOW (flips to wide early) because a wrong narrow
     choice is quadratic while a wrong wide choice costs a bounded
     constant factor.
     """
-    sh = simhash_df(df, text_col, id_col).select(
-        F.col(id_col).alias("__id"), F.col("simhash64").alias("__sim")
-    )
-    if materialize:
-        from pyspark import StorageLevel
-
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    radius = max_hamming // 2
-    # narrow-below-gate only while its blocks stay >= 16 bits wide
-    # (max_hamming <= 3); at 4-5 the (mh+1)-block keys drop to 12/10
-    # bits and saturate ~100x earlier, so wide applies at any size.
-    if radius <= 2 and (
+    wide = max_hamming <= 5 and (
         max_hamming > 3 or _source_bytes(df) >= _SIMHASH_WIDE_MIN_BYTES
-    ):
-        # wide path: 2 x 32-bit blocks + Hamming-ball probe
-        from heparchy_spark.operators.multimodal import _hamming_ball_masks
-
-        mask32 = F.lit(0xFFFFFFFF).cast("long")
-        blocks = sh.select(
-            "__id",
-            "__sim",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit(0).alias("blk"),
-                        F.col("__sim").bitwiseAND(mask32).alias("blkval"),
-                    ),
-                    F.struct(
-                        F.lit(1).alias("blk"),
-                        F.shiftright("__sim", 32)
-                        .bitwiseAND(mask32)
-                        .alias("blkval"),
-                    ),
-                )
-            ).alias("bb"),
-        ).select("__id", "__sim", "bb.blk", "bb.blkval")
-        masks = _hamming_ball_masks(32, radius)
-        probe = blocks.select(
-            "__id",
-            "__sim",
-            "blk",
-            F.explode(
-                F.array(*[F.lit(m).cast("long") for m in masks])
-            ).alias("__mask"),
-            "blkval",
-        ).select(
-            "__id",
-            "__sim",
-            "blk",
-            F.col("blkval").bitwiseXOR(F.col("__mask")).alias("blkval"),
-        )
-        a, b = probe.alias("a"), blocks.alias("b")
-    else:
-        nblocks = max_hamming + 1
-        width = 64 // nblocks
-        blocks = sh.select(
-            "__id",
-            "__sim",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(k).alias("blk"),
-                            F.shiftright(F.col("__sim"), k * width)
-                            .bitwiseAND(
-                                # width=64 (max_hamming=0): (1<<64)-1 does
-                                # not fit a long literal; -1 is all-ones
-                                F.lit(-1 if width == 64 else (1 << width) - 1)
-                            )
-                            .alias("blkval"),
-                        )
-                        for k in range(nblocks)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("__id", "__sim", "bb.blk", "bb.blkval")
-        a, b = blocks.alias("a"), blocks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.blkval") == F.col("b.blkval"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            F.col("a.__sim").alias("sim_a"),
-            F.col("b.__sim").alias("sim_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
     )
-    ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return (
-        cand.withColumn("hamming", ham.cast("int"))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    return hamming_pairs(
+        simhash_df(df, text_col, id_col),
+        id_col,
+        ["simhash64"],
+        2 if wide else max_hamming + 1,
+        max_hamming,
+        pin_merge=False,
     )
 
 
@@ -978,11 +836,8 @@ def simhash_near_dup_pairs(
 # int sz per prefix token): 34 MB cache / 5.8 MB parquet at the 10x
 # rehearsal scale, ~5.9x.  Deliberately rounded UP so the narrow
 # mis-estimate band near the broadcast flip lands on the partitioned
-# (scale-safe) side.  Corpus-shape dependent (doc length / threshold),
-# hence env-overridable for deployments whose corpora differ.
-_PPJOIN_PREF_EXPANSION = float(
-    os.environ.get("HEPARCHY_PPJOIN_PREF_EXPANSION", "6.0")
-)
+# (scale-safe) side.
+_PPJOIN_PREF_EXPANSION = 6.0
 
 # Corpus-size gate for the wide (2x32-bit + Hamming-ball probe) SimHash
 # banding: ~64 MB of document parquet ~ 550k docs at the measured
@@ -990,27 +845,32 @@ _PPJOIN_PREF_EXPANSION = float(
 # flip to the scale-safe wide construction happens early (a wrong
 # narrow choice is quadratic in n; a wrong wide choice costs a bounded
 # ~2x constant).  See simhash_near_dup_pairs for the derivation.
-_SIMHASH_WIDE_MIN_BYTES = int(
-    os.environ.get("HEPARCHY_SIMHASH_WIDE_MIN_BYTES", str(64 * 1024 * 1024))
-)
+_SIMHASH_WIDE_MIN_BYTES = 64 * 1024 * 1024
+
+# _source_bytes of a frame whose files cannot be sized from the driver
+# (remote URIs, unreadable files): above every size gate, so each gate
+# falls to its scale-safe branch.
+_UNSIZED_BYTES = 1 << 62
 
 
 def _source_bytes(df: DataFrame) -> int:
     """Total bytes of the frame's source files — driver-side file
-    metadata only, no Spark job.  0 when the frame has no file source
-    (in-memory test frames), which callers treat as the small regime."""
-    try:
-        total = 0
-        for f in df.inputFiles():
-            p = f
-            if p.startswith("file:"):
-                p = p[5:]
-                while p.startswith("//"):
-                    p = p[1:]
-            total += os.path.getsize(p)
-        return total
-    except Exception:
-        return 0
+    metadata only, no Spark job.  0 when the frame has no input files
+    (in-memory frames: the small regime); ``_UNSIZED_BYTES`` when any
+    file is not a readable local file (s3a/hdfs/... or missing), so an
+    unsized source never picks a small-regime plan."""
+    from urllib.parse import unquote, urlparse
+
+    total = 0
+    for f in df.inputFiles():
+        uri = urlparse(f)
+        if uri.scheme not in ("", "file"):
+            return _UNSIZED_BYTES
+        try:
+            total += os.path.getsize(unquote(uri.path))
+        except OSError:
+            return _UNSIZED_BYTES
+    return total
 
 
 def ngram_jaccard_pairs(
@@ -1020,7 +880,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     prefix_tokens: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs above threshold.
 
@@ -1049,16 +908,14 @@ def ngram_jaccard_pairs(
     775k (6.1x), which is 6.1x fewer doc-sized shingle arrays through
     the verification joins — the dominant shuffle of the old plan.
     """
-    from pyspark.sql import Window
+    from pyspark import StorageLevel
 
     # hashed_shingles_df ends in an aggregation whose input exchange is
     # shared (ReusedExchange) by all three consumers below; __shh is in
     # canonical sorted-hash order, so prefixes are slices.
-    base = hashed_shingles_df(df, text_col, id_col, n)
-    if materialize:
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    base = hashed_shingles_df(df, text_col, id_col, n).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     t = float(threshold)
     if prefix_tokens is None:
         # document frequency per shingle: one combinable aggregate over
@@ -1080,57 +937,54 @@ def ngram_jaccard_pairs(
             - F.ceil(F.col("sz") * F.lit(t)).cast("int")
             + F.lit(1)
         ).select("__id", "tok", "rk", "sz")
-        if materialize:
-            from pyspark import StorageLevel
-
-            # The prefix table is per-doc bounded (~(1-t)|S| rows/doc)
-            # and its df-aggregate + rank window is the exact path's
-            # hottest subtree; the self-join below re-runs it per side
-            # (a Window above a reused exchange re-runs, and the
-            # broadcast-built side reuses nothing).  Persist computes
-            # the ranking once — the minhash band-table pattern.
-            #
-            # Whether the cache is HASH-PARTITIONED ON THE JOIN KEY
-            # first follows the planner's own broadcast decision for
-            # the candidate self-join (r10 verdict item 2):
-            # * SMJ regime (prefix table above the broadcast
-            #   threshold): InMemoryRelation keeps the cached plan's
-            #   output partitioning, so BOTH join sides read the cache
-            #   already tok-distributed and insert no exchange (10x
-            #   interleaved A/B: shuffle write 394 MB unpartitioned vs
-            #   84-131 MB tok-partitioned per full query).  Prefixes
-            #   hold each set's RAREST tokens by construction, so the
-            #   tok hash key has no hot keys to skew.  repartition(col)
-            #   with no explicit N stays AQE-coalescible
-            #   (scale-adaptive, not pinned to the local core count).
-            # * broadcast regime: the join never uses the cache's
-            #   partitioning, so the pre-cache exchange is pure loss —
-            #   measured 2.29 s -> 1.06 s per call at sf0.1 (it also
-            #   defeats AQE coalescing of the tiny cached exchange).
-            # The regime is decided the same way the planner will size
-            # the join side — estimated in-memory prefix bytes vs
-            # autoBroadcastJoinThreshold — WITHOUT running a job:
-            # source parquet bytes (driver-side file metadata) times a
-            # measured text->prefix-cache expansion factor.  An eager
-            # exact count was measured and rejected: collecting it
-            # pre-materializes the sets cache, which costs ~1 s of
-            # serial toy-scale wall AND flips every downstream join's
-            # size estimate from scan-derived (grows with input, so the
-            # planner's broadcasts stay bounded near the 10 MB flip) to
-            # actual cache bytes (pure SMJ: measured 472 MB vs 84-131
-            # MB shuffle write at 10x for identical output).
-            in_bytes = _source_bytes(df)
-            bcast_thr = int(
-                df.sparkSession._jsparkSession.sessionState()
-                .conf()
-                .autoBroadcastJoinThreshold()
+        # The prefix table is per-doc bounded (~(1-t)|S| rows/doc)
+        # and its df-aggregate + rank window is the exact path's
+        # hottest subtree; the self-join below re-runs it per side
+        # (a Window above a reused exchange re-runs, and the
+        # broadcast-built side reuses nothing).  Persist computes
+        # the ranking once — the minhash band-table pattern.
+        #
+        # Whether the cache is HASH-PARTITIONED ON THE JOIN KEY
+        # first follows the planner's own broadcast decision for
+        # the candidate self-join (r10 verdict item 2):
+        # * SMJ regime (prefix table above the broadcast
+        #   threshold): InMemoryRelation keeps the cached plan's
+        #   output partitioning, so BOTH join sides read the cache
+        #   already tok-distributed and insert no exchange (10x
+        #   interleaved A/B: shuffle write 394 MB unpartitioned vs
+        #   84-131 MB tok-partitioned per full query).  Prefixes
+        #   hold each set's RAREST tokens by construction, so the
+        #   tok hash key has no hot keys to skew.  repartition(col)
+        #   with no explicit N stays AQE-coalescible
+        #   (scale-adaptive, not pinned to the local core count).
+        # * broadcast regime: the join never uses the cache's
+        #   partitioning, so the pre-cache exchange is pure loss —
+        #   measured 2.29 s -> 1.06 s per call at sf0.1 (it also
+        #   defeats AQE coalescing of the tiny cached exchange).
+        # The regime is decided the same way the planner will size
+        # the join side — estimated in-memory prefix bytes vs
+        # autoBroadcastJoinThreshold — WITHOUT running a job:
+        # source parquet bytes (driver-side file metadata) times a
+        # measured text->prefix-cache expansion factor.  An eager
+        # exact count was measured and rejected: collecting it
+        # pre-materializes the sets cache, which costs ~1 s of
+        # serial toy-scale wall AND flips every downstream join's
+        # size estimate from scan-derived (grows with input, so the
+        # planner's broadcasts stay bounded near the 10 MB flip) to
+        # actual cache bytes (pure SMJ: measured 472 MB vs 84-131
+        # MB shuffle write at 10x for identical output).
+        in_bytes = _source_bytes(df)
+        bcast_thr = int(
+            df.sparkSession._jsparkSession.sessionState()
+            .conf()
+            .autoBroadcastJoinThreshold()
+        )
+        if bcast_thr >= 0 and in_bytes * _PPJOIN_PREF_EXPANSION <= bcast_thr:
+            pref = pref.persist(StorageLevel.MEMORY_AND_DISK)
+        else:
+            pref = pref.repartition("tok").persist(
+                StorageLevel.MEMORY_AND_DISK
             )
-            if bcast_thr >= 0 and in_bytes * _PPJOIN_PREF_EXPANSION <= bcast_thr:
-                pref = pref.persist(StorageLevel.MEMORY_AND_DISK)
-            else:
-                pref = pref.repartition("tok").persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
         a, b = pref.alias("a"), pref.alias("b")
         length_ok = (
             F.col("b.sz") >= F.floor(F.lit(t) * F.col("a.sz"))

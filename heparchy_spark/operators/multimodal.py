@@ -32,6 +32,8 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame, Window
 
+from heparchy_spark.operators.banding import hamming_pairs
+
 __all__ = [
     "MEDIA_SCHEMA",
     "MEDIA_META_SCHEMA",
@@ -940,7 +942,7 @@ def _dhash128(arr: "np.ndarray") -> tuple[int, int]:
     bits 0..63 -> ``lo`` word, 64..127 -> ``hi``.  Twice the code
     width is the scale lever: 128 bits band into four 32-bit keys
     whose random collision floor is ~2^16x lower than the 64-bit
-    code's 16-bit bands (see :func:`_neardup_pairs128`).  Pure integer
+    code's 16-bit bands (see ``operators/banding.py``).  Pure integer
     pipeline — deterministic everywhere."""
     h, w = arr.shape[0], arr.shape[1]
     gray = arr.astype("uint32").sum(axis=2) // arr.shape[2]
@@ -1185,167 +1187,26 @@ def image_phash128(
     return df.select(id_col, payload_col).mapInPandas(run, schema=schema)
 
 
-def _neardup_pairs128(
-    hashes: DataFrame,
-    lo_col: str,
-    hi_col: str,
-    max_hamming: int,
-    fn_name: str,
-) -> DataFrame:
-    """Shared 128-bit wide-band near-dup pairing: (id_a, id_b, hamming)
-    within ``max_hamming`` bits, multi-index banding with four 32-BIT
-    bands (word halves of the ``lo_col``/``hi_col`` code) and per-band
-    Hamming-ball probing at radius ``max_hamming // 4`` — recall EXACT
-    by pigeonhole (a pair at distance d puts <= floor(d/4) differing
-    bits in its best band).
-
-    Why 32-bit bands: the r9 10x rehearsal measured the 64-bit/
-    16-bit-band pairing's candidate floor at ~n^2/120 (shuffle exp
-    1.94) — 16-bit keys saturate as n approaches 2^16.  At 32-bit bands
-    the random floor is ~4 * C(32,<=r)/2^32 (~5e-7 at radius 2): the
-    same corpus would need n ~ 10^5x larger to reach the same candidate
-    rate.  The cost moves to the probe expansion — C(32,<=2) = 529 keys
-    per band per code on ONE side, linear in n — the right trade at
-    scale.  Radius >= 3 (5489 keys, >20x the 16-bit ball) is refused:
-    split wider codes instead.
-    """
-    return _neardup_pairs128_banded(
-        hashes, lo_col, hi_col, max_hamming, 32, fn_name
-    )
-
-
-def _neardup_pairs128_banded(
-    hashes: DataFrame,
-    lo_col: str,
-    hi_col: str,
-    max_hamming: int,
-    band_bits: int,
-    fn_name: str,
-) -> DataFrame:
-    """The banded construction at an explicit band width — 32 is the
-    production path; 16 exists for the band-saturation calibration pair
-    (``multimodal_phash128_uniform*``), measuring exactly what key
-    width buys at the same radius guarantee."""
-    n_bands = 128 // band_bits
-    radius = max_hamming // n_bands
-    if n_bands * (radius + 1) <= max_hamming:  # pragma: no cover
-        raise ValueError(f"{fn_name}: pigeonhole violated")
-    if len(_hamming_ball_masks(band_bits, radius)) > 5000:
-        raise ValueError(
-            f"{fn_name}: max_hamming {max_hamming} needs per-band "
-            f"probe radius {radius} (> 5000 keys per band); "
-            "use a wider code / more bands instead"
-        )
-    from pyspark import StorageLevel
-
-    # decode ONCE: the code words are ~32 bytes/image, so the persisted
-    # frame is tiny next to the decode it amortizes (the banded self-join
-    # reads the hash frame from both sides — unpersisted, each side
-    # would re-run the full image-decode mapInPandas)
-    h = (
-        hashes.where(F.col("decodable"))
-        .select(
-            "media_id",
-            F.col(lo_col).alias("__lo"),
-            F.col(hi_col).alias("__hi"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    bmask = F.lit((1 << band_bits) - 1).cast("long")
-    per_word = 64 // band_bits
-    band_keys = [
-        F.shiftright(
-            ["__lo", "__hi"][b // per_word], (b % per_word) * band_bits
-        ).bitwiseAND(bmask)
-        for b in range(n_bands)
-    ]
-    # one explode, not an n_bands-way union: a union re-scans the hash
-    # frame once per band
-    bands = h.select(
-        "media_id",
-        "__lo",
-        "__hi",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), key.alias("bkey")
-                    )
-                    for b, key in enumerate(band_keys)
-                ]
-            )
-        ).alias("__bb"),
-    ).select("media_id", "__lo", "__hi", "__bb.band", "__bb.bkey")
-    masks = _hamming_ball_masks(band_bits, radius)
-    probe = bands.select(
-        "media_id",
-        "__lo",
-        "__hi",
-        "band",
-        F.explode(F.array(*[F.lit(m).cast("long") for m in masks])).alias(
-            "__mask"
-        ),
-        "bkey",
-    ).select(
-        "media_id",
-        "__lo",
-        "__hi",
-        "band",
-        F.col("bkey").bitwiseXOR(F.col("__mask")).alias("bkey"),
-    )
-    # merge hint: Catalyst's size estimate for the probe side descends
-    # from the column-pruned doc-id scan (~8 bytes/row), NOT the
-    # exploded row count, so the planner happily BROADCASTS the probe —
-    # measured at 10x as a 26M-row broadcast build repeated per task
-    # (2781 s executor time vs 4 s at 1x), and a guaranteed driver OOM
-    # at 100x.  A shuffled sort-merge join on the (band, bkey) key is
-    # linear, spillable, and AQE-skew-splittable at any corpus size.
-    a, b = probe.alias("a"), bands.hint("merge").alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-            F.col("a.__lo").alias("la"),
-            F.col("a.__hi").alias("ha"),
-            F.col("b.__lo").alias("lb"),
-            F.col("b.__hi").alias("hb"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(
-        F.col("la").bitwiseXOR(F.col("lb"))
-    ) + F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return (
-        cand.select("id_a", "id_b", hamming.alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-    )
-
-
 def phash128_neardup_pairs(
     hashes: DataFrame,
     max_hamming: int = 10,
     band_bits: int = 32,
 ) -> DataFrame:
-    """Near-duplicate pairs over 128-bit perceptual hashes: the shared
-    wide-band construction (:func:`_neardup_pairs128`) on the
-    ``phash_lo``/``phash_hi`` code words.  ``band_bits`` defaults to the
-    32-bit production path; 16 keeps the same pigeonhole recall
-    guarantee (8 bands, per-band radius ``max_hamming // 8``) and exists
-    for the band-saturation calibration twin
-    (``multimodal_phash128_uniform16_neardups``)."""
-    return _neardup_pairs128_banded(
-        hashes,
-        "phash_lo",
-        "phash_hi",
+    """Near-duplicate pairs over 128-bit perceptual hashes
+    (:func:`image_phash128`): the Hamming multi-index banding of
+    ``operators/banding.py`` on the ``phash_lo``/``phash_hi`` code words,
+    ``128 // band_bits`` bands probed at radius ``max_hamming //
+    n_bands``.  ``band_bits`` defaults to the 32-bit production path; 16
+    keeps the same pigeonhole recall guarantee (8 bands, radius
+    ``max_hamming // 8``) and exists for the band-saturation calibration
+    twin (``multimodal_phash128_uniform16_neardups``)."""
+    return hamming_pairs(
+        hashes.where(F.col("decodable")),
+        "media_id",
+        ["phash_lo", "phash_hi"],
+        128 // band_bits,
         max_hamming,
-        band_bits,
-        "phash128_neardup_pairs",
+        pin_merge=True,
     )
 
 
@@ -1354,12 +1215,18 @@ def dhash128_neardup_pairs(
     max_hamming: int = 10,
 ) -> DataFrame:
     """Near-duplicate pairs over 128-bit difference hashes
-    (:func:`image_dhash128`): the shared 32-bit wide-band construction
-    on the ``dhash_lo``/``dhash_hi`` code words — the measured scale fix
-    (r9 10x rehearsal: 64-bit/16-bit-band pairing wall exp 1.38 from
-    band-key saturation; the 32-bit-band path measured 1.10)."""
-    return _neardup_pairs128(
-        hashes, "dhash_lo", "dhash_hi", max_hamming, "dhash128_neardup_pairs"
+    (:func:`image_dhash128`): four 32-bit bands of the
+    ``dhash_lo``/``dhash_hi`` code words through ``operators/banding.py``
+    — the measured scale fix (r9 10x rehearsal: 64-bit/16-bit-band
+    pairing wall exp 1.38 from band-key saturation; the 32-bit-band path
+    measured 1.10)."""
+    return hamming_pairs(
+        hashes.where(F.col("decodable")),
+        "media_id",
+        ["dhash_lo", "dhash_hi"],
+        4,
+        max_hamming,
+        pin_merge=True,
     )
 
 
@@ -1370,8 +1237,9 @@ def image_phash(
 ) -> DataFrame:
     """DCT perceptual hash per image: (id, phash, decodable) — the
     frequency-domain companion to :func:`image_dhash` (same decode,
-    same output contract, same downstream banded pairing via
-    :func:`dhash_neardup_pairs` with ``hash_col="phash"``).  Pure
+    same output contract, same downstream banded pairing of
+    ``operators/banding.py`` via :func:`dhash_neardup_pairs` with
+    ``hash_col="phash"``).  Pure
     Arrow-batched ``mapInPandas`` projection — zero shuffles."""
     schema = T.StructType(
         [
@@ -1403,123 +1271,30 @@ def image_phash(
     return df.select(id_col, payload_col).mapInPandas(run, schema=schema)
 
 
-def _hamming_ball_masks(width: int, radius: int) -> list[int]:
-    """All XOR masks of ``width`` bits with popcount <= ``radius``
-    (the Hamming ball around 0) — sum_{k<=r} C(width, k) masks."""
-    import itertools
-
-    masks = [0]
-    for k in range(1, radius + 1):
-        for bits in itertools.combinations(range(width), k):
-            m = 0
-            for i in bits:
-                m |= 1 << i
-            masks.append(m)
-    return masks
-
-
 def dhash_neardup_pairs(
     hashes: DataFrame,
     max_hamming: int = 10,
     hash_col: str = "dhash",
 ) -> DataFrame:
-    """Near-duplicate image pairs from dHash codes: (id_a, id_b,
-    hamming) for every decodable pair within ``max_hamming`` bits.
+    """Near-duplicate image pairs from 64-bit dHash (or pHash, via
+    ``hash_col``) codes: (id_a, id_b, hamming) for every decodable pair
+    within ``max_hamming`` bits.
 
-    Multi-index hashing (Norouzi, Punjani & Fleet 2012), not all-pairs:
-    the 64-bit code splits into four 16-bit bands, and one join side
-    additionally PROBES every band key within per-band radius
-    ``r = max_hamming // 4`` (XOR against the precomputed Hamming-ball
-    mask set).  Recall is EXACT by pigeonhole: a pair at distance
-    ``d <= max_hamming`` puts at most ``floor(d/4) <= r`` differing
-    bits in its best band, so that band's probe set contains the exact
-    key of the other side.  (Plain exact-match banding — r = 0 — is
-    only exact for d <= 3; see the r6→r7 fix.)  Only candidates pay
-    the popcount verify, and band keys stay 16 bits wide (65536
-    buckets), so bucket occupancy — the 100 TB skew concern — is
-    unchanged from the simhash/minhash banding in operators/dedup.py.
-
-    Cost dial: the probe expansion is sum_{k<=r} C(16, k) rows per
-    band per code on ONE side (r=2 at the default radius 10 → 137x),
-    linear in corpus size, never quadratic.  ``max_hamming`` > 19
-    (r >= 5, >6885x expansion) is refused — add bands instead.
+    Four 16-bit bands through the Hamming multi-index banding of
+    ``operators/banding.py``: one side probes every band key within
+    per-band radius ``max_hamming // 4``, so recall is EXACT by
+    pigeonhole at any radius (plain exact-match banding is only exact
+    for d <= 3), and only candidates pay the popcount verify.  The probe costs sum_{k<=r} C(16, k) rows per band per code
+    on ONE side (137x at the default radius 2), linear in corpus size;
+    ``max_hamming`` >= 20 (radius 5, 6885 keys) is refused — add bands.
     """
-    radius = max_hamming // 4
-    if radius >= 5:
-        raise ValueError(
-            "dhash_neardup_pairs: max_hamming >= 20 needs per-band probe"
-            f" radius {radius} (> 6885x key expansion); split the code"
-            " into more bands instead"
-        )
-    from pyspark import StorageLevel
-
-    # decode once (see _neardup_pairs128_banded: both join sides read
-    # the hash frame, and the persisted code words are ~16 bytes/image)
-    h = (
-        hashes.where(F.col("decodable"))
-        .select("media_id", F.col(hash_col).alias("dhash"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    bands = h.select(
+    return hamming_pairs(
+        hashes.where(F.col("decodable")),
         "media_id",
-        "dhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("dhash", b * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("bkey"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("__bb"),
-    ).select("media_id", "dhash", "__bb.band", "__bb.bkey")
-    masks = _hamming_ball_masks(16, radius)
-    probe = bands.select(
-        F.col("media_id"),
-        F.col("dhash"),
-        F.col("band"),
-        F.explode(
-            F.array(*[F.lit(m) for m in masks])
-        ).alias("__mask"),
-        F.col("bkey"),
-    ).select(
-        "media_id",
-        "dhash",
-        "band",
-        F.col("bkey").bitwiseXOR(F.col("__mask")).alias("bkey"),
-    )
-    # merge hint: the planner's size estimate descends from the pruned
-    # doc-id scan and would broadcast the exploded probe side — see the
-    # measured 10x blow-up note in _neardup_pairs128_banded
-    a, b = probe.alias("a"), bands.hint("merge").alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-            F.col("a.dhash").alias("ha"),
-            F.col("b.dhash").alias("hb"),
-        )
-        .distinct()
-    )
-    return (
-        cand.select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).alias(
-                "hamming"
-            ),
-        )
-        .where(F.col("hamming") <= max_hamming)
+        [hash_col],
+        4,
+        max_hamming,
+        pin_merge=True,
     )
 
 

@@ -64,3 +64,43 @@ def test_simhash_regimes_identical(spark, monkeypatch):
     spark.catalog.clearCache()
     assert small == wide
     assert small
+
+
+def test_unsized_sources_take_scale_safe_branches(spark, monkeypatch):
+    """A remote (s3a) or unreadable input list must size as unknown,
+    which selects the scale-safe branch of both gates; only a frame with
+    no input files sizes to 0 (the small regime)."""
+    docs = _docs(spark)
+    assert dedup._source_bytes(docs) == 0
+    small = _rows(
+        dedup.simhash_near_dup_pairs(docs, "text", "doc_id", max_hamming=3),
+        ["id_a", "id_b", "hamming"],
+    )
+    spark.catalog.clearCache()
+
+    bands = []
+    real = dedup.hamming_pairs
+    monkeypatch.setattr(
+        dedup,
+        "hamming_pairs",
+        lambda codes, id_col, words, n_bands, *a, **k: bands.append(n_bands)
+        or real(codes, id_col, words, n_bands, *a, **k),
+    )
+    remote = _docs(spark)
+    monkeypatch.setattr(
+        remote, "inputFiles", lambda: ["s3a://corpus/documents/part-0.parquet"]
+    )
+    assert dedup._source_bytes(remote) >= dedup._SIMHASH_WIDE_MIN_BYTES
+    wide = _rows(
+        dedup.simhash_near_dup_pairs(remote, "text", "doc_id", max_hamming=3),
+        ["id_a", "id_b", "hamming"],
+    )
+    spark.catalog.clearCache()
+    assert bands == [2]  # the wide 2x32 banding
+    assert wide == small
+
+    missing = _docs(spark)
+    monkeypatch.setattr(
+        missing, "inputFiles", lambda: ["file:///nonexistent/part-0.parquet"]
+    )
+    assert dedup._source_bytes(missing) >= dedup._SIMHASH_WIDE_MIN_BYTES

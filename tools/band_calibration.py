@@ -34,77 +34,27 @@ import pyspark.sql.functions as F  # noqa: E402
 
 def candidate_count(spark, sf_dir: str, band_bits: int, max_hamming: int = 10) -> int:
     """Distinct (a, b) candidate pairs of the banded join at the given
-    band width — the pairing construction of
-    ``operators.multimodal._neardup_pairs128_banded`` up to (but not
-    including) the popcount verify."""
-    from heparchy_spark.operators.multimodal import (
-        _hamming_ball_masks,
-        image_phash128,
-    )
+    band width — ``operators.banding.hamming_candidates`` as
+    ``phash128_neardup_pairs`` calls it, before the popcount verify."""
+    from heparchy_spark.operators.banding import hamming_candidates
+    from heparchy_spark.operators.multimodal import image_phash128
     from heparchy_spark.queries.multimodal import (
         _real_png_media_df,
         _uniform_fixture_pixels,
     )
 
-    h = (
-        image_phash128(_real_png_media_df(spark, sf_dir, _uniform_fixture_pixels))
-        .where(F.col("decodable"))
-        .select(
-            "media_id",
-            F.col("phash_lo").alias("lo"),
-            F.col("phash_hi").alias("hi"),
-        )
-        .persist()
-    )
-    n_bands = 128 // band_bits
-    bmask = F.lit((1 << band_bits) - 1).cast("long")
-    per_word = 64 // band_bits
-    keys = [
-        F.shiftright(
-            ["lo", "hi"][b // per_word], (b % per_word) * band_bits
-        ).bitwiseAND(bmask)
-        for b in range(n_bands)
-    ]
-    bands = h.select(
+    h = image_phash128(
+        _real_png_media_df(spark, sf_dir, _uniform_fixture_pixels)
+    ).where(F.col("decodable"))
+    n = hamming_candidates(
+        h,
         "media_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), k.alias("bkey"))
-                    for b, k in enumerate(keys)
-                ]
-            )
-        ).alias("bb"),
-    ).select("media_id", "bb.band", "bb.bkey")
-    radius = max_hamming // n_bands
-    masks = _hamming_ball_masks(band_bits, radius)
-    probe = bands.select(
-        "media_id",
-        "band",
-        F.explode(
-            F.array(*[F.lit(m).cast("long") for m in masks])
-        ).alias("m"),
-        "bkey",
-    ).select(
-        "media_id",
-        "band",
-        F.col("bkey").bitwiseXOR(F.col("m")).alias("bkey"),
-    )
-    n = (
-        probe.alias("a")
-        .join(
-            bands.hint("merge").alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("x"), F.col("b.media_id").alias("y")
-        )
-        .distinct()
-        .count()
-    )
-    h.unpersist()
+        ["phash_lo", "phash_hi"],
+        128 // band_bits,
+        max_hamming,
+        pin_merge=True,
+    ).count()
+    spark.catalog.clearCache()
     return n
 
 
