@@ -9,11 +9,11 @@ small files dominate scan cost (footer reads + task scheduling overwhelm
 actual IO).  Compaction rewrites each ``(process, chunk_id)`` partition
 into ``files_per_partition`` files without changing a single row.
 
-The rewrite stages to a sibling temp directory and swaps via rename, so a
-reader never observes a half-compacted table locally; on an object store
-the swap would be a manifest flip (table formats do this transactionally —
-plain Parquet has no atomic multi-file commit, same caveat as the
-streaming sidecar).
+The rewrite stages to a sibling temp directory, carries the table's schema
+sidecar into it, and swaps via rename, so a reader never observes a
+half-compacted table locally; on an object store the swap would be a
+manifest flip (table formats do this transactionally — plain Parquet has
+no atomic multi-file commit, same caveat as the streaming sidecar).
 """
 
 from __future__ import annotations
@@ -107,13 +107,17 @@ def compact_table(
         writer = writer.partitionBy(*cols)
     writer.parquet(str(tmp))
 
-    rows_after = spark.read.parquet(str(tmp)).count()
+    # an all-empty table writes no data file: count with the known schema
+    rows_after = spark.read.schema(df.schema).parquet(str(tmp)).count()
     if rows_after != rows_before:
         shutil.rmtree(tmp)
         raise RuntimeError(
             f"compaction row mismatch for {name}: "
             f"{rows_before} -> {rows_after}; aborted, original untouched"
         )
+    sidecar = store_mod.schema_sidecar_path(root, name)
+    if sidecar.exists():  # the swap must not drop the table's schema
+        shutil.copy2(sidecar, tmp / sidecar.name)
     shutil.rmtree(path)
     tmp.rename(path)
     return {

@@ -8,13 +8,14 @@ Mirrors the reference API (``/root/reference/heparchy/read/hdf.py``):
 - ``reader[name]`` opens a process and eagerly caches its metadata row
   (``read/hdf.py:437`` — P6),
 - ``len(proc)`` is metadata-only, no scan (``:444-445`` — P5),
-- ``proc[n]`` is a partition-pruned point lookup: the filter
-  ``chunk_id == n // evts_per_chunk`` reaches the Parquet scan as partition
-  pruning, the Spark analog of the reference's O(1) key arithmetic
-  (``:454-466`` — P3),
-- column properties are lazy-per-column (``:262-316``): each access selects
-  exactly one column group, so Parquet column pruning does what the
-  reference's per-dataset reads do,
+- ``proc[n]`` is a point lookup by key arithmetic, as the reference's
+  (``:454-466`` — P3): ``chunk_id = n // evts_per_chunk`` names one chunk
+  directory, and Arrow reads the event's rows from its files with an
+  ``event_id`` filter that row-group stats prune — no Spark job
+  (``store.read_event``); ``evt.df`` is the same lookup as a
+  partition-pruned DataFrame,
+- column properties are lazy-per-column (``:262-316``): each access reads
+  exactly one column group, as the reference's per-dataset reads do,
 - iteration order is unspecified, like the reference's native B-tree order
   (``:419-428``); ``proc.event_ids()`` gives numeric order explicitly,
 - mutation via any mapping raises ``ReadOnlyError`` (``:49-53,140-144``).
@@ -34,6 +35,7 @@ from collections.abc import Mapping
 from pathlib import Path
 
 import numpy as np
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -45,6 +47,17 @@ __all__ = ["MapReader", "HepEventReader", "HepProcessReader", "HepReader"]
 PMU_DTYPE = np.dtype([("x", "<f8"), ("y", "<f8"), ("z", "<f8"), ("e", "<f8")])
 COLOR_DTYPE = np.dtype([("color", "<i4"), ("anticolor", "<i4")])
 EDGE_DTYPE = np.dtype([("src", "<i4"), ("dst", "<i4")])
+
+
+def _records(tbl: pa.Table) -> list[dict]:
+    """Rows as dicts with map columns as dicts, as ``Row.asDict`` has them."""
+    maps = [f.name for f in tbl.schema if pa.types.is_map(f.type)]
+    rows = tbl.to_pylist()
+    for r in rows:
+        for m in maps:
+            if r[m] is not None:
+                r[m] = dict(r[m])
+    return rows
 
 
 class MapReader(Mapping):
@@ -111,15 +124,23 @@ class HepEventReader:
 
     def _meta(self) -> dict:
         if self._evt_meta is None:
-            rows = (
-                self._proc.events.where(F.col("event_id") == self._event_id)
-                .limit(1)
-                .collect()
-            )
+            rows = _records(self._rows("events"))
             if not rows:
                 raise KeyError(f"event {self._event_id} not found")
-            self._evt_meta = rows[0].asDict()
+            self._evt_meta = rows[0]
         return self._evt_meta
+
+    def _rows(self, table: str, columns: list[str] | None = None) -> pa.Table:
+        """This event's rows of ``table``, read by Arrow from its one chunk
+        directory — no Spark job (``read/hdf.py:454-466``)."""
+        return store_mod.read_event(
+            self._proc._file.path,
+            table,
+            self._proc.key,
+            self._chunk_id,
+            self._event_id,
+            columns,
+        )
 
     # -- pruned single-event DataFrame ------------------------------------
     @property
@@ -134,13 +155,9 @@ class HepEventReader:
     def _fetch(self, cols: list[str]) -> dict[str, np.ndarray]:
         missing = [c for c in cols if c not in self._cache]
         if missing:
-            pdf = (
-                self.df.select("pcl_idx", *missing)
-                .sort("pcl_idx")
-                .toPandas()
-            )
+            tbl = self._rows("particles", ["pcl_idx", *missing]).sort_by("pcl_idx")
             for c in missing:
-                self._cache[c] = pdf[c].to_numpy()
+                self._cache[c] = tbl[c].to_numpy()
         return {c: self._cache[c] for c in cols}
 
     # -- column properties, lazy per access (read/hdf.py:262-316) ---------
@@ -172,34 +189,18 @@ class HepEventReader:
         out["anticolor"] = d["anticolor"].astype("int32")
         return out
 
-    def _edges_df(self) -> DataFrame:
-        return self._proc.edges.where(
-            (F.col("chunk_id") == self._chunk_id)
-            & (F.col("event_id") == self._event_id)
-        )
-
     @property
     def edges(self) -> np.ndarray:
-        pdf = (
-            self._edges_df()
-            .select("edge_idx", "src", "dst")
-            .sort("edge_idx")
-            .toPandas()
-        )
-        out = np.empty(len(pdf), dtype=EDGE_DTYPE)
-        out["src"] = pdf["src"].to_numpy().astype("int32")
-        out["dst"] = pdf["dst"].to_numpy().astype("int32")
+        tbl = self._rows("edges", ["edge_idx", "src", "dst"]).sort_by("edge_idx")
+        out = np.empty(tbl.num_rows, dtype=EDGE_DTYPE)
+        out["src"] = tbl["src"].to_numpy().astype("int32")
+        out["dst"] = tbl["dst"].to_numpy().astype("int32")
         return out
 
     @property
     def edge_weights(self) -> np.ndarray:
-        pdf = (
-            self._edges_df()
-            .select("edge_idx", "weight")
-            .sort("edge_idx")
-            .toPandas()
-        )
-        return pdf["weight"].to_numpy().astype("float64")
+        tbl = self._rows("edges", ["edge_idx", "weight"]).sort_by("edge_idx")
+        return tbl["weight"].to_numpy().astype("float64")
 
     # -- masks / custom / meta mappings ------------------------------------
     @property
@@ -272,19 +273,16 @@ class HepEventReader:
 
 class HepProcessReader:
     """Process handle (``read/hdf.py:364-501``): metadata cached eagerly on
-    open; events via point lookup, iteration, or the Spark DataFrames."""
+    open (an Arrow read of the ``processes`` row); events via point lookup,
+    iteration, or the Spark DataFrames."""
 
     def __init__(self, file_obj: "HepReader", key: str) -> None:
         self._file = file_obj
         self.key = key
-        rows = (
-            store_mod.read_table(file_obj.spark, file_obj.path, "processes")
-            .where(F.col("process") == key)
-            .collect()
-        )
+        rows = _records(store_mod.read_processes(file_obj.path, key))
         if not rows:
             raise KeyError(f"process {key!r} not found")
-        self._meta = rows[0].asDict()  # eager cache, read/hdf.py:437 (P6)
+        self._meta = rows[0]  # eager cache, read/hdf.py:437 (P6)
         self.evts_per_chunk = int(
             self._meta.get("evts_per_chunk") or self._file.evts_per_chunk
         )
@@ -374,7 +372,7 @@ class HepProcessReader:
 
     def __getitem__(self, evt_num: int) -> HepEventReader:
         """Point lookup (``read/hdf.py:454-466``): rebinds the shared cursor;
-        the chunk_id filter prunes to one partition directory (P3)."""
+        its reads go to one chunk directory (P3)."""
         if evt_num < 0:
             evt_num += len(self)
         if not 0 <= evt_num < len(self):
@@ -447,12 +445,9 @@ class HepReader:
         return HepProcessReader(self, key)
 
     def keys(self) -> list[str]:
-        return [
-            r["process"]
-            for r in store_mod.read_table(self.spark, self.path, "processes")
-            .select("process")
-            .collect()
-        ]
+        return store_mod.read_processes(self.path, columns=["process"])[
+            "process"
+        ].to_pylist()
 
     def __iter__(self) -> ty.Iterator[str]:
         return iter(self.keys())

@@ -14,14 +14,33 @@ groups (``write/hdf.py:439-445``, ``utils.py:7-14``) — as Hive partition
 pruning, so a point lookup touches exactly one chunk directory (SURVEY.md P2/P3)
 and counts are served from the ``events``/``processes`` metadata tables
 without scanning particles (P5, mirroring ``read/hdf.py:444-445,255-260``).
+
+The facade's per-chunk and per-event I/O runs no Spark job: the reference
+appends a chunk and reads one event with plain h5py calls
+(``write/hdf.py:439-456``, ``read/hdf.py:454-466``), and so does this layer
+with Arrow. ``write_chunk`` puts one Parquet file into the chunk's Hive
+directory (``chunk_dir``, escaped as Spark escapes it) under a hidden name
+and renames it into place; ``read_event`` reads one event's rows from that
+directory's visible files with an ``event_id`` filter that Parquet
+row-group statistics prune. Scans stay Spark (``read_table``), and both
+sides see the same files.
 """
 
 from __future__ import annotations
 
 import json
+import os
+import uuid
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from heparchy_spark import schemas
 
 __all__ = [
     "LAYOUT_NAME",
@@ -29,6 +48,7 @@ __all__ = [
     "PARTITION_COLS",
     "TABLE_NAMES",
     "table_path",
+    "chunk_dir",
     "marker_path",
     "write_marker",
     "read_marker",
@@ -37,6 +57,12 @@ __all__ = [
     "save_table_schema",
     "schema_sidecar_path",
     "chunk_of",
+    "file_schema",
+    "arrow_schema",
+    "write_part",
+    "write_chunk",
+    "read_event",
+    "read_processes",
     "nested_events",
 ]
 
@@ -44,10 +70,36 @@ LAYOUT_NAME = "heparchy"  # mirrors the file attr at write/hdf.py:571
 FORMAT_VERSION = 1
 PARTITION_COLS = ["process", "chunk_id"]
 TABLE_NAMES = ("particles", "events", "edges", "processes")
+_CANONICAL = {
+    "particles": schemas.PARTICLES_SCHEMA,
+    "events": schemas.EVENTS_SCHEMA,
+    "edges": schemas.EDGES_SCHEMA,
+    "processes": schemas.PROCESSES_SCHEMA,
+}
+
+
+# Characters Spark's ``ExternalCatalogUtils.escapePathName`` turns into
+# ``%XX`` in a Hive partition directory name (non-Windows set).
+_ESCAPED = frozenset(
+    [chr(c) for c in range(0x01, 0x20)] + list('"#%\'*/:=?\\\x7f{[]^')
+)
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 def table_path(root: str | Path, name: str) -> str:
     return str(Path(root) / name)
+
+
+def chunk_dir(root: str | Path, table: str, process: str, chunk_id: int) -> Path:
+    """The Hive directory Spark writes and prunes to for one
+    ``(process, chunk_id)`` partition of ``table``."""
+    name = "".join(f"%{ord(c):02X}" if c in _ESCAPED else c for c in process)
+    return (
+        Path(root)
+        / table
+        / f"process={name or _DEFAULT_PARTITION}"
+        / f"chunk_id={int(chunk_id)}"
+    )
 
 
 def marker_path(root: str | Path) -> Path:
@@ -89,8 +141,6 @@ def save_table_schema(root: str | Path, name: str, schema) -> None:
     tables — e.g. a store whose events all have zero particles — stay
     readable. Merge is union-by-name, first type wins.
     """
-    import pyspark.sql.types as T
-
     p = schema_sidecar_path(root, name)
     if p.exists():
         old = T.StructType.fromJson(json.loads(p.read_text()))
@@ -113,13 +163,140 @@ def read_table(spark: SparkSession, root: str | Path, name: str) -> DataFrame:
     written stores without a sidecar fall back to ``mergeSchema`` because
     dynamic mask/custom columns may differ across chunks.
     """
-    import pyspark.sql.types as T
-
     sidecar = schema_sidecar_path(root, name)
     if sidecar.exists():
         schema = T.StructType.fromJson(json.loads(sidecar.read_text()))
         return spark.read.schema(schema).parquet(table_path(root, name))
     return spark.read.option("mergeSchema", "true").parquet(table_path(root, name))
+
+
+def file_schema(schema: T.StructType) -> pa.Schema:
+    """Arrow schema of a partitioned table's data files: ``schema`` without
+    the Hive partition columns, which live in the directory names."""
+    return to_arrow_schema(
+        T.StructType([f for f in schema.fields if f.name not in PARTITION_COLS])
+    )
+
+
+def arrow_schema(root: str | Path, name: str) -> pa.Schema:
+    """Arrow schema of one table's data files.
+
+    From the schema sidecar when there is one; otherwise the unified
+    footers of all the table's data files, the ``mergeSchema`` analog; and
+    the canonical schema for a table that has neither (e.g. no ``edges``).
+    """
+    sidecar = schema_sidecar_path(root, name)
+    if sidecar.exists():
+        schema = T.StructType.fromJson(json.loads(sidecar.read_text()))
+    else:
+        files = _data_files(Path(table_path(root, name)))
+        if files:
+            return pa.unify_schemas([pq.read_schema(f) for f in files])
+        schema = _CANONICAL[name]
+    # ``processes`` is unpartitioned: its ``process`` column is data
+    return to_arrow_schema(schema) if name == "processes" else file_schema(schema)
+
+
+def write_part(directory: Path, data: pa.Table, codec: str) -> None:
+    """Write ``data`` as one Spark-named part file in ``directory``.
+
+    The file is written under a hidden ``.``-prefixed name, which Spark's
+    file listing and ``read_event`` both skip, then renamed into place, so
+    a reader sees the whole file or none of it. Zero rows write no file,
+    as a Spark append of an empty frame does. The schema sidecar, not the
+    footer, carries the table's schema; floating-point columns, whose
+    values rarely repeat, skip dictionary encoding.
+    """
+    if not data.num_rows:
+        return
+    directory.mkdir(parents=True, exist_ok=True)
+    name = f"part-{uuid.uuid4()}.c000.{codec}.parquet"
+    tmp = directory / f".{name}"
+    pq.write_table(
+        data,
+        tmp,
+        compression=codec,
+        store_schema=False,
+        use_dictionary=[f.name for f in data.schema if not pa.types.is_floating(f.type)],
+    )
+    os.replace(tmp, directory / name)
+
+
+def write_chunk(
+    root: str | Path,
+    table: str,
+    process: str,
+    chunk_id: int,
+    data: pa.Table,
+    codec: str,
+) -> None:
+    """Append one chunk's rows of ``table`` as one file in its Hive
+    directory; the partition columns are dropped from the file."""
+    write_part(
+        chunk_dir(root, table, process, chunk_id),
+        data.drop_columns([c for c in PARTITION_COLS if c in data.column_names]),
+        codec,
+    )
+
+
+def _data_files(top: Path) -> list[str]:
+    """Data files under ``top`` by Spark's listing rule: a name starting
+    with ``.`` or ``_`` is hidden (``.crc`` files, ``_SUCCESS``, in-flight
+    ``write_part`` temp files), and so is everything below one."""
+    return sorted(
+        str(f)
+        for f in top.rglob("*")
+        if f.is_file() and not any(p[0] in "._" for p in f.relative_to(top).parts)
+    )
+
+
+def _read_dir(
+    directory: Path,
+    schema: pa.Schema,
+    columns: list[str] | None,
+    where: ds.Expression | None,
+) -> pa.Table:
+    """Rows of the data files under ``directory``; a column a file lacks
+    reads as null."""
+    files = _data_files(directory)
+    if not files:
+        empty = schema.empty_table()
+        return empty.select(columns) if columns is not None else empty
+    return ds.dataset(files, schema=schema, format="parquet").to_table(
+        columns=columns, filter=where
+    )
+
+
+def read_event(
+    root: str | Path,
+    table: str,
+    process: str,
+    chunk_id: int,
+    event_id: int,
+    columns: list[str] | None = None,
+) -> pa.Table:
+    """One event's rows of a partitioned ``table``, read from its chunk
+    directory alone."""
+    return _read_dir(
+        chunk_dir(root, table, process, chunk_id),
+        arrow_schema(root, table),
+        columns,
+        ds.field("event_id") == event_id,
+    )
+
+
+def read_processes(
+    root: str | Path,
+    process: str | None = None,
+    columns: list[str] | None = None,
+) -> pa.Table:
+    """Rows of the ``processes`` table, all or the one named ``process``."""
+    return _read_dir(
+        Path(table_path(root, "processes")),
+        arrow_schema(root, "processes"),
+        columns,
+        None if process is None else ds.field("process") == process,
+    )
 
 
 def chunk_of(event_id: int, evts_per_chunk: int) -> int:

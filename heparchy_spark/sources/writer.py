@@ -15,7 +15,10 @@ validation semantics:
   (``:439-445``; ``utils.py:7-14``) — here a ``chunk_id`` partition column.
 
 Execution model: events buffer driver-side as NumPy and flush one chunk at
-a time as a sorted Arrow batch appended to the partitioned Parquet tables.
+a time: per table, one Arrow table sorted by ``event_id``, written by
+``store.write_chunk`` as one Parquet file in the chunk's Hive directory,
+and the ``processes`` row the same way on close. No Spark job runs: like
+the reference's h5py appends, a flush is file I/O in the writing process.
 Single-writer sequential ingest is the reference's own model (one Python
 process appending events); the *parallel* scale path is the HDF5/source
 bridge (``mapInPandas`` over many files — see ``hdf5_bridge.py``), which
@@ -33,9 +36,10 @@ from enum import Enum
 from pathlib import Path
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.types as T
 from pyspark.sql import SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from heparchy_spark.errors import OverwriteWarning, WriteOnlyError
 from heparchy_spark.schemas import (
@@ -266,8 +270,8 @@ class HepEventWriter:
 
 class HepProcessWriter:
     """Process sink (``write/hdf.py:402-456``): buffers events, flushes one
-    chunk per Spark append, finalizes ``num_evts`` + key registries on exit
-    (``:453-456``)."""
+    chunk per ``evts_per_chunk`` events, finalizes ``num_evts`` + key
+    registries on exit (``:453-456``)."""
 
     def __init__(self, file_obj: "HepWriter", key: str) -> None:
         self._file = file_obj
@@ -425,113 +429,74 @@ class HepWriter:
 
     # -- physical write ----------------------------------------------------
     def _write_chunk(self, process: str, batch: list[dict]) -> None:
+        """One chunk's events, one Arrow table and one Parquet file per
+        store table. Events arrive in ``event_id`` order and particles in
+        ``pcl_idx`` order, so each file is sorted by ``(event_id,
+        pcl_idx)``: its row-group stats on event_id serve point lookups
+        (SURVEY.md P3)."""
+        chunk_id = batch[0]["chunk_id"]
         mask_keys = sorted({k for ev in batch for k in ev["masks"]})
         custom_keys = sorted({k for ev in batch for k in ev["custom"]})
-
-        pcl_frames: list[pd.DataFrame] = []
-        evt_rows: list[tuple] = []
-        edge_frames: list[pd.DataFrame] = []
-        for ev in batch:
-            n = ev["num_pcls"]
-            pdf = pd.DataFrame(
-                {
-                    "process": np.repeat(process, n),
-                    "event_id": np.repeat(np.int64(ev["event_id"]), n),
-                    "chunk_id": np.repeat(np.int64(ev["chunk_id"]), n),
-                    "pcl_idx": np.arange(n, dtype="int32"),
-                }
-            )
-            for col in ("px", "py", "pz", "e"):
-                pdf[col] = ev["cols"].get(col)
-            pdf["pdg"] = _opt(ev["cols"].get("pdg"), n, "Int32")
-            pdf["status"] = _opt(ev["cols"].get("status"), n, "Int16")
-            pdf["helicity"] = _opt(ev["cols"].get("helicity"), n, "Int16")
-            pdf["color"] = _opt(ev["cols"].get("color"), n, "Int32")
-            pdf["anticolor"] = _opt(ev["cols"].get("anticolor"), n, "Int32")
-            for k in mask_keys:
-                arr = ev["masks"].get(k)
-                pdf[f"mask_{k}"] = _opt(arr, n, "boolean")
-            for k in custom_keys:
-                arr = ev["custom"].get(k)
-                if arr is not None and arr.ndim == 2:
-                    pdf[f"custom_{k}"] = list(arr)
-                else:
-                    pdf[f"custom_{k}"] = arr if arr is not None else [None] * n
-            pcl_frames.append(pdf)
-
-            evt_rows.append(
-                (
-                    process,
-                    ev["event_id"],
-                    ev["chunk_id"],
-                    ev["num_pcls"],
-                    ev["num_edges"],
-                    sorted(ev["masks"]),
-                    sorted(ev["custom"]),
-                    {k: json.dumps(v, default=_json_default) for k, v in ev["custom_meta"].items()},
-                )
-            )
-
-            if ev["edges"] is not None:
-                src, dst = ev["edges"]
-                w = ev["edge_weights"]
-                edge_frames.append(
-                    pd.DataFrame(
-                        {
-                            "process": np.repeat(process, len(src)),
-                            "event_id": np.repeat(np.int64(ev["event_id"]), len(src)),
-                            "chunk_id": np.repeat(np.int64(ev["chunk_id"]), len(src)),
-                            "edge_idx": np.arange(len(src), dtype="int32"),
-                            "src": src,
-                            "dst": dst,
-                            "weight": w if w is not None else np.full(len(src), np.nan),
-                        }
-                    )
-                )
-
         fields = [f for f in PARTICLES_SCHEMA.fields if f.name != "mask_final"]
-        for k in mask_keys:
-            fields.append(T.StructField(f"mask_{k}", T.BooleanType(), True))
-        for k in custom_keys:
-            sample = next(ev["custom"][k] for ev in batch if k in ev["custom"])
-            fields.append(_custom_field(k, sample))
+        fields += [T.StructField(f"mask_{k}", T.BooleanType(), True) for k in mask_keys]
+        fields += [
+            _custom_field(k, next(ev["custom"][k] for ev in batch if k in ev["custom"]))
+            for k in custom_keys
+        ]
         schema = T.StructType(fields)
-
-        pcl_pdf = pd.concat(pcl_frames, ignore_index=True)
-        # chunk-local sort → Parquet row-group min/max stats on event_id
-        # serve point lookups (SURVEY.md P3)
-        pcl_pdf = pcl_pdf.sort_values(["event_id", "pcl_idx"], ignore_index=True)
-        cols = [f.name for f in schema.fields]
-        self._append(pcl_pdf[cols], schema, "particles")
-
-        self._append_rows(evt_rows, EVENTS_SCHEMA, "events")
-
-        if edge_frames:
-            edge_pdf = pd.concat(edge_frames, ignore_index=True)
-            self._append(edge_pdf, EDGES_SCHEMA, "edges")
-
-    def _append(self, pdf: pd.DataFrame, schema: T.StructType, table: str) -> None:
-        store_mod.save_table_schema(self.path, table, schema)
-        df = self.spark.createDataFrame(pdf, schema=schema)
-        (
-            df.repartition(1)
-            .sortWithinPartitions("event_id", *(["pcl_idx"] if table == "particles" else []))
-            .write.mode("append")
-            .partitionBy(*store_mod.PARTITION_COLS)
-            .option("compression", self.codec)
-            .parquet(store_mod.table_path(self.path, table))
+        n_pcls = [ev["num_pcls"] for ev in batch]
+        pcl_parts = {
+            **_row_keys(batch, n_pcls, "pcl_idx"),
+            **{f"mask_{k}": [ev["masks"].get(k) for ev in batch] for k in mask_keys},
+            **{f"custom_{k}": [ev["custom"].get(k) for ev in batch] for k in custom_keys},
+        }
+        for col in ("px", "py", "pz", "e", "pdg", "status", "helicity", "color", "anticolor"):
+            pcl_parts[col] = [ev["cols"].get(col) for ev in batch]
+        self._write(
+            "particles", schema, process, chunk_id, _concat(schema, pcl_parts, n_pcls)
         )
 
-    def _append_rows(self, rows: list[tuple], schema: T.StructType, table: str) -> None:
-        store_mod.save_table_schema(self.path, table, schema)
-        df = self.spark.createDataFrame(rows, schema=schema)
-        (
-            df.repartition(1)
-            .write.mode("append")
-            .partitionBy(*store_mod.PARTITION_COLS)
-            .option("compression", self.codec)
-            .parquet(store_mod.table_path(self.path, table))
+        evt_rows = [
+            {
+                "event_id": ev["event_id"],
+                "num_pcls": ev["num_pcls"],
+                "num_edges": ev["num_edges"],
+                "mask_keys": sorted(ev["masks"]),
+                "custom_keys": sorted(ev["custom"]),
+                "custom_meta": {
+                    k: json.dumps(v, default=_json_default)
+                    for k, v in ev["custom_meta"].items()
+                },
+            }
+            for ev in batch
+        ]
+        self._write(
+            "events", EVENTS_SCHEMA, process, chunk_id,
+            pa.Table.from_pylist(evt_rows, schema=store_mod.file_schema(EVENTS_SCHEMA)),
         )
+
+        with_edges = [ev for ev in batch if ev["edges"] is not None]
+        if with_edges:
+            n_edges = [ev["num_edges"] for ev in with_edges]
+            edge_parts = {
+                **_row_keys(with_edges, n_edges, "edge_idx"),
+                "src": [ev["edges"][0] for ev in with_edges],
+                "dst": [ev["edges"][1] for ev in with_edges],
+                "weight": [
+                    np.full(n, np.nan) if ev["edge_weights"] is None else ev["edge_weights"]
+                    for n, ev in zip(n_edges, with_edges)
+                ],
+            }
+            self._write(
+                "edges", EDGES_SCHEMA, process, chunk_id,
+                _concat(EDGES_SCHEMA, edge_parts, n_edges),
+            )
+
+    def _write(
+        self, table: str, schema: T.StructType, process: str, chunk_id: int, data: pa.Table
+    ) -> None:
+        store_mod.save_table_schema(self.path, table, schema)
+        store_mod.write_chunk(self.path, table, process, chunk_id, data, self.codec)
 
     def _commit_process(
         self,
@@ -559,22 +524,49 @@ class HepWriter:
     def __exit__(self, exc_type, exc_value, exc_tb) -> None:
         if exc_type is not None:
             return
-        rows = [
-            tuple(r[f.name] for f in PROCESSES_SCHEMA.fields)
-            for r in self._process_rows
-        ]
-        df = self.spark.createDataFrame(rows, schema=PROCESSES_SCHEMA)
-        df.coalesce(1).write.mode("overwrite").parquet(
-            store_mod.table_path(self.path, "processes")
+        store_mod.save_table_schema(self.path, "processes", PROCESSES_SCHEMA)
+        store_mod.write_part(
+            Path(store_mod.table_path(self.path, "processes")),
+            pa.Table.from_pylist(self._process_rows, schema=to_arrow_schema(PROCESSES_SCHEMA)),
+            self.codec,
         )
         store_mod.write_marker(self.path, self.evts_per_chunk)
 
 
-def _opt(arr: np.ndarray | None, n: int, dtype: str) -> pd.Series | pd.array:
-    """Column present-or-null with a stable nullable dtype."""
+def _row_keys(events: list[dict], counts: list[int], idx_col: str) -> dict[str, list]:
+    """Per-event ``event_id`` and 0-based row index parts for ``_concat``."""
+    return {
+        "event_id": [np.full(n, ev["event_id"], "int64") for n, ev in zip(counts, events)],
+        idx_col: [np.arange(n, dtype="int32") for n in counts],
+    }
+
+
+def _concat(schema: T.StructType, parts: dict[str, list], counts: list[int]) -> pa.Table:
+    """Concatenate per-event column arrays (``parts[col][i]`` holds event
+    ``i``'s ``counts[i]`` values, or ``None`` when it did not set ``col``)
+    into one Arrow table of ``schema``'s file columns."""
+    target = store_mod.file_schema(schema)
+    return pa.Table.from_arrays(
+        [
+            pa.concat_arrays([_arrow(a, n, f.type) for a, n in zip(parts[f.name], counts)])
+            for f in target
+        ],
+        schema=target,
+    )
+
+
+def _arrow(arr: np.ndarray | None, n: int, typ: pa.DataType) -> pa.Array:
+    """One event's ``n`` values of a column as Arrow ``typ``; unset is null."""
     if arr is None:
-        return pd.array([None] * n, dtype=dtype)
-    return pd.array(arr, dtype=dtype)
+        return pa.nulls(n, typ)
+    if arr.ndim == 2:  # a 2-D custom: one list per particle
+        offsets = pa.array(np.arange(n + 1, dtype="int32") * arr.shape[1])
+        return pa.ListArray.from_arrays(
+            offsets, _arrow(arr.ravel(), arr.size, typ.value_type), type=typ
+        )
+    if arr.dtype.kind == "S":
+        arr = arr.astype("U")
+    return pa.array(arr, type=typ)
 
 
 def _json_default(o: ty.Any) -> ty.Any:

@@ -55,3 +55,17 @@ def make_event(rng: np.random.Generator, n: int | None = None) -> dict:
         "edge_weights": rng.uniform(0.0, 1.0, n_edges),
         "final": rng.random(n) < 0.4,
     }
+
+
+def assert_files_event_sorted(table_dir) -> None:
+    """Every data file of a store table is sorted by ``event_id`` (tight
+    row-group stats for point lookups inside a chunk file)."""
+    import pyarrow.parquet as pq
+
+    from heparchy_spark.sources.maintenance import _parquet_files
+
+    files = _parquet_files(table_dir)
+    assert files, f"no data files under {table_dir}"
+    for f in files:
+        ids = pq.read_table(f, columns=["event_id"])["event_id"].to_pylist()
+        assert ids == sorted(ids), f

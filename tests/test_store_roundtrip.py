@@ -314,11 +314,10 @@ def test_compact_store_event_sorted(spark, tmp_path):
     file internally ordered by event_id (tight row-group stats for
     point-lookup pruning within a chunk)."""
     import numpy as np
-    import pyarrow.parquet as pq
 
     from heparchy_spark.sources import HepReader, HepWriter
-    from heparchy_spark.sources.maintenance import _parquet_files, compact_store
-    from tests.conftest import make_event
+    from heparchy_spark.sources.maintenance import compact_store
+    from tests.conftest import assert_files_event_sorted, make_event
 
     root = tmp_path / "s"
     rng = np.random.default_rng(31)
@@ -335,10 +334,74 @@ def test_compact_store_event_sorted(spark, tmp_path):
 
     compact_store(spark, root, sort_by_event=True)
 
-    for f in _parquet_files(root / "particles"):
-        ids = pq.read_table(f, columns=["event_id"])["event_id"].to_pylist()
-        assert ids == sorted(ids), f
+    assert_files_event_sorted(root / "particles")
     with HepReader(spark, root) as r:
         assert len(r["p"]) == 6
         for i in range(6):
             assert r["p"][i].pdg.tolist() == before[i]
+
+
+def test_compact_store_keeps_schema_sidecar(spark, tmp_path):
+    """Compaction carries each table's schema sidecar across the swap, so
+    point lookups over the Spark-rewritten chunk files read back exactly
+    what they read before, and an all-empty table stays readable."""
+    from heparchy_spark.sources import store as store_mod
+    from heparchy_spark.sources.maintenance import compact_store
+
+    root = tmp_path / "s"
+    rng = np.random.default_rng(37)
+    events = [make_event(rng) for _ in range(7)]
+    with HepWriter(spark, root, evts_per_chunk=3) as w:
+        with w.new_process("p") as proc:
+            for evt_w, data in proc.event_iter(events):
+                evt_w.pmu = data["pmu"]
+                evt_w.pdg = data["pdg"]
+                evt_w.edges = data["edges"]
+                evt_w.edge_weights = data["edge_weights"]
+                evt_w.masks["final"] = data["final"]
+                evt_w.custom["pt"] = np.hypot(data["pmu"]["x"], data["pmu"]["y"])
+                evt_w.custom["pair"] = np.stack([data["pdg"], data["pdg"] * 2], 1)
+                evt_w.custom_meta["n"] = len(data["pdg"])
+
+    def snapshot():
+        with HepReader(spark, root) as r:
+            proc = r["p"]
+            out = []
+            for i in range(len(proc)):
+                evt = proc[i]
+                out.append(
+                    (
+                        evt.pmu.tolist(),
+                        evt.pdg.tolist(),
+                        evt.edges.tolist(),
+                        evt.edge_weights.tolist(),
+                        evt.masks["final"].tolist(),
+                        evt.custom["pt"].tolist(),
+                        evt.custom["pair"].tolist(),
+                        evt.custom_meta["n"],
+                        evt.count,
+                    )
+                )
+            return out, proc.particles.schema
+
+    sidecars = {
+        t: store_mod.schema_sidecar_path(root, t).read_text()
+        for t in store_mod.TABLE_NAMES
+    }
+    before = snapshot()
+    compact_store(spark, root)
+    for t, text in sidecars.items():
+        assert store_mod.schema_sidecar_path(root, t).read_text() == text, t
+    assert snapshot() == before
+
+    # every event empty: the particles table has a sidecar and no data file
+    empty = tmp_path / "empty"
+    with HepWriter(spark, empty) as w:
+        with w.new_process("p") as proc:
+            with proc.new_event() as evt_w:
+                evt_w.pdg = np.array([], dtype="int32")
+    compact_store(spark, empty)
+    with HepReader(spark, empty) as r:
+        assert r["p"].particles.count() == 0
+        assert r["p"][0].pdg.tolist() == []
+        assert r["p"][0].edges.tolist() == []  # the store has no edges table
