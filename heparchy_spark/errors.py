@@ -5,11 +5,18 @@ raise ``ReadOnlyError`` on mutation (``/root/reference/heparchy/read/hdf.py:49-5
 and write-side property getters raise ``WriteOnlyError``
 (``/root/reference/heparchy/write/hdf.py:51-58``); overwriting an existing
 dataset warns with ``OverwriteWarning`` (``write/hdf.py:57-60,75-77``).
+``SchemaDriftError`` is this port's own: an input table whose file schema
+differs from its declaration (``queries/tables.py``).
 """
 
 from __future__ import annotations
 
-__all__ = ["ReadOnlyError", "WriteOnlyError", "OverwriteWarning"]
+__all__ = [
+    "ReadOnlyError",
+    "WriteOnlyError",
+    "OverwriteWarning",
+    "SchemaDriftError",
+]
 
 
 class ReadOnlyError(RuntimeError):
@@ -22,3 +29,8 @@ class WriteOnlyError(RuntimeError):
 
 class OverwriteWarning(RuntimeWarning):
     """Warns when existing data is about to be overwritten."""
+
+
+class SchemaDriftError(ValueError):
+    """Raised when a table's file schema (column names, order or types)
+    differs from the schema declared for it."""

@@ -24,6 +24,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from heparchy_spark.functions.literals import array_lit
+
 __all__ = ["hashed_features", "logreg_train", "logreg_score"]
 
 
@@ -168,7 +170,7 @@ def logreg_train(
             # so every double add is EXACT and the fold equals the decimal
             # dsum of _z_scores bit-for-bit (order-independent because
             # exact) — the oracle's unrolled dsum CTEs replay unchanged.
-            w_arr = F.array(*[F.lit(w) for w in weights])
+            w_arr = array_lit(weights)
             z = F.aggregate(
                 F.col("fx"),
                 F.lit(0.0),

@@ -13,6 +13,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from heparchy_spark.functions.literals import array_lit
+
 __all__ = [
     "hash_bucket",
     "split_assign",
@@ -533,7 +535,7 @@ def kcenter_coreset(
     ).localCheckpoint(eager=True)
 
     def d2_to(center_vec: list[float]) -> F.Column:
-        lit = F.array(*[F.lit(float(x)) for x in center_vec])
+        lit = array_lit([float(x) for x in center_vec])
         return F.round(
             F.aggregate(
                 F.zip_with(

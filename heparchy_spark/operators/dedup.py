@@ -23,6 +23,7 @@ import typing as ty
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from heparchy_spark.functions.literals import array_lit
 from heparchy_spark.operators.banding import hamming_pairs
 
 __all__ = [
@@ -569,7 +570,7 @@ def lsh_threshold_audit(
         round(1.0 - (1.0 - ((i + 0.5) / 10.0) ** rows) ** bands, 6)
         for i in range(10)
     ]
-    scurve_arr = F.array(*[F.lit(v) for v in scurve])
+    scurve_arr = array_lit(scurve)
     return (
         pairs.select(
             bucket.alias("j_bucket"),
@@ -753,34 +754,26 @@ def simhash_df(
     groups = (bits + slots - 1) // slots
 
     def packed_votes(g: int) -> Column:
-        term = F.lit(0).cast("long")
-        for s in range(slots):
-            i = g * slots + s
-            if i >= bits:
-                break
-            term = term + F.shiftleft(
-                F.shiftright("__h", i).bitwiseAND(F.lit(1)).cast("long"),
-                s * slot_width,
-            )
-        return F.coalesce(F.sum(term), F.lit(0).cast("long")).alias(f"__g{g}")
+        term = " + ".join(
+            f"shiftleft(shiftright(__h, {i}) & 1, {s * slot_width})"
+            for s, i in enumerate(range(g * slots, min(bits, (g + 1) * slots)))
+        )
+        return F.expr(f"coalesce(sum({term}), 0L)").alias(f"__g{g}")
 
     votes = ex.groupBy("__id").agg(
         F.count("__h").alias("__n"),
         *[packed_votes(g) for g in range(groups)],
     )
-    slot_mask = F.lit((1 << slot_width) - 1).cast("long")
-    fp = F.lit(0).cast("long")
-    for i in range(bits):
-        g, s = divmod(i, slots)
-        count_i = F.shiftright(F.col(f"__g{g}"), s * slot_width).bitwiseAND(
-            slot_mask
-        )
-        fp = fp + F.when(
-            count_i * 2 > F.col("__n"),
-            F.shiftleft(F.lit(1).cast("long"), i),
-        ).otherwise(F.lit(0).cast("long"))
+    # the fingerprint fold as ONE SQL expression (py4j cost O(1), not
+    # O(bits)): bit i is set iff its unpacked vote count is a majority
+    slot_mask = (1 << slot_width) - 1
+    fp = " + ".join(
+        f"CASE WHEN (shiftright(__g{i // slots}, {i % slots * slot_width})"
+        f" & {slot_mask}L) * 2 > __n THEN shiftleft(1L, {i}) ELSE 0L END"
+        for i in range(bits)
+    )
     return votes.select(
-        F.col("__id").alias(id_col), fp.alias("simhash64")
+        F.col("__id").alias(id_col), F.expr(fp).alias("simhash64")
     )
 
 
@@ -1098,9 +1091,7 @@ def sorted_neighborhood_pairs(
         "blk",
         "id_a",
         "rn_a",
-        F.explode(
-            F.array(*[F.lit(k) for k in range(1, window + 1)])
-        ).alias("__k"),
+        F.explode(array_lit(list(range(1, window + 1)))).alias("__k"),
     ).withColumn("rn_b", F.col("rn_a") + F.col("__k"))
     cand = probe.join(b, on=["blk", "rn_b"])
     sets = hashed_shingles_df(df, text_col, id_col, n)

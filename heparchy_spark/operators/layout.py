@@ -19,6 +19,8 @@ import typing as ty
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from heparchy_spark.functions.literals import array_lit
+
 __all__ = [
     "write_bucketed",
     "bucketed_join_ready",
@@ -148,7 +150,7 @@ def salted_join(
     salted_left = skewed.withColumn("__salt", _salt(skewed, factor))
     replicated = small.withColumn(
         "__salt",
-        F.explode(F.array(*[F.lit(i) for i in range(factor)])),
+        F.explode(array_lit(list(range(factor)))),
     )
     out = salted_left.join(replicated, [on, "__salt"], how)
     return out.drop("__salt")
@@ -272,8 +274,8 @@ def hilbert_key(xb: Column, yb: Column, bits: int) -> Column:
     """
     if not 1 <= bits <= 31:
         raise ValueError("hilbert_key: bits must be in [1, 31]")
-    levels = F.array(
-        *[F.lit(1 << i).cast("long") for i in range(bits - 1, -1, -1)]
+    levels = array_lit([1 << i for i in range(bits - 1, -1, -1)]).cast(
+        "array<bigint>"
     )
     init = F.struct(
         xb.cast("long").alias("x"),
@@ -320,8 +322,8 @@ def hilbert_key_nd(
         raise ValueError("hilbert_key_nd: need at least 2 columns")
     if n * bits > 62:
         raise ValueError("hilbert_key_nd: n * bits must be <= 62")
-    levels = F.array(
-        *[F.lit(1 << i).cast("long") for i in range(bits - 1, 0, -1)]
+    levels = array_lit([1 << i for i in range(bits - 1, 0, -1)]).cast(
+        "array<bigint>"
     )
     init = F.struct(
         *[c.cast("long").alias(f"x{i}") for i, c in enumerate(bucket_cols)]

@@ -5,8 +5,9 @@ Brute-force cosine top-k is the exact baseline: dot products via
 random-hyperplane LSH: b sign-bits bucket the vectors; queries probe only
 their own bucket (optionally multi-probe neighbors), turning the all-pairs
 product into an equi join on bucket id.  Hyperplanes are seeded NumPy,
-shipped as literal arrays (tiny: bits x dim doubles), so the plan stays
-deterministic and broadcast-free.
+shipped as ONE 2-D SQL literal (``functions.literals.array_lit``: bits x
+dim doubles, one ``F.expr`` to build) and folded bit by bit in one
+higher-order function, so the plan stays deterministic and broadcast-free.
 """
 
 from __future__ import annotations
@@ -15,6 +16,8 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
+
+from heparchy_spark.functions.literals import array_lit
 
 __all__ = [
     "dot",
@@ -76,7 +79,7 @@ def cosine_topk(
     Brute force, but fully distributed: the scan computes one fused
     projection per row and TakeOrdered keeps k per partition.
     """
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
+    q = array_lit([float(v) for v in query_vec])
     sim = cosine(F.col(vec_col), q).alias("cosine_sim")
     return (
         df.select(F.col(id_col), sim)
@@ -93,14 +96,17 @@ def _hyperplanes(dim: int, bits: int, seed: int) -> np.ndarray:
 def hyperplane_bucket(
     vec_col: Column, dim: int, bits: int = 12, seed: int = 7
 ) -> Column:
-    """Random-hyperplane LSH bucket id (int) for a vector column."""
+    """Random-hyperplane LSH bucket id (long) for a vector column: bit i
+    is ``dot(v, plane_i) > 0``.  One fold over a 2-D literal of the planes
+    in reverse, top bit first (``acc * 2 + bit``).  The literal is the
+    fold's input, not indexed inside its lambda: Catalyst analyses that
+    form faster."""
     planes = _hyperplanes(dim, bits, seed)
-    bucket = F.lit(0).cast("long")
-    for i in range(bits):
-        plane = F.array(*[F.lit(float(x)) for x in planes[i]])
-        bit = (dot(vec_col, plane) > 0).cast("long")
-        bucket = bucket + F.shiftleft(bit, i)
-    return bucket
+    return F.aggregate(
+        array_lit(planes[::-1]),
+        F.lit(0).cast("long"),
+        lambda acc, p: acc * 2 + (dot(vec_col, p) > 0).cast("long"),
+    )
 
 
 def lsh_cosine_topk(
@@ -1171,26 +1177,15 @@ def random_projection(
     The cheap pre-ANN reduction: pairwise distances survive within
     ~(1 +- eps) for out_dim = O(log n / eps^2), so downstream LSH / IVF
     runs on 4x-shorter vectors at the same recall dial.  Planes ship as
-    literal arrays (out_dim x dim doubles — the ``hyperplane_bucket``
-    convention), so the projection is a pure scan-side map: no shuffle,
-    no broadcast, deterministic under any partitioning.  ``||Pv||^2 /
-    out_dim`` is the unbiased estimate of ``||v||^2`` (each Gaussian
-    component has variance ``||v||^2``).
+    one 2-D literal (out_dim x dim doubles — the ``hyperplane_bucket``
+    convention) mapped by one ``transform``, so the projection is a pure
+    scan-side map: no shuffle, no broadcast, deterministic under any
+    partitioning.  ``||Pv||^2 / out_dim`` is the unbiased estimate of
+    ``||v||^2`` (each Gaussian component has variance ``||v||^2``).
     """
-    planes = _hyperplanes(dim, out_dim, seed)
-    projs = [
-        F.round(
-            dot(
-                F.col(vec_col),
-                F.array(*[F.lit(float(x)) for x in planes[j]]),
-            ),
-            9,
-        )
-        for j in range(out_dim)
-    ]
-    return df.select(
-        F.col(id_col), F.array(*projs).alias("projection")
-    )
+    planes = array_lit(_hyperplanes(dim, out_dim, seed))
+    proj = F.transform(planes, lambda p: F.round(dot(F.col(vec_col), p), 9))
+    return df.select(F.col(id_col), proj.alias("projection"))
 
 
 def power_iteration_top_pc(
@@ -1239,7 +1234,7 @@ def power_iteration_top_pc(
     )
     nrm_row = None
     for _ in range(iters):
-        xlit = F.array(*[F.lit(v) for v in x])
+        xlit = array_lit(x)
         dots = df.select(
             F.col(id_col).alias("__rid"),
             F.round(dot(F.col(vec_col), xlit), 8).alias("__d"),

@@ -24,6 +24,8 @@ import typing as ty
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from heparchy_spark.functions.literals import array_lit
+
 __all__ = [
     "sha_slice_pos",
     "cm_positions",
@@ -469,7 +471,7 @@ def bottomk_sample_quantiles(
     )
     # quantile fan-out as a literal-array explode — a pure projection,
     # no join operator in the plan at all
-    qarr = F.array(*[F.lit(int(q)) for q in quantiles])
+    qarr = array_lit([int(q) for q in quantiles])
     pick = ranked.withColumn("q_pct", F.explode(qarr)).where(
         F.col("__vr")
         == F.greatest(

@@ -1,8 +1,8 @@
 """Multimodal-column queries over the ``documents`` table.
 
 No driver table carries real media, so the corpus builds deterministic
-binary payloads from document text — REAL minimal containers, all in pure
-column algebra (no UDF in the construction):
+binary payloads from document text — REAL minimal containers, all in one
+SQL projection (``selectExpr``; no UDF in the construction):
 
 - ``doc_id%4==0`` → PNG: full 8-byte signature + IHDR chunk, truecolor,
   per-doc dimensions, document text as trailing bytes;
@@ -27,7 +27,7 @@ fixtures whose payloads are constructed independently with struct.pack
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from heparchy_spark.operators.multimodal import (
     byte_stats,
@@ -48,97 +48,107 @@ GIF_HDR_HEX = "474946383961" + "40003000000000"
 GIF_FRAME_HEX = "2C" + "00000000" + "4000" + "3000" + "00" + "02" + "0100" + "00"
 GIF_TRAILER_HEX = "3B"
 
+# The header builders below return Spark SQL text over the ``documents``
+# columns, not Columns: the whole synthesis is parsed once by one
+# ``selectExpr`` instead of costing a py4j round trip per byte of header.
 
-def _byte_hex(c: Column) -> Column:
-    return F.lpad(F.hex(c.bitwiseAND(F.lit(255))), 2, "0")
+
+def _concat(*parts: str) -> str:
+    return f"concat({', '.join(parts)})"
 
 
-def _int_hex(c: Column, nbytes: int, *, little_endian: bool) -> Column:
-    """Fixed-width hex of an integer column, byte order selectable —
-    the building block for binary headers in pure column algebra."""
+def _hex(*fields: str) -> str:
+    """A constant header run (hex digits) as a SQL string literal."""
+    return "'" + "".join(fields) + "'"
+
+
+def _byte_hex(x: str) -> str:
+    return f"lpad(hex(({x}) & 255), 2, '0')"
+
+
+def _int_hex(x: str, nbytes: int, *, little_endian: bool) -> str:
+    """Fixed-width hex of an integer expression, byte order selectable —
+    the building block for binary headers."""
     order = range(nbytes) if little_endian else reversed(range(nbytes))
-    return F.concat(*[_byte_hex(F.shiftright(c, 8 * i)) for i in order])
+    return _concat(*[_byte_hex(f"shiftright({x}, {8 * i})") for i in order])
 
 
-def _png_hex(doc_id: Column) -> Column:
+def _png_hex(doc_id: str) -> str:
     """Full PNG signature + IHDR (truecolor, zero CRC — parsers don't
     check): 33 bytes, then text. Dims: 32+id%64 x 32+id%48."""
-    return F.concat(
-        F.lit("89504E470D0A1A0A" + "0000000D" + "49484452"),
-        _int_hex(F.lit(32) + doc_id % 64, 4, little_endian=False),
-        _int_hex(F.lit(32) + doc_id % 48, 4, little_endian=False),
-        F.lit("08" + "02" + "00" + "00" + "00" + "00000000"),
+    return _concat(
+        _hex("89504E470D0A1A0A", "0000000D", "49484452"),
+        _int_hex(f"32 + {doc_id} % 64", 4, little_endian=False),
+        _int_hex(f"32 + {doc_id} % 48", 4, little_endian=False),
+        _hex("08", "02", "00", "00", "00", "00000000"),
     )
 
 
-def _jpeg_hex(doc_id: Column) -> Column:
+def _jpeg_hex(doc_id: str) -> str:
     """SOI + APP0/JFIF + SOF0 (baseline, 3 components, zero-CRC-free
     format): 39 bytes, then text. Dims: 24+id%120 x 24+id%100."""
-    return F.concat(
-        F.lit("FFD8" + "FFE0" + "0010" + "4A46494600" + "0101" + "00"
-              + "0001" + "0001" + "0000"),
-        F.lit("FFC0" + "0011" + "08"),
-        _int_hex(F.lit(24) + doc_id % 100, 2, little_endian=False),  # height
-        _int_hex(F.lit(24) + doc_id % 120, 2, little_endian=False),  # width
-        F.lit("03" + "011100" + "021101" + "031101"),
+    return _concat(
+        _hex("FFD8", "FFE0", "0010", "4A46494600", "0101", "00", "0001",
+             "0001", "0000"),
+        _hex("FFC0", "0011", "08"),
+        _int_hex(f"24 + {doc_id} % 100", 2, little_endian=False),  # height
+        _int_hex(f"24 + {doc_id} % 120", 2, little_endian=False),  # width
+        _hex("03", "011100", "021101", "031101"),
     )
 
 
-def _wav_hex(doc_id: Column, text_len: Column) -> Column:
+def _wav_hex(doc_id: str, text_len: str) -> str:
     """Complete RIFF/WAVE header for PCM16 whose data chunk is the text
     bytes: 44 bytes, then text(=samples). Channels 1+id%2; sample rate
     from {8000,16000,44100} by id%3."""
-    channels = (F.lit(1) + doc_id % 2).cast("long")
-    rate = F.element_at(
-        F.array(F.lit(8000), F.lit(16000), F.lit(44100)),
-        (doc_id % 3 + 1).cast("int"),
-    ).cast("long")
-    block_align = channels * 2
-    return F.concat(
-        F.lit("52494646"),                                     # "RIFF"
-        _int_hex(text_len + 36, 4, little_endian=True),
-        F.lit("57415645" + "666D7420" + "10000000" + "0100"),  # WAVE fmt 16 PCM
+    channels = f"CAST(1 + {doc_id} % 2 AS BIGINT)"
+    rate = (
+        "CAST(element_at(array(8000, 16000, 44100), "
+        f"CAST({doc_id} % 3 + 1 AS INT)) AS BIGINT)"
+    )
+    block_align = f"{channels} * 2"
+    return _concat(
+        _hex("52494646"),                                   # "RIFF"
+        _int_hex(f"{text_len} + 36", 4, little_endian=True),
+        _hex("57415645", "666D7420", "10000000", "0100"),   # WAVE fmt 16 PCM
         _int_hex(channels, 2, little_endian=True),
         _int_hex(rate, 4, little_endian=True),
-        _int_hex(rate * block_align, 4, little_endian=True),   # byte rate
+        _int_hex(f"{rate} * ({block_align})", 4, little_endian=True),  # byte rate
         _int_hex(block_align, 2, little_endian=True),
-        F.lit("1000"),                                         # 16 bits/sample
-        F.lit("64617461"),                                     # "data"
+        _hex("1000"),                                       # 16 bits/sample
+        _hex("64617461"),                                   # "data"
         _int_hex(text_len, 4, little_endian=True),
     )
 
 
-def _gif_hex(doc_id: Column) -> Column:
+def _gif_hex(doc_id: str) -> str:
     """Animated GIF with 1 + id%97 empty frames; text rides after the
     trailer."""
-    n_frames = (doc_id % 97 + 1).cast("int")
-    return F.concat(
-        F.lit(GIF_HDR_HEX),
-        F.repeat(F.lit(GIF_FRAME_HEX), n_frames),
-        F.lit(GIF_TRAILER_HEX),
+    return _concat(
+        _hex(GIF_HDR_HEX),
+        f"repeat('{GIF_FRAME_HEX}', CAST({doc_id} % 97 + 1 AS INT))",
+        _hex(GIF_TRAILER_HEX),
     )
 
 
 def _media_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> synthetic media table (media_id, kind, payload) with
-    REAL container bytes (module docstring). Pure column algebra: the
-    header hex is concatenated with hex(text) and unhex-ed once."""
+    REAL container bytes (module docstring). One projection: the header
+    hex is concatenated with hex(text) and unhex-ed once."""
     docs = load(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    kind = F.element_at(
-        F.array(*[F.lit(k) for k in _KINDS]), (did % 4 + 1).cast("int")
-    )
-    text_bytes = F.encode("text", "utf-8")
+    text_bytes = "encode(text, 'utf-8')"
+    text_len = f"CAST(length({text_bytes}) AS BIGINT)"
     header_hex = (
-        F.when(did % 4 == 0, _png_hex(did))
-        .when(did % 4 == 1, _jpeg_hex(did))
-        .when(did % 4 == 2, _wav_hex(did, F.length(text_bytes).cast("long")))
-        .otherwise(_gif_hex(did))
+        f"CASE WHEN doc_id % 4 = 0 THEN {_png_hex('doc_id')} "
+        f"WHEN doc_id % 4 = 1 THEN {_jpeg_hex('doc_id')} "
+        f"WHEN doc_id % 4 = 2 THEN {_wav_hex('doc_id', text_len)} "
+        f"ELSE {_gif_hex('doc_id')} END"
     )
-    return docs.select(
-        did.alias("media_id"),
-        kind.alias("kind"),
-        F.unhex(F.concat(header_hex, F.hex(text_bytes))).alias("payload"),
+    kinds = ", ".join(f"'{k}'" for k in _KINDS)
+    return docs.selectExpr(
+        "doc_id AS media_id",
+        f"element_at(array({kinds}), CAST(doc_id % 4 + 1 AS INT)) AS kind",
+        f"unhex(concat({header_hex}, hex({text_bytes}))) AS payload",
     )
 
 

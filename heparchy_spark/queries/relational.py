@@ -20,6 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from heparchy_spark.functions.literals import array_lit
 from heparchy_spark.queries import register
 from heparchy_spark.queries.numeric import (
     davg,
@@ -1618,7 +1619,7 @@ def agg_robust_stats_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
-    probs = F.array(*[F.lit(p / 10.0) for p in range(1, 10)])
+    probs = array_lit([p / 10.0 for p in range(1, 10)])
     b = ev.agg(F.percentile("value", probs).alias("bs"))
     v = F.col("value")
     assigned = ev.join(F.broadcast(b)).select(

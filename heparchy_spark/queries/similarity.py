@@ -5,6 +5,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from heparchy_spark.functions.literals import array_lit
 from heparchy_spark.operators.similarity import (
     cosine,
     cosine_topk,
@@ -61,7 +62,7 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_cosine_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     qrow = emb.where(F.col("vec_id") == 0).select("embedding").head()
-    q = F.array(*[F.lit(float(v)) for v in qrow[0]])
+    q = array_lit([float(v) for v in qrow[0]])
     return emb.select(
         "vec_id",
         F.round(cosine(F.col("embedding"), q), 9).alias("cosine_sim"),
@@ -985,7 +986,7 @@ def similarity_debias_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     w = [r.weight for r in pc]
-    wlit = F.array(*[F.lit(v) for v in w])
+    wlit = array_lit(w)
     d = F.round(dot(F.col("embedding"), wlit), 8)
     resid = F.zip_with(
         F.col("embedding"),

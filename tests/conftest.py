@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import time
+import uuid
+
 import numpy as np
 import pytest
 
@@ -69,3 +72,44 @@ def assert_files_event_sorted(table_dir) -> None:
     for f in files:
         ids = pq.read_table(f, columns=["event_id"])["event_id"].to_pylist()
         assert ids == sorted(ids), f
+
+
+def spark_jobs(spark, call) -> list[int]:
+    """Ids of the Spark jobs ``call()`` started, through the public status
+    tracker. The listener bus delivers events in order, so once a fence
+    job run after the call is visible, so is every job the call ran."""
+    sc = spark.sparkContext
+    probe, fence = f"probe-{uuid.uuid4()}", f"fence-{uuid.uuid4()}"
+    tracker = sc.statusTracker()
+    sc.setJobGroup(probe, "jobs of the probed call")
+    try:
+        call()
+    finally:
+        sc.setJobGroup(fence, "listener fence")
+    try:
+        spark.range(1).count()
+        deadline = time.monotonic() + 60
+        while not tracker.getJobIdsForGroup(fence):
+            assert time.monotonic() < deadline, "fence job never reported"
+            time.sleep(0.05)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(tracker.getJobIdsForGroup(probe))
+
+
+def write_table(df, sf_dir, name: str) -> None:
+    """Write ``df`` as test table ``name`` under ``sf_dir`` in its declared
+    schema (``queries/tables.SCHEMAS``), the only layout ``load`` accepts:
+    columns in declared order and cast to the declared types, declared
+    columns ``df`` lacks written as nulls."""
+    import pyspark.sql.functions as F
+
+    from heparchy_spark.queries.tables import SCHEMAS, _ddl_columns
+
+    df.select(
+        *[
+            (F.col(c) if c in df.columns else F.lit(None)).cast(t).alias(c)
+            for c, t in _ddl_columns(SCHEMAS[name])
+        ]
+    ).write.mode("overwrite").parquet(f"{sf_dir}/{name}.parquet")
+

@@ -5,7 +5,6 @@ directory and with no Spark job, while Spark scans the same files."""
 from __future__ import annotations
 
 import shutil
-import time
 import uuid
 
 import numpy as np
@@ -15,7 +14,7 @@ import pytest
 from heparchy_spark.sources import HepReader, HepWriter
 from heparchy_spark.sources import store as store_mod
 from heparchy_spark.sources.maintenance import _parquet_files
-from tests.conftest import assert_files_event_sorted, make_event
+from tests.conftest import assert_files_event_sorted, make_event, spark_jobs
 
 
 def _set_event(evt_w, data: dict) -> None:
@@ -42,29 +41,6 @@ def _assert_event_equal(evt, data: dict) -> None:
     np.testing.assert_array_equal(evt.masks["final"], data["final"])
     assert evt.count == len(data["pdg"])
     assert evt.custom_meta["n"] == len(data["pdg"])
-
-
-def _spark_jobs(spark, call) -> list[int]:
-    """Ids of the Spark jobs ``call()`` started, through the public status
-    tracker. The listener bus delivers events in order, so once a fence
-    job run after the call is visible, so is every job the call ran."""
-    sc = spark.sparkContext
-    probe, fence = f"probe-{uuid.uuid4()}", f"fence-{uuid.uuid4()}"
-    tracker = sc.statusTracker()
-    sc.setJobGroup(probe, "jobs of the probed call")
-    try:
-        call()
-    finally:
-        sc.setJobGroup(fence, "listener fence")
-    try:
-        spark.range(1).count()
-        deadline = time.monotonic() + 60
-        while not tracker.getJobIdsForGroup(fence):
-            assert time.monotonic() < deadline, "fence job never reported"
-            time.sleep(0.05)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return list(tracker.getJobIdsForGroup(probe))
 
 
 def test_chunk_dir_matches_spark_partition_paths(spark, tmp_path):
@@ -119,10 +95,10 @@ def test_facade_io_runs_no_spark_job(spark, tmp_path):
     w = HepWriter(spark, root, evts_per_chunk=2).__enter__()
     proc = w.new_process("p").__enter__()
     commit(events[0])
-    assert _spark_jobs(spark, lambda: commit(events[1])) == []  # chunk flush
+    assert spark_jobs(spark, lambda: commit(events[1])) == []  # chunk flush
     for data in events[2:]:
         commit(data)
-    assert _spark_jobs(spark, close) == []  # last partial chunk + processes
+    assert spark_jobs(spark, close) == []  # last partial chunk + processes
 
     r = HepReader(spark, root)
     reads = {
@@ -136,8 +112,8 @@ def test_facade_io_runs_no_spark_job(spark, tmp_path):
         "count": lambda: r["p"][3].count,
         "custom_meta": lambda: r["p"][3].custom_meta["n"],
     }
-    assert {k: _spark_jobs(spark, f) for k, f in reads.items()} == {k: [] for k in reads}
-    assert _spark_jobs(spark, lambda: r["p"].particles.count())
+    assert {k: spark_jobs(spark, f) for k, f in reads.items()} == {k: [] for k in reads}
+    assert spark_jobs(spark, lambda: r["p"].particles.count())
     _assert_event_equal(r["p"][3], events[3])
 
 

@@ -3,7 +3,9 @@ ground truth; stubbed decode checked for plumbing shape + determinism."""
 
 from __future__ import annotations
 
+import sys
 import zlib
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -186,6 +188,26 @@ def test_corpus_payloads_never_reach_fake_decoder(spark):
         r["media_id"] for r in rows if _try_real_decode(bytes(r["payload"])) is None
     ]
     assert unparsed == []
+
+
+@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
+def test_media_payloads_equal_struct_pack_mirror(spark, sf_dir):
+    """Every synthesized payload byte equals the independent struct.pack
+    construction of tools/build_expected.payload_for."""
+    from heparchy_spark.queries.multimodal import _media_df
+    from heparchy_spark.queries.tables import load
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    from build_expected import payload_for
+
+    got = {
+        r.media_id: bytes(r.payload)
+        for r in _media_df(spark, sf_dir).select("media_id", "payload").collect()
+    }
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text").collect()
+    assert len(got) == len(docs) > 0
+    bad = [r.doc_id for r in docs if got[r.doc_id] != payload_for(r.doc_id, r.text)]
+    assert bad == []
 
 
 # ---------------------------------------------------------------------------

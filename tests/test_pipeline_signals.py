@@ -13,6 +13,7 @@ from heparchy_spark.operators.text import (
     stopword_ratio_df,
     token_frequencies,
 )
+from tests.conftest import write_table
 
 import pyspark.sql.functions as F
 
@@ -727,7 +728,7 @@ def test_textrank_hub_word_outranks_periphery(spark):
     import tempfile
 
     with tempfile.TemporaryDirectory() as d:
-        docs.write.mode("overwrite").parquet(f"{d}/documents.parquet")
+        write_table(docs, d, "documents")
         out = text_textrank_keywords(spark, d).collect()
     kws = [r["keyword"] for r in out]
     scores = {r["keyword"]: r["score"] for r in out}

@@ -16,6 +16,7 @@ from heparchy_spark.plans import (
     shuffle_count,
 )
 from heparchy_spark.queries.tables import load
+from tests.conftest import write_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -395,11 +396,15 @@ def test_theil_decomposition_identity_and_zero(spark):
         for i in range(8)
     ]
     with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            cust,
-            "c_custkey long, c_name string, c_nationkey long,"
-            " c_acctbal double, c_mktsegment string",
-        ).write.parquet(d + "/customer.parquet")
+        write_table(
+            spark.createDataFrame(
+                cust,
+                "c_custkey long, c_name string, c_nationkey long,"
+                " c_acctbal double, c_mktsegment string",
+            ),
+            d,
+            "customer",
+        )
         for name, orders in [("eq", equal), ("sk", skew)]:
             df = spark.createDataFrame(
                 orders,
@@ -407,7 +412,7 @@ def test_theil_decomposition_identity_and_zero(spark):
                 " o_totalprice double, o_orderdate string,"
                 " o_orderpriority string",
             ).withColumn("o_orderdate", F.to_date("o_orderdate"))
-            df.write.parquet(d + f"/{name}/orders.parquet")
+            write_table(df, f"{d}/{name}", "orders")
         import shutil
 
         shutil.copytree(

@@ -7,6 +7,7 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
+from heparchy_spark.functions.literals import array_lit
 from heparchy_spark.operators.similarity import (
     cosine,
     cosine_topk,
@@ -44,7 +45,7 @@ def test_cosine_topk_matches_numpy(spark, emb):
 def test_cosine_column_matches_numpy(spark, emb):
     pdf = emb.select("vec_id", "embedding").toPandas()
     qvec = list(pdf[pdf.vec_id == 3]["embedding"].iloc[0])
-    q = F.array(*[F.lit(float(v)) for v in qvec])
+    q = array_lit([float(v) for v in qvec])
     got = {
         r["vec_id"]: r["c"]
         for r in emb.select(

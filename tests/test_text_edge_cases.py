@@ -15,6 +15,7 @@ from heparchy_spark.operators.dedup import (
     simhash_near_dup_pairs,
 )
 from heparchy_spark.operators.text import fingerprint_df, text_profile
+from tests.conftest import write_table
 
 ROWS = [
     (0, "the quick brown fox jumps over the lazy dog"),
@@ -607,7 +608,7 @@ def test_fs_linkage_rare_field_agreement_outweighs_common(spark):
     import tempfile
 
     with tempfile.TemporaryDirectory() as d:
-        df.write.mode("overwrite").parquet(f"{d}/part.parquet")
+        write_table(df, d, "part")
         out = dedup_fs_linkage_scores(spark, d).collect()
     assert out, "blocked pairs expected"
     by_pair = {(r["p1"], r["p2"]): r for r in out}

@@ -8,6 +8,7 @@ import pytest
 
 from heparchy_spark.operators.timeseries import gap_fill, locf, resample
 from heparchy_spark.queries.tables import load
+from tests.conftest import write_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -223,7 +224,7 @@ def test_ewma_constant_step_and_first_row(spark):
     import tempfile
 
     with tempfile.TemporaryDirectory() as td:
-        df.write.parquet(f"{td}/events.parquet")
+        write_table(df, td, "events")
         out = REGISTRY["events_ewma_value"].spark(spark, td).collect()
     const = sorted(
         (r for r in out if r["event_type"] == "const"), key=lambda r: r["day"]
@@ -269,7 +270,7 @@ def test_markov_entropy_extremes(spark):
     import tempfile
 
     with tempfile.TemporaryDirectory() as d:
-        ev.write.parquet(d + "/events.parquet")
+        write_table(ev, d, "events")
         got = {
             r.user_id: r
             for r in events_markov_entropy(spark, d).collect()

@@ -288,7 +288,7 @@ _GIF_TRAILER = b"\x3b"
 def payload_for(doc_id: int, text: str | None) -> bytes:
     """Mirror of queries/multimodal._media_df payload synthesis: REAL
     minimal containers built with struct.pack — an implementation
-    independent of the Spark column-algebra construction.
+    independent of the Spark SQL construction.
 
     NOTE: Spark's concat/unhex NULL-propagates, so a null text means a
     NULL payload and every downstream multimodal operator sees null —
