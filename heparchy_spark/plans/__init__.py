@@ -1,30 +1,21 @@
-"""Plan inspection & scale-property assertions (SURVEY.md §4, §6).
+"""Plan inspection & scale-property assertions (SURVEY.md §4, §6): the
+100 TB failure mode is a plan that silently stopped pruning, so tests,
+tools and operators ASSERT plan properties instead of hoping."""
 
-The reference's performance model reduces to measurable plan properties
-(BASELINE.md): point lookups prune partitions (P3), counts are metadata-only
-(P5), projections prune Parquet columns (P1). These helpers read the
-physical plan so tests and operators can ASSERT those properties instead of
-hoping — the 100 TB failure mode is a plan that silently stopped pruning.
-"""
-
-from heparchy_spark.plans.inspect import (
+from heparchy_spark.plans.inspect import (  # noqa: F401
+    MARKERS,
+    RUNTIME_MATERIALIZED,
+    PlanFacts,
     executed_plan,
+    facts_from_plan,
+    fingerprint,
     has_broadcast_join,
     has_partition_filters,
+    offenders,
     physical_plan,
+    plan_facts,
     pushed_filters,
     scan_columns,
     shuffle_count,
-    wholestage_codegen_ids,
+    violations,
 )
-
-__all__ = [
-    "physical_plan",
-    "executed_plan",
-    "scan_columns",
-    "pushed_filters",
-    "has_partition_filters",
-    "has_broadcast_join",
-    "shuffle_count",
-    "wholestage_codegen_ids",
-]

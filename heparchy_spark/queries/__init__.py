@@ -65,37 +65,28 @@ class QuerySpec:
     spark: SparkBuilder
     oracle: str | None  # None -> driver records rows-only check
     doc: str = ""
-    # Plan-shape declarations read by tests/test_plans.py's corpus-wide
-    # scale-killer gate.  A query whose physical plan legitimately
-    # contains a BroadcastNestedLoopJoin (the scalar-subquery /
-    # bounded-broadcast pattern) or a row-at-a-time Python UDF (the one
-    # UDTF slow-path demo) must SAY so at registration time — the gate
-    # reads these flags from the registry, so there is no hand list to
-    # go stale when a new query lands (three rounds shipped that miss).
+    # Plan-shape declarations, read from the registry by the scale-killer
+    # rules (heparchy_spark.plans.violations: tools/plan_gate.py and the
+    # corpus-wide test), so no hand list goes stale when a query lands.
+    # A BroadcastNestedLoopJoin (the scalar-subquery / bounded-broadcast
+    # pattern) or a row-at-a-time Python UDF (the one UDTF slow-path demo)
+    # must be declared:
     expects_bnlj: bool = False
     expects_row_udf: bool = False
-    # Explicit F.broadcast()/hint("broadcast") sites: an explicit hint is
-    # HONORED regardless of size — AQE never demotes it — so a hint on a
-    # frame that grows with the corpus is a hard failure (>8 GB) at
-    # scale that no local bench can see (the round-8 verdict found 17
-    # such queries sitting green for 7 rounds).  Any query whose
-    # ANALYZED plan carries a ResolvedHint must therefore declare WHY
-    # the hinted frame is bounded (e.g. "nation/region dims",
-    # "1-row global stats", "top-k vocab").  Undeclared hints fail the
-    # plan gate; frames that scale with the fact tables must not be
-    # hinted at all — AQE/autoBroadcastJoinThreshold picks BHJ when the
-    # side genuinely fits and SMJ when it doesn't.
+    # WHY an explicitly hinted frame is bounded (e.g. "nation/region
+    # dims", "1-row global stats", "top-k vocab").  A hint is honored at
+    # any size — AQE never demotes it — so a hint on a frame that grows
+    # with the fact tables fails above Spark's 8 GB broadcast cap, at a
+    # scale no local bench sees (the round-8 verdict found 17 such
+    # queries green for 7 rounds).  Such frames stay unhinted: AQE picks
+    # BHJ when the side fits and SMJ when it doesn't.
     expects_broadcast: str | None = None
-    # Unpartitioned windows (Window.orderBy / a global frame with no
-    # partition columns) funnel the whole frame through ONE task — the
-    # single-partition-sort scale killer the r8 Theil/RFM and r10 NTILE
-    # fixes eliminated.  Any query whose physical plan retains one must
-    # declare WHY the windowed frame is bounded (e.g. "9-row Benford
-    # digit table", "<=2k-row KMV sketch merge", "n_buckets boundary
-    # rows"); undeclared global windows fail the plan gate.  Frames
-    # that scale with the corpus must use the distributed rank
-    # machinery (range-bucket + partitioned in-bucket windows + offset
-    # maps — see queries/relational.py orders_rfm_segments) instead.
+    # WHY the frame under an unpartitioned window (Window.orderBy, a
+    # global frame) is bounded (e.g. "9-row Benford digit table").  Such
+    # a window funnels its whole frame through ONE task; frames that
+    # scale use the distributed rank machinery instead (range-bucket +
+    # partitioned in-bucket windows + offset maps, see
+    # queries/relational.py orders_rfm_segments).
     expects_global_window: str | None = None
 
 
@@ -114,17 +105,8 @@ def register(
 ):
     """Decorator: register a Spark query builder with its oracle SQL.
 
-    ``expects_bnlj`` / ``expects_row_udf`` declare intentional
-    plan shapes (bounded broadcast nested-loop join; row-at-a-time
-    Python UDF) that the corpus-wide plan gate would otherwise flag.
-    ``expects_broadcast`` declares every explicit broadcast hint in the
-    query's plan, naming the bounded frame(s) hinted — required because
-    explicit hints are honored at ANY size (AQE never demotes them), so
-    only frames with a scale-independent bound may carry one.
-    ``expects_global_window`` declares every UNPARTITIONED window in the
-    plan, naming the bounded frame it sorts — a global window funnels
-    its whole input through one task, so only frames with a
-    scale-independent bound may keep one.
+    The ``expects_*`` keywords are the plan-shape declarations of
+    ``QuerySpec``.
     """
 
     def deco(fn: SparkBuilder) -> SparkBuilder:

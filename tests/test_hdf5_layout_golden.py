@@ -31,6 +31,7 @@ import re
 import numpy as np
 import pytest
 
+from heparchy_spark.plans import executed_plan
 from heparchy_spark.sources.hdf5_bridge import layout_manifest
 
 N_EVENTS = 7
@@ -221,7 +222,7 @@ def test_multi_file_ingest_one_task_per_file(spark):
 
     # the plan really spreads the file list N ways (deterministic range
     # exchange on the file index, before the Python runner)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert "rangepartitioning(__file_idx" in plan
     assert ", 5)" in plan
 

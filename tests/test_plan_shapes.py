@@ -17,11 +17,8 @@ from pathlib import Path
 
 import pytest
 
-from tools.plan_fingerprint import (
-    FIXTURE,
-    RUNTIME_MATERIALIZED,
-    fingerprint,
-)
+from heparchy_spark.plans import RUNTIME_MATERIALIZED, fingerprint, plan_facts
+from tools.plan_fingerprint import FIXTURE
 
 SF_DIR = "/root/testdata/sf0.01"  # fingerprints are generated at sf0.01:
 # broadcast decisions read size stats, so the scale is part of the pin
@@ -47,7 +44,7 @@ def test_headline_plan_shapes_unchanged(spark, committed):
     qs = spark_queries()
     drift = {}
     for name, want in committed.items():
-        got = fingerprint(qs[name](spark, SF_DIR))
+        got = fingerprint(plan_facts(qs[name](spark, SF_DIR)))
         if got != want:
             drift[name] = {
                 k: (want[k], got[k]) for k in want if want[k] != got.get(k)

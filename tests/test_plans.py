@@ -182,79 +182,14 @@ def test_zorder_layout_range_partitions_no_global_sort(spark):
 
 
 def test_corpus_wide_no_scale_killers(spark):
-    """Every registered corpus query must plan free of scale-killers:
-    no cartesian products anywhere; no row-at-a-time Python UDFs and no
-    BroadcastNestedLoopJoin unless the query DECLARED the shape at
-    registration time (``@register(..., expects_bnlj=True)`` for the
-    scalar-subquery / bounded-broadcast pattern,
-    ``expects_row_udf=True`` for the one UDTF slow-path demo); and no
-    explicit broadcast hint (``ResolvedHint`` in the ANALYZED plan)
-    unless ``expects_broadcast="why the frame is bounded"`` was
-    declared — an explicit hint is honored at ANY size (AQE never
-    demotes it, unlike threshold-chosen BHJs), so a hint on a frame
-    that scales with the fact tables hard-fails above Spark's 8 GB
-    broadcast cap at 100x; the round-8 verdict found 17 such hints
-    sitting green for 7 rounds because no gate read them.  Also: no
-    UNPARTITIONED window (``Window.orderBy`` with no partition — the
-    whole frame funnels through one task, the single-partition-sort
-    class the r8 Theil/RFM and r10 NTILE fixes eliminated) unless
-    ``expects_global_window="why the frame is bounded"`` was declared.
-    The gate reads the declarations from the registry itself — there is
-    no hand-maintained allowlist to go stale when a new query lands."""
-    import re
-
-    from heparchy_spark.queries import REGISTRY, _load_all, spark_queries
+    """Every registered corpus query plans free of scale-killers, by the
+    rules and registry declarations of ``heparchy_spark.plans.violations``
+    (the same ``offenders`` loop as ``tools/plan_gate.py --all``)."""
+    from heparchy_spark.plans import offenders
+    from heparchy_spark.queries import REGISTRY, _load_all
 
     _load_all()
-    ROW_UDF_OK = {n for n, s in REGISTRY.items() if s.expects_row_udf}
-    BNLJ_OK = {n for n, s in REGISTRY.items() if s.expects_bnlj}
-    HINT_OK = {
-        n for n, s in REGISTRY.items() if s.expects_broadcast is not None
-    }
-    GWIN_OK = {
-        n
-        for n, s in REGISTRY.items()
-        if s.expects_global_window is not None
-    }
-    # unpartitioned window: the spec's FIRST element is an order entry
-    # (attr ASC/DESC) or the frame itself — no partition columns
-    gwin_re = re.compile(
-        r"windowspecdefinition\((?:\w+#\d+\w* (?:ASC|DESC)"
-        r"|specifiedwindowframe)"
-    )
-    offenders = []
-    for name, fn in spark_queries().items():
-        qe = fn(spark, SF_DIR)._jdf.queryExecution()
-        plan = qe.executedPlan().toString()
-        if "CartesianProduct" in plan:
-            offenders.append((name, "cartesian"))
-        if "BatchEvalPython" in plan and name not in ROW_UDF_OK:
-            offenders.append((name, "row-python-udf"))
-        if "BroadcastNestedLoopJoin" in plan and name not in BNLJ_OK:
-            offenders.append((name, "unexpected-BNLJ"))
-        # merge/shuffle_hash hints are DEMOTIONS (spillable, AQE-skew-
-        # splittable at any size) and need no declaration; broadcast and
-        # shuffle_replicate_nl escalate and do (mirrors tools/plan_gate)
-        hinted = bool(
-            set(
-                re.findall(
-                    r"ResolvedHint \(strategy=(\w+)",
-                    qe.analyzed().toString(),
-                )
-            )
-            - {"merge", "shuffle_hash"}
-        )
-        if hinted and name not in HINT_OK:
-            offenders.append((name, "undeclared-broadcast-hint"))
-        if not hinted and name in HINT_OK:
-            # declarations must not outlive their hints
-            offenders.append((name, "stale-broadcast-declaration"))
-        gwin = bool(gwin_re.search(plan))
-        if gwin and name not in GWIN_OK:
-            offenders.append((name, "undeclared-global-window"))
-        if not gwin and name in GWIN_OK:
-            offenders.append((name, "stale-global-window-declaration"))
-    assert not offenders, offenders
+    assert offenders(spark, SF_DIR, list(REGISTRY)) == []
 
 
 def test_bm25_broadcasts_terms_and_stats(spark):

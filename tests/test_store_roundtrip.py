@@ -7,6 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from heparchy_spark.plans import has_partition_filters
 from heparchy_spark.sources import HepReader, HepWriter
 from tests.conftest import make_event
 
@@ -170,8 +171,7 @@ def test_partition_pruning_point_lookup(spark, store):
         proc = r["higgs"]
         pcls = proc.particles
         df = pcls.where((pcls.chunk_id == 1) & (pcls.event_id == 5))
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan
+        assert has_partition_filters(df, "process", "chunk_id")
 
 
 def test_spark_native_surface(spark, store):

@@ -8,6 +8,7 @@ import datetime as dt
 import pyspark.sql.functions as F
 
 from heparchy_spark.operators.sweep import interval_concurrency, prefix_sum
+from heparchy_spark.plans import executed_plan
 
 
 def test_prefix_sum_matches_serial(spark, rng):
@@ -66,12 +67,7 @@ def test_interval_concurrency_never_single_partition_window(spark):
         [(dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2))],
         "s timestamp, e timestamp",
     )
-    plan = (
-        interval_concurrency(df, "s", "e")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = executed_plan(interval_concurrency(df, "s", "e"))
     # every unbounded Window must be over __b (bucketed, parallel) —
     # except the one on the |buckets|-row offsets table, which shows up
     # partitioned by nothing but reads a bounded aggregate

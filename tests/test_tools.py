@@ -17,17 +17,23 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
 
-def _changed_with_diff(monkeypatch, paths: list[str]) -> set[str]:
+def _changed_with_diff(
+    monkeypatch, paths: list[str], untracked: list[str] = ()
+) -> set[str]:
     import plan_gate
 
     real_run = subprocess.run
 
     def fake_run(cmd, **kw):
-        if cmd[:3] == ["git", "diff", "--name-only"]:
-            class R:
-                stdout = "\n".join(paths)
+        for prefix, listed in (
+            (["git", "diff", "--name-only"], paths),
+            (["git", "ls-files", "--others"], untracked),
+        ):
+            if cmd[: len(prefix)] == prefix:
+                class R:
+                    stdout = "\n".join(listed)
 
-            return R()
+                return R()
         return real_run(cmd, **kw)
 
     monkeypatch.setattr(plan_gate.subprocess, "run", fake_run)
@@ -61,6 +67,60 @@ def test_changed_ignores_non_package_files(monkeypatch):
         monkeypatch, ["tools/plan_gate.py", "README.md", "tests/test_plans.py"]
     )
     assert names == set()
+
+
+def test_changed_follows_package_imports(monkeypatch):
+    """``from heparchy_spark.streaming import purchase_view_join`` goes
+    through the package's ``__init__.py`` to ``streaming/analytics.py``:
+    editing either re-gates the query that calls it."""
+    for path in (
+        "heparchy_spark/streaming/analytics.py",
+        "heparchy_spark/streaming/__init__.py",
+    ):
+        names = _changed_with_diff(monkeypatch, [path])
+        assert "events_stream_join_view_purchase" in names, path
+        assert "q1_pricing_summary" not in names, path
+
+
+def test_changed_maps_package_init_to_the_package(monkeypatch):
+    """``functions/__init__.py`` is the package ``heparchy_spark.functions``,
+    which Python runs before any ``heparchy_spark.functions.literals``
+    import."""
+    names = _changed_with_diff(
+        monkeypatch, ["heparchy_spark/functions/__init__.py"]
+    )
+    assert "orders_rfm_segments" in names  # relational imports literals
+    assert "q2_min_cost_supplier" not in names
+
+
+def test_changed_resolves_from_package_import_of_a_submodule(monkeypatch):
+    """``from heparchy_spark.sources import store`` (sources/reader.py)
+    imports the submodule ``sources/store.py``, not only the package."""
+    from heparchy_spark.queries import REGISTRY, QuerySpec, _load_all
+
+    _load_all()
+
+    def probe(spark, sf_dir):
+        raise AssertionError("selection only")
+
+    probe.__module__ = "heparchy_spark.sources.reader"
+    monkeypatch.setitem(
+        REGISTRY, "probe_reader", QuerySpec("probe_reader", probe, None)
+    )
+    names = _changed_with_diff(
+        monkeypatch, ["heparchy_spark/sources/store.py"]
+    )
+    assert names == {"probe_reader"}
+
+
+def test_changed_includes_untracked_files(monkeypatch):
+    """A new module is invisible to ``git diff HEAD``; the untracked list
+    feeds the same mapping."""
+    names = _changed_with_diff(
+        monkeypatch, [], untracked=["heparchy_spark/queries/tpch.py"]
+    )
+    assert "q2_min_cost_supplier" in names
+    assert "text_bm25_topk" not in names
 
 
 def test_registry_broadcast_declarations_are_nonempty_strings():

@@ -1,69 +1,24 @@
-"""Plan audit: run every corpus query and report its physical-plan scale
-properties — shuffle-exchange count, broadcast usage, scans, codegen spans,
-and broadcasts whose build side descends from a Python map node.
-
-The last column flags the r10 multimodal pathology class: Catalyst sizes
-a mapInPandas/pandas-UDF frame from its (possibly column-pruned) child
-scan, so a broadcast decision over such a frame rests on an estimate
-that can be off by the full Python output width times any explode
-multiplier — and a statically-planned BHJ with no shuffle boundary
-below it is never demoted by AQE.  A nonzero count is not automatically
-wrong (bounded centroid/vocab frames are declared and fine; estimates
-descending from full-width text/embedding scans demote naturally at
-scale) — it is the list of sites to AUDIT when join inputs change.
+"""Plan audit: run every corpus query and print its plan facts
+(``heparchy_spark.plans.plan_facts``): shuffle-exchange count, broadcast
+usage, scans, codegen spans, and broadcasts built over a Python map node
+(the list of sites to AUDIT when join inputs change).  Exit code 1 when
+any query raised.
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
-import re
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-_PYMAP = (
-    "MapInPandas",
-    "FlatMapGroupsInPandas",
-    "MapInArrow",
-    "ArrowEvalPython",
-    "BatchEvalPython",
-)
 
-
-def pymap_broadcast_count(plan: str) -> int:
-    """Broadcast exchanges whose subtree contains a Python map node,
-    by indentation walk of the plan-tree text."""
-
-    def indent(line: str) -> int:
-        m = re.search(r"[A-Za-z*+]", line)
-        return m.start() if m else len(line)
-
-    lines = plan.splitlines()
-    hits = 0
-    for i, ln in enumerate(lines):
-        if "BroadcastExchange" not in ln:
-            continue
-        d = indent(ln)
-        for j in range(i + 1, len(lines)):
-            if indent(lines[j]) <= d:
-                break
-            if any(mk in lines[j] for mk in _PYMAP):
-                hits += 1
-                break
-    return hits
-
-
-def main() -> None:
+def main() -> int:
     args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    from heparchy_spark.plans import (
-        executed_plan,
-        has_broadcast_join,
-        shuffle_count,
-        wholestage_codegen_ids,
-    )
+    from heparchy_spark.plans import plan_facts
     from heparchy_spark.queries import spark_queries
     from heparchy_spark.session import get_spark
 
@@ -74,22 +29,25 @@ def main() -> None:
         f"{'query':42s} {'shuffles':>8s} {'bcast':>6s} {'scans':>6s} "
         f"{'codegen':>8s} {'pymap-bcast':>11s}"
     )
+    failed = 0
     for name in names:
         try:
             df = qs[name](spark, sf_dir)
             df.write.mode("overwrite").format("noop").save()
-            plan = executed_plan(df)
+            f = plan_facts(df)
             print(
-                f"{name:42s} {shuffle_count(df):8d} "
-                f"{str(has_broadcast_join(df)):>6s} "
-                f"{plan.count('Scan parquet'):6d} "
-                f"{len(wholestage_codegen_ids(df)):8d} "
-                f"{pymap_broadcast_count(plan):11d}"
+                f"{name:42s} {f.shuffle_count:8d} "
+                f"{str(f.broadcast_join):>6s} "
+                f"{f.scan_count:6d} "
+                f"{f.codegen_spans:8d} "
+                f"{f.pymap_broadcasts:11d}"
             )
         except Exception as exc:  # noqa: BLE001
+            failed += 1
             print(f"{name:42s} ERROR: {exc}")
     spark.stop()
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

@@ -1,37 +1,18 @@
-"""Fast pre-commit plan gate for one or a few named queries.
-
-The corpus-wide scale-killer gate (``tests/test_plans.py::
-test_corpus_wide_no_scale_killers``) plans all ~270 queries and takes
-minutes — rounds 5 and 7 both shipped a red tree because it wasn't run
-before commit.  This tool applies the SAME rules (read from the registry,
-no separate allowlist) to just the queries you touched, in seconds:
+"""Fast pre-commit plan gate: the scale-killer rules
+(``heparchy_spark.plans.violations``) through the same ``offenders`` loop
+as the corpus-wide test, on just the queries you touched, in seconds:
 
     python tools/plan_gate.py agg_theil_inequality orders_rfm_segments
     python tools/plan_gate.py --changed     # queries in modules touched
-                                            # since HEAD (git diff)
+                                            # since HEAD, untracked too
     python tools/plan_gate.py --all         # the full corpus gate
 
-Checks per query (planned at sf0.001 — plan shape, no execution of the
-final frame): no CartesianProduct; no BroadcastNestedLoopJoin unless
-``expects_bnlj=True`` was declared; no row-at-a-time Python UDF
-(BatchEvalPython) unless ``expects_row_udf=True``; no explicit
-ESCALATING join hint (``ResolvedHint`` in the ANALYZED plan with
-strategy broadcast / shuffle_replicate_nl — an explicit hint is
-honored at any size, AQE never demotes it, so a hint on an SF-scaling
-frame hard-fails above Spark's 8 GB broadcast cap) unless
-``expects_broadcast="why bounded"`` was declared; demotion hints
-(merge, shuffle_hash) are always allowed — they pin a spillable,
-AQE-skew-splittable shape, the defense AGAINST planner-misestimate
-broadcasts of Python-map-derived frames; no unpartitioned
-window (the single-task sort class) unless
-``expects_global_window="why bounded"`` was declared.  Stale
-declarations (a flag outliving its plan shape) fail too.
-Exit code 0 = clean, 1 = offenders found.
+Queries are planned at sf0.001 (the final frame is not executed).  Exit
+code 0 = clean, 1 = offenders found.
 """
 
 from __future__ import annotations
 
-import re
 import subprocess
 import sys
 from pathlib import Path
@@ -42,94 +23,102 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def changed_query_names() -> list[str]:
-    """Queries whose defining module — or any module their defining
-    module imports from this package — was touched since HEAD.
+    """Queries whose defining module — or any module it imports from this
+    package, transitively, or a package around those — was touched since
+    HEAD (tracked diffs plus untracked files).
 
     The transitive hop matters: editing ``operators/psl.py`` changes the
     plans of ``queries/web.py``'s queries even though no query module
-    stem matches the diff (the round-8 advice: bare-stem matching
-    re-gated web/graph/text only by stem coincidence)."""
+    stem matches the diff."""
+    import ast
+    import functools
+
     root = Path(__file__).resolve().parent.parent
-    out = subprocess.run(
+    listed = []
+    for cmd in (
         ["git", "diff", "--name-only", "HEAD"],
-        capture_output=True,
-        text=True,
-        cwd=root,
-    ).stdout.split()
+        ["git", "ls-files", "--others", "--exclude-standard"],
+    ):
+        listed += subprocess.run(
+            cmd, capture_output=True, text=True, cwd=root
+        ).stdout.split()
     touched = {
-        p.removesuffix(".py").replace("/", ".")
-        for p in out
+        p.removesuffix(".py").removesuffix("/__init__").replace("/", ".")
+        for p in listed
         if p.endswith(".py") and p.startswith("heparchy_spark/")
     }
     if not touched:
         return []
-    import ast
-
     from heparchy_spark.queries import REGISTRY, _load_all
 
     _load_all()
-    # module -> set of heparchy_spark modules it DIRECTLY imports
-    dep_cache: dict[str, set[str]] = {}
 
-    def imports_of(module: str) -> set[str]:
-        if module in dep_cache:
-            return dep_cache[module]
-        deps: set[str] = set()
-        dep_cache[module] = deps  # pre-seed: cycles terminate
-        path = root / (module.replace(".", "/") + ".py")
+    def source_of(module: str) -> Path | None:
+        base = root / module.replace(".", "/")
+        for path in (base.with_suffix(".py"), base / "__init__.py"):
+            if path.is_file():
+                return path
+        return None
+
+    def packages_of(module: str) -> set[str]:
+        # importing a.b.c runs a/__init__.py and a/b/__init__.py first
+        return {module.rsplit(".", k)[0] for k in range(1, module.count(".") + 1)}
+
+    @functools.cache
+    def imports_of(module: str) -> frozenset[str]:
+        """The package modules ``module`` imports, its own packages left
+        out: the registry package's loader imports every query module."""
+        path = source_of(module)
+        if path is None:
+            return frozenset()
         try:
             tree = ast.parse(path.read_text())
         except (OSError, SyntaxError):
-            return deps
+            return frozenset()
+        deps = set()
         for node in ast.walk(tree):
             if isinstance(node, ast.ImportFrom) and node.module:
-                if node.module.startswith("heparchy_spark"):
-                    deps.add(node.module)
+                # ``from pkg import name`` may name a submodule
+                deps |= {node.module} | {
+                    f"{node.module}.{a.name}"
+                    for a in node.names
+                    if source_of(f"{node.module}.{a.name}")
+                }
             elif isinstance(node, ast.Import):
-                for a in node.names:
-                    if a.name.startswith("heparchy_spark"):
-                        deps.add(a.name)
-        return deps
-
-    def closure_of(module: str) -> set[str]:
-        # TRANSITIVE closure over the per-module dep sets (round-9
-        # advice: one hop misses an operator reachable only through
-        # another operator's import)
-        seen: set[str] = set()
-        stack = [module]
-        while stack:
-            m = stack.pop()
-            for d in imports_of(m):
-                if d not in seen:
-                    seen.add(d)
-                    stack.append(d)
-        return seen
+                deps |= {a.name for a in node.names}
+        return frozenset(
+            d for d in deps if d.startswith("heparchy_spark")
+        ) - packages_of(module)
 
     names = []
     for name, spec in REGISTRY.items():
-        mod = spec.spark.__module__
-        if mod in touched or closure_of(mod) & touched:
+        seen, stack = set(), [spec.spark.__module__]
+        while stack:  # transitive closure over the direct imports
+            m = stack.pop()
+            if m not in seen:
+                seen.add(m)
+                stack.extend(imports_of(m))
+        if (seen | set().union(*map(packages_of, seen))) & touched:
             names.append(name)
     return names
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("-")]
-    flags = {a for a in sys.argv[1:] if a.startswith("-")}
-
+    from heparchy_spark.plans import offenders
     from heparchy_spark.queries import REGISTRY, _load_all
     from heparchy_spark.session import get_spark
 
     _load_all()
-    if "--all" in flags:
+    args = sys.argv[1:]
+    if "--all" in args:
         names = list(REGISTRY)
-    elif "--changed" in flags:
+    elif "--changed" in args:
         names = changed_query_names()
         if not names:
             print("no registered queries in modules changed since HEAD")
             return 0
     else:
-        names = args
+        names = [a for a in args if not a.startswith("-")]
     if not names:
         print(__doc__)
         return 1
@@ -139,56 +128,12 @@ def main() -> int:
         return 1
 
     spark = get_spark("plan-gate")
-    offenders = []
-    for name in names:
-        spec = REGISTRY[name]
-        qe = spec.spark(spark, SF_DIR)._jdf.queryExecution()
-        plan = qe.executedPlan().toString()
-        analyzed = qe.analyzed().toString()
-        probs = []
-        if "CartesianProduct" in plan:
-            probs.append("cartesian")
-        if "BroadcastNestedLoopJoin" in plan and not spec.expects_bnlj:
-            probs.append("unexpected-BNLJ")
-        if "BatchEvalPython" in plan and not spec.expects_row_udf:
-            probs.append("row-python-udf")
-        # classify hint strategies: merge/shuffle_hash are DEMOTIONS
-        # (never pin a growing frame in memory; SMJ/SHJ spill and AQE
-        # skew-splits them) and need no declaration — everything else
-        # (broadcast, shuffle_replicate_nl) escalates and does
-        escalating = set(
-            re.findall(r"ResolvedHint \(strategy=(\w+)", analyzed)
-        ) - {"merge", "shuffle_hash"}
-        if escalating and spec.expects_broadcast is None:
-            probs.append("undeclared-broadcast-hint")
-        if not escalating and spec.expects_broadcast:
-            # a declaration must not outlive its hint — a stale one
-            # would let a future SF-scaling hint slip in undeclared
-            probs.append("stale-broadcast-declaration")
-        # unpartitioned window: the spec's FIRST element is an order
-        # entry (attr ASC/DESC) or the frame itself — no partition
-        # cols.  A FAILURE unless declared bounded (r9 verdict #4):
-        # a global window funnels its whole frame through one task.
-        global_win = bool(
-            re.search(
-                r"windowspecdefinition\((?:\w+#\d+\w* (?:ASC|DESC)"
-                r"|specifiedwindowframe)",
-                plan,
-            )
-        )
-        if global_win and spec.expects_global_window is None:
-            probs.append("undeclared-global-window")
-        if not global_win and spec.expects_global_window:
-            probs.append("stale-global-window-declaration")
-        status = "FAIL " + ",".join(probs) if probs else "ok"
-        print(f"{name}: {status}")
-        if probs:
-            offenders.append((name, probs))
+    found = offenders(spark, SF_DIR, names)
     spark.stop()
-    if offenders:
-        print(f"\n{len(offenders)} offender(s): {offenders}")
+    if found:
+        print(f"{len(found)} offender(s): {found}")
         return 1
-    print(f"\n{len(names)} quer{'y' if len(names) == 1 else 'ies'} clean")
+    print(f"{len(names)} quer{'y' if len(names) == 1 else 'ies'} clean")
     return 0
 
 
