@@ -1,4 +1,8 @@
-from heparchy_spark.functions.literals import array_lit  # noqa: F401
+from heparchy_spark.functions.literals import (  # noqa: F401
+    array_lit,
+    array_sql,
+    sql_ident,
+)
 from heparchy_spark.functions.physics import (  # noqa: F401
     eta,
     inv_mass,

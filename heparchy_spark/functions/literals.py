@@ -21,7 +21,8 @@ folded constant is the same value of the same type:
   default string-literal escaping).
 
 ``F.lit(np.ndarray)`` is no substitute: PySpark's ndarray converter sets
-each element over py4j.
+each element over py4j.  ``array_sql`` returns the same text for callers
+that embed the constant in a larger SQL expression.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
-__all__ = ["array_lit"]
+__all__ = ["array_lit", "array_sql", "sql_ident"]
 
 _INT32_MIN, _INT32_MAX = -(1 << 31), (1 << 31) - 1
 
@@ -59,9 +60,19 @@ def _sql_literal(x) -> str:
     raise TypeError(f"array_lit: unsupported element {x!r} ({type(x).__name__})")
 
 
-def array_lit(values) -> Column:
-    """A constant 1-D or 2-D array (list, tuple or ndarray) as one Column
-    built from a single SQL literal expression."""
+def array_sql(values) -> str:
+    """A constant 1-D or 2-D array (list, tuple or ndarray) as SQL literal
+    text."""
     if isinstance(values, str) or not isinstance(values, (Sequence, np.ndarray)):
         raise TypeError(f"array_lit: expected a sequence, got {type(values).__name__}")
-    return F.expr(_sql_literal(values))
+    return _sql_literal(values)
+
+
+def array_lit(values) -> Column:
+    """``array_sql(values)`` as one Column (a single ``F.expr``)."""
+    return F.expr(array_sql(values))
+
+
+def sql_ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"

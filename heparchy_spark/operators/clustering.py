@@ -37,6 +37,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from heparchy_spark.functions.worker import worker_fn
+
 __all__ = ["kmeans_fit_assign"]
 
 
@@ -51,6 +53,7 @@ def _assign_udf(cents: np.ndarray):
     cn2 = (c**2).sum(axis=1)
 
     @pandas_udf("int")
+    @worker_fn
     def nearest(v: pd.Series) -> pd.Series:
         x = np.stack(v.to_numpy()).astype("float64")
         d2 = cn2[None, :] - 2.0 * (x @ c.T)
@@ -147,6 +150,7 @@ def _dist2_udf(cents: np.ndarray):
     c = np.ascontiguousarray(cents, dtype="float64")
 
     @pandas_udf("double")
+    @worker_fn
     def d2(v: pd.Series, cl: pd.Series) -> pd.Series:
         x = np.stack(v.to_numpy()).astype("float64")
         chosen = c[cl.to_numpy()]

@@ -24,6 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from heparchy_spark.functions.literals import array_lit
+from heparchy_spark.functions.worker import worker_fn
 from heparchy_spark.operators.banding import hamming_pairs
 
 __all__ = [
@@ -365,7 +366,7 @@ def _band_table(sets: DataFrame, num_perm: int, bands: int) -> DataFrame:
                 names=["__id", "band", "bucket"],
             )
 
-    return sets.select("__id", "__shh").mapInArrow(gen, out_type)
+    return sets.select("__id", "__shh").mapInArrow(worker_fn(gen), out_type)
 
 
 def _band_table_expr(sets: DataFrame, num_perm: int, bands: int) -> DataFrame:

@@ -33,6 +33,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from heparchy_spark.functions.worker import worker_fn
+
 __all__ = [
     "antikt_cluster",
     "softdrop_cluster",
@@ -294,7 +296,7 @@ def _per_event_map(src: DataFrame, kernel, schema: str) -> DataFrame:
         src.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
     rep = src.repartition(n_part, "jev").sortWithinPartitions("jev", "h1")
-    return rep.mapInPandas(run, schema)
+    return rep.mapInPandas(worker_fn(run), schema)
 
 
 def genkt_jets(

@@ -32,6 +32,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame, Window
 
+from heparchy_spark.functions.worker import worker_fn
 from heparchy_spark.operators.banding import hamming_pairs
 
 __all__ = [
@@ -131,7 +132,9 @@ def byte_stats(
                 {id_col: ids, "n_bytes": n_bytes, "entropy": entropy, "crc32": crc}
             )
 
-    return df.select(id_col, payload_col).mapInPandas(stats, schema=out_schema)
+    return df.select(id_col, payload_col).mapInPandas(
+        worker_fn(stats), schema=out_schema
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -491,7 +494,7 @@ def decode_media(
             yield pd.DataFrame(rows)
 
     return df.select("media_id", kind_col, payload_col).mapInPandas(
-        decode, schema=DECODED_SCHEMA
+        worker_fn(decode), schema=DECODED_SCHEMA
     )
 
 
@@ -544,7 +547,9 @@ def sample_frames(
                 {"media_id": ids, "frame_idx": idxs, "frame_payload": payloads}
             )
 
-    return df.select("media_id", payload_col).mapInPandas(frames, schema=FRAMES_SCHEMA)
+    return df.select("media_id", payload_col).mapInPandas(
+        worker_fn(frames), schema=FRAMES_SCHEMA
+    )
 
 
 def payload_embedding(
@@ -571,7 +576,9 @@ def payload_embedding(
                 ids.append(mid)
             yield pd.DataFrame({id_col: ids, "embedding": vecs})
 
-    return df.select(id_col, payload_col).mapInPandas(embed, schema=out_schema)
+    return df.select(id_col, payload_col).mapInPandas(
+        worker_fn(embed), schema=out_schema
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -752,7 +759,7 @@ def resize_images(
             yield pd.DataFrame(rows)
 
     return df.select("media_id", payload_col).mapInPandas(
-        run, schema=RESIZED_SCHEMA
+        worker_fn(run), schema=RESIZED_SCHEMA
     )
 
 
@@ -841,7 +848,7 @@ def resample_audio(
             yield pd.DataFrame(rows)
 
     return df.select("media_id", payload_col).mapInPandas(
-        run, schema=RESAMPLED_SCHEMA
+        worker_fn(run), schema=RESAMPLED_SCHEMA
     )
 
 
@@ -896,7 +903,7 @@ def keyframe_select(
                 }
             )
 
-    h = frames.mapInPandas(hists, schema=hist_schema)
+    h = frames.mapInPandas(worker_fn(hists), schema=hist_schema)
     w = Window.partitionBy("media_id").orderBy("frame_idx")
     with_prev = h.withColumn("prev", F.lag("hist").over(w)).where(
         F.col("prev").isNotNull()
@@ -1003,7 +1010,7 @@ def image_dhash128(
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema=schema)
+    return df.select(id_col, payload_col).mapInPandas(worker_fn(run), schema=schema)
 
 
 def image_dhash(
@@ -1056,7 +1063,7 @@ def image_dhash(
                  "decodable": oks}
             )
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema=schema)
+    return df.select(id_col, payload_col).mapInPandas(worker_fn(run), schema=schema)
 
 
 def _dct_basis(n: int = 32) -> "np.ndarray":
@@ -1184,7 +1191,7 @@ def image_phash128(
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema=schema)
+    return df.select(id_col, payload_col).mapInPandas(worker_fn(run), schema=schema)
 
 
 def phash128_neardup_pairs(
@@ -1268,7 +1275,7 @@ def image_phash(
                  "decodable": oks}
             )
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema=schema)
+    return df.select(id_col, payload_col).mapInPandas(worker_fn(run), schema=schema)
 
 
 def dhash_neardup_pairs(
@@ -1399,7 +1406,7 @@ def audio_vad_segments(
             )
 
     return df.select("media_id", payload_col).mapInPandas(
-        run, schema=VAD_SCHEMA
+        worker_fn(run), schema=VAD_SCHEMA
     )
 
 
@@ -1502,7 +1509,7 @@ def audio_spectral_profile(
             )
 
     return df.select("media_id", payload_col).mapInPandas(
-        run, schema=SPECTRAL_SCHEMA
+        worker_fn(run), schema=SPECTRAL_SCHEMA
     )
 
 
@@ -1564,4 +1571,4 @@ def image_gradient_energy(
                 columns=["media_id", "n_pixels", "grad_energy", "decodable"],
             )
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema=schema)
+    return df.select(id_col, payload_col).mapInPandas(worker_fn(run), schema=schema)

@@ -1,13 +1,21 @@
 """Similarity search over embedding columns — [ext] (SURVEY.md §2.12).
 
 Brute-force cosine top-k is the exact baseline: dot products via
-``F.zip_with`` + ``F.aggregate`` (JVM codegen, no Python).  The scale path is
+``zip_with`` + ``aggregate`` (JVM, no Python).  The scale path is
 random-hyperplane LSH: b sign-bits bucket the vectors; queries probe only
 their own bucket (optionally multi-probe neighbors), turning the all-pairs
 product into an equi join on bucket id.  Hyperplanes are seeded NumPy,
-shipped as ONE 2-D SQL literal (``functions.literals.array_lit``: bits x
-dim doubles, one ``F.expr`` to build) and folded bit by bit in one
-higher-order function, so the plan stays deterministic and broadcast-free.
+shipped as ONE 2-D SQL literal (``functions.literals.array_sql``: bits x
+dim doubles) and folded bit by bit in one higher-order function, so the
+plan stays deterministic and broadcast-free.
+
+The vector helpers (``dot``, ``l2_norm``, ``cosine``, ``hyperplane_bucket``)
+take SQL expression text (a column name such as ``"va.__v"``, or literal
+text from ``array_sql``) and return SQL text for ``F.expr``/``selectExpr``:
+the parser builds the whole tree in one py4j command, where a Column tree
+of Python lambdas costs one command per node.  Their lambda variables are
+named after the helper (``dot_x``, ``hp_plane``, ...), so an argument must
+not be a column of one of those names.
 """
 
 from __future__ import annotations
@@ -17,7 +25,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from heparchy_spark.functions.literals import array_lit
+from heparchy_spark.functions.literals import array_sql, sql_ident
+from heparchy_spark.functions.worker import worker_fn
 
 __all__ = [
     "dot",
@@ -46,25 +55,26 @@ __all__ = [
 ]
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Dot product of two array<numeric> columns (double accumulation)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def dot(a: str, b: str) -> str:
+    """Dot product of two array<numeric> expressions: a left fold from
+    ``0.0D`` of the products cast to double (``zip_with`` pads the shorter
+    side with null, so ragged lengths give null)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (dot_x, dot_y) -> "
+        "CAST(dot_x AS DOUBLE) * CAST(dot_y AS DOUBLE)), "
+        "0.0D, (dot_acc, dot_t) -> dot_acc + dot_t)"
     )
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-        )
+def l2_norm(a: str) -> str:
+    return (
+        f"sqrt(aggregate({a}, 0.0D, (nrm_acc, nrm_v) -> "
+        "nrm_acc + CAST(nrm_v AS DOUBLE) * CAST(nrm_v AS DOUBLE)))"
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+def cosine(a: str, b: str) -> str:
+    return f"({dot(a, b)} / ({l2_norm(a)} * {l2_norm(b)}))"
 
 
 def cosine_topk(
@@ -79,10 +89,11 @@ def cosine_topk(
     Brute force, but fully distributed: the scan computes one fused
     projection per row and TakeOrdered keeps k per partition.
     """
-    q = array_lit([float(v) for v in query_vec])
-    sim = cosine(F.col(vec_col), q).alias("cosine_sim")
+    q = array_sql([float(v) for v in query_vec])
     return (
-        df.select(F.col(id_col), sim)
+        df.selectExpr(
+            sql_ident(id_col), f"{cosine(sql_ident(vec_col), q)} AS cosine_sim"
+        )
         .orderBy(F.desc("cosine_sim"), F.asc(id_col))
         .limit(k)
     )
@@ -93,19 +104,16 @@ def _hyperplanes(dim: int, bits: int, seed: int) -> np.ndarray:
     return rng.standard_normal((bits, dim))
 
 
-def hyperplane_bucket(
-    vec_col: Column, dim: int, bits: int = 12, seed: int = 7
-) -> Column:
-    """Random-hyperplane LSH bucket id (long) for a vector column: bit i
-    is ``dot(v, plane_i) > 0``.  One fold over a 2-D literal of the planes
-    in reverse, top bit first (``acc * 2 + bit``).  The literal is the
-    fold's input, not indexed inside its lambda: Catalyst analyses that
-    form faster."""
-    planes = _hyperplanes(dim, bits, seed)
-    return F.aggregate(
-        array_lit(planes[::-1]),
-        F.lit(0).cast("long"),
-        lambda acc, p: acc * 2 + (dot(vec_col, p) > 0).cast("long"),
+def hyperplane_bucket(vec: str, dim: int, bits: int = 12, seed: int = 7) -> str:
+    """Random-hyperplane LSH bucket id (long) for a vector expression: bit
+    i is ``dot(v, plane_i) > 0``.  One fold over a 2-D literal of the
+    planes in reverse, top bit first (``acc * 2 + bit``).  The literal is
+    the fold's input, not indexed inside its lambda: Catalyst analyses
+    that form faster."""
+    planes = array_sql(_hyperplanes(dim, bits, seed)[::-1])
+    return (
+        f"aggregate({planes}, CAST(0 AS BIGINT), (hp_acc, hp_plane) -> "
+        f"hp_acc * 2 + CAST({dot(vec, 'hp_plane')} > 0 AS BIGINT))"
     )
 
 
@@ -126,28 +134,25 @@ def lsh_cosine_topk(
 
     Recall/cost dial: fewer bits -> bigger buckets -> higher recall & cost.
     """
-    base = df.select(
-        F.col(id_col).alias("match_id"),
-        F.col(vec_col).alias("__v"),
-        hyperplane_bucket(F.col(vec_col), dim, bits, seed).alias("__bucket"),
+    v, q = sql_ident(vec_col), sql_ident(q_vec_col)
+    base = df.selectExpr(
+        f"{sql_ident(id_col)} AS match_id",
+        f"{v} AS __v",
+        f"{hyperplane_bucket(v, dim, bits, seed)} AS __bucket",
     )
-    qs = queries.select(
-        F.col(q_id_col).alias("query_id"),
-        F.col(q_vec_col).alias("__q"),
-        hyperplane_bucket(F.col(q_vec_col), dim, bits, seed).alias("__bucket"),
+    qs = queries.selectExpr(
+        f"{sql_ident(q_id_col)} AS query_id",
+        f"{q} AS __q",
+        f"{hyperplane_bucket(q, dim, bits, seed)} AS __bucket",
     )
-    joined = base.join(F.broadcast(qs), "__bucket").select(
-        "query_id",
-        "match_id",
-        cosine(F.col("__v"), F.col("__q")).alias("cosine_sim"),
+    joined = base.join(F.broadcast(qs), "__bucket").selectExpr(
+        "query_id", "match_id", f"{cosine('__v', '__q')} AS cosine_sim"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("match_id")
-    )
-    return (
-        joined.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-    )
+    return joined.selectExpr(
+        "*",
+        "row_number() OVER (PARTITION BY query_id "
+        "ORDER BY cosine_sim DESC, match_id ASC) AS rk",
+    ).where(f"rk <= {int(k)}")
 
 
 def _estimated_rows(df: DataFrame, row_width: int) -> int:
@@ -210,12 +215,10 @@ def embedding_near_dup_pairs(
         n = _estimated_rows(df, row_width=4 * dim)
         bits = min(24, max(4, int(np.ceil(np.log2(max(n, 2) / 32.0)))))
     vecs = df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
-    sig = df.select(
-        F.col(id_col).alias("__id"),
+    sig = df.selectExpr(
+        f"{sql_ident(id_col)} AS __id",
         *[
-            hyperplane_bucket(F.col(vec_col), dim, bits, seed + t).alias(
-                f"__b{t}"
-            )
+            f"{hyperplane_bucket(sql_ident(vec_col), dim, bits, seed + t)} AS __b{t}"
             for t in range(tables)
         ],
     )
@@ -250,11 +253,7 @@ def embedding_near_dup_pairs(
     pairs = (
         cand.join(vecs.alias("va"), F.col("id_a") == F.col("va.__id"))
         .join(vecs.alias("vb"), F.col("id_b") == F.col("vb.__id"))
-        .select(
-            "id_a",
-            "id_b",
-            cosine(F.col("va.__v"), F.col("vb.__v")).alias("cosine_sim"),
-        )
+        .selectExpr("id_a", "id_b", f"{cosine('va.__v', 'vb.__v')} AS cosine_sim")
     )
     return pairs.where(F.col("cosine_sim") >= threshold)
 
@@ -392,6 +391,7 @@ def ivf_assign(
     if nprobe == 1:
 
         @pandas_udf("int")
+        @worker_fn
         def nearest(v: pd.Series) -> pd.Series:
             x = np.stack(v.to_numpy()).astype("float64")
             d2 = cn2[None, :] - 2.0 * (x @ cents.T)
@@ -400,6 +400,7 @@ def ivf_assign(
         return df.withColumn(out_col, nearest(F.col(vec_col)))
 
     @pandas_udf("array<int>")
+    @worker_fn
     def nearest_k(v: pd.Series) -> pd.Series:
         x = np.stack(v.to_numpy()).astype("float64")
         d2 = cn2[None, :] - 2.0 * (x @ cents.T)
@@ -441,10 +442,8 @@ def ivf_topk(
         centroids,
         nprobe=nprobe,
     ).select("query_id", "__q", F.explode("__cent").alias("__cent"))
-    joined = base.join(F.broadcast(qs), "__cent").select(
-        "query_id",
-        "match_id",
-        cosine(F.col("__v"), F.col("__q")).alias("cosine_sim"),
+    joined = base.join(F.broadcast(qs), "__cent").selectExpr(
+        "query_id", "match_id", f"{cosine('__v', '__q')} AS cosine_sim"
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine_sim"), F.asc("match_id")
@@ -514,7 +513,7 @@ def incremental_ivf_assign(
         .select(
             "__nid",
             "__sid",
-            F.round(cosine(F.col("__nv"), F.col("__sv")), 9).alias("__cos"),
+            F.round(F.expr(cosine("__nv", "__sv")), 9).alias("__cos"),
         )
         .groupBy("__nid")
         .agg(
@@ -714,6 +713,7 @@ def label_centroids(
     """
 
     @F.pandas_udf("array<double>")
+    @worker_fn
     def centroid(v: pd.Series) -> list:
         return [float(x) for x in np.mean(np.stack(v.to_numpy()), axis=0)]
 
@@ -799,7 +799,7 @@ def semantic_dedup(
             9,
         ).alias("dist_to_centroid"),
         v.alias("__v"),
-        l2_norm(v).alias("__nrm"),
+        F.expr(l2_norm(f"CAST({sql_ident(vec_col)} AS ARRAY<DOUBLE>)")).alias("__nrm"),
     )
     w = Window.partitionBy("cluster").orderBy(
         F.asc("dist_to_centroid"), F.asc("__id")
@@ -941,6 +941,7 @@ def pq_encode(
     m, _, sub = books.shape
 
     @pandas_udf("array<int>")
+    @worker_fn
     def encode(v: pd.Series) -> pd.Series:
         x = np.stack(v.to_numpy()).astype("float64")
         codes = np.empty((len(x), m), dtype="int32")
@@ -1159,7 +1160,7 @@ def mmr_rerank(
             }
         )
 
-    return candidates.groupBy(query_col).applyInPandas(greedy, out_schema)
+    return candidates.groupBy(query_col).applyInPandas(worker_fn(greedy), out_schema)
 
 
 def random_projection(
@@ -1183,9 +1184,10 @@ def random_projection(
     partitioning.  ``||Pv||^2 / out_dim`` is the unbiased estimate of
     ``||v||^2`` (each Gaussian component has variance ``||v||^2``).
     """
-    planes = array_lit(_hyperplanes(dim, out_dim, seed))
-    proj = F.transform(planes, lambda p: F.round(dot(F.col(vec_col), p), 9))
-    return df.select(F.col(id_col), proj.alias("projection"))
+    planes = array_sql(_hyperplanes(dim, out_dim, seed))
+    dots = dot(sql_ident(vec_col), "rp_plane")
+    proj = f"transform({planes}, rp_plane -> round({dots}, 9))"
+    return df.selectExpr(sql_ident(id_col), f"{proj} AS projection")
 
 
 def power_iteration_top_pc(
@@ -1234,10 +1236,9 @@ def power_iteration_top_pc(
     )
     nrm_row = None
     for _ in range(iters):
-        xlit = array_lit(x)
         dots = df.select(
             F.col(id_col).alias("__rid"),
-            F.round(dot(F.col(vec_col), xlit), 8).alias("__d"),
+            F.round(F.expr(dot(sql_ident(vec_col), array_sql(x))), 8).alias("__d"),
         )
         y = (
             comp.join(dots, "__rid")
@@ -1351,4 +1352,4 @@ def broadcast_decontaminate(
                 rows, columns=["eval_id", "train_id", "cosine_sim"]
             )
 
-    return src.mapInPandas(scan, out_schema)
+    return src.mapInPandas(worker_fn(scan), out_schema)

@@ -25,6 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from heparchy_spark.functions.literals import array_lit
+from heparchy_spark.functions.worker import worker_fn
 
 __all__ = [
     "sha_slice_pos",
@@ -457,7 +458,7 @@ def bottomk_sample_quantiles(
                         ["__h", "__v"], kind="mergesort"
                     ).head(s)
 
-        hashed = hashed.mapInPandas(_prune, schema=prune_schema)
+        hashed = hashed.mapInPandas(worker_fn(_prune), schema=prune_schema)
 
     wk = Window.partitionBy(*gcols).orderBy("__h", "__v")
     sample = (

@@ -14,6 +14,9 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame, Window
 
+from heparchy_spark.functions.literals import sql_ident
+from heparchy_spark.functions.worker import worker_fn
+
 __all__ = [
     "token_count",
     "char_stats",
@@ -129,28 +132,28 @@ def lang_id(col: Column | str) -> Column:
     return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
-def fingerprint(col: Column | str, ngram: int = 4) -> Column:
-    """64-bit document fingerprint: xxhash64 fold over character n-gram
-    rolling hashes of the normalized text (order-sensitive, locality-free —
-    a content identity, cheaper than sha2 for joins).
+def fingerprint(col: str, ngram: int = 4) -> str:
+    """64-bit document fingerprint as SQL text: xxhash64 fold over
+    character n-gram rolling hashes of the normalized text
+    (order-sensitive, locality-free — a content identity, cheaper than
+    sha2 for joins).  The fold runs from ``CAST(0 AS BIGINT)`` in gram
+    order; text shorter than ``ngram`` hashes whole.
 
     IMPORTANT: pass a column that is already materialized (a plain column
-    reference). Passing a computed expression inlines it into the per-
-    position lambda, where interpreted HOF evaluation recomputes it per
-    character n-gram. Prefer ``fingerprint_df`` for whole-table use.
+    name). A computed expression is inlined into the per-position lambda,
+    where interpreted HOF evaluation recomputes it per character n-gram.
+    Prefer ``fingerprint_df`` for whole-table use.  The lambda variables
+    are ``fp_pos``/``fp_acc``/``fp_h``.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    n = F.length(c)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - F.lit(ngram - 1), F.lit(0))),
-        lambda i: F.xxhash64(c.substr(i, F.lit(ngram))),
+    grams = (
+        f"transform(sequence(1, greatest(length({col}) - {ngram - 1}, 0)), "
+        f"fp_pos -> xxhash64(substr({col}, fp_pos, {ngram})))"
     )
-    folded = F.aggregate(
-        grams,
-        F.lit(0).cast("long"),
-        lambda acc, h: F.xxhash64(acc, h),
+    folded = (
+        f"aggregate({grams}, CAST(0 AS BIGINT), "
+        "(fp_acc, fp_h) -> xxhash64(fp_acc, fp_h))"
     )
-    return F.when(n >= ngram, folded).otherwise(F.xxhash64(c))
+    return f"CASE WHEN length({col}) >= {ngram} THEN {folded} ELSE xxhash64({col}) END"
 
 
 def fingerprint_df(
@@ -173,11 +176,9 @@ def fingerprint_df(
     scales with scan bandwidth."""
     from heparchy_spark.operators.dedup import normalize_text
 
-    normed = df.select(
-        F.col(id_col), normalize_text(text_col).alias("__norm")
-    )
-    return normed.select(
-        F.col(id_col), fingerprint(F.col("__norm"), ngram).alias("fp64")
+    normed = df.select(id_col, normalize_text(text_col).alias("__norm"))
+    return normed.selectExpr(
+        sql_ident(id_col), f"{fingerprint('__norm', ngram)} AS fp64"
     )
 
 
@@ -742,6 +743,7 @@ def bpe_train(
             # persisted frame's lineage, and a late recomputation must
             # not see a LATER iteration's loop variables
             @F.pandas_udf("array<string>")
+            @worker_fn
             def merge_pair(s: pd.Series) -> pd.Series:
                 def m(syms: list) -> list:
                     out, i = [], 0
@@ -886,6 +888,7 @@ def bpe_encode_counts(
     rules = list(merges)
 
     @F.pandas_udf("int")
+    @worker_fn
     def encode_len(s: pd.Series) -> pd.Series:
         def enc(w: str) -> int:
             syms = list(w) + ["</w>"]
@@ -1065,7 +1068,7 @@ def compression_signals(
 
     return df.select(
         F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)
-    ).mapInPandas(signals, schema=out_schema)
+    ).mapInPandas(worker_fn(signals), schema=out_schema)
 
 
 def _unigram_viterbi(
@@ -1217,7 +1220,7 @@ def unigram_lm_train(
                 )
 
         used = (
-            words.mapInPandas(estep, schema=count_schema)
+            words.mapInPandas(worker_fn(estep), schema=count_schema)
             .groupBy("s")
             .agg(F.sum("n").alias("n"))
             .collect()
@@ -1275,6 +1278,7 @@ def unigram_encode_counts(
     max_len = max((len(s) for s in table), default=1)
 
     @F.pandas_udf("int")
+    @worker_fn
     def encode_len(s: pd.Series) -> pd.Series:
         def enc(w: str) -> int:
             seg = _unigram_viterbi(w, table, max_len)
@@ -1432,7 +1436,7 @@ def rouge_l_pairs(
                 ],
             )
 
-    return joined.mapInPandas(score, schema=schema)
+    return joined.mapInPandas(worker_fn(score), schema=schema)
 
 
 def lm_perplexity(
@@ -1478,6 +1482,7 @@ def lm_perplexity(
     unk_lp = min(table.values(), default=0.0) - 1.0
 
     @F.pandas_udf("n_tok int, lp double")
+    @worker_fn
     def enc(s: pd.Series) -> pd.DataFrame:
         def one(w: str) -> tuple[int, float]:
             seg = _unigram_viterbi(w, table, max_len)

@@ -30,6 +30,8 @@ import typing as ty
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from heparchy_spark.functions.worker import worker_fn
+
 __all__ = ["topk_per_group"]
 
 
@@ -68,7 +70,7 @@ def topk_per_group(
                 .reset_index(drop=True)
             )
 
-    candidates = df.mapInPandas(prune, schema=out_schema)
+    candidates = df.mapInPandas(worker_fn(prune), schema=out_schema)
     order = (
         F.col(order_col).desc() if descending else F.col(order_col).asc()
     )

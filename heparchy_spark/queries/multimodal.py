@@ -29,6 +29,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from heparchy_spark.functions.worker import worker_fn
 from heparchy_spark.operators.multimodal import (
     byte_stats,
     decode_media,
@@ -407,7 +408,7 @@ def _real_png_media_df(
                 payloads.append(_png_encode(pixels_fn(did)))
             yield pd.DataFrame({"media_id": ids, "payload": payloads})
 
-    return docs.mapInPandas(gen, schema=schema)
+    return docs.mapInPandas(worker_fn(gen), schema=schema)
 
 
 @register(

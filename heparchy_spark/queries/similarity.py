@@ -5,7 +5,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from heparchy_spark.functions.literals import array_lit
+from heparchy_spark.functions.literals import array_lit, array_sql
 from heparchy_spark.operators.similarity import (
     cosine,
     cosine_topk,
@@ -62,10 +62,10 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_cosine_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     qrow = emb.where(F.col("vec_id") == 0).select("embedding").head()
-    q = array_lit([float(v) for v in qrow[0]])
+    q = array_sql([float(v) for v in qrow[0]])
     return emb.select(
         "vec_id",
-        F.round(cosine(F.col("embedding"), q), 9).alias("cosine_sim"),
+        F.round(F.expr(cosine("embedding", q)), 9).alias("cosine_sim"),
     )
 
 
@@ -80,7 +80,7 @@ def similarity_cosine_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5)
+    queries = emb.where("vec_id < 5")
     return lsh_cosine_topk(
         emb,
         "embedding",
@@ -91,7 +91,7 @@ def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim=DIM,
         k=10,
         bits=6,
-    ).select("query_id", "match_id", F.round("cosine_sim", 9).alias("cosine_sim"), "rk")
+    ).selectExpr("query_id", "match_id", "round(cosine_sim, 9) AS cosine_sim", "rk")
 
 
 @register(
@@ -108,7 +108,7 @@ def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     return emb.select(
-        "vec_id", "label", F.round(l2_norm(F.col("embedding")), 9).alias("l2")
+        "vec_id", "label", F.round(F.expr(l2_norm("embedding")), 9).alias("l2")
     )
 
 
@@ -374,7 +374,7 @@ def similarity_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
             "true_label",
             F.col("vec_id").alias("match_id"),
             "label",
-            F.round(cosine(F.col("embedding"), F.col("qv")), 9).alias("cos"),
+            F.round(F.expr(cosine("embedding", "qv")), 9).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("match_id"))
@@ -585,7 +585,7 @@ def similarity_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "match_id",
-            cosine(F.col("__v"), F.col("__q")).alias("cosine_sim"),
+            F.expr(cosine("__v", "__q")).alias("cosine_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -764,7 +764,7 @@ def retrieval_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("doc_id"),
-            F.round(cosine(F.col("embedding"), F.col("__q")), 9).alias("sim"),
+            F.round(F.expr(cosine("embedding", "__q")), 9).alias("sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("doc_id"))
@@ -805,7 +805,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("doc_id"),
-            F.round(cosine(F.col("embedding"), F.col("__q")), 9).alias(
+            F.round(F.expr(cosine("embedding", "__q")), 9).alias(
                 "relevance"
             ),
         )
@@ -846,7 +846,7 @@ def similarity_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "projection", F.lit(0.0), lambda acc, v: acc + v * v
     )
     l2p = F.round(F.sqrt(sq / F.lit(16.0)), 9)
-    l2o = F.round(l2_norm(F.col("embedding")), 9)
+    l2o = F.round(F.expr(l2_norm("embedding")), 9)
     return joined.select(
         "vec_id",
         l2o.alias("l2_orig"),
@@ -987,7 +987,7 @@ def similarity_debias_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = [r.weight for r in pc]
     wlit = array_lit(w)
-    d = F.round(dot(F.col("embedding"), wlit), 8)
+    d = F.round(F.expr(dot("embedding", array_sql(w))), 8)
     resid = F.zip_with(
         F.col("embedding"),
         wlit,
@@ -996,7 +996,7 @@ def similarity_debias_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select(
         "vec_id",
         F.round(d, 6).alias("pc1_component"),
-        F.round(l2_norm(F.col("embedding")), 6).alias("norm_before"),
+        F.round(F.expr(l2_norm("embedding")), 6).alias("norm_before"),
         F.round(
             F.sqrt(
                 F.aggregate(
@@ -1344,7 +1344,7 @@ def similarity_binary_rerank_topk(
         .select(
             "query_id",
             "vec_id",
-            F.round(cosine(F.col("__cv"), F.col("__qv")), 9).alias(
+            F.round(F.expr(cosine("__cv", "__qv")), 9).alias(
                 "cosine_sim"
             ),
         )
@@ -1715,8 +1715,8 @@ def similarity_int8_recall_at_k(
             .select("query_id", "match_id")
         )
 
-    exact = topk(cosine(F.col("__v"), F.col("__q")))
-    approx = topk(cosine(F.col("__dv"), F.col("__q")))
+    exact = topk(F.expr(cosine("__v", "__q")))
+    approx = topk(F.expr(cosine("__dv", "__q")))
     hits = (
         exact.join(approx, ["query_id", "match_id"], "left_semi")
         .groupBy("query_id")

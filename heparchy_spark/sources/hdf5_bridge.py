@@ -27,6 +27,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
+from heparchy_spark.functions.worker import worker_fn
 from heparchy_spark.schemas import EVTS_PER_CHUNK_DEFAULT
 
 __all__ = [
@@ -126,7 +127,7 @@ def distribute_file_reads(
             for path in pdf["path"]:
                 yield from reader(path)
 
-    return files_df.mapInPandas(_map, schema=schema)
+    return files_df.mapInPandas(worker_fn(_map), schema=schema)
 
 
 def ingest_hdf5(

@@ -29,6 +29,8 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
+from heparchy_spark.functions.worker import worker_fn
+
 __all__ = ["parse_hepmc_ascii", "ingest_hepmc", "HEPMC_PARTICLE_SCHEMA"]
 
 HEPMC_PARTICLE_SCHEMA = T.StructType(
@@ -145,7 +147,7 @@ def ingest_hepmc(
     schema = T.StructType(
         [*HEPMC_PARTICLE_SCHEMA, T.StructField("file_ord", T.IntegerType())]
     )
-    particles = files_df.mapInPandas(read_files, schema=schema)
+    particles = files_df.mapInPandas(worker_fn(read_files), schema=schema)
     global_eid = F.col("file_ord").cast("long") * F.lit(2**32) + F.col(
         "event_id"
     )

@@ -19,6 +19,8 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Window
 
+from heparchy_spark.functions.worker import worker_fn
+
 __all__ = [
     "tumbling_counts",
     "sliding_user_counts",
@@ -159,7 +161,7 @@ def running_user_totals(events: DataFrame, timeout: str = "NoTimeout") -> DataFr
         )
 
     return events.groupBy("user_id").applyInPandasWithState(
-        update,
+        worker_fn(update),
         outputStructType=_RUNNING_TOTALS_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
@@ -331,7 +333,7 @@ def streaming_frequent_items(
         )
 
     return events.groupBy(group_col).applyInPandasWithState(
-        update,
+        worker_fn(update),
         outputStructType=_MG_OUT_SCHEMA,
         stateStructType=_MG_STATE_SCHEMA,
         outputMode="update",
@@ -406,7 +408,7 @@ def streaming_funnel(
         )
 
     return events.groupBy("user_id").applyInPandasWithState(
-        update,
+        worker_fn(update),
         outputStructType=_FUNNEL_OUT_SCHEMA,
         stateStructType=_FUNNEL_STATE_SCHEMA,
         outputMode="update",
@@ -490,7 +492,7 @@ def streaming_scd2(
         )
 
     return events.groupBy("user_id").applyInPandasWithState(
-        update,
+        worker_fn(update),
         outputStructType=_SCD2_OUT_SCHEMA,
         stateStructType=_SCD2_STATE_SCHEMA,
         outputMode="update",
@@ -844,7 +846,7 @@ def streaming_rate_limit(
     return events.select("user_id", "event_id", "ts").groupBy(
         "user_id"
     ).applyInPandasWithState(
-        update,
+        worker_fn(update),
         outputStructType=_RATE_OUT_SCHEMA,
         stateStructType=_RATE_STATE_SCHEMA,
         outputMode="append",
@@ -873,7 +875,7 @@ def rate_limit_batch(
     return (
         events.select("user_id", "event_id", "ts")
         .groupBy("user_id")
-        .applyInPandas(run, schema=_RATE_OUT_SCHEMA)
+        .applyInPandas(worker_fn(run), schema=_RATE_OUT_SCHEMA)
     )
 
 
@@ -951,7 +953,7 @@ def streaming_group_sample(
     return events.select("event_type", "event_id").groupBy(
         "event_type"
     ).applyInPandasWithState(
-        update,
+        worker_fn(update),
         outputStructType=_SAMPLE_OUT_SCHEMA,
         stateStructType=_SAMPLE_STATE_SCHEMA,
         outputMode="update",

@@ -156,8 +156,8 @@ def test_python_seq_fold_matches_spark_dot(spark):
         r["i"]: (r["d"], r["n"])
         for r in df.select(
             "i",
-            dot(F.col("a"), F.col("b")).alias("d"),
-            l2_norm(F.col("a")).alias("n"),
+            F.expr(dot("a", "b")).alias("d"),
+            F.expr(l2_norm("a")).alias("n"),
         ).collect()
     }
     for i, a, b in rows:

@@ -106,7 +106,7 @@ def test_hyperplane_bucket_matches_sequential_mirror(emb01, bits, seed):
     planes = np.random.RandomState(seed).standard_normal((bits, 64))
     got = dict(
         df.select(
-            "vec_id", hyperplane_bucket(F.col("embedding"), 64, bits, seed)
+            "vec_id", F.expr(hyperplane_bucket("embedding", 64, bits, seed))
         ).collect()
     )
     want = {

@@ -7,7 +7,7 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from heparchy_spark.functions.literals import array_lit
+from heparchy_spark.functions.literals import array_sql
 from heparchy_spark.operators.similarity import (
     cosine,
     cosine_topk,
@@ -45,11 +45,11 @@ def test_cosine_topk_matches_numpy(spark, emb):
 def test_cosine_column_matches_numpy(spark, emb):
     pdf = emb.select("vec_id", "embedding").toPandas()
     qvec = list(pdf[pdf.vec_id == 3]["embedding"].iloc[0])
-    q = array_lit([float(v) for v in qvec])
+    q = array_sql([float(v) for v in qvec])
     got = {
         r["vec_id"]: r["c"]
         for r in emb.select(
-            "vec_id", cosine(F.col("embedding"), q).alias("c")
+            "vec_id", F.expr(cosine("embedding", q)).alias("c")
         ).collect()
     }
     X = np.stack(pdf["embedding"].to_numpy()).astype("float64")

@@ -134,7 +134,7 @@ def test_fingerprint_df_matches_inline_expression(docs):
     ref = {
         r["doc_id"]: r["fp64"]
         for r in docs.select("doc_id", normalize_text("text").alias("__norm"))
-        .select("doc_id", fingerprint(F.col("__norm")).alias("fp64"))
+        .select("doc_id", F.expr(fingerprint("__norm")).alias("fp64"))
         .collect()
     }
     assert fast == ref

@@ -123,6 +123,24 @@ def test_changed_includes_untracked_files(monkeypatch):
     assert "text_bm25_topk" not in names
 
 
+def test_changed_plan_rule_modules_select_every_query(monkeypatch):
+    """The plan rules judge every plan, so any change under
+    ``heparchy_spark/plans/`` re-gates the whole registry."""
+    from heparchy_spark.queries import REGISTRY, _load_all
+
+    _load_all()
+    for path in (
+        "heparchy_spark/plans/inspect.py",
+        "heparchy_spark/plans/__init__.py",
+    ):
+        names = _changed_with_diff(monkeypatch, [path])
+        assert names == set(REGISTRY), path
+    names = _changed_with_diff(
+        monkeypatch, [], untracked=["heparchy_spark/plans/new_rule.py"]
+    )
+    assert names == set(REGISTRY)
+
+
 def test_registry_broadcast_declarations_are_nonempty_strings():
     """Every expects_broadcast declaration must carry a real reason —
     an empty string would satisfy the gate while documenting nothing."""

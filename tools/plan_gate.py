@@ -25,7 +25,9 @@ SF_DIR = "/root/testdata/sf0.001"
 def changed_query_names() -> list[str]:
     """Queries whose defining module — or any module it imports from this
     package, transitively, or a package around those — was touched since
-    HEAD (tracked diffs plus untracked files).
+    HEAD (tracked diffs plus untracked files).  A change under
+    ``heparchy_spark/plans/`` selects every query: that package holds the
+    rules that judge every plan.
 
     The transitive hop matters: editing ``operators/psl.py`` changes the
     plans of ``queries/web.py``'s queries even though no query module
@@ -52,6 +54,8 @@ def changed_query_names() -> list[str]:
     from heparchy_spark.queries import REGISTRY, _load_all
 
     _load_all()
+    if any(m.startswith("heparchy_spark.plans") for m in touched):
+        return list(REGISTRY)
 
     def source_of(module: str) -> Path | None:
         base = root / module.replace(".", "/")
