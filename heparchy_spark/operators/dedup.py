@@ -18,27 +18,24 @@ UDFs.  Scale notes:
 from __future__ import annotations
 
 import os
+import re
 import typing as ty
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from heparchy_spark.functions.literals import array_lit
+from heparchy_spark.functions.literals import array_lit, sql_ident
 from heparchy_spark.functions.worker import worker_fn
 from heparchy_spark.operators.banding import hamming_pairs
 
 __all__ = [
     "normalize_text",
-    "shingles",
     "exact_dedup",
     "shingle_hash_stream",
     "hashed_shingles_df",
     "minhash_near_dup_pairs",
     "lsh_threshold_audit",
-    "simhash",
     "simhash_df",
-    "simhash_from_hashes",
-    "token_hashes",
     "simhash_near_dup_pairs",
     "ngram_jaccard_pairs",
     "sorted_neighborhood_pairs",
@@ -53,34 +50,13 @@ __all__ = [
 ]
 
 
-def normalize_text(col: Column | str) -> Column:
-    """Lowercase, collapse whitespace, strip non-alphanumerics (dedup canon)."""
-    c = F.col(col) if isinstance(col, str) else col
-    c = F.lower(c)
-    c = F.regexp_replace(c, r"[^a-z0-9\s]", " ")
-    c = F.regexp_replace(c, r"\s+", " ")
-    return F.trim(c)
-
-
-def _tokens(col: Column) -> Column:
-    return F.split(normalize_text(col), " ")
-
-
-def shingles(col: Column | str, n: int = 3) -> Column:
-    """Word n-gram shingle array (distinct), built JVM-side.
-
-    transform(sequence(1, len-n+1), i -> concat_ws(' ', slice(tokens, i, n)))
-    """
-    toks = _tokens(F.col(col) if isinstance(col, str) else col)
-    count = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
-    sh = F.transform(
-        F.sequence(F.lit(1), count),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+def normalize_text(col: str) -> Column:
+    """Lowercase, strip non-alphanumerics, collapse whitespace, trim (dedup
+    canon) of the named column — one SQL expression, one py4j command."""
+    return F.expr(
+        f"trim(regexp_replace(regexp_replace(lower({sql_ident(col)}),"
+        r" '[^a-z0-9\\s]', ' '), '\\s+', ' '))"
     )
-    # sequence(1, 0) is empty in Spark when count==0? sequence(1,0) yields
-    # [1, 0] descending — guard explicitly.
-    sh = F.when(count >= F.lit(1), sh).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(sh)
 
 
 def exact_dedup(
@@ -369,44 +345,6 @@ def _band_table(sets: DataFrame, num_perm: int, bands: int) -> DataFrame:
     return sets.select("__id", "__shh").mapInArrow(worker_fn(gen), out_type)
 
 
-def _band_table_expr(sets: DataFrame, num_perm: int, bands: int) -> DataFrame:
-    """The original JVM-expression band table (num_perm min-aggregates
-    over the set explode) — kept as the equivalence reference for
-    tests/test_minhash_band_equivalence; not on any query path."""
-    rows = num_perm // bands
-    mask = F.lit((1 << 32) - 1).cast("long")
-    exploded = sets.select("__id", F.explode("__shh").alias("__e")).select(
-        "__id",
-        F.col("__e").bitwiseAND(mask).alias("__t1"),
-        F.xxhash64("__e", F.lit(1)).bitwiseAND(mask).alias("__t2"),
-    )
-    sig = exploded.groupBy("__id").agg(
-        *[
-            F.min(F.col("__t1") + F.lit(j).cast("long") * F.col("__t2")).alias(
-                f"__p{j}"
-            )
-            for j in range(num_perm)
-        ]
-    )
-
-    return sig.select(
-        "__id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"__p{b * rows + r}") for r in range(rows)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("__id", "bb.band", "bb.bucket")
-
-
 def minhash_near_dup_pairs(
     df: DataFrame,
     text_col: str,
@@ -676,50 +614,6 @@ def incremental_minhash_near_dups(
     )
 
 
-def simhash_from_hashes(hashes_col: Column | str, bits: int = 64) -> Column:
-    """SimHash fingerprint (long) from a token-hash array column.
-
-    For each bit position, count tokens whose hash has that bit set; bit is 1
-    iff the count exceeds half the token count.  Callers materialize the hash
-    array via a select so the per-bit aggregates read a column instead of
-    re-tokenizing (codegen stays linear in ``bits``).
-    """
-    hashes = F.col(hashes_col) if isinstance(hashes_col, str) else hashes_col
-    n = F.size(hashes)
-
-    def bit_vote(i: int) -> Column:
-        # closure (not default arg) so the Spark lambda keeps arity 2
-        return F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.shiftright(h, i).bitwiseAND(F.lit(1)).cast("int"),
-        )
-
-    out = F.lit(0).cast("long")
-    for i in range(bits):
-        out = out + F.when(
-            bit_vote(i) * 2 > n, F.shiftleft(F.lit(1).cast("long"), i)
-        ).otherwise(F.lit(0).cast("long"))
-    return out
-
-
-def token_hashes(col: Column | str) -> Column:
-    """xxhash64 of each distinct normalized token (simhash input)."""
-    toks = F.array_distinct(_tokens(F.col(col) if isinstance(col, str) else col))
-    return F.transform(toks, lambda t: F.xxhash64(t))
-
-
-def simhash(col: Column | str, bits: int = 64) -> Column:
-    """Inline SimHash over a raw text column (convenience form).
-
-    For datasets, prefer ``simhash_df`` — explode + scalar aggregates scale
-    linearly with map-side partial aggregation, while this single expression
-    re-walks the hash array per bit.
-    """
-    return simhash_from_hashes(token_hashes(col), bits)
-
-
 def simhash_df(
     df: DataFrame, text_col: str, id_col: str, bits: int = 64
 ) -> DataFrame:
@@ -727,8 +621,8 @@ def simhash_df(
     aggregates — no higher-order functions in the plan (see
     ``shingle_hash_stream`` for why that matters).
 
-    Token distinct-ness matches ``token_hashes`` (array_distinct) via a
-    dropDuplicates on (id, hash). Empty documents fingerprint to 0.
+    The vote runs over each document's DISTINCT token hashes (a
+    dropDuplicates on (id, hash)). Empty documents fingerprint to 0.
     """
     ex = (
         df.select(
@@ -867,6 +761,31 @@ def _source_bytes(df: DataFrame) -> int:
     return total
 
 
+_BYTE_UNIT_SHIFT = {"": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20,
+                    "g": 30, "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50}
+
+
+def _byte_string(s: str) -> int:
+    """Bytes of a Spark byte-size conf string as ``spark.conf.get``
+    returns it (``'10485760b'``, ``'20MB'``, ``'-1'``): integer, optional
+    sign, case-insensitive binary unit suffix, bare numbers in bytes —
+    the syntax of Spark's ``bytesConf`` parser."""
+    m = re.fullmatch(r"(-?\d+)([a-z]*)", s.strip().lower())
+    if m is None or m.group(2) not in _BYTE_UNIT_SHIFT:
+        raise ValueError(f"not a Spark byte string: {s!r}")
+    return int(m.group(1)) << _BYTE_UNIT_SHIFT[m.group(2)]
+
+
+def _ppjoin_prefix_broadcasts(df: DataFrame) -> bool:
+    """Whether the PPJoin prefix table of ``df`` fits the planner's
+    broadcast threshold (estimated from source bytes, no job); a
+    disabled threshold (``-1``) never broadcasts."""
+    thr = _byte_string(
+        df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    )
+    return thr >= 0 and _source_bytes(df) * _PPJOIN_PREF_EXPANSION <= thr
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -967,13 +886,7 @@ def ngram_jaccard_pairs(
         # planner's broadcasts stay bounded near the 10 MB flip) to
         # actual cache bytes (pure SMJ: measured 472 MB vs 84-131
         # MB shuffle write at 10x for identical output).
-        in_bytes = _source_bytes(df)
-        bcast_thr = int(
-            df.sparkSession._jsparkSession.sessionState()
-            .conf()
-            .autoBroadcastJoinThreshold()
-        )
-        if bcast_thr >= 0 and in_bytes * _PPJOIN_PREF_EXPANSION <= bcast_thr:
+        if _ppjoin_prefix_broadcasts(df):
             pref = pref.persist(StorageLevel.MEMORY_AND_DISK)
         else:
             pref = pref.repartition("tok").persist(
@@ -1056,7 +969,7 @@ def sorted_neighborhood_pairs(
     key with bounded fan-out or salt the block and accept window breaks at
     salt boundaries.
     """
-    toks = _tokens(F.col(text_col))
+    toks = F.split(normalize_text(text_col), " ")
     # Slim ranking frame: NO shingle arrays here.  Each join side re-plans
     # its subtree, so anything on `ranked` is computed once per side — and
     # the HOF string-shingle builder is the known 15-20x interpreted path

@@ -79,69 +79,6 @@ def synth_particles(h1, h2, h3):
     return px, py, pz, e
 
 
-def antikt_cluster_naive(px, py, pz, e, R=0.4, ptmin=5.0, p=-1.0):
-    """Reference generalized-kT implementation (``p`` selects the member:
-    -1 anti-kT, 0 Cambridge/Aachen, 1 kT): rebuild the full n x n distance
-    matrix every merge (O(n^3) per event).  Kept as the readable spec and
-    the equivalence target for the incremental kernel below; the fixture
-    mirror in tools/build_expected.py replays THIS form."""
-    px = np.asarray(px, dtype="float64").copy()
-    py = np.asarray(py, dtype="float64").copy()
-    pz = np.asarray(pz, dtype="float64").copy()
-    e = np.asarray(e, dtype="float64").copy()
-    nc = np.ones(len(px), dtype="int64")
-    jets = []
-    while len(px):
-        pt2 = px * px + py * py
-        inv = _beam_weights(pt2, p)
-        y = 0.5 * np.log((e + pz) / (e - pz))
-        phi = np.arctan2(py, px)
-        n = len(px)
-        if n == 1:
-            best_ij = None
-        else:
-            dy = y[:, None] - y[None, :]
-            dphi = np.abs(phi[:, None] - phi[None, :])
-            dphi = np.where(dphi > np.pi, 2.0 * np.pi - dphi, dphi)
-            dr2 = dy * dy + dphi * dphi
-            dij = np.minimum(inv[:, None], inv[None, :]) * dr2 / (R * R)
-            iu = np.triu_indices(n, k=1)
-            flat = dij[iu]
-            k = int(np.argmin(flat))
-            dmin_ij = flat[k]
-            kb = int(np.argmin(inv))
-            if inv[kb] <= dmin_ij:
-                best_ij = None
-            else:
-                best_ij = (int(iu[0][k]), int(iu[1][k]))
-        if best_ij is None:
-            b = int(np.argmin(inv)) if n > 1 else 0
-            jpt = float(np.sqrt(pt2[b]))
-            if jpt >= ptmin:
-                m2 = float(e[b] ** 2 - px[b] ** 2 - py[b] ** 2 - pz[b] ** 2)
-                jets.append(
-                    (
-                        int(nc[b]),
-                        jpt,
-                        float(y[b]),
-                        float(phi[b]),
-                        float(np.sqrt(max(m2, 0.0))),
-                    )
-                )
-            keep = np.arange(n) != b
-        else:
-            i, j = best_ij
-            px[i] += px[j]
-            py[i] += py[j]
-            pz[i] += pz[j]
-            e[i] += e[j]
-            nc[i] += nc[j]
-            keep = np.arange(n) != j
-        px, py, pz, e, nc = px[keep], py[keep], pz[keep], e[keep], nc[keep]
-    jets.sort(key=lambda t: -t[1])
-    return jets
-
-
 def antikt_cluster(px, py, pz, e, R=0.4, ptmin=5.0, p=-1.0):
     """Generalized-kT sequential recombination on one event's particles
     (``p``: -1 anti-kT, 0 Cambridge/Aachen, 1 kT; default anti-kT).
@@ -153,14 +90,14 @@ def antikt_cluster(px, py, pz, e, R=0.4, ptmin=5.0, p=-1.0):
     recombination — the standard inclusive algorithm.
 
     Incremental kernel: only the merged pseudojet's distance row/column
-    is recomputed after a merge (O(n^2) per event vs the naive O(n^3)
+    is recomputed after a merge (O(n^2) per event vs the O(n^3)
     full-matrix rebuild — ~20x at n=200).  Every pairwise distance is
-    the SAME elementwise expression the naive form evaluates, untouched
+    the SAME elementwise expression the full rebuild evaluates, untouched
     particles keep their cached doubles, and the masked row-major argmin
-    visits survivors in the same relative order as the naive compacted
-    triu scan — so the merge trajectory (and the fixture hash) is
-    bit-identical to ``antikt_cluster_naive``
-    (``test_incremental_kernel_equals_naive``).
+    visits survivors in the same relative order as the rebuild's
+    compacted triu scan — so the merge trajectory (and the fixture hash)
+    is bit-identical to the full-rebuild mirror ``_jets_cluster`` in
+    tools/build_expected.py (``test_incremental_kernel_equals_naive``).
     """
     px = np.asarray(px, dtype="float64").copy()
     py = np.asarray(py, dtype="float64").copy()
@@ -178,7 +115,7 @@ def antikt_cluster(px, py, pz, e, R=0.4, ptmin=5.0, p=-1.0):
     R2 = R * R
     INF = np.inf
 
-    # full initial matrix via the naive form's exact expressions
+    # full initial matrix via the full-rebuild form's exact expressions
     dy = y[:, None] - y[None, :]
     dphi = np.abs(phi[:, None] - phi[None, :])
     dphi = np.where(dphi > np.pi, 2.0 * np.pi - dphi, dphi)
@@ -379,78 +316,9 @@ def antikt_jets(
     )
 
 
-def softdrop_cluster_naive(
-    px, py, pz, e, R=0.8, zcut=0.1, beta=0.0, ptmin=30.0
-):
-    """Full-matrix-rebuild reference for :func:`softdrop_cluster` — the
-    naive C/A loop elementwise identical to the fixture mirror in
-    tools/build_expected.py (_jets_softdrop).  Kept as the equality
-    baseline (``test_softdrop_incremental_equals_naive``); the
-    production path is the O(n^2) incremental kernel below.
-    """
-    px, py, pz, e = (np.array(a, dtype="float64") for a in (px, py, pz, e))
-    n0 = len(px)
-    nodes: list[tuple] = [
-        (float(px[i]), float(py[i]), float(pz[i]), float(e[i]), -1, -1, 1)
-        for i in range(n0)
-    ]
-    nid = list(range(n0))
-    nc = np.ones(n0, dtype="int64")
-    jets = []
-    while len(px):
-        pt2 = px * px + py * py
-        inv = np.ones_like(pt2)  # C/A: pure angular ordering
-        y = 0.5 * np.log((e + pz) / (e - pz))
-        phi = np.arctan2(py, px)
-        n = len(px)
-        best_ij = None
-        if n > 1:
-            dy = y[:, None] - y[None, :]
-            dphi = np.abs(phi[:, None] - phi[None, :])
-            dphi = np.where(dphi > np.pi, 2.0 * np.pi - dphi, dphi)
-            dr2 = dy * dy + dphi * dphi
-            dij = np.minimum(inv[:, None], inv[None, :]) * dr2 / (R * R)
-            iu = np.triu_indices(n, k=1)
-            flat = dij[iu]
-            k = int(np.argmin(flat))
-            kb = int(np.argmin(inv))
-            if not inv[kb] <= flat[k]:
-                best_ij = (int(iu[0][k]), int(iu[1][k]))
-        if best_ij is None:
-            b = int(np.argmin(inv)) if n > 1 else 0
-            jpt = float(np.sqrt(pt2[b]))
-            if jpt >= ptmin:
-                jets.append((jpt, nid[b]))
-            keep = np.arange(n) != b
-        else:
-            i, j = best_ij
-            px[i] += px[j]
-            py[i] += py[j]
-            pz[i] += pz[j]
-            e[i] += e[j]
-            nc[i] += nc[j]
-            nodes.append(
-                (
-                    float(px[i]),
-                    float(py[i]),
-                    float(pz[i]),
-                    float(e[i]),
-                    nid[i],
-                    nid[j],
-                    int(nc[i]),
-                )
-            )
-            nid[i] = len(nodes) - 1
-            keep = np.arange(n) != j
-        px, py, pz, e, nc = px[keep], py[keep], pz[keep], e[keep], nc[keep]
-        nid = [v for v, kp in zip(nid, keep) if kp]
-    jets.sort(key=lambda t: -t[0])
-    return _groom_jets(nodes, jets, R, zcut, beta)
-
-
 def _groom_jets(nodes, jets, R, zcut, beta):
-    """Soft-drop walk shared by the naive and incremental tree builders:
-    identical doubles either way, since it only reads recorded nodes."""
+    """Soft-drop walk over the recorded C/A merge tree: it only reads
+    recorded nodes, so equal trees give identical doubles."""
     out = []
     for jpt, root in jets:
         node = root
@@ -507,12 +375,12 @@ def softdrop_cluster(px, py, pz, e, R=0.8, zcut=0.1, beta=0.0, ptmin=30.0):
 
     Incremental kernel, same contract as :func:`antikt_cluster`: only
     the merged pseudojet's distance row/column recomputes after a merge
-    (O(n^2) per event vs the naive O(n^3) rebuild), every distance is
-    the SAME elementwise expression the naive form evaluates, and the
-    masked row-major argmin visits survivors in the naive compacted
+    (O(n^2) per event vs the O(n^3) rebuild), every distance is the
+    SAME elementwise expression the full rebuild evaluates, and the
+    masked row-major argmin visits survivors in the rebuild's compacted
     triu order — so the merge TREE, the grooming walk, and the
-    committed fixture are bit-identical to
-    :func:`softdrop_cluster_naive`
+    committed fixture are bit-identical to the full-rebuild mirror
+    ``_jets_softdrop`` in tools/build_expected.py
     (``test_softdrop_incremental_equals_naive``).
     """
     px = np.asarray(px, dtype="float64").copy()

@@ -155,33 +155,14 @@ def lsh_cosine_topk(
     ).where(f"rk <= {int(k)}")
 
 
-def _estimated_rows(df: DataFrame, row_width: int) -> int:
-    """Row-count estimate WITHOUT running a job when the plan allows it:
-    Catalyst's optimized-plan stats carry an exact rowCount for sources
-    that expose one, else a sizeInBytes we divide by a caller-supplied
-    minimum row width.  Falls back to ``count()`` only when the size
-    estimate is the 'unknown' default (joins without stats report
-    ~max-long and would silently max out downstream knobs)."""
-    try:
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-        rc = stats.rowCount()
-        if rc.isDefined():
-            return int(str(rc.get()))
-        size = int(str(stats.sizeInBytes()))
-        if 0 < size < (1 << 50):
-            return max(2, size // max(1, row_width))
-    except Exception:  # pragma: no cover - py4j surface drift
-        pass
-    return df.count()
-
-
 def embedding_near_dup_pairs(
     df: DataFrame,
     vec_col: str,
     id_col: str,
     dim: int,
     threshold: float = 0.95,
-    bits: int | None = None,
+    *,
+    bits: int,
     tables: int = 4,
     seed: int = 7,
 ) -> DataFrame:
@@ -193,16 +174,9 @@ def embedding_near_dup_pairs(
     precision is 1 by construction.
 
     Scale shape: per-table the bucket self-join is quadratic in bucket
-    occupancy, so ``bits`` must grow with n.  ``bits=None`` auto-scales to
-    a ~32-row expected occupancy (``log2(n/32)``, clamped to [4, 24]) from
-    Catalyst's plan statistics — no job for plain file scans (row count
-    from footer stats when known, else size/row-width with the embedding
-    width as the floor); only a plan whose size estimate is unusable
-    (post-join default) pays a count job.  Occupancy targeting tolerates
-    the estimate being a factor of a few off (log2); pass explicit
-    ``bits`` when exact reproducibility matters.  Recall is tuned
-    independently by
-    ``tables``: a pair at angle theta collides per-table with
+    occupancy, so ``bits`` must grow with n: about ``log2(n/32)`` keeps
+    the expected occupancy near 32 rows.  Recall is tuned independently
+    by ``tables``: a pair at angle theta collides per-table with
     ``p = (1 - theta/pi)^bits`` and overall ``1 - (1-p)^tables`` — more
     tables buys recall linearly in candidate volume without touching
     occupancy.  Candidate pairs are distinct-ed (one shuffle on the pair
@@ -211,9 +185,6 @@ def embedding_near_dup_pairs(
     content) are handled by AQE skew-join; the id tiebreak keeps the join
     triangular.
     """
-    if bits is None:
-        n = _estimated_rows(df, row_width=4 * dim)
-        bits = min(24, max(4, int(np.ceil(np.log2(max(n, 2) / 32.0)))))
     vecs = df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
     sig = df.selectExpr(
         f"{sql_ident(id_col)} AS __id",

@@ -21,7 +21,8 @@ _NORM_SQL = (
     " '\\s+', ' ', 'g'))"
 )
 def _shingles_sql(n: int) -> str:
-    """DuckDB expression mirroring operators.dedup.shingles(text, n)."""
+    """DuckDB expression for the distinct word n-gram shingles of the
+    normalized text (n tokens joined by one space)."""
     words = " || ' ' || ".join(
         f"string_split({_NORM_SQL}, ' ')[i+{k}]" if k else
         f"string_split({_NORM_SQL}, ' ')[i]"

@@ -11,8 +11,11 @@ a monkeypatch of that helper.
 from __future__ import annotations
 
 import pyspark.sql.functions as F  # noqa: F401
+import pytest
 
 from heparchy_spark.operators import dedup
+
+_BCAST_KEY = "spark.sql.autoBroadcastJoinThreshold"
 
 
 def _docs(spark):
@@ -104,3 +107,38 @@ def test_unsized_sources_take_scale_safe_branches(spark, monkeypatch):
         missing, "inputFiles", lambda: ["file:///nonexistent/part-0.parquet"]
     )
     assert dedup._source_bytes(missing) >= dedup._SIMHASH_WIDE_MIN_BYTES
+
+
+@pytest.mark.parametrize("setting", [None, "20MB", "-1"])
+def test_ppjoin_threshold_public_read_matches_jvm(spark, monkeypatch, setting):
+    """The PPJoin gate reads the broadcast threshold as the public conf
+    string (the default reads '10485760b', a user setting '20MB',
+    disabled '-1'). Its parse must equal the JVM's own parsed threshold,
+    so the gate picks the same branch as a JVM-side read would. The
+    15 MB prefix estimate sits between the default and the 20MB
+    setting, so both branches are exercised."""
+    monkeypatch.setattr(
+        dedup, "_source_bytes", lambda df: 15 * 2**20 / dedup._PPJOIN_PREF_EXPANSION
+    )
+    docs = _docs(spark)
+    try:
+        if setting is not None:
+            spark.conf.set(_BCAST_KEY, setting)
+        jvm = int(
+            spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        )
+        assert dedup._byte_string(spark.conf.get(_BCAST_KEY)) == jvm
+        want = jvm >= 0 and 15 * 2**20 <= jvm
+        assert dedup._ppjoin_prefix_broadcasts(docs) == want
+    finally:
+        spark.conf.unset(_BCAST_KEY)
+
+
+def test_byte_string_units():
+    assert dedup._byte_string("10485760b") == 10485760
+    assert dedup._byte_string("20MB") == 20 << 20
+    assert dedup._byte_string(" 1g ") == 1 << 30
+    assert dedup._byte_string("512") == 512
+    assert dedup._byte_string("-1") == -1
+    with pytest.raises(ValueError):
+        dedup._byte_string("1.5g")

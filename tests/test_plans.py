@@ -287,6 +287,25 @@ def test_no_broadcast_hint_on_unbounded_frames():
         )
 
 
+def test_no_private_jvm_handles_outside_plans():
+    """Spark Connect has no ``_jdf``/``_jsparkSession``/``_jvm``; the
+    library reads them only behind the ``heparchy_spark/plans/``
+    barrier, so no other module depends on them."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "heparchy_spark"
+    private = re.compile(r"_jdf|_jsparkSession|_jvm")
+    hits = [
+        f"{path.relative_to(pkg)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.relative_to(pkg).parts[0] != "plans"
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if private.search(line)
+    ]
+    assert hits == []
+
+
 def test_degree_assortativity_signs(spark):
     """A star graph is maximally disassortative (r = -1); a clean
     two-clique graph is assortative-degenerate (all degrees equal ->

@@ -262,23 +262,21 @@ def test_normalize_url_relative_passthrough(spark):
 
 
 def test_simhash_packed_votes_match_inline_expression(docs):
-    # simhash_df packs 3 bit-counters per aggregate long; the inline
-    # simhash() expression is the unpacked reference — fingerprints must be
-    # bit-identical on every doc (empty, unicode, dup, long).
-    import pyspark.sql.functions as F
+    # simhash_df packs 3 bit-counters per aggregate long; the plain-Python
+    # per-bit vote (tools/build_expected.simhash64) is the unpacked
+    # reference — fingerprints must be bit-identical on every doc (empty,
+    # unicode, dup, long).
+    import sys
+    from pathlib import Path
 
-    from heparchy_spark.operators.dedup import simhash
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    from build_expected import simhash64
 
     packed = {
         r["doc_id"]: r["simhash64"]
         for r in simhash_df(docs, "text", "doc_id").collect()
     }
-    inline = {
-        r["doc_id"]: r["fp"]
-        for r in docs.where(F.col("text").isNotNull())
-        .select("doc_id", simhash("text").alias("fp"))
-        .collect()
-    }
+    inline = {did: simhash64(text) for did, text in ROWS if text is not None}
     for did, fp in inline.items():
         assert packed[did] == fp, did
 

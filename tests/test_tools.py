@@ -141,6 +141,52 @@ def test_changed_plan_rule_modules_select_every_query(monkeypatch):
     assert names == set(REGISTRY)
 
 
+def _reverify_after_edit(monkeypatch, relpath: str, fn_name: str) -> list[str]:
+    """``mark_reverify``'s selection for a one-line edit to the last body
+    line of top-level function ``fn_name`` in ``relpath`` (a synthetic
+    ``git diff -U0``; the tree itself is read as it is)."""
+    import ast
+
+    import mark_reverify
+
+    tree = ast.parse((mark_reverify.ROOT / relpath).read_text())
+    (line,) = [
+        n.end_lineno
+        for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == fn_name
+    ]
+    diff = f"+++ b/{relpath}\n@@ -{line} +{line} @@\n+    edited\n"
+    monkeypatch.setattr(mark_reverify, "_git", lambda *args: diff)
+    return mark_reverify.affected_queries(mark_reverify._module_changes("HEAD"))
+
+
+def test_reverify_follows_module_imports_to_dependent_queries(monkeypatch):
+    """``queries/text.py`` imports the operator that calls
+    ``operators.dedup.normalize_text`` at module top, not inside the
+    builder: an edit there must still front every query whose import
+    closure reaches it."""
+    names = _reverify_after_edit(
+        monkeypatch, "heparchy_spark/operators/dedup.py", "normalize_text"
+    )
+    for q in (
+        "text_fingerprints",
+        "dedup_exact_normalized",
+        "dedup_simhash_pairs",
+        "dedup_ngram_jaccard_pairs",
+    ):
+        assert q in names, q
+    assert "q1_pricing_summary" not in names
+
+
+def test_reverify_builder_edit_selects_only_that_query(monkeypatch):
+    """A body edit to one builder fronts that query alone, not the other
+    queries registered in the same module."""
+    names = _reverify_after_edit(
+        monkeypatch, "heparchy_spark/queries/relational.py", "q1_pricing_summary"
+    )
+    assert names == ["q1_pricing_summary"]
+
+
 def test_registry_broadcast_declarations_are_nonempty_strings():
     """Every expects_broadcast declaration must carry a real reason —
     an empty string would satisfy the gate while documenting nothing."""

@@ -161,31 +161,36 @@ def winnowing_pairs_rows(
     return out
 
 
+def minhash_bands(shingles, num_perm: int = 64, bands: int = 16) -> list[int]:
+    """LSH band buckets of one non-empty shingle-hash set, band order:
+    the mirror of operators/dedup.py ``_band_table``.  Permutation j is
+    ``min(t1 + j * t2)`` with ``t1 = h & 2^32-1`` and
+    ``t2 = xxhash64(h, int 1) & 2^32-1``; a band's bucket is the chained
+    xxhash64 of its ``num_perm // bands`` signature rows."""
+    rows = num_perm // bands
+    mask = (1 << 32) - 1
+    # one pass over the set: the (t1, t2) pairing per element must come
+    # from the SAME iteration — two separate comprehensions were only
+    # paired correctly by CPython's stable iteration of an unmutated set
+    t12 = [(h & mask, xxhash64(h, ("int", 1)) & mask) for h in shingles]
+    sig = [min(a + j * b for a, b in t12) for j in range(num_perm)]
+    return [xxhash64(*sig[b * rows : (b + 1) * rows]) for b in range(bands)]
+
+
 def minhash_pairs(
     docs: list[tuple[int, str | None]],
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
 ) -> list[tuple[int, int, float]]:
-    rows = num_perm // bands
-    mask = (1 << 32) - 1
     sets: dict[int, set[int]] = {}
-    sigs: dict[int, list[int]] = {}
     buckets: dict[tuple[int, int], list[int]] = {}
     for did, text in docs:
         sh = shingle_hash_set(text)
         if not sh:
             continue
         sets[did] = sh
-        # one pass over the set: the (t1, t2) pairing per element must
-        # come from the SAME iteration — two separate comprehensions
-        # were only paired correctly by CPython's stable iteration of
-        # an unmutated set (round-9 advice)
-        t12 = [(h & mask, xxhash64(h, ("int", 1)) & mask) for h in sh]
-        sig = [min(a + j * b for a, b in t12) for j in range(num_perm)]
-        sigs[did] = sig
-        for b in range(bands):
-            bucket = xxhash64(*sig[b * rows : (b + 1) * rows])
+        for b, bucket in enumerate(minhash_bands(sh, num_perm, bands)):
             buckets.setdefault((b, bucket), []).append(did)
     cand = set()
     for ids in buckets.values():
@@ -220,7 +225,6 @@ def lsh_threshold_audit_rows(
     sel = sorted(
         docs, key=lambda d: hashlib.sha256(str(d[0]).encode()).hexdigest()
     )[:sample_k]
-    mask = (1 << 32) - 1
     sets: dict[int, set[int]] = {}
     bb: dict[int, set[tuple[int, int]]] = {}
     for did, text in sel:
@@ -228,16 +232,7 @@ def lsh_threshold_audit_rows(
         if not sh:
             continue
         sets[did] = sh
-        # one pass over the set: the (t1, t2) pairing per element must
-        # come from the SAME iteration — two separate comprehensions
-        # were only paired correctly by CPython's stable iteration of
-        # an unmutated set (round-9 advice)
-        t12 = [(h & mask, xxhash64(h, ("int", 1)) & mask) for h in sh]
-        sig = [min(a + j * b for a, b in t12) for j in range(num_perm)]
-        bb[did] = {
-            (b, xxhash64(*sig[b * rows_per_band : (b + 1) * rows_per_band]))
-            for b in range(bands)
-        }
+        bb[did] = set(enumerate(minhash_bands(sh, num_perm, bands)))
     buckets: dict[int, list[int]] = {}
     ids = sorted(sets)
     for i in range(len(ids)):
@@ -2271,6 +2266,8 @@ def write_kmeans_fixture(sf_dir: str, write) -> None:
 # The kernel below REPLAYS operators/jets.py's synth + merge trajectory with
 # the identical NumPy expressions (the ANN-fixture technique): inputs are
 # exact xxhash64 words, so both sides see the same doubles end to end.
+# _jets_cluster/_jets_softdrop rebuild the full distance matrix every merge;
+# tests/test_jets.py pins the package's incremental kernels equal to them.
 
 
 def _jets_synth(h1, h2, h3):

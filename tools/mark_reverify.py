@@ -17,10 +17,10 @@ gap mechanically, at FUNCTION granularity:
   hit by those lines; lines outside every span mark the whole module
   (module-level helpers feed arbitrary registrations);
 * a query is affected when its registering function changed, its
-  registering module changed at module level, or its builder's source
-  references a changed definition of another ``heparchy_spark`` module —
-  including one transitive module hop (an operator module whose own
-  source imports a changed module re-exposes ALL its names, coarsely);
+  registering module changed at module level, or any other module of
+  its registering module's import closure (``plan_gate.import_closure``:
+  every package module it imports, transitively, plus the packages
+  around those) changed at all;
 * the output ``REVERIFY.json`` records the current round number (latest
   CORRECTNESS round + 1) and the affected names.  ``_driver_evidence``
   fronts a listed name until a driver round >= that number has checked
@@ -37,12 +37,13 @@ from __future__ import annotations
 
 import argparse
 import ast
-import inspect
 import json
 import re
 import subprocess
 import sys
 from pathlib import Path
+
+from plan_gate import import_closure
 
 ROOT = Path(__file__).resolve().parents[1]
 
@@ -136,8 +137,9 @@ def _module_changes(since: str) -> dict[str, tuple[set[str], bool, set[str]]]:
     for relpath, lines in _changed_lines_by_file(since).items():
         if not lines:
             continue
-        mod = relpath[: -len(".py")].replace("/", ".")
-        if mod == "heparchy_spark.queries.__init__":
+        mod = relpath.removesuffix(".py").removesuffix("/__init__")
+        mod = mod.replace("/", ".")
+        if mod == "heparchy_spark.queries":
             continue
         spans = _top_spans(ROOT / relpath)
         if spans is None:  # deleted/unparseable file: whole module changed
@@ -164,33 +166,6 @@ def _module_changes(since: str) -> dict[str, tuple[set[str], bool, set[str]]]:
         module_level = bool(set(lines) - covered)
         out[mod] = (names, module_level, substantive)
     return out
-
-
-def _transitive_hop(
-    changes: dict[str, tuple[set[str], bool, set[str]]]
-) -> dict[str, tuple[set[str], bool, set[str]]]:
-    """One module hop: a heparchy_spark module whose own source imports
-    a changed module re-exposes ALL its top-level names (coarse — the
-    cost of over-fronting is one extra driver re-check)."""
-    changed_mods = set(changes)
-    full = dict(changes)
-    for path in (ROOT / "heparchy_spark").rglob("*.py"):
-        mod = str(path.relative_to(ROOT))[: -len(".py")].replace("/", ".")
-        # registration-layer modules are covered by the direct span
-        # analysis; re-exposing them here would flag every query they
-        # register on any upstream change
-        if mod in full or mod.startswith("heparchy_spark.queries"):
-            continue
-        try:
-            src = path.read_text()
-        except OSError:
-            continue
-        refs = set(re.findall(r"from\s+(heparchy_spark(?:\.\w+)+)\s+import", src))
-        refs |= set(re.findall(r"\b(heparchy_spark(?:\.\w+)+)", src))
-        if refs & changed_mods:
-            names = {name for name, _a, _b, _bs in (_top_spans(path) or [])}
-            full[mod] = (names, False, names)
-    return full
 
 
 def _current_round() -> int:
@@ -221,36 +196,17 @@ def affected_queries(
 
     def by_staleness(names: list[str]) -> list[str]:
         return sorted(names, key=lambda n: (checked.get(n, 0), n))
+
     direct, dependent, decorator_only = [], [], []
-    word = re.compile(r"\w+")
     for qname, spec in REGISTRY.items():
         reg_module = spec.spark.__module__
         reg = changes.get(reg_module)
         fname = spec.spark.__name__
         if reg is not None and fname in reg[2]:
             direct.append(qname)
-            continue
-        if reg is not None and reg[1]:
-            dependent.append(qname)
-            continue
-        try:
-            src = inspect.getsource(spec.spark)
-        except (OSError, TypeError):
-            dependent.append(qname)  # can't inspect -> be safe, re-front
-            continue
-        src_words = set(word.findall(src))
-        refs = set(
-            re.findall(r"from\s+(heparchy_spark(?:\.\w+)+)\s+import", src)
-        ) | set(re.findall(r"\b(heparchy_spark(?:\.\w+)+)", src))
-        hit = False
-        for mod in refs:
-            ch = changes.get(mod)
-            if ch is None or mod == reg_module:
-                continue
-            if ch[1] or (ch[0] & src_words):
-                hit = True
-                break
-        if hit:
+        elif (reg is not None and reg[1]) or (
+            (import_closure(reg_module) - {reg_module}) & changes.keys()
+        ):
             dependent.append(qname)
         elif reg is not None and fname in reg[0]:
             decorator_only.append(qname)
@@ -322,7 +278,7 @@ def main() -> None:
     ap.add_argument("--since", default=None, help="commit to diff against")
     args = ap.parse_args()
     since = args.since or _latest_snapshot_commit()
-    changes = _transitive_hop(_module_changes(since))
+    changes = _module_changes(since)
     names = affected_queries(changes)
     oracle_changed = [n for n in _oracle_fixture_changed(since) if n in names]
     names = oracle_changed + [n for n in names if n not in oracle_changed]
@@ -344,7 +300,7 @@ def main() -> None:
     print(f"carryover: {n_carry} unexpired names from the previous file")
     print(
         f"REVERIFY.json: round {out['round']},"
-        f" {len(changes)} changed/affected modules"
+        f" {len(changes)} changed modules"
         f" -> {len(names)} queries fronted"
     )
 

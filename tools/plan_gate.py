@@ -13,36 +13,86 @@ code 0 = clean, 1 = offenders found.
 
 from __future__ import annotations
 
+import ast
+import functools
 import subprocess
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def changed_query_names() -> list[str]:
-    """Queries whose defining module — or any module it imports from this
-    package, transitively, or a package around those — was touched since
-    HEAD (tracked diffs plus untracked files).  A change under
-    ``heparchy_spark/plans/`` selects every query: that package holds the
-    rules that judge every plan.
+def source_of(module: str) -> Path | None:
+    base = ROOT / module.replace(".", "/")
+    for path in (base.with_suffix(".py"), base / "__init__.py"):
+        if path.is_file():
+            return path
+    return None
+
+
+def packages_of(module: str) -> set[str]:
+    # importing a.b.c runs a/__init__.py and a/b/__init__.py first
+    return {module.rsplit(".", k)[0] for k in range(1, module.count(".") + 1)}
+
+
+@functools.cache
+def imports_of(module: str) -> frozenset[str]:
+    """The package modules ``module`` imports, its own packages left
+    out: the registry package's loader imports every query module."""
+    path = source_of(module)
+    if path is None:
+        return frozenset()
+    try:
+        tree = ast.parse(path.read_text())
+    except (OSError, SyntaxError):
+        return frozenset()
+    deps = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module:
+            # ``from pkg import name`` may name a submodule
+            deps |= {node.module} | {
+                f"{node.module}.{a.name}"
+                for a in node.names
+                if source_of(f"{node.module}.{a.name}")
+            }
+        elif isinstance(node, ast.Import):
+            deps |= {a.name for a in node.names}
+    return frozenset(
+        d for d in deps if d.startswith("heparchy_spark")
+    ) - packages_of(module)
+
+
+def import_closure(module: str) -> set[str]:
+    """``module``, every package module it imports, transitively (top
+    level and inside functions alike), and the packages around those.
 
     The transitive hop matters: editing ``operators/psl.py`` changes the
     plans of ``queries/web.py``'s queries even though no query module
     stem matches the diff."""
-    import ast
-    import functools
+    seen, stack = set(), [module]
+    while stack:
+        m = stack.pop()
+        if m not in seen:
+            seen.add(m)
+            stack.extend(imports_of(m))
+    return seen | set().union(*map(packages_of, seen))
 
-    root = Path(__file__).resolve().parent.parent
+
+def changed_query_names() -> list[str]:
+    """Queries whose defining module — or any module in its
+    :func:`import_closure` — was touched since HEAD (tracked diffs plus
+    untracked files).  A change under ``heparchy_spark/plans/`` selects
+    every query: that package holds the rules that judge every plan."""
     listed = []
     for cmd in (
         ["git", "diff", "--name-only", "HEAD"],
         ["git", "ls-files", "--others", "--exclude-standard"],
     ):
         listed += subprocess.run(
-            cmd, capture_output=True, text=True, cwd=root
+            cmd, capture_output=True, text=True, cwd=ROOT
         ).stdout.split()
     touched = {
         p.removesuffix(".py").removesuffix("/__init__").replace("/", ".")
@@ -56,55 +106,11 @@ def changed_query_names() -> list[str]:
     _load_all()
     if any(m.startswith("heparchy_spark.plans") for m in touched):
         return list(REGISTRY)
-
-    def source_of(module: str) -> Path | None:
-        base = root / module.replace(".", "/")
-        for path in (base.with_suffix(".py"), base / "__init__.py"):
-            if path.is_file():
-                return path
-        return None
-
-    def packages_of(module: str) -> set[str]:
-        # importing a.b.c runs a/__init__.py and a/b/__init__.py first
-        return {module.rsplit(".", k)[0] for k in range(1, module.count(".") + 1)}
-
-    @functools.cache
-    def imports_of(module: str) -> frozenset[str]:
-        """The package modules ``module`` imports, its own packages left
-        out: the registry package's loader imports every query module."""
-        path = source_of(module)
-        if path is None:
-            return frozenset()
-        try:
-            tree = ast.parse(path.read_text())
-        except (OSError, SyntaxError):
-            return frozenset()
-        deps = set()
-        for node in ast.walk(tree):
-            if isinstance(node, ast.ImportFrom) and node.module:
-                # ``from pkg import name`` may name a submodule
-                deps |= {node.module} | {
-                    f"{node.module}.{a.name}"
-                    for a in node.names
-                    if source_of(f"{node.module}.{a.name}")
-                }
-            elif isinstance(node, ast.Import):
-                deps |= {a.name for a in node.names}
-        return frozenset(
-            d for d in deps if d.startswith("heparchy_spark")
-        ) - packages_of(module)
-
-    names = []
-    for name, spec in REGISTRY.items():
-        seen, stack = set(), [spec.spark.__module__]
-        while stack:  # transitive closure over the direct imports
-            m = stack.pop()
-            if m not in seen:
-                seen.add(m)
-                stack.extend(imports_of(m))
-        if (seen | set().union(*map(packages_of, seen))) & touched:
-            names.append(name)
-    return names
+    return [
+        name
+        for name, spec in REGISTRY.items()
+        if import_closure(spec.spark.__module__) & touched
+    ]
 
 
 def main() -> int:
