@@ -1,6 +1,7 @@
 """One wrapper for every Python function the package sends to Spark's
 Python workers (``mapInPandas``, ``mapInArrow``, ``applyInPandas``,
-``applyInPandasWithState``, ``pandas_udf``).
+``applyInPandasWithState``, ``pandas_udf``), and one per-row map over
+columns built on it (``map_rows``).
 
 A reused Python worker starts each task in
 ``pyspark.worker_util.setup_spark_files``, which calls
@@ -23,6 +24,11 @@ The wrapper keeps the function's name and signature (``applyInPandas``
 counts its parameters to decide whether to pass the grouping key), adds
 no plan node, and references nothing of this package, so it unpickles on
 a worker that cannot import ``heparchy_spark``.
+
+``map_rows`` is the per-row Python map every decode or byte-level operator
+runs: one column-pruned ``mapInArrow`` that calls a plain Python function
+once per row and types its output batches from the declared schema, so an
+operator keeps only its per-row function and its output schema.
 """
 
 from __future__ import annotations
@@ -30,7 +36,7 @@ from __future__ import annotations
 import functools
 import inspect
 
-__all__ = ["worker_fn"]
+__all__ = ["map_rows", "worker_fn"]
 
 
 def worker_fn(fn):
@@ -74,3 +80,51 @@ def worker_fn(fn):
 
     run.__signature__ = inspect.signature(fn)
     return run
+
+
+def map_rows(df, fn, schema, keys, inputs):
+    """``fn`` over every row of ``df``, as one ``mapInArrow``.
+
+    Only ``keys + inputs`` cross the Python boundary.  ``fn`` is called
+    once per row with the row's ``inputs`` values (one or more columns;
+    Python objects, ``None`` for null) and yields tuples of the non-key
+    fields of ``schema``, in order; each yielded tuple becomes one output
+    row: the row's ``keys`` values followed by the tuple.  Yielding
+    nothing drops the row and yielding several fans it out, so 1:1 maps,
+    filters and fan-outs share this one path.  ``schema`` is the whole output schema,
+    ``keys`` first (they take its names and types); the output batches
+    are typed from it with ``to_arrow_schema``, so a nullable column
+    holds ``None`` exactly, whatever the other rows of the batch hold.
+
+    Setup that ``fn`` needs once (a basis matrix, a lookup table) is
+    built before the call and captured by ``fn``, never per row.
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    n_keys = len(keys)
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            cols = [c.to_pylist() for c in batch.columns[n_keys:]]
+            src, out = [], []
+            for i, row in enumerate(zip(*cols)):
+                for values in fn(*row):
+                    src.append(i)
+                    out.append(values)
+            if not out:
+                continue
+            take = pa.array(src, type=pa.int64())
+            arrays = [
+                batch.column(k).take(take).cast(arrow_schema.field(k).type)
+                for k in range(n_keys)
+            ]
+            arrays += [
+                pa.array(values, type=arrow_schema.field(n_keys + j).type)
+                for j, values in enumerate(zip(*out))
+            ]
+            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+    return df.select(*keys, *inputs).mapInArrow(worker_fn(run), schema)

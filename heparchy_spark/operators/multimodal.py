@@ -4,7 +4,10 @@
 Design: media travels as an opaque ``BinaryType`` column beside a typed
 metadata struct; every byte-level operator (format sniffing, size, entropy,
 histograms, chunked fingerprints) is REAL and runs either JVM-side (column
-algebra) or as Arrow-batched ``mapInPandas``.  Container-level decode is
+algebra) or as a per-row Python function through
+``functions.worker.map_rows`` (one column-pruned ``mapInArrow``; the
+operator keeps only its per-row function and its output schema).
+Container-level decode is
 REAL for every format whose structure is stdlib-parseable: PNG IHDR, JPEG
 SOFn markers, WAV (stdlib ``wave`` + true PCM amplitude), animated GIF
 (frame count from image descriptors), and AVI (avih header + movi chunk
@@ -16,23 +19,21 @@ drops in by extending ``_try_real_decode`` only.
 
 At 100 TB: payloads dominate bytes; operators that don't need payload bytes
 must never read them (column pruning does this for free since the payload
-is its own Parquet column), and mapInPandas batch sizes are bounded by
+is its own Parquet column), and Arrow batch sizes are bounded by
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` to keep Arrow buffers in
 executor memory.
 """
 
 from __future__ import annotations
 
-import typing as ty
 import zlib
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame, Window
 
-from heparchy_spark.functions.worker import worker_fn
+from heparchy_spark.functions.worker import map_rows
 from heparchy_spark.operators.banding import hamming_pairs
 
 __all__ = [
@@ -110,31 +111,22 @@ _BYTE_STATS_FIELDS = [
 def byte_stats(
     df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
 ) -> DataFrame:
-    """REAL payload statistics via Arrow-batched ``mapInPandas``:
-    byte length, Shannon entropy of the byte histogram, CRC32."""
+    """REAL payload statistics, one row per payload through
+    ``map_rows``: byte length, Shannon entropy of the byte histogram,
+    CRC32."""
     out_schema = T.StructType(
         [T.StructField(id_col, T.LongType(), False), *_BYTE_STATS_FIELDS]
     )
 
-    def stats(batches: ty.Iterator[pd.DataFrame]) -> ty.Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, n_bytes, entropy, crc = [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                buf = bytes(payload) if payload is not None else b""
-                arr = np.frombuffer(buf, dtype=np.uint8)
-                counts = np.bincount(arr, minlength=256) if arr.size else np.zeros(1)
-                p = counts[counts > 0] / max(arr.size, 1)
-                ids.append(mid)
-                n_bytes.append(len(buf))
-                entropy.append(float(-(p * np.log2(p)).sum()) if arr.size else 0.0)
-                crc.append(zlib.crc32(buf))
-            yield pd.DataFrame(
-                {id_col: ids, "n_bytes": n_bytes, "entropy": entropy, "crc32": crc}
-            )
+    def row(payload):
+        buf = bytes(payload) if payload is not None else b""
+        arr = np.frombuffer(buf, dtype=np.uint8)
+        counts = np.bincount(arr, minlength=256) if arr.size else np.zeros(1)
+        p = counts[counts > 0] / max(arr.size, 1)
+        entropy = float(-(p * np.log2(p)).sum()) if arr.size else 0.0
+        yield len(buf), entropy, zlib.crc32(buf)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        worker_fn(stats), schema=out_schema
-    )
+    return map_rows(df, row, out_schema, [id_col], [payload_col])
 
 
 # ---------------------------------------------------------------------------
@@ -177,22 +169,37 @@ def _parse_png_header(payload: bytes) -> dict | None:
     }
 
 
-def _parse_wav(payload: bytes) -> dict | None:
-    """Real WAV decode via the stdlib ``wave`` module; mean amplitude is a
-    true reduction over the 16-bit PCM samples.  Returns None when the
-    RIFF payload is not a parseable WAVE."""
+def _read_wav(payload: bytes) -> tuple[int, int, int, int, bytes] | None:
+    """(channels, frame rate, header frame count, sample width, frame
+    bytes) of a WAV payload, read with the stdlib ``wave`` module; None
+    when the payload is not a parseable WAVE.  The header's frame count
+    is reported as is: the data chunk may hold fewer whole frames, and
+    each caller trims to what it needs."""
     import io
     import wave
 
     try:
         with wave.open(io.BytesIO(payload)) as w:
-            ch = w.getnchannels()
-            sr = w.getframerate()
             nframes = w.getnframes()
-            sampwidth = w.getsampwidth()
-            data = w.readframes(nframes)
+            return (
+                w.getnchannels(),
+                w.getframerate(),
+                nframes,
+                w.getsampwidth(),
+                w.readframes(nframes),
+            )
     except Exception:
         return None
+
+
+def _parse_wav(payload: bytes) -> dict | None:
+    """Real WAV decode via the stdlib ``wave`` module; mean amplitude is a
+    true reduction over the 16-bit PCM samples.  Returns None when the
+    RIFF payload is not a parseable WAVE."""
+    wav = _read_wav(payload)
+    if wav is None:
+        return None
+    ch, sr, nframes, sampwidth, data = wav
     mean_amp = 0.0
     if sampwidth == 2 and data:
         samples = np.frombuffer(
@@ -466,36 +473,25 @@ DECODED_SCHEMA = T.StructType(
 def decode_media(
     df: DataFrame, payload_col: str = "payload", kind_col: str = "kind"
 ) -> DataFrame:
-    """Decode payloads to per-media properties via Arrow-batched
-    ``mapInPandas``.  PNG/JPEG/GIF/WAV/AVI containers decode for REAL
-    (stdlib — see ``_try_real_decode``); payloads in no parseable
+    """Decode payloads to per-media properties, one row per payload
+    through ``map_rows``.  PNG/JPEG/GIF/WAV/AVI containers decode for
+    REAL (stdlib — see ``_try_real_decode``); payloads in no parseable
     container use the labeled deterministic fake."""
 
-    def decode(batches: ty.Iterator[pd.DataFrame]) -> ty.Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf[kind_col], pdf[payload_col]
-            ):
-                buf = bytes(payload or b"")
-                d = _try_real_decode(buf) or _fake_decode(buf, kind)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "kind": kind,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "channels": d["channels"],
-                        "sample_rate": d["sample_rate"],
-                        "n_frames": d["n_frames"],
-                        "mean_amplitude": d["mean_amplitude"],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def row(kind, payload):
+        buf = bytes(payload or b"")
+        d = _try_real_decode(buf) or _fake_decode(buf, kind)
+        yield (
+            kind,
+            d["width"],
+            d["height"],
+            d["channels"],
+            d["sample_rate"],
+            d["n_frames"],
+            d["mean_amplitude"],
+        )
 
-    return df.select("media_id", kind_col, payload_col).mapInPandas(
-        worker_fn(decode), schema=DECODED_SCHEMA
-    )
+    return map_rows(df, row, DECODED_SCHEMA, ["media_id"], [kind_col, payload_col])
 
 
 FRAMES_SCHEMA = T.StructType(
@@ -521,35 +517,23 @@ def sample_frames(
     decoded frames — the GIF/codec decoders aren't in this
     environment); payloads in no parseable container fall back to the
     fake count.  The fan-out shape — one input row → many output rows
-    through mapInPandas — is the real thing in every path."""
+    through ``map_rows`` — is the real thing in every path."""
 
-    def frames(batches: ty.Iterator[pd.DataFrame]) -> ty.Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, payloads = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                buf = bytes(payload or b"")
-                chunks = _avi_frame_chunks(buf)
-                if chunks is not None:
-                    for fi in range(0, len(chunks), every_n):
-                        ids.append(mid)
-                        idxs.append(fi)
-                        payloads.append(chunks[fi])
-                    continue
-                real = _try_real_decode(buf)
-                n_frames = (real or _fake_decode(buf, "video"))["n_frames"]
-                step = max(len(buf) // max(n_frames, 1), 1)
-                for fi in range(0, n_frames, every_n):
-                    off = (fi * step) % max(len(buf), 1)
-                    ids.append(mid)
-                    idxs.append(fi)
-                    payloads.append(buf[off : off + step])
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "frame_payload": payloads}
-            )
+    def row(payload):
+        buf = bytes(payload or b"")
+        chunks = _avi_frame_chunks(buf)
+        if chunks is not None:
+            for fi in range(0, len(chunks), every_n):
+                yield fi, chunks[fi]
+            return
+        real = _try_real_decode(buf)
+        n_frames = (real or _fake_decode(buf, "video"))["n_frames"]
+        step = max(len(buf) // max(n_frames, 1), 1)
+        for fi in range(0, n_frames, every_n):
+            off = (fi * step) % max(len(buf), 1)
+            yield fi, buf[off : off + step]
 
-    return df.select("media_id", payload_col).mapInPandas(
-        worker_fn(frames), schema=FRAMES_SCHEMA
-    )
+    return map_rows(df, row, FRAMES_SCHEMA, ["media_id"], [payload_col])
 
 
 def payload_embedding(
@@ -565,20 +549,13 @@ def payload_embedding(
         ]
     )
 
-    def embed(batches: ty.Iterator[pd.DataFrame]) -> ty.Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, vecs = [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                arr = np.frombuffer(bytes(payload or b""), dtype=np.uint8)
-                hist = np.bincount(arr % dim, minlength=dim).astype("float64")
-                norm = np.linalg.norm(hist)
-                vecs.append((hist / norm if norm else hist).astype("float32").tolist())
-                ids.append(mid)
-            yield pd.DataFrame({id_col: ids, "embedding": vecs})
+    def row(payload):
+        arr = np.frombuffer(bytes(payload or b""), dtype=np.uint8)
+        hist = np.bincount(arr % dim, minlength=dim).astype("float64")
+        norm = np.linalg.norm(hist)
+        yield ((hist / norm if norm else hist).astype("float32").tolist(),)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        worker_fn(embed), schema=out_schema
-    )
+    return map_rows(df, row, out_schema, [id_col], [payload_col])
 
 
 # ---------------------------------------------------------------------------
@@ -721,46 +698,20 @@ def resize_images(
     factor-th row/column — deterministic, no interpolation arithmetic
     to disagree about), re-encode as a real PNG.  One row out per row
     in; non-pixel payloads (header-only containers, other formats)
-    yield NULL outputs rather than a fake.  Arrow-batched mapInPandas —
-    the standard multimodal preprocessing shape: payloads never leave
-    the executor, the driver sees only the frame."""
+    yield NULL outputs rather than a fake.  One row per payload through
+    ``map_rows`` — the standard multimodal preprocessing shape: payloads
+    never leave the executor, the driver sees only the frame."""
 
-    def run(batches: ty.Iterator[pd.DataFrame]) -> ty.Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                buf = bytes(payload or b"")
-                dec = _png_decode_pixels(buf)
-                if dec is None:
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "width": None,
-                            "height": None,
-                            "out_width": None,
-                            "out_height": None,
-                            "out_payload": None,
-                        }
-                    )
-                    continue
-                w, h, ch, arr = dec
-                sub = np.ascontiguousarray(arr[::factor, ::factor, :])
-                oh, ow = sub.shape[0], sub.shape[1]
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "out_width": ow,
-                        "out_height": oh,
-                        "out_payload": _png_encode(sub),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def row(payload):
+        dec = _png_decode_pixels(bytes(payload or b""))
+        if dec is None:
+            yield None, None, None, None, None
+            return
+        w, h, ch, arr = dec
+        sub = np.ascontiguousarray(arr[::factor, ::factor, :])
+        yield w, h, sub.shape[1], sub.shape[0], _png_encode(sub)
 
-    return df.select("media_id", payload_col).mapInPandas(
-        worker_fn(run), schema=RESIZED_SCHEMA
-    )
+    return map_rows(df, row, RESIZED_SCHEMA, ["media_id"], [payload_col])
 
 
 RESAMPLED_SCHEMA = T.StructType(
@@ -787,69 +738,33 @@ def resample_audio(
     and the honest label for a corpus-scale loudness/feature pass.
     Non-WAV payloads yield NULL outputs."""
 
-    def run(batches: ty.Iterator[pd.DataFrame]) -> ty.Iterator[pd.DataFrame]:
+    def row(payload):
         import io
         import wave
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                buf = bytes(payload or b"")
-                null_row = {
-                    "media_id": mid,
-                    "sample_rate": None,
-                    "new_rate": None,
-                    "n_frames": None,
-                    "new_frames": None,
-                    "mean_amplitude": None,
-                    "out_payload": None,
-                }
-                try:
-                    with wave.open(io.BytesIO(buf)) as wv:
-                        ch = wv.getnchannels()
-                        sr = wv.getframerate()
-                        nf = wv.getnframes()
-                        sw = wv.getsampwidth()
-                        data = wv.readframes(nf)
-                except Exception:
-                    rows.append(null_row)
-                    continue
-                if sw != 2:
-                    rows.append(null_row)
-                    continue
-                fs = ch * 2
-                nf = min(nf, len(data) // fs)
-                frames = np.frombuffer(
-                    data[: nf * fs], dtype="<i2"
-                ).reshape(nf, ch)
-                sub = frames[::factor]
-                amp = (
-                    float(np.abs(sub.astype("float64")).mean() / 32768.0)
-                    if sub.size
-                    else 0.0
-                )
-                out = io.BytesIO()
-                with wave.open(out, "wb") as wo:
-                    wo.setnchannels(ch)
-                    wo.setsampwidth(2)
-                    wo.setframerate(max(sr // factor, 1))
-                    wo.writeframes(sub.tobytes())
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "sample_rate": sr,
-                        "new_rate": max(sr // factor, 1),
-                        "n_frames": nf,
-                        "new_frames": int(sub.shape[0]),
-                        "mean_amplitude": amp,
-                        "out_payload": out.getvalue(),
-                    }
-                )
-            yield pd.DataFrame(rows)
+        wav = _read_wav(bytes(payload or b""))
+        if wav is None or wav[3] != 2:
+            yield None, None, None, None, None, None
+            return
+        ch, sr, nf, _sw, data = wav
+        fs = ch * 2
+        nf = min(nf, len(data) // fs)
+        frames = np.frombuffer(data[: nf * fs], dtype="<i2").reshape(nf, ch)
+        sub = frames[::factor]
+        amp = (
+            float(np.abs(sub.astype("float64")).mean() / 32768.0)
+            if sub.size
+            else 0.0
+        )
+        out = io.BytesIO()
+        with wave.open(out, "wb") as wo:
+            wo.setnchannels(ch)
+            wo.setsampwidth(2)
+            wo.setframerate(max(sr // factor, 1))
+            wo.writeframes(sub.tobytes())
+        yield sr, max(sr // factor, 1), nf, int(sub.shape[0]), amp, out.getvalue()
 
-    return df.select("media_id", payload_col).mapInPandas(
-        worker_fn(run), schema=RESAMPLED_SCHEMA
-    )
+    return map_rows(df, row, RESAMPLED_SCHEMA, ["media_id"], [payload_col])
 
 
 def keyframe_select(
@@ -869,8 +784,8 @@ def keyframe_select(
     excluded (no predecessor).  Ranking order (l1 desc, frame_idx) is
     total, so the result is a pure function of the payload bytes.
 
-    Scale shape: frame fan-out and histograms are Arrow-batched
-    ``mapInPandas`` passes (the labeled multimodal Python boundary);
+    Scale shape: frame fan-out and histograms are ``map_rows`` passes
+    (the labeled multimodal Python boundary);
     the change score is a JVM lag-window + zip_with fold over the
     16-long arrays on the media key, and only the per-media top-k
     ranking shuffles — state is |media| x top_k.
@@ -885,25 +800,17 @@ def keyframe_select(
         ]
     )
 
-    def hists(batches: ty.Iterator[pd.DataFrame]) -> ty.Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hs = []
-            for payload in pdf["frame_payload"]:
-                arr = np.frombuffer(bytes(payload or b""), dtype=np.uint8)
-                hs.append(
-                    np.bincount(arr >> 4, minlength=16).astype("int64").tolist()
-                    if arr.size
-                    else [0] * 16
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "frame_idx": pdf["frame_idx"],
-                    "hist": hs,
-                }
-            )
+    def hist(payload):
+        arr = np.frombuffer(bytes(payload or b""), dtype=np.uint8)
+        yield (
+            np.bincount(arr >> 4, minlength=16).astype("int64").tolist()
+            if arr.size
+            else [0] * 16,
+        )
 
-    h = frames.mapInPandas(worker_fn(hists), schema=hist_schema)
+    h = map_rows(
+        frames, hist, hist_schema, ["media_id", "frame_idx"], ["frame_payload"]
+    )
     w = Window.partitionBy("media_id").orderBy("frame_idx")
     with_prev = h.withColumn("prev", F.lag("hist").over(w)).where(
         F.col("prev").isNotNull()
@@ -975,7 +882,7 @@ def image_dhash128(
     """128-bit difference hash per image: (id, dhash_lo, dhash_hi,
     decodable) — same decode and output contract as :func:`image_dhash`,
     twice the code width (see :func:`_dhash128` for why width is the
-    scale lever).  Pure Arrow-batched ``mapInPandas``, zero shuffles."""
+    scale lever).  A pure ``map_rows`` projection, zero shuffles."""
     schema = T.StructType(
         [
             T.StructField("media_id", T.LongType(), False),
@@ -985,32 +892,11 @@ def image_dhash128(
         ]
     )
 
-    def run(batches: ty.Iterator[pd.DataFrame]) -> ty.Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, los, his, oks = [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = _png_decode_pixels(bytes(payload or b""))
-                ids.append(mid)
-                if dec is None:
-                    los.append(None)
-                    his.append(None)
-                    oks.append(False)
-                else:
-                    _w, _h, _c, arr = dec
-                    lo, hi = _dhash128(arr)
-                    los.append(lo)
-                    his.append(hi)
-                    oks.append(True)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "dhash_lo": pd.array(los, dtype="Int64"),
-                    "dhash_hi": pd.array(his, dtype="Int64"),
-                    "decodable": oks,
-                }
-            )
+    def row(payload):
+        dec = _png_decode_pixels(bytes(payload or b""))
+        yield (None, None, False) if dec is None else (*_dhash128(dec[3]), True)
 
-    return df.select(id_col, payload_col).mapInPandas(worker_fn(run), schema=schema)
+    return map_rows(df, row, schema, [id_col], [payload_col])
 
 
 def image_dhash(
@@ -1033,9 +919,8 @@ def image_dhash(
     other formats) come back ``decodable = false`` with a null hash —
     they are EXCLUDED from dedup rather than colliding at hash 0.
 
-    Scale shape: a pure Arrow-batched ``mapInPandas`` projection over
-    the scan — zero shuffles; downstream pairing is the banded
-    equi-join.
+    Scale shape: a pure ``map_rows`` projection over the scan — zero
+    shuffles; downstream pairing is the banded equi-join.
     """
     schema = T.StructType(
         [
@@ -1045,25 +930,11 @@ def image_dhash(
         ]
     )
 
-    def run(batches: ty.Iterator[pd.DataFrame]) -> ty.Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes, oks = [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = _png_decode_pixels(bytes(payload or b""))
-                ids.append(mid)
-                if dec is None:
-                    hashes.append(None)
-                    oks.append(False)
-                else:
-                    _w, _h, _c, arr = dec
-                    hashes.append(_dhash64(arr))
-                    oks.append(True)
-            yield pd.DataFrame(
-                {"media_id": ids, "dhash": pd.array(hashes, dtype="Int64"),
-                 "decodable": oks}
-            )
+    def row(payload):
+        dec = _png_decode_pixels(bytes(payload or b""))
+        yield (None, False) if dec is None else (_dhash64(dec[3]), True)
 
-    return df.select(id_col, payload_col).mapInPandas(worker_fn(run), schema=schema)
+    return map_rows(df, row, schema, [id_col], [payload_col])
 
 
 def _dct_basis(n: int = 32) -> "np.ndarray":
@@ -1155,7 +1026,7 @@ def image_phash128(
     """128-bit DCT perceptual hash per image: (id, phash_lo, phash_hi,
     decodable) — same decode and output contract as :func:`image_phash`,
     twice the code width (see :func:`_phash128` for why width is the
-    scale lever).  Pure Arrow-batched ``mapInPandas``, zero shuffles."""
+    scale lever).  A pure ``map_rows`` projection, zero shuffles."""
     schema = T.StructType(
         [
             T.StructField("media_id", T.LongType(), False),
@@ -1164,34 +1035,15 @@ def image_phash128(
             T.StructField("decodable", T.BooleanType(), False),
         ]
     )
+    basis = _dct_basis(32)
 
-    def run(batches: ty.Iterator[pd.DataFrame]) -> ty.Iterator[pd.DataFrame]:
-        basis = _dct_basis(32)
-        for pdf in batches:
-            ids, los, his, oks = [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = _png_decode_pixels(bytes(payload or b""))
-                ids.append(mid)
-                if dec is None:
-                    los.append(None)
-                    his.append(None)
-                    oks.append(False)
-                else:
-                    _w, _h, _c, arr = dec
-                    lo, hi = _phash128(arr, basis)
-                    los.append(lo)
-                    his.append(hi)
-                    oks.append(True)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "phash_lo": pd.array(los, dtype="Int64"),
-                    "phash_hi": pd.array(his, dtype="Int64"),
-                    "decodable": oks,
-                }
-            )
+    def row(payload):
+        dec = _png_decode_pixels(bytes(payload or b""))
+        yield (
+            (None, None, False) if dec is None else (*_phash128(dec[3], basis), True)
+        )
 
-    return df.select(id_col, payload_col).mapInPandas(worker_fn(run), schema=schema)
+    return map_rows(df, row, schema, [id_col], [payload_col])
 
 
 def phash128_neardup_pairs(
@@ -1246,8 +1098,8 @@ def image_phash(
     frequency-domain companion to :func:`image_dhash` (same decode,
     same output contract, same downstream banded pairing of
     ``operators/banding.py`` via :func:`dhash_neardup_pairs` with
-    ``hash_col="phash"``).  Pure
-    Arrow-batched ``mapInPandas`` projection — zero shuffles."""
+    ``hash_col="phash"``).  A pure ``map_rows`` projection — zero
+    shuffles."""
     schema = T.StructType(
         [
             T.StructField("media_id", T.LongType(), False),
@@ -1255,27 +1107,13 @@ def image_phash(
             T.StructField("decodable", T.BooleanType(), False),
         ]
     )
+    basis = _dct_basis(32)
 
-    def run(batches: ty.Iterator[pd.DataFrame]) -> ty.Iterator[pd.DataFrame]:
-        basis = _dct_basis(32)
-        for pdf in batches:
-            ids, hashes, oks = [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = _png_decode_pixels(bytes(payload or b""))
-                ids.append(mid)
-                if dec is None:
-                    hashes.append(None)
-                    oks.append(False)
-                else:
-                    _w, _h, _c, arr = dec
-                    hashes.append(_phash64(arr, basis))
-                    oks.append(True)
-            yield pd.DataFrame(
-                {"media_id": ids, "phash": pd.array(hashes, dtype="Int64"),
-                 "decodable": oks}
-            )
+    def row(payload):
+        dec = _png_decode_pixels(bytes(payload or b""))
+        yield (None, False) if dec is None else (_phash64(dec[3], basis), True)
 
-    return df.select(id_col, payload_col).mapInPandas(worker_fn(run), schema=schema)
+    return map_rows(df, row, schema, [id_col], [payload_col])
 
 
 def dhash_neardup_pairs(
@@ -1333,81 +1171,42 @@ def audio_vad_segments(
 
     Determinism: the whole computation is NumPy float64 over exact
     int16 samples with a fixed operation order, so a plain-Python
-    mirror reproduces it bit-for-bit.  Scale shape: a pure
-    Arrow-batched ``mapInPandas`` fan-out over the scan (one input row
-    → one row per voiced segment) — zero shuffles.
+    mirror reproduces it bit-for-bit.  Scale shape: a pure ``map_rows``
+    fan-out over the scan (one input row → one row per voiced segment)
+    — zero shuffles.
     """
 
-    def run(batches: ty.Iterator[pd.DataFrame]) -> ty.Iterator[pd.DataFrame]:
-        import io
-        import wave
+    def row(payload):
+        wav = _read_wav(bytes(payload or b""))
+        if wav is None or wav[3] != 2:
+            return
+        ch, _sr, nf, _sw, data = wav
+        fs = ch * 2
+        nf = min(nf, len(data) // fs)
+        if nf == 0:
+            return
+        frames = np.frombuffer(data[: nf * fs], dtype="<i2").astype("float64") / 32768.0
+        sig_rms = float(np.sqrt(np.mean(frames * frames)))
+        n_win = nf // frame_len
+        if n_win == 0 or sig_rms == 0.0:
+            return
+        win = frames[: n_win * frame_len * ch].reshape(n_win, frame_len * ch)
+        wrms = np.sqrt(np.mean(win * win, axis=1))
+        voiced = wrms > sig_rms
+        seg_idx = 0
+        i = 0
+        while i < n_win:
+            if voiced[i]:
+                j = i
+                while j < n_win and voiced[j]:
+                    j += 1
+                yield seg_idx, i, j - i, round(float(np.mean(wrms[i:j])), 6)
+                seg_idx += 1
+                i = j
+            else:
+                i += 1
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                buf = bytes(payload or b"")
-                try:
-                    with wave.open(io.BytesIO(buf)) as wv:
-                        ch = wv.getnchannels()
-                        nf = wv.getnframes()
-                        sw = wv.getsampwidth()
-                        data = wv.readframes(nf)
-                except Exception:
-                    continue
-                if sw != 2:
-                    continue
-                fs = ch * 2
-                nf = min(nf, len(data) // fs)
-                if nf == 0:
-                    continue
-                frames = np.frombuffer(
-                    data[: nf * fs], dtype="<i2"
-                ).astype("float64") / 32768.0
-                sig_rms = float(np.sqrt(np.mean(frames * frames)))
-                n_win = nf // frame_len
-                if n_win == 0 or sig_rms == 0.0:
-                    continue
-                win = frames[: n_win * frame_len * ch].reshape(
-                    n_win, frame_len * ch
-                )
-                wrms = np.sqrt(np.mean(win * win, axis=1))
-                voiced = wrms > sig_rms
-                seg_idx = 0
-                i = 0
-                while i < n_win:
-                    if voiced[i]:
-                        j = i
-                        while j < n_win and voiced[j]:
-                            j += 1
-                        rows.append(
-                            {
-                                "media_id": mid,
-                                "seg_idx": seg_idx,
-                                "start_window": i,
-                                "n_windows": j - i,
-                                "seg_rms": round(
-                                    float(np.mean(wrms[i:j])), 6
-                                ),
-                            }
-                        )
-                        seg_idx += 1
-                        i = j
-                    else:
-                        i += 1
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "seg_idx",
-                    "start_window",
-                    "n_windows",
-                    "seg_rms",
-                ],
-            )
-
-    return df.select("media_id", payload_col).mapInPandas(
-        worker_fn(run), schema=VAD_SCHEMA
-    )
+    return map_rows(df, row, VAD_SCHEMA, ["media_id"], [payload_col])
 
 
 SPECTRAL_SCHEMA = T.StructType(
@@ -1441,76 +1240,42 @@ def audio_spectral_profile(
 
     Determinism: NumPy float64 with a fixed operation order (rFFT,
     squared magnitudes, axis means) over exact int16 samples — a
-    plain-Python mirror reproduces it bit-for-bit.  Scale shape: pure
-    Arrow-batched ``mapInPandas`` over the scan, zero shuffles; the
+    plain-Python mirror reproduces it bit-for-bit.  Scale shape: a pure
+    ``map_rows`` filter-projection over the scan, zero shuffles; the
     FFT cost is O(samples log window) per row, embarrassingly
     parallel.
     """
     n_bins = window // 2  # non-DC rFFT bins
     band = n_bins // 4
 
-    def run(batches: ty.Iterator[pd.DataFrame]) -> ty.Iterator[pd.DataFrame]:
-        import io
-        import wave
+    def row(payload):
+        wav = _read_wav(bytes(payload or b""))
+        if wav is None or wav[3] != 2:
+            return
+        ch, _sr, nf, _sw, data = wav
+        fs = ch * 2
+        nf = min(nf, len(data) // fs)
+        n_win = nf // window
+        if n_win == 0:
+            return
+        frames = np.frombuffer(data[: nf * fs], dtype="<i2").astype("float64") / 32768.0
+        mono = frames.reshape(nf, ch).mean(axis=1)
+        win = mono[: n_win * window].reshape(n_win, window)
+        spec = np.fft.rfft(win, axis=1)
+        power = (spec.real**2 + spec.imag**2)[:, 1 : n_bins + 1]
+        band_means = [
+            round(float(power[:, b * band : (b + 1) * band].mean()), 6)
+            for b in range(4)
+        ]
+        total = float(power.sum())
+        if total > 0.0:
+            k = np.arange(1, n_bins + 1, dtype="float64")
+            centroid = float((power * k[None, :]).sum() / total)
+        else:
+            centroid = 0.0
+        yield (n_win, round(centroid, 6), *band_means)
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                buf = bytes(payload or b"")
-                try:
-                    with wave.open(io.BytesIO(buf)) as wv:
-                        ch = wv.getnchannels()
-                        nf = wv.getnframes()
-                        sw = wv.getsampwidth()
-                        data = wv.readframes(nf)
-                except Exception:
-                    continue
-                if sw != 2:
-                    continue
-                fs = ch * 2
-                nf = min(nf, len(data) // fs)
-                n_win = nf // window
-                if n_win == 0:
-                    continue
-                frames = np.frombuffer(
-                    data[: nf * fs], dtype="<i2"
-                ).astype("float64") / 32768.0
-                mono = frames.reshape(nf, ch).mean(axis=1)
-                win = mono[: n_win * window].reshape(n_win, window)
-                spec = np.fft.rfft(win, axis=1)
-                power = (spec.real**2 + spec.imag**2)[:, 1 : n_bins + 1]
-                band_means = [
-                    float(power[:, b * band : (b + 1) * band].mean())
-                    for b in range(4)
-                ]
-                total = float(power.sum())
-                if total > 0.0:
-                    k = np.arange(1, n_bins + 1, dtype="float64")
-                    centroid = float((power * k[None, :]).sum() / total)
-                else:
-                    centroid = 0.0
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "n_windows": n_win,
-                        "centroid_bin": round(centroid, 6),
-                        "b0_power": round(band_means[0], 6),
-                        "b1_power": round(band_means[1], 6),
-                        "b2_power": round(band_means[2], 6),
-                        "b3_power": round(band_means[3], 6),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_windows", "centroid_bin",
-                    "b0_power", "b1_power", "b2_power", "b3_power",
-                ],
-            )
-
-    return df.select("media_id", payload_col).mapInPandas(
-        worker_fn(run), schema=SPECTRAL_SCHEMA
-    )
+    return map_rows(df, row, SPECTRAL_SCHEMA, ["media_id"], [payload_col])
 
 
 def image_gradient_energy(
@@ -1527,8 +1292,8 @@ def image_gradient_energy(
     all valid positions, divided once by the position count —
     engine-exact by construction, no rounding grid.
 
-    Scale shape: pure Arrow-batched ``mapInPandas`` projection over the
-    scan, zero shuffles; integer ops only.
+    Scale shape: a pure ``map_rows`` projection over the scan, zero
+    shuffles; integer ops only.
     """
     schema = T.StructType(
         [
@@ -1539,36 +1304,17 @@ def image_gradient_energy(
         ]
     )
 
-    def run(batches: ty.Iterator[pd.DataFrame]) -> ty.Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = _png_decode_pixels(bytes(payload or b""))
-                if dec is None:
-                    rows.append(
-                        {"media_id": mid, "n_pixels": None,
-                         "grad_energy": None, "decodable": False}
-                    )
-                    continue
-                _w, _h, _c, arr = dec
-                gray = arr.astype("int64").sum(axis=2) // arr.shape[2]
-                gh = np.abs(gray[:, 1:] - gray[:, :-1])
-                gv = np.abs(gray[1:, :] - gray[:-1, :])
-                n_pos = gh.size + gv.size
-                total = int(gh.sum()) + int(gv.sum())
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "n_pixels": gray.size,
-                        "grad_energy": (
-                            total / n_pos if n_pos else 0.0
-                        ),
-                        "decodable": True,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_pixels", "grad_energy", "decodable"],
-            )
+    def row(payload):
+        dec = _png_decode_pixels(bytes(payload or b""))
+        if dec is None:
+            yield None, None, False
+            return
+        arr = dec[3]
+        gray = arr.astype("int64").sum(axis=2) // arr.shape[2]
+        gh = np.abs(gray[:, 1:] - gray[:, :-1])
+        gv = np.abs(gray[1:, :] - gray[:-1, :])
+        n_pos = gh.size + gv.size
+        total = int(gh.sum()) + int(gv.sum())
+        yield gray.size, total / n_pos if n_pos else 0.0, True
 
-    return df.select(id_col, payload_col).mapInPandas(worker_fn(run), schema=schema)
+    return map_rows(df, row, schema, [id_col], [payload_col])

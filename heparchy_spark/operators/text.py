@@ -15,7 +15,7 @@ import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame, Window
 
 from heparchy_spark.functions.literals import sql_ident
-from heparchy_spark.functions.worker import worker_fn
+from heparchy_spark.functions.worker import map_rows, worker_fn
 
 __all__ = [
     "token_count",
@@ -1024,14 +1024,13 @@ def compression_signals(
     templated documents compress far below prose (~0.4), randomness
     compresses near 1, and both tails are filter candidates.
 
-    Runs as Arrow-batched ``mapInPandas`` (the multimodal byte-stats
-    path): zlib is not expressible as Column algebra, so this is a
-    deliberate, labeled Python boundary — one linear pass, no shuffle,
-    batch-amortized. zlib output is bit-stable for a fixed level across
-    builds (same zlib stream format), so the signal is deterministic
-    and fixture-mirrorable.
+    Runs one row per document through ``functions.worker.map_rows``
+    (the multimodal byte-stats path): zlib is not expressible as Column
+    algebra, so this is a deliberate, labeled Python boundary — one
+    linear pass, no shuffle. zlib output is bit-stable for a fixed
+    level across builds (same zlib stream format), so the signal is
+    deterministic and fixture-mirrorable.
     """
-    import typing as ty
     import zlib
 
     from pyspark.sql import types as T
@@ -1045,30 +1044,12 @@ def compression_signals(
         ]
     )
 
-    def signals(batches: ty.Iterator[pd.DataFrame]) -> ty.Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nb, nc, ratio = [], [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                buf = (text or "").encode("utf-8")
-                comp = zlib.compress(buf, level)
-                ids.append(did)
-                nb.append(len(buf))
-                nc.append(len(comp))
-                ratio.append(
-                    round(len(comp) / len(buf), 6) if buf else 1.0
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_bytes": nb,
-                    "n_compressed": nc,
-                    "compression_ratio": ratio,
-                }
-            )
+    def row(text):
+        buf = (text or "").encode("utf-8")
+        n_comp = len(zlib.compress(buf, level))
+        yield len(buf), n_comp, round(n_comp / len(buf), 6) if buf else 1.0
 
-    return df.select(
-        F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)
-    ).mapInPandas(worker_fn(signals), schema=out_schema)
+    return map_rows(df, row, out_schema, [id_col], [text_col])
 
 
 def _unigram_viterbi(

@@ -18,7 +18,7 @@ SQL projection (``selectExpr``; no UDF in the construction):
 Every payload round-trips through the REAL stdlib parsers in
 ``operators/multimodal.py`` — no corpus query reaches the fake decoder.
 Format sniffing + byte length hash-check against a portable-SQL oracle
-(lengths are closed-form); every mapInPandas path (entropy, decode, frame
+(lengths are closed-form); every ``map_rows`` path (entropy, decode, frame
 fan-out, embedding) hash-checks against plain-Python expected-value
 fixtures whose payloads are constructed independently with struct.pack
 (tools/build_expected.py).
@@ -29,7 +29,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from heparchy_spark.functions.worker import worker_fn
+from heparchy_spark.functions.worker import map_rows
 from heparchy_spark.operators.multimodal import (
     byte_stats,
     decode_media,
@@ -193,7 +193,7 @@ def multimodal_crc32(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "multimodal_byte_stats",
     expected_fixture_sql("multimodal_byte_stats"),
-    doc="Arrow-batched mapInPandas byte statistics: length, Shannon "
+    doc="Per-row map_rows byte statistics: length, Shannon "
     "entropy, CRC32 per payload; oracle = plain-Python/NumPy mirror, "
     "precomputed.",
 )
@@ -206,7 +206,7 @@ def multimodal_byte_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected_fixture_sql("multimodal_decode_meta"),
     doc="Decoded media properties via REAL stdlib container parsers "
     "(PNG IHDR / JPEG SOF0 / WAV incl. true PCM mean amplitude / "
-    "animated-GIF frame count) over Arrow-batched mapInPandas — every "
+    "animated-GIF frame count) through per-row map_rows — every "
     "corpus payload takes a real parse path, none reaches the fake "
     "decoder; oracle = expected values derived from the payload "
     "GENERATOR's parameters (plain Python, no parser), precomputed.",
@@ -219,7 +219,7 @@ def multimodal_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "multimodal_frame_sample",
     expected_fixture_sql("multimodal_frame_sample"),
     doc="Video frame sampling fan-out: one row per sampled frame via "
-    "mapInPandas; the frame COUNT is the real GIF image-descriptor count "
+    "map_rows; the frame COUNT is the real GIF image-descriptor count "
     "(1 + doc_id % 97), frame extraction remains a labeled payload-slice "
     "stub; oracle = plain-Python mirror of the fan-out with the "
     "generator's frame count, precomputed.",
@@ -248,8 +248,8 @@ def multimodal_payload_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     "multimodal_resample_audio",
     expected_fixture_sql("multimodal_resample_audio"),
     doc="REAL audio resample (operators/multimodal.resample_audio): the "
-    "WAV payloads' PCM16 frames decimate 2:1 inside an Arrow-batched "
-    "mapInPandas — stdlib wave parse, every-2nd-frame keep across "
+    "WAV payloads' PCM16 frames decimate 2:1 inside a per-row "
+    "map_rows — stdlib wave parse, every-2nd-frame keep across "
     "channels, re-encode at half rate, true mean |amplitude| of the "
     "kept signal. The oracle fixture mirrors the decimation from the "
     "generator parameters alone (tools/build_expected.py "
@@ -283,8 +283,8 @@ def multimodal_resample_audio(
     "sampled frame payloads, L1 change vs the predecessor frame, "
     "top-3 largest changes per media under a (change desc, frame_idx) "
     "total order — the shot-boundary heuristic of a video curation "
-    "pipeline.  Frame fan-out + histograms are Arrow-batched "
-    "mapInPandas; the change score is a JVM lag-window + zip_with "
+    "pipeline.  Frame fan-out + histograms are per-row "
+    "map_rows passes; the change score is a JVM lag-window + zip_with "
     "fold; only the |media| x 3 ranking state shuffles.  Oracle = "
     "plain-Python mirror of slicing/histogram/ranking, precomputed "
     "(operators/multimodal.py keyframe_select).",
@@ -305,7 +305,7 @@ def multimodal_keyframe_select(
     "payloads: per 8-frame analysis window RMS vs the whole signal's "
     "RMS (the adaptive first-pass VAD of a speech curation pipeline), "
     "one row per maximal voiced run with its round-6 mean window RMS.  "
-    "Pure Arrow-batched mapInPandas fan-out — zero shuffles at any "
+    "Pure per-row map_rows fan-out — zero shuffles at any "
     "corpus size.  Oracle fixture mirrors the windowing/threshold/"
     "run-length logic from the generator parameters in plain Python "
     "(operators/multimodal.py audio_vad_segments).",
@@ -380,9 +380,11 @@ def _real_png_media_df(
 ) -> DataFrame:
     """(media_id, payload) of REAL pixel-bearing PNGs — the stdlib
     encoder over the deterministic fixture pixels, one per image-kind
-    doc (doc_id % 4 == 0).  Arrow-batched generation, pure map."""
-    import pandas as pd
+    doc (doc_id % 4 == 0).  One PNG per doc through ``map_rows``, a pure
+    map."""
     import pyspark.sql.types as T
+
+    from heparchy_spark.operators.multimodal import _png_encode
 
     pixels_fn = pixels_fn or _dhash_fixture_pixels
     docs = (
@@ -397,18 +399,10 @@ def _real_png_media_df(
         ]
     )
 
-    def gen(batches):
-        from heparchy_spark.operators.multimodal import _png_encode
+    def row(did):
+        yield did, _png_encode(pixels_fn(did))
 
-        for pdf in batches:
-            ids, payloads = [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                ids.append(did)
-                payloads.append(_png_encode(pixels_fn(did)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return docs.mapInPandas(worker_fn(gen), schema=schema)
+    return map_rows(docs, row, schema, [], ["doc_id"])
 
 
 @register(
@@ -557,7 +551,7 @@ def multimodal_phash128_uniform16_neardups(
     "window, mean power in four equal bands of the 32 non-DC bins + "
     "the power-weighted mean frequency bin (spectral centroid) — the "
     "first-pass spectral fingerprint an audio curation pipeline "
-    "separates music/speech/noise on.  Pure Arrow-batched mapInPandas "
+    "separates music/speech/noise on.  Pure per-row map_rows "
     "over the scan, zero shuffles.  Oracle fixture mirrors the exact "
     "NumPy float64 pipeline from the generator parameters in plain "
     "Python (operators/multimodal.py audio_spectral_profile).",
@@ -577,7 +571,7 @@ def multimodal_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cheap blur/flat screen run before spending on embeddings (solid "
     "color scores ~0, structure scores high).  Total |dx| + |dy| sums "
     "EXACTLY in integers; ONE division by the position count — "
-    "engine-exact, no rounding grid.  Pure zero-shuffle mapInPandas.  "
+    "engine-exact, no rounding grid.  Pure zero-shuffle map_rows.  "
     "Oracle fixture recomputes from the fixture pixel recipe in plain "
     "NumPy (operators/multimodal.py image_gradient_energy).",
 )

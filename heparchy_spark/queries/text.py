@@ -1145,7 +1145,7 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Compression-ratio repetitiveness signals (the Gopher/"
     "MassiveText quality filter): per-doc UTF-8 bytes, zlib-6 deflate "
     "bytes, and their ratio — templated/repetitive text compresses far "
-    "below prose. Arrow-batched mapInPandas (zlib has no Column form; "
+    "below prose. Per-row map_rows (zlib has no Column form; "
     "the multimodal byte-stats path), one linear pass, no shuffle "
     "(operators/text.py compression_signals). Oracle = Python zlib at "
     "the same level — deflate streams are bit-stable per level.",

@@ -94,8 +94,9 @@ def distribute_file_reads(
 ) -> DataFrame:
     """The bridge's parallel unit, as a reusable harness: the file list
     becomes an N-partition frame (one file per partition) and
-    ``reader(path) -> Iterator[pd.DataFrame]`` runs inside
-    ``mapInPandas`` in the worker task holding that file's partition —
+    ``reader(path, file_idx) -> Iterator[pd.DataFrame]`` (``file_idx``
+    is the path's position in ``paths``) runs inside ``mapInPandas`` in
+    the worker task holding that file's partition —
     N files, N concurrent tasks, no driver bottleneck (SURVEY §7 step
     1; the reference's chunked single-writer layout is per-file
     sequential, ``write/hdf.py:63-95``).
@@ -120,12 +121,12 @@ def distribute_file_reads(
                 T.StructField("__file_idx", T.IntegerType(), False),
             ]
         ),
-    ).repartitionByRange(len(paths), "__file_idx")
+    ).repartitionByRange(max(len(paths), 1), "__file_idx")
 
     def _map(batches: ty.Iterator) -> ty.Iterator:
         for pdf in batches:
-            for path in pdf["path"]:
-                yield from reader(path)
+            for path, idx in zip(pdf["path"], pdf["__file_idx"]):
+                yield from reader(path, int(idx))
 
     return files_df.mapInPandas(worker_fn(_map), schema=schema)
 
@@ -144,11 +145,12 @@ def ingest_hdf5(
     Writes ``particles`` directly; derives ``events``/``processes`` metadata
     tables from the ingested data (one aggregation each), mirroring the
     attrs the reference maintains incrementally (``write/hdf.py:257-266,
-    453-456``).
+    453-456``).  Each table gets its schema sidecar, as ``HepWriter``
+    writes it, so reads take the schema from it instead of unifying
+    every footer of the table.
     """
     _require_h5py()
     from heparchy_spark.sources import store as store_mod
-    from heparchy_spark.sources.writer import HepWriter
 
     out_schema = T.StructType(
         [
@@ -168,7 +170,7 @@ def ingest_hdf5(
         ]
     )
 
-    def read_one_file(path: str) -> ty.Iterator:
+    def read_one_file(path: str, _file_idx: int) -> ty.Iterator:
         import h5py  # worker-side import
         import pandas as pd
 
@@ -228,9 +230,10 @@ def ingest_hdf5(
         .option("compression", compression)
         .parquet(store_mod.table_path(dest, "particles"))
     )
+    store_mod.save_table_schema(dest, "particles", out_schema)
 
     # metadata tables from one pass each over the ingested layout
-    pq = spark.read.parquet(store_mod.table_path(dest, "particles"))
+    pq = store_mod.read_table(spark, dest, "particles")
     events = pq.groupBy("process", "event_id", "chunk_id").agg(
         F.count("*").alias("num_pcls"),
         F.lit(0).cast("long").alias("num_edges"),
@@ -243,6 +246,7 @@ def ingest_hdf5(
         .partitionBy(*store_mod.PARTITION_COLS)
         .parquet(store_mod.table_path(dest, "events"))
     )
+    store_mod.save_table_schema(dest, "events", events.schema)
     processes = events.groupBy("process").agg(
         F.count("*").alias("num_evts"),
     ).select(
@@ -258,8 +262,8 @@ def ingest_hdf5(
     processes.coalesce(1).write.mode("overwrite").parquet(
         store_mod.table_path(dest, "processes")
     )
+    store_mod.save_table_schema(dest, "processes", processes.schema)
     store_mod.write_marker(dest, EVTS_PER_CHUNK_DEFAULT)
-    _ = HepWriter  # (imported for type parity; facade path shares the layout)
 
 
 class H5GroupSpec(ty.NamedTuple):

@@ -16,9 +16,9 @@ Mapping to the heparchy model: a particle is an edge of the generation DAG
 (src = production vertex, dst = decay vertex — the vertex that lists it as
 incoming; particles nobody consumes are final-state, dst = 0, mask_final).
 
-Scale shape: one Spark task per file (``mapInPandas`` over a file-path
-DataFrame — same pattern as the HDF5 bridge); the parser itself is pure
-Python, line-streaming, and unit-testable without Spark.
+Scale shape: one Spark task per file, placed by the HDF5 bridge's
+``distribute_file_reads`` harness; the parser itself is pure Python,
+line-streaming, and unit-testable without Spark.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
-from heparchy_spark.functions.worker import worker_fn
+from heparchy_spark.sources.hdf5_bridge import distribute_file_reads
 
 __all__ = ["parse_hepmc_ascii", "ingest_hepmc", "HEPMC_PARTICLE_SCHEMA"]
 
@@ -128,26 +128,21 @@ def ingest_hepmc(
     keeps its raw ids — single-file ingest is unchanged); the raw in-file
     id is preserved as ``file_event_id`` alongside ``file_ord``.
     """
-    files_df = spark.createDataFrame(
-        [(str(p), i) for i, p in enumerate(paths)],
-        schema="path string, file_ord int",
-    ).repartition(max(len(paths), 1))
 
-    def read_files(batches: ty.Iterator) -> ty.Iterator:
+    def read_file(path: str, file_ord: int) -> ty.Iterator:
         import pandas as pd
 
-        for pdf in batches:
-            for path, ford in zip(pdf["path"], pdf["file_ord"]):
-                rows = list(parse_hepmc_ascii(open(path, encoding="utf-8")))
-                if rows:
-                    out = pd.DataFrame(rows)
-                    out["file_ord"] = int(ford)
-                    yield out
+        with open(path, encoding="utf-8") as lines:
+            rows = list(parse_hepmc_ascii(lines))
+        if rows:
+            out = pd.DataFrame(rows)
+            out["file_ord"] = file_ord
+            yield out
 
     schema = T.StructType(
         [*HEPMC_PARTICLE_SCHEMA, T.StructField("file_ord", T.IntegerType())]
     )
-    particles = files_df.mapInPandas(worker_fn(read_files), schema=schema)
+    particles = distribute_file_reads(spark, paths, read_file, schema)
     global_eid = F.col("file_ord").cast("long") * F.lit(2**32) + F.col(
         "event_id"
     )

@@ -192,13 +192,14 @@ def test_multi_file_ingest_one_task_per_file(spark):
         ]
     )
 
-    def fake_reader(path):
+    def fake_reader(path, file_idx):
         # deterministic per-file payload + the worker's partition id,
         # captured INSIDE the task (the parallelism witness)
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
         i = int(path.rsplit("-", 1)[1].split(".")[0])
+        assert file_idx == i  # the harness passes the path's list index
         yield pd.DataFrame(
             {
                 "path": path,
@@ -238,6 +239,43 @@ def test_multi_file_ingest_one_task_per_file(spark):
                 for rp, re, rx in zip(pdf["path"], pdf["event_id"], pdf["px"])
             )
     assert got == want and len(want) == 15
+
+
+def test_bridge_ingest_writes_schema_sidecars(spark, tmp_path, monkeypatch):
+    """``ingest_hdf5`` stamps each table's schema sidecar, so reads skip
+    footer unification; the h5py decode is replaced by a synthetic
+    particles frame of the ingest's own schema."""
+    from heparchy_spark.sources import hdf5_bridge, store
+    from heparchy_spark.sources.reader import HepReader
+
+    pmu = {  # event -> [(px, py, pz, e)]
+        0: [(1.0, 2.0, 3.0, 4.5), (-0.5, 0.25, 7.0, 9.0)],
+        1: [(0.125, -3.0, 2.5, 6.0), (4.0, 4.0, -4.0, 8.0), (0.0, 0.0, 1.0, 1.0)],
+    }
+
+    def fake_reads(spark, paths, reader, schema):
+        rows = [
+            ("signal", eid, 0, i, *p, 22, 1, 9, 501, 502)
+            for eid, ps in pmu.items()
+            for i, p in enumerate(ps)
+        ]
+        return spark.createDataFrame(rows, schema)
+
+    monkeypatch.setattr(hdf5_bridge, "_require_h5py", lambda: None)
+    monkeypatch.setattr(hdf5_bridge, "distribute_file_reads", fake_reads)
+    dest = tmp_path / "bridged"
+    hdf5_bridge.ingest_hdf5(spark, ["/synthetic/run-000.h5"], dest)
+
+    for table in ("particles", "events", "processes"):
+        assert store.schema_sidecar_path(dest, table).exists(), table
+    with HepReader(spark, dest) as reader:
+        proc = reader["signal"]
+        assert len(proc) == 2
+        for eid, ps in pmu.items():
+            got = proc[eid].pmu
+            want = np.array(ps, dtype="float64")
+            for j, ref in enumerate(("x", "y", "z", "e")):
+                np.testing.assert_array_equal(got[ref], want[:, j])
 
 
 def fake_reader_serial(path):

@@ -71,6 +71,43 @@ def test_distributed_ingest(spark, tmp_path):
     assert all(r["e_unit"] == "GEV" for r in rows)
 
 
+def test_ingest_runs_one_task_per_file(spark, tmp_path):
+    # five files land in five partitions, one file each: the placement
+    # is by range on the file index, never round-robin
+    import pyspark.sql.functions as F
+
+    paths = []
+    for i in range(5):
+        f = tmp_path / f"run-{i}.hepmc"
+        f.write_text("\n".join(SAMPLE))
+        paths.append(str(f))
+    df = ingest_hepmc(spark, paths, process="test", evts_per_chunk=2)
+    rows = df.select("*", F.spark_partition_id().alias("pid")).collect()
+    ords_by_pid: dict[int, set] = {}
+    for r in rows:
+        ords_by_pid.setdefault(r["pid"], set()).add(r["file_ord"])
+    assert len(ords_by_pid) == 5
+    assert all(len(ords) == 1 for ords in ords_by_pid.values())
+    assert set().union(*ords_by_pid.values()) == set(range(5))
+    # rows and per-file event ids as the two-file ingest has them
+    assert len(rows) == 30
+    assert {r["event_id"] for r in rows} == {
+        f * 2**32 + e for f in range(5) for e in (0, 1)
+    }
+    assert {r["file_event_id"] for r in rows} == {0, 1}
+    want = sorted(
+        (p["event_id"], p["pcl_id"], p["pdg"], p["src"], p["dst"])
+        for p in parse_hepmc_ascii(SAMPLE)
+    )
+    for f in range(5):
+        got = sorted(
+            (r["file_event_id"], r["pcl_id"], r["pdg"], r["src"], r["dst"])
+            for r in rows
+            if r["file_ord"] == f
+        )
+        assert got == want
+
+
 def test_ingest_colliding_event_ids_across_files(spark, tmp_path):
     # HepMC files typically number events from 0 — two files with the SAME
     # in-file ids must NOT merge into one event downstream.

@@ -241,7 +241,9 @@ def test_reverify_names_front_checked_tier():
     """REVERIFY.json names (queries edited since their last driver
     check) must precede unlisted driver-checked queries in
     spark_queries() order, in the file's own priority order; driver-red
-    retries still come first."""
+    retries still come first.  Checked on the committed evidence, which
+    may list every checked query (then nothing is unlisted); the tiering
+    itself is pinned on synthetic evidence below."""
     import json
     from pathlib import Path
 
@@ -261,9 +263,7 @@ def test_reverify_names_front_checked_tier():
     listed = [
         n for n in file_order if n in _REVERIFY and n not in _RETRY_FIRST
     ]
-    if not listed:  # every listed name already re-checked — nothing to pin
-        return
-    last_listed = max(names.index(n) for n in listed)
+    last_listed = max((names.index(n) for n in listed), default=-1)
     plain_checked = [
         n
         for n in names
@@ -271,10 +271,30 @@ def test_reverify_names_front_checked_tier():
         and n not in _REVERIFY
         and n not in _RETRY_FIRST
     ]
-    assert plain_checked, "corpus should have stable checked queries"
-    assert names.index(plain_checked[0]) > last_listed
+    assert all(names.index(n) > last_listed for n in plain_checked)
     # the file's priority order is preserved among listed names that
     # have prior driver evidence (brand-new queries jump the queue;
     # driver-red retries front their own tier)
     idx = [names.index(n) for n in listed if n in _DRIVER_CHECKED]
     assert idx == sorted(idx)
+
+
+def test_reverify_tiers_on_synthetic_evidence(monkeypatch):
+    """``_ordered_names`` tiers: driver-red retries, then brand-new
+    queries, then REVERIFY names in the file's order (not registration
+    order), then the unlisted checked queries in registration order."""
+    import heparchy_spark.queries as q
+
+    q.spark_queries()  # loads every registration
+    names = list(q.REGISTRY)
+    retry, new, a, b, plain = names[-1], names[-2], names[3], names[1], names[0]
+    checked = {n: 11 for n in names if n != new}
+    monkeypatch.setattr(q, "_DRIVER_CHECKED", checked)
+    monkeypatch.setattr(q, "_RETRY_FIRST", (retry,))
+    # file order a, b is the reverse of their registration order
+    monkeypatch.setattr(q, "_REVERIFY", (a, b))
+
+    order = q._ordered_names()
+    assert order[:4] == [retry, new, a, b]
+    rest = [n for n in names if n not in (retry, new, a, b)]
+    assert order[4:] == rest and rest[0] == plain
