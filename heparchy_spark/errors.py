@@ -6,7 +6,8 @@ and write-side property getters raise ``WriteOnlyError``
 (``/root/reference/heparchy/write/hdf.py:51-58``); overwriting an existing
 dataset warns with ``OverwriteWarning`` (``write/hdf.py:57-60,75-77``).
 ``SchemaDriftError`` is this port's own: an input table whose file schema
-differs from its declaration (``queries/tables.py``).
+differs from its declaration (``queries/tables.py``), and
+``EnvOverrideError`` an environment override the engine cannot parse.
 """
 
 from __future__ import annotations
@@ -16,6 +17,7 @@ __all__ = [
     "WriteOnlyError",
     "OverwriteWarning",
     "SchemaDriftError",
+    "EnvOverrideError",
 ]
 
 
@@ -34,3 +36,8 @@ class OverwriteWarning(RuntimeWarning):
 class SchemaDriftError(ValueError):
     """Raised when a table's file schema (column names, order or types)
     differs from the schema declared for it."""
+
+
+class EnvOverrideError(ValueError):
+    """Raised when an environment override holds a malformed value; the
+    message names the variable."""

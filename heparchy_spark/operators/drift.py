@@ -1,6 +1,6 @@
 """Distribution-drift diagnostics for training-data pipelines.
 
-Three standard drift lenses, each shaped for 100 TB:
+Five standard drift lenses, each shaped for 100 TB:
 
 * ``ks_two_sample`` — exact two-sample Kolmogorov-Smirnov statistic.
   The ECDF difference is evaluated at every distinct value via the
@@ -9,10 +9,17 @@ Three standard drift lenses, each shaped for 100 TB:
   computed over INTEGER cross-multiples (``|ca*nb - cb*na|``), so the
   max is exact; only the final normalization divides.
 
-* ``psi_fixed_bins`` — Population Stability Index over fixed-width
-  bins with Laplace smoothing: one scan to the (bin, half) contingency
-  table (map-side combinable), bounded output.  The industry-standard
-  "did this feature shift between snapshots" number.
+* ``wasserstein_1d`` — exact 1-D earth mover's distance, the integral
+  of the same ECDF difference: KS's prefix sum plus a two-level bucket
+  successor (in-bucket lead + a bounded next-bucket table).
+
+* ``psi_fixed_bins`` / ``jsd_fixed_bins`` — Population Stability Index
+  and Jensen-Shannon divergence over fixed-width bins.  Both are one
+  per-bin term (``psi_term`` / ``jsd_term``, shared with the streaming
+  monitors in ``streaming/analytics.py``) over ONE builder,
+  ``_binned_shares``: a map-side-combinable scan to the (bin, half)
+  contingency table on a full bin spine, Laplace-smoothed shares,
+  bounded output.
 
 * ``log_odds_terms`` — vocabulary drift between two document groups:
   per-term log-odds with Haldane (+0.5) smoothing (the Monroe et al.
@@ -20,6 +27,8 @@ Three standard drift lenses, each shaped for 100 TB:
   absolute effect.  Exploded-token aggregate plus a TakeOrdered top-k;
   the vocabulary table is the only intermediate and it is sublinear in
   corpus size.
+
+Every range bucket goes through ``operators/sweep.py`` ``range_bucket``.
 
 Determinism: all counts are exact integers; every ``ln`` is rounded to
 the 1e-8 grid immediately (the corpus' bigram-NLL convention), so both
@@ -29,9 +38,9 @@ engines rank and hash identical values.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 
-from heparchy_spark.operators.sweep import prefix_sum
+from heparchy_spark.operators.sweep import prefix_sum, range_bucket
 
 
 def ks_two_sample(
@@ -75,36 +84,46 @@ def ks_two_sample(
     )
 
 
-def psi_fixed_bins(
-    df: DataFrame,
-    value_col: str,
-    is_first_col: str,
-    n_bins: int = 10,
+def psi_term(p: Column, q: Column) -> Column:
+    """One bin's PSI term ``(p - q) * (ln p - ln q)``; each LN and the
+    term round to 8 decimals (masks libm ulp differences across
+    engines).  Both shares must be > 0."""
+    return F.round(
+        (p - q) * (F.round(F.log(p), 8) - F.round(F.log(q), 8)), 8
+    )
+
+
+def jsd_term(p: Column, q: Column) -> Column:
+    """One bin's Jensen-Shannon term against the mixture
+    ``m = (p + q) / 2``, each LN and the term rounded to 8 decimals.
+    ``p`` must be > 0 (so ``m`` is); ``q = 0`` takes the exact
+    ``0 · ln 0 → 0`` limit instead of a null log that ``sum()`` would
+    silently skip (batch shares are smoothed above 0, so there the
+    guard never fires)."""
+    m = (p + q) / F.lit(2.0)
+    rln = lambda x: F.round(F.log(x), 8)  # noqa: E731
+    q_term = F.when(
+        q > 0.0, F.lit(0.5) * q * (rln(q) - rln(m))
+    ).otherwise(F.lit(0.0))
+    return F.round(F.lit(0.5) * p * (rln(p) - rln(m)) + q_term, 8)
+
+
+def _binned_shares(
+    df: DataFrame, value_col: str, is_first_col: str, n_bins: int
 ) -> DataFrame:
-    """(bin, n_first, n_second, psi_term) over fixed-width bins of the
-    GLOBAL value range; ``sum(psi_term)`` is the PSI.  Laplace (+1)
-    smoothing keeps empty bins finite — and every one of the ``n_bins``
-    bins emits a row (counts joined onto a 0..n_bins-1 spine), because
-    a bin empty in BOTH halves still carries a nonzero smoothed term
-    whenever the two halves' totals differ; dropping it would bias the
-    statistic low."""
-    v = F.col(value_col)
-    bounds = df.agg(F.min(v).alias("__lo"), F.max(v).alias("__hi"))
+    """(bin, n_first, n_second, pa, pb): the first/second halves'
+    counts in each fixed-width bin of the GLOBAL value range
+    (``range_bucket``), on the full ``range(n_bins)`` spine, and their
+    Laplace (+1) smoothed shares — single double divisions of exact
+    ints.  Every bin emits a row: a bin empty in BOTH halves still
+    carries a nonzero smoothed term whenever the halves' totals differ,
+    and dropping it would bias the statistic low.
+
+    Scale shape: one map-side-combinable scan to an ``n_bins``-row
+    table, two scalar broadcasts (range bounds, totals)."""
     ia = F.col(is_first_col).cast("long")
-    binned = (
-        df.crossJoin(F.broadcast(bounds))
-        .withColumn(
-            "bin",
-            F.when(F.col("__hi") == F.col("__lo"), F.lit(0)).otherwise(
-                F.least(
-                    F.lit(n_bins - 1),
-                    F.floor(
-                        (v - F.col("__lo"))
-                        / ((F.col("__hi") - F.col("__lo")) / F.lit(n_bins))
-                    ).cast("int"),
-                )
-            ),
-        )
+    counts = (
+        range_bucket(df, value_col, n_bins, "bin")
         .groupBy("bin")
         .agg(
             F.sum(ia).alias("n_first"),
@@ -114,7 +133,7 @@ def psi_fixed_bins(
     spine = df.sparkSession.range(n_bins).select(
         F.col("id").cast("int").alias("bin")
     )
-    binned = spine.join(binned, "bin", "left").select(
+    binned = spine.join(counts, "bin", "left").select(
         "bin",
         F.coalesce("n_first", F.lit(0)).alias("n_first"),
         F.coalesce("n_second", F.lit(0)).alias("n_second"),
@@ -122,24 +141,37 @@ def psi_fixed_bins(
     tot = binned.agg(
         F.sum("n_first").alias("__ta"), F.sum("n_second").alias("__tb")
     )
-    p = F.col("n_first").cast("double") + F.lit(1.0)
-    q = F.col("n_second").cast("double") + F.lit(1.0)
-    pa = p / (F.col("__ta") + F.lit(float(n_bins)))
-    pb = q / (F.col("__tb") + F.lit(float(n_bins)))
+    share = lambda n, t: (  # noqa: E731
+        (F.col(n).cast("double") + F.lit(1.0))
+        / (F.col(t) + F.lit(float(n_bins)))
+    )
+    return binned.crossJoin(F.broadcast(tot)).select(
+        "bin",
+        "n_first",
+        "n_second",
+        share("n_first", "__ta").alias("pa"),
+        share("n_second", "__tb").alias("pb"),
+    )
+
+
+def psi_fixed_bins(
+    df: DataFrame,
+    value_col: str,
+    is_first_col: str,
+    n_bins: int = 10,
+) -> DataFrame:
+    """(bin, n_first, n_second, psi_term) over fixed-width bins of the
+    GLOBAL value range; ``sum(psi_term)`` is the PSI between the
+    first/second halves' smoothed bin distributions
+    (``_binned_shares``)."""
+    pa, pb = F.col("pa"), F.col("pb")
     return (
-        binned.crossJoin(F.broadcast(tot))
+        _binned_shares(df, value_col, is_first_col, n_bins)
         .select(
-            "bin",
-            "n_first",
-            "n_second",
-            F.round(
-                (pa - pb) * (F.round(F.log(pa), 8) - F.round(F.log(pb), 8)),
-                8,
-            ).alias("psi_term"),
+            "bin", "n_first", "n_second", psi_term(pa, pb).alias("psi_term")
         )
         .orderBy("bin")
     )
-
 
 
 def jsd_fixed_bins(
@@ -151,74 +183,20 @@ def jsd_fixed_bins(
     """(bin, n_first, n_second, jsd_term) over fixed-width bins of the
     GLOBAL value range; ``sum(jsd_term)`` is the Jensen-Shannon
     divergence (base e, in [0, ln 2]) between the first/second halves'
-    smoothed bin distributions — the bounded, symmetric complement to
-    PSI (which explodes on near-empty bins) and KS (rank-only).
-
-    Same determinism conventions as :func:`psi_fixed_bins`: Laplace
-    (+1) smoothing on a full bin spine, probabilities are single
-    double divisions of exact ints, every LN is rounded to 8 decimals
-    before combining (masks libm ulp differences across engines), and
-    the term itself rounds to 8 — a SQL oracle writing the same
-    expression tree reproduces it bit-for-bit.
-
-    Scale shape: one map-side-combinable scan to an ``n_bins``-row
-    table, two scalar broadcasts (range bounds, totals).
-    """
-    v = F.col(value_col)
-    bounds = df.agg(F.min(v).alias("__lo"), F.max(v).alias("__hi"))
-    ia = F.col(is_first_col).cast("long")
-    binned = (
-        df.crossJoin(F.broadcast(bounds))
-        .withColumn(
-            "bin",
-            F.when(F.col("__hi") == F.col("__lo"), F.lit(0)).otherwise(
-                F.least(
-                    F.lit(n_bins - 1),
-                    F.floor(
-                        (v - F.col("__lo"))
-                        / ((F.col("__hi") - F.col("__lo")) / F.lit(n_bins))
-                    ).cast("int"),
-                )
-            ),
-        )
-        .groupBy("bin")
-        .agg(
-            F.sum(ia).alias("n_first"),
-            F.sum(F.lit(1) - ia).alias("n_second"),
-        )
-    )
-    spine = df.sparkSession.range(n_bins).select(
-        F.col("id").cast("int").alias("bin")
-    )
-    binned = spine.join(binned, "bin", "left").select(
-        "bin",
-        F.coalesce("n_first", F.lit(0)).alias("n_first"),
-        F.coalesce("n_second", F.lit(0)).alias("n_second"),
-    )
-    tot = binned.agg(
-        F.sum("n_first").alias("__ta"), F.sum("n_second").alias("__tb")
-    )
-    pa = (F.col("n_first").cast("double") + F.lit(1.0)) / (
-        F.col("__ta") + F.lit(float(n_bins))
-    )
-    pb = (F.col("n_second").cast("double") + F.lit(1.0)) / (
-        F.col("__tb") + F.lit(float(n_bins))
-    )
-    m = (pa + pb) / F.lit(2.0)
-    rln = lambda x: F.round(F.log(x), 8)  # noqa: E731
-    term = (
-        F.lit(0.5) * pa * (rln(pa) - rln(m))
-        + F.lit(0.5) * pb * (rln(pb) - rln(m))
-    )
+    smoothed bin distributions (``_binned_shares``) — the bounded,
+    symmetric complement to PSI (which explodes on near-empty bins) and
+    KS (rank-only).  A SQL oracle writing the same expression tree
+    reproduces it bit-for-bit."""
+    pa, pb = F.col("pa"), F.col("pb")
     return (
-        binned.crossJoin(F.broadcast(tot))
+        _binned_shares(df, value_col, is_first_col, n_bins)
         .select(
             "bin",
             "n_first",
             "n_second",
             # + 0.0 normalizes IEEE -0.0 (a tiny negative term rounded
             # away) to +0.0 so both engines hash identically
-            (F.round(term, 8) + F.lit(0.0)).alias("jsd_term"),
+            (jsd_term(pa, pb) + F.lit(0.0)).alias("jsd_term"),
         )
         .orderBy("bin")
     )
@@ -307,22 +285,7 @@ def wasserstein_1d(
     cum = prefix_sum(pv, "__v", ["__da", "__db"], n_buckets=n_buckets)
     # re-bucket with prefix_sum's own equi-width rule for the
     # distributed successor: in-bucket lead + next-bucket-min boundary
-    o = F.col("__v")
-    bounds = cum.agg(F.min(o).alias("__lo"), F.max(o).alias("__hi"))
-    bucketed = cum.crossJoin(F.broadcast(bounds)).withColumn(
-        "__b",
-        F.when(F.col("__hi") == F.col("__lo"), F.lit(0)).otherwise(
-            F.least(
-                F.lit(n_buckets - 1),
-                F.floor(
-                    (o - F.col("__lo"))
-                    / ((F.col("__hi") - F.col("__lo")) / F.lit(n_buckets))
-                ).cast("int"),
-            )
-        ),
-    )
-    from pyspark.sql import Window
-
+    bucketed = range_bucket(cum, "__v", n_buckets, "__b")
     w_in = Window.partitionBy("__b").orderBy("__v")
     bmin = bucketed.groupBy("__b").agg(F.min("__v").alias("__bv"))
     w_b = Window.partitionBy().orderBy("__b")

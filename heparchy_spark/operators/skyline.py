@@ -34,6 +34,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from heparchy_spark.operators.sweep import range_bucket
+
 
 def skyline_2d(
     df: DataFrame,
@@ -53,25 +55,9 @@ def skyline_2d(
     per_x = df.groupBy(x_col).agg(F.max(y).alias("__y"))
 
     # 2a. bucket x by rank-preserving coarse key: percent_rank needs a
-    # global sort, so instead bucket on the x VALUE range, computed from
-    # a broadcast single-row (min, max) aggregate — combinable, exact.
-    bounds = per_x.agg(
-        F.min(x).alias("__lo"), F.max(x).alias("__hi")
-    )
-    bucketed = per_x.crossJoin(F.broadcast(bounds)).withColumn(
-        "__b",
-        F.when(
-            F.col("__hi") == F.col("__lo"), F.lit(0)
-        ).otherwise(
-            F.least(
-                F.lit(n_buckets - 1),
-                F.floor(
-                    (x - F.col("__lo"))
-                    / ((F.col("__hi") - F.col("__lo")) / F.lit(n_buckets))
-                ).cast("int"),
-            )
-        ),
-    )
+    # global sort, so instead bucket on the x VALUE range (broadcast
+    # single-row (min, max) aggregate — combinable, exact).
+    bucketed = range_bucket(per_x, x_col, n_buckets, "__b")
 
     # 2b. running max within each bucket (parallel across buckets),
     # EXCLUDING the current row (strict prefix).

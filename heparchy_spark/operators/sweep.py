@@ -26,12 +26,59 @@ statistic, and any "running state over time at corpus scale" question.
 
 The same decomposition drives ``operators/skyline.py`` (prefix MAX);
 this module is the SUM/amount form with multi-column support.
+
+Step 1's equi-width bucket is the one place the corpus bins a value by
+its range: ``bin_of`` is the expression, ``range_bucket`` adds the
+broadcast (min, max) bounds it reads.  The drift histograms, the
+calibration and PR curves and the skyline all bucket through them.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
+
+
+def bin_of(v: Column, lo: Column, hi: Column, n: int) -> Column:
+    """Equi-width bucket id ``0..n-1`` of ``v`` over ``[lo, hi]``:
+    ``floor((v - lo) / ((hi - lo) / n))``, with ``v = hi`` clamped into
+    the last bucket and every value in bucket 0 when ``hi = lo``.
+    Monotone in ``v``, so bucket-major order is value order and equal
+    values share a bucket.  A null ``v`` gives null (``least`` alone
+    would skip the null and answer ``n - 1``)."""
+    bucket = F.least(
+        F.lit(n - 1),
+        F.floor((v - lo) / ((hi - lo) / F.lit(n))).cast("int"),
+    )
+    return F.when(
+        v.isNotNull(), F.when(hi == lo, F.lit(0)).otherwise(bucket)
+    )
+
+
+def range_bucket(
+    df: DataFrame,
+    col: str,
+    n: int,
+    out: str,
+    partition_cols: list[str] | None = None,
+) -> DataFrame:
+    """``df`` plus an ``out`` column, the ``bin_of`` bucket of ``col``
+    over its observed range: global (min, max), or per group with
+    ``partition_cols``.  The bounds are one combinable aggregate,
+    broadcast back (bounded: one row per group) and dropped again."""
+    v = F.col(col)
+    parts = list(partition_cols or [])
+    bounds = df.groupBy(*parts).agg(
+        F.min(v).alias("__lo"), F.max(v).alias("__hi")
+    )
+    pre = (
+        df.join(F.broadcast(bounds), parts)
+        if parts
+        else df.crossJoin(F.broadcast(bounds))
+    )
+    return pre.withColumn(
+        out, bin_of(v, F.col("__lo"), F.col("__hi"), n)
+    ).drop("__lo", "__hi")
 
 
 def prefix_sum(
@@ -58,27 +105,7 @@ def prefix_sum(
     """
     o = F.col(order_col)
     parts = list(partition_cols or [])
-
-    if parts:
-        bounds = df.groupBy(*parts).agg(
-            F.min(o).alias("__lo"), F.max(o).alias("__hi")
-        )
-        pre = df.join(F.broadcast(bounds), parts)
-    else:
-        bounds = df.agg(F.min(o).alias("__lo"), F.max(o).alias("__hi"))
-        pre = df.crossJoin(F.broadcast(bounds))
-    bucketed = pre.withColumn(
-        "__b",
-        F.when(F.col("__hi") == F.col("__lo"), F.lit(0)).otherwise(
-            F.least(
-                F.lit(n_buckets - 1),
-                F.floor(
-                    (o - F.col("__lo"))
-                    / ((F.col("__hi") - F.col("__lo")) / F.lit(n_buckets))
-                ).cast("int"),
-            )
-        ),
-    )
+    bucketed = range_bucket(df, order_col, n_buckets, "__b", parts)
 
     w_in = (
         Window.partitionBy(*parts, "__b")
@@ -112,8 +139,6 @@ def prefix_sum(
         )
     return out.drop(
         "__b",
-        "__lo",
-        "__hi",
         *[f"__in_{v}" for v in val_cols],
         *[f"__t_{v}" for v in val_cols],
         *[f"__off_{v}" for v in val_cols],

@@ -10,6 +10,7 @@ from heparchy_spark.operators.dataset import (
     split_assign,
     stratified_sample,
 )
+from heparchy_spark.operators.sweep import prefix_sum, range_bucket
 from heparchy_spark.operators.text import token_count
 from heparchy_spark.queries import register
 from heparchy_spark.queries.numeric import davg, sql_davg
@@ -761,28 +762,13 @@ def quality_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     weights = logreg_train(feats, labels, n_buckets=64, iters=4, lr_pct=50)
     scored = logreg_score(feats, weights).join(labels, "doc_id")
-    # bins are RELATIVE to the observed score range (broadcast min/max,
-    # the psi_fixed_bins pattern): a lightly-trained sigmoid occupies a
-    # narrow band, so absolute deciles would collapse to one bin
-    bounds = scored.agg(
-        F.min("quality_score").alias("__lo"),
-        F.max("quality_score").alias("__hi"),
-    )
+    # bins are RELATIVE to the observed score range (operators/sweep.py
+    # range_bucket, broadcast min/max): a lightly-trained sigmoid
+    # occupies a narrow band, so absolute deciles would collapse to one
+    # bin
     return (
-        scored.crossJoin(F.broadcast(bounds))
-        .groupBy(
-            F.when(F.col("__hi") == F.col("__lo"), F.lit(0))
-            .otherwise(
-                F.least(
-                    F.lit(9),
-                    F.floor(
-                        (F.col("quality_score") - F.col("__lo"))
-                        / ((F.col("__hi") - F.col("__lo")) / F.lit(10))
-                    ).cast("int"),
-                )
-            )
-            .alias("bin")
-        )
+        range_bucket(scored, "quality_score", 10, "bin")
+        .groupBy("bin")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.round(
@@ -988,7 +974,6 @@ def _curriculum_sql() -> str:
 def dataset_curriculum_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from heparchy_spark.operators.sweep import prefix_sum
     from heparchy_spark.operators.text import quality_score
 
     docs = load(spark, sf_dir, "documents")
@@ -1105,22 +1090,9 @@ def quality_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(quality_score("text"), 6).alias("s"),
         (F.col("lang") == "en").cast("int").alias("y"),
     )
-    bounds = scored.agg(F.min("s").alias("lo"), F.max("s").alias("hi"))
     binned = (
-        scored.join(F.broadcast(bounds))
-        .groupBy(
-            F.when(F.col("hi") == F.col("lo"), F.lit(0))
-            .otherwise(
-                F.least(
-                    F.lit(9),
-                    F.floor(
-                        (F.col("s") - F.col("lo"))
-                        / ((F.col("hi") - F.col("lo")) / F.lit(10))
-                    ).cast("int"),
-                )
-            )
-            .alias("bin")
-        )
+        range_bucket(scored, "s", 10, "bin")
+        .groupBy("bin")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("y").cast("long").alias("npos"),

@@ -21,6 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from heparchy_spark.functions.literals import array_lit
+from heparchy_spark.operators.sweep import bin_of
 from heparchy_spark.queries import register
 from heparchy_spark.queries.numeric import (
     davg,
@@ -962,7 +963,13 @@ def window_ntile_rank_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row_number + bucket offsets (<=64-row bounded collect)
     nb = 64
     base = spend.withColumn(
-        "__b", _range_bucket("total_spend", float(srow["lo"]), float(srow["hi"]), nb)
+        "__b",
+        bin_of(
+            F.col("total_spend").cast("double"),
+            F.lit(float(srow["lo"])),
+            F.lit(float(srow["hi"])),
+            nb,
+        ),
     )
     w_in = Window.partitionBy("__b").orderBy(
         F.asc("total_spend"), F.desc("o_custkey")
@@ -2049,19 +2056,6 @@ def agg_moments_skew_kurtosis(
     ).orderBy("l_returnflag")
 
 
-def _range_bucket(metric: str, lo: float, hi: float, n_buckets: int):
-    """Bucket id (0..n_buckets-1) of ``metric`` from LITERAL bounds —
-    monotone in the metric, so bucket-major order == total order and
-    equal values always share a bucket."""
-    if hi <= lo:
-        return F.lit(0)
-    m = F.col(metric).cast("double")
-    step = (hi - lo) / n_buckets
-    return F.least(
-        F.lit(n_buckets - 1), F.floor((m - F.lit(lo)) / F.lit(step))
-    ).cast("int")
-
-
 def _ntile_from_rank(rank_col: str, n: int, k: int):
     """Closed-form ``NTILE(k)`` from an exact 1-based global rank —
     same first-buckets-get-the-extra split as the SQL window."""
@@ -2154,7 +2148,10 @@ def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # range-bucket each metric from the literal bounds, then exact
     # in-bucket row_number — PARTITIONED windows, never a global one
     for t, (col, lo, hi) in metrics.items():
-        base = base.withColumn(f"__b{t}", _range_bucket(col, lo, hi, nb))
+        base = base.withColumn(
+            f"__b{t}",
+            bin_of(F.col(col).cast("double"), F.lit(lo), F.lit(hi), nb),
+        )
         w = Window.partitionBy(f"__b{t}").orderBy(col, "c_custkey")
         base = base.withColumn(f"__rn{t}", F.row_number().over(w))
     # one bounded counts pass (<= 3*nb rows) -> per-bucket rank

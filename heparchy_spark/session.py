@@ -20,9 +20,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "DEFAULT_SHUFFLE_PARTITIONS"]
+from heparchy_spark.errors import EnvOverrideError
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+__all__ = ["get_spark"]
 
 
 def get_spark(
@@ -31,10 +31,22 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's standard config."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build (or fetch) a SparkSession with the engine's standard config.
+
+    ``SPARK_GRAFT_CPUS`` (default 32) sizes ``local[N]`` and the shuffle
+    partitions when they are not given; a value that is not a positive
+    integer raises ``EnvOverrideError`` before any session is built."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = 0  # reported below, with zero and negative counts
+    if cpus < 1:
+        raise EnvOverrideError(
+            f"SPARK_GRAFT_CPUS={raw!r} is not a positive integer core count"
+        )
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    shuffle_partitions = shuffle_partitions or cpus
 
     builder = (
         SparkSession.builder.appName(app_name)

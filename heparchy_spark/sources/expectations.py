@@ -28,7 +28,6 @@ __all__ = [
     "in_range",
     "accepted_values",
     "unique_key",
-    "matches_regex",
     "check_expectations",
     "ExpectationFailed",
 ]
@@ -78,13 +77,6 @@ def accepted_values(col: str, values: ty.Sequence) -> Rule:
     return Rule(
         name=f"accepted_values({col})",
         violation=~F.col(col).isin(*list(values)) & F.col(col).isNotNull(),
-    )
-
-
-def matches_regex(col: str, pattern: str) -> Rule:
-    return Rule(
-        name=f"matches_regex({col})",
-        violation=~F.col(col).rlike(pattern) & F.col(col).isNotNull(),
     )
 
 

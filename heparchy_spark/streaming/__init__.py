@@ -18,7 +18,6 @@ from heparchy_spark.streaming.analytics import (
     purchase_view_join,
     running_user_totals,
     sessionize,
-    sliding_user_counts,
     streaming_count_min,
     streaming_frequent_items,
     rate_limit_batch,
@@ -62,7 +61,6 @@ __all__ = [
     "read_event_stream",
     "stream_to_store",
     "tumbling_counts",
-    "sliding_user_counts",
     "sessionize",
     "dedup_within_watermark",
     "running_user_totals",

@@ -17,13 +17,13 @@ import typing as ty
 import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 
 from heparchy_spark.functions.worker import worker_fn
+from heparchy_spark.operators.drift import jsd_term, psi_term
 
 __all__ = [
     "tumbling_counts",
-    "sliding_user_counts",
     "sessionize",
     "dedup_within_watermark",
     "running_user_totals",
@@ -59,32 +59,6 @@ def tumbling_counts(
             "event_type",
             "n_events",
             "total_value",
-        )
-    )
-
-
-def sliding_user_counts(
-    events: DataFrame,
-    window: str = "6 hours",
-    slide: str = "1 hour",
-    watermark: str | None = None,
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Sliding window distinct-ish user activity. Exact distinct is
-    unsupported in streaming aggregation, so this uses
-    ``approx_count_distinct`` (HLL) — the scale answer in batch too."""
-    return (
-        _maybe_watermark(events, ts_col, watermark)
-        .groupBy(F.window(ts_col, window, slide).alias("win"))
-        .agg(
-            F.approx_count_distinct("user_id").alias("n_users_approx"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "n_users_approx",
-            "n_events",
         )
     )
 
@@ -568,24 +542,17 @@ def windowed_value_histogram(
     )
 
 
-def psi_from_histogram(
-    hist: DataFrame,
-    reference: DataFrame,
-    n_bins: int,
-) -> DataFrame:
-    """(window_start, psi): Population Stability Index of each window's
-    histogram against a broadcast ``reference`` (bin, ref_share) table,
-    Laplace-smoothed.  Pure per-window algebra over the bounded
-    histogram frame — run it on the streaming sink's output or on the
-    batch twin identically.
+def _window_spine(hist: DataFrame, reference: DataFrame) -> DataFrame:
+    """(window_start, bin, n, __t, ref_share): every window seen in
+    ``hist`` cross-joined with the broadcast ``reference`` (bin,
+    ref_share) table, the window's count in each bin left-joined onto
+    it (0 where the bin is empty) and the window total ``__t``.
 
-    Every (window, bin) pair contributes a term, including bins with
-    ZERO rows in that window: the per-window spine is the windows seen
-    in ``hist`` cross-joined with the broadcast reference, and counts
-    left-join onto it.  A bin whose population collapsed to zero is the
+    Every (window, bin) pair is a row, including bins with ZERO rows in
+    that window: a bin whose population collapsed to zero is the
     strongest drift signal — joining only on bins present in ``hist``
-    would silently drop exactly those terms (and the smoothed per-window
-    p would no longer sum to 1 under the t+n_bins denominator)."""
+    would silently drop exactly those terms (and a smoothed per-window
+    share would no longer sum to 1 under the t+n_bins denominator)."""
     # fresh attribute ids on the rollup side: a sink-view self-join with
     # identical exprIds is otherwise ambiguous
     tot = (
@@ -599,30 +566,47 @@ def psi_from_histogram(
         F.col("bin").alias("__cb"),
         "n",
     )
-    p = spine.join(
+    return spine.join(
         counts,
         (spine["__ws"] == counts["__cw"]) & (spine["bin"] == counts["__cb"]),
         "left",
     ).select(
         F.col("__ws").alias("window_start"),
         "bin",
-        (
-            (F.coalesce(F.col("n"), F.lit(0)).cast("double") + 1.0)
-            / (F.col("__t") + F.lit(float(n_bins)))
-        ).alias("__p"),
-        # PSI is +inf at ref_share = 0 (only the window side is
-        # Laplace-smoothed); clamp the reference to the standard 1e-6
-        # epsilon so a vanished reference bin reports a large FINITE
-        # term instead of a null that sum() would silently skip.
-        # Strictly-positive references are unaffected.
-        F.greatest(F.col("ref_share"), F.lit(1e-6)).alias("__q"),
+        F.coalesce(F.col("n"), F.lit(0)).alias("n"),
+        "__t",
+        "ref_share",
     )
-    term = (F.col("__p") - F.col("__q")) * (
-        F.round(F.log("__p"), 8) - F.round(F.log("__q"), 8)
+
+
+def _smoothed_window_share(n_bins: int) -> Column:
+    """The window side's Laplace (+1) smoothed share of a bin."""
+    return (F.col("n").cast("double") + 1.0) / (
+        F.col("__t") + F.lit(float(n_bins))
     )
+
+
+def psi_from_histogram(
+    hist: DataFrame,
+    reference: DataFrame,
+    n_bins: int,
+) -> DataFrame:
+    """(window_start, psi): Population Stability Index of each window's
+    histogram against a broadcast ``reference`` (bin, ref_share) table,
+    over the full window x bin spine (``_window_spine``).  Pure
+    per-window algebra over the bounded histogram frame — run it on the
+    streaming sink's output or on the batch twin identically."""
+    # PSI is +inf at ref_share = 0 (only the window side is
+    # Laplace-smoothed); clamp the reference to the standard 1e-6
+    # epsilon so a vanished reference bin reports a large FINITE
+    # term instead of a null that sum() would silently skip.
+    # Strictly-positive references are unaffected.
+    q = F.greatest(F.col("ref_share"), F.lit(1e-6))
+    term = psi_term(_smoothed_window_share(n_bins), q)
     return (
-        p.groupBy("window_start")
-        .agg(F.round(F.sum(F.round(term, 8)), 6).alias("psi"))
+        _window_spine(hist, reference)
+        .groupBy("window_start")
+        .agg(F.round(F.sum(term), 6).alias("psi"))
         .orderBy("window_start")
     )
 
@@ -633,57 +617,19 @@ def jsd_from_histogram(
     n_bins: int,
 ) -> DataFrame:
     """(window_start, jsd): Jensen-Shannon divergence of each window's
-    histogram against a broadcast ``reference`` (bin, ref_share) table,
-    Laplace-smoothed — the bounded (<= ln 2), symmetric companion to
+    histogram against a broadcast ``reference`` (bin, ref_share) table
+    — the bounded (<= ln 2), symmetric companion to
     :func:`psi_from_histogram`, preferable when near-empty bins make
-    PSI spike.  Same full-spine discipline (zero-count bins still
-    contribute) and the batch twin ``operators/drift.py
-    jsd_fixed_bins``'s expression conventions: single-division
-    probabilities, every LN rounded to 8 before combining.  Stateless
-    per-window algebra — run it on the streaming sink's output or on
-    the batch twin identically."""
-    tot = (
-        hist.select(F.col("window_start").alias("__ws"), "n")
-        .groupBy("__ws")
-        .agg(F.sum("n").alias("__t"))
-    )
-    spine = tot.crossJoin(F.broadcast(reference))
-    counts = hist.select(
-        F.col("window_start").alias("__cw"),
-        F.col("bin").alias("__cb"),
-        "n",
-    )
-    p = spine.join(
-        counts,
-        (spine["__ws"] == counts["__cw"]) & (spine["bin"] == counts["__cb"]),
-        "left",
-    ).select(
-        F.col("__ws").alias("window_start"),
-        "bin",
-        (
-            (F.coalesce(F.col("n"), F.lit(0)).cast("double") + 1.0)
-            / (F.col("__t") + F.lit(float(n_bins)))
-        ).alias("__p"),
-        F.col("ref_share").alias("__q"),
-    )
-    m = (F.col("__p") + F.col("__q")) / F.lit(2.0)
-    rln = lambda x: F.round(F.log(x), 8)  # noqa: E731
-    # Only the WINDOW side is Laplace-smoothed; a reference bin with
-    # ref_share = 0 is legal and takes the exact x·ln(x) → 0 limit (the
-    # standard JSD convention) instead of a null log that sum() would
-    # silently skip — m = (p+q)/2 stays > 0 because p is smoothed.
-    q_term = F.when(
-        F.col("__q") > 0.0,
-        F.lit(0.5) * F.col("__q") * (rln(F.col("__q")) - rln(m)),
-    ).otherwise(F.lit(0.0))
-    term = (
-        F.lit(0.5) * F.col("__p") * (rln(F.col("__p")) - rln(m)) + q_term
-    )
+    PSI spike.  Same full spine and the batch twin ``operators/drift.py
+    jsd_fixed_bins``'s term.  Only the WINDOW side is Laplace-smoothed;
+    a reference bin with ref_share = 0 is legal and takes the term's
+    0·ln 0 limit.  Stateless per-window algebra — run it on the
+    streaming sink's output or on the batch twin identically."""
+    term = jsd_term(_smoothed_window_share(n_bins), F.col("ref_share"))
     return (
-        p.groupBy("window_start")
-        .agg(
-            (F.round(F.sum(F.round(term, 8)), 6) + F.lit(0.0)).alias("jsd")
-        )
+        _window_spine(hist, reference)
+        .groupBy("window_start")
+        .agg((F.round(F.sum(term), 6) + F.lit(0.0)).alias("jsd"))
         .orderBy("window_start")
     )
 
@@ -699,45 +645,22 @@ def wasserstein_from_histogram(
     ref_share) table — for histograms the ECDF integral collapses to
     ``bin_width * sum over bins of |cum_share - cum_ref|``, so the
     monitor reports drift MAGNITUDE in value units beside the PSI/JSD
-    scores over the same sink.  Same full-spine discipline (zero-count
-    bins still contribute through the cumulative); shares are single
+    scores over the same sink.  Same full spine (zero-count bins still
+    contribute through the cumulative); shares are unsmoothed single
     divisions of exact ints, the per-bin cumulative runs over the
     bounded ``n_bins`` rows per window, terms round to 8 before the
     final round-6 sum.  Stateless per-window algebra — run it on the
     streaming sink's output or the batch twin identically."""
-    tot = (
-        hist.select(F.col("window_start").alias("__ws"), "n")
-        .groupBy("__ws")
-        .agg(F.sum("n").alias("__t"))
-    )
-    spine = tot.crossJoin(F.broadcast(reference))
-    counts = hist.select(
-        F.col("window_start").alias("__cw"),
-        F.col("bin").alias("__cb"),
-        "n",
-    )
-    p = spine.join(
-        counts,
-        (spine["__ws"] == counts["__cw"]) & (spine["bin"] == counts["__cb"]),
-        "left",
-    ).select(
-        F.col("__ws").alias("window_start"),
-        "bin",
-        (
-            F.coalesce(F.col("n"), F.lit(0)).cast("double") / F.col("__t")
-        ).alias("__p"),
-        F.col("ref_share").alias("__q"),
-    )
     w = (
         Window.partitionBy("window_start")
         .orderBy("bin")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    cum = p.select(
+    cum = _window_spine(hist, reference).select(
         "window_start",
         "bin",
-        F.sum("__p").over(w).alias("__cp"),
-        F.sum("__q").over(w).alias("__cq"),
+        F.sum(F.col("n").cast("double") / F.col("__t")).over(w).alias("__cp"),
+        F.sum("ref_share").over(w).alias("__cq"),
     )
     term = F.round(F.abs(F.col("__cp") - F.col("__cq")), 8)
     return (

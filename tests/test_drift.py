@@ -1,15 +1,34 @@
 """Drift operators: KS vs brute-force ECDF, PSI identity/shift
-behavior, log-odds direction."""
+behavior, PSI/JSD bin terms vs plain-Python mirrors, log-odds
+direction."""
 
 from __future__ import annotations
+
+import math
 
 import pyspark.sql.functions as F
 
 from heparchy_spark.operators.drift import (
+    jsd_fixed_bins,
     ks_two_sample,
     log_odds_terms,
     psi_fixed_bins,
 )
+
+
+def _rln(x):
+    return round(math.log(x), 8)
+
+
+def _psi_term(p, q):
+    return round((p - q) * (_rln(p) - _rln(q)), 8)
+
+
+def _jsd_term(p, q):
+    m = (p + q) / 2.0
+    return round(
+        0.5 * p * (_rln(p) - _rln(m)) + 0.5 * q * (_rln(q) - _rln(m)), 8
+    )
 
 
 def _brute_ks(a, b):
@@ -76,9 +95,8 @@ def test_log_odds_direction(spark):
 def test_psi_emits_all_bins_including_empty(spark):
     """Every fixed-width bin emits a row — a bin empty in BOTH halves
     still carries the nonzero smoothed term whenever the halves' totals
-    differ (dropping it biases PSI low).  Mirrored in plain Python."""
-    import math
-
+    differ (dropping it biases PSI low).  PSI and JSD share the binned
+    shares; each term is mirrored in plain Python."""
     rows = (
         [(0.0, True)] * 30
         + [(10.0, True)] * 5
@@ -86,20 +104,36 @@ def test_psi_emits_all_bins_including_empty(spark):
         + [(10.0, False)] * 5
     )
     df = spark.createDataFrame(rows, "value double, f boolean")
-    out = psi_fixed_bins(df, "value", "f").collect()
-    assert [r.bin for r in out] == list(range(10))
-    empty = [r for r in out if r.n_first == 0 and r.n_second == 0]
-    assert len(empty) == 8 and all(r.psi_term != 0.0 for r in empty)
     counts = {0: (30, 10), 9: (5, 5)}
-    for r in out:
-        na, nb = counts.get(r.bin, (0, 0))
-        p = (na + 1.0) / (35 + 10.0)
-        q = (nb + 1.0) / (15 + 10.0)
-        want = round(
-            (p - q) * (round(math.log(p), 8) - round(math.log(q), 8)), 8
-        )
-        assert (r.n_first, r.n_second) == (na, nb)
-        assert abs(r.psi_term - want) < 1e-12
+    for op, col, mirror in (
+        (psi_fixed_bins, "psi_term", _psi_term),
+        (jsd_fixed_bins, "jsd_term", _jsd_term),
+    ):
+        out = op(df, "value", "f").collect()
+        assert [r.bin for r in out] == list(range(10))
+        empty = [r for r in out if r.n_first == 0 and r.n_second == 0]
+        assert len(empty) == 8 and all(r[col] != 0.0 for r in empty)
+        for r in out:
+            na, nb = counts.get(r.bin, (0, 0))
+            p = (na + 1.0) / (35 + 10.0)
+            q = (nb + 1.0) / (15 + 10.0)
+            assert (r.n_first, r.n_second) == (na, nb)
+            assert abs(r[col] - mirror(p, q)) < 1e-12
+
+
+def test_fixed_bins_constant_column(spark):
+    """hi = lo: every row lands in bin 0, and all ``n_bins`` rows are
+    still emitted."""
+    rows = [(5.0, True)] * 3 + [(5.0, False)] * 7
+    df = spark.createDataFrame(rows, "value double, f boolean")
+    for op in (psi_fixed_bins, jsd_fixed_bins):
+        out = op(df, "value", "f", n_bins=4).collect()
+        assert [(r.bin, r.n_first, r.n_second) for r in out] == [
+            (0, 3, 7),
+            (1, 0, 0),
+            (2, 0, 0),
+            (3, 0, 0),
+        ]
 
 
 def test_wasserstein_1d_shift_and_mirror(spark):

@@ -306,6 +306,30 @@ def test_no_private_jvm_handles_outside_plans():
     assert hits == []
 
 
+def test_equi_width_buckets_only_in_sweep():
+    """The equi-width bucket is written once, as ``bin_of`` in
+    ``operators/sweep.py``; every other module buckets through it (or
+    ``range_bucket``).  A hand-copied range-width division over Column
+    bounds, ``(F.col("__hi") - F.col("__lo")) / ...``, fails here."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "heparchy_spark"
+    width = re.compile(
+        r"""\(\s*F\.col\(\s*["']\w*(?:hi|max)["']\s*\)\s*-\s*"""
+        r"""F\.col\(\s*["']\w*(?:lo|min)["']\s*\)\s*\)\s*/""",
+        re.IGNORECASE,
+    )
+    hits = [
+        f"{path.relative_to(pkg)}:{text.count(chr(10), 0, m.start()) + 1}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.relative_to(pkg).as_posix() != "operators/sweep.py"
+        for text in [path.read_text()]
+        for m in width.finditer(text)
+    ]
+    assert hits == []
+
+
 def test_degree_assortativity_signs(spark):
     """A star graph is maximally disassortative (r = -1); a clean
     two-clique graph is assortative-degenerate (all degrees equal ->

@@ -1,5 +1,6 @@
 """Distributed prefix sum: exactness vs serial scan, bucket seams,
-degenerate ranges, interval concurrency semantics."""
+degenerate ranges, interval concurrency semantics; the equi-width
+bucket at its boundaries."""
 
 from __future__ import annotations
 
@@ -7,7 +8,12 @@ import datetime as dt
 
 import pyspark.sql.functions as F
 
-from heparchy_spark.operators.sweep import interval_concurrency, prefix_sum
+from heparchy_spark.operators.sweep import (
+    bin_of,
+    interval_concurrency,
+    prefix_sum,
+    range_bucket,
+)
 from heparchy_spark.plans import executed_plan
 
 
@@ -40,6 +46,31 @@ def test_prefix_sum_all_equal_order_range(spark):
     # lo == hi (single distinct key) must not divide by zero
     df = spark.createDataFrame([(7, 3)], "o long, v long")
     assert prefix_sum(df, "o", ["v"]).collect()[0].v_cum == 3
+
+
+def test_bin_of_boundaries(spark):
+    """v = lo -> 0, v = hi -> n-1 (clamped), hi = lo -> 0, null v ->
+    null; range_bucket reads the bounds off the column and drops
+    them."""
+    rows = [
+        (0.0, 0.0, 10.0),
+        (4.99, 0.0, 10.0),
+        (10.0, 0.0, 10.0),
+        (3.0, 3.0, 3.0),
+        (None, 0.0, 10.0),
+        (None, 3.0, 3.0),
+    ]
+    df = spark.createDataFrame(rows, "v double, lo double, hi double")
+    b = bin_of(F.col("v"), F.col("lo"), F.col("hi"), 4)
+    assert [r.b for r in df.select(b.alias("b")).collect()] == [
+        0, 1, 3, 0, None, None,
+    ]
+    vals = spark.createDataFrame([(0.0,), (4.99,), (10.0,)], "v double")
+    out = range_bucket(vals, "v", 4, "b")
+    assert out.columns == ["v", "b"]
+    assert sorted((r.v, r.b) for r in out.collect()) == [
+        (0.0, 0), (4.99, 1), (10.0, 3),
+    ]
 
 
 def test_interval_concurrency_half_open(spark):
