@@ -29,6 +29,9 @@ a worker that cannot import ``heparchy_spark``.
 runs: one column-pruned ``mapInArrow`` that calls a plain Python function
 once per row and types its output batches from the declared schema, so an
 operator keeps only its per-row function and its output schema.
+``map_columns`` is its column-at-a-time twin for vectorized kernels: the
+function gets a batch's input columns as Arrow arrays and returns whole
+output columns.
 """
 
 from __future__ import annotations
@@ -36,7 +39,7 @@ from __future__ import annotations
 import functools
 import inspect
 
-__all__ = ["map_rows", "worker_fn"]
+__all__ = ["map_columns", "map_rows", "worker_fn"]
 
 
 def worker_fn(fn):
@@ -128,3 +131,50 @@ def map_rows(df, fn, schema, keys, inputs):
             yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
     return df.select(*keys, *inputs).mapInArrow(worker_fn(run), schema)
+
+
+def map_columns(df, fn, schema, keys, inputs):
+    """``fn`` over every Arrow batch of ``df``, as one ``mapInArrow``.
+
+    The column-at-a-time twin of ``map_rows``, with the same pruning
+    (only ``keys + inputs`` cross the Python boundary) and the same
+    output typing from ``schema`` (``keys`` first).  ``fn`` is called
+    once per non-empty batch with the batch's ``inputs`` columns as Arrow
+    arrays (read offsets through ``functions.xxh64.spans``) and returns
+    either a list of the non-key output columns, one value per input
+    row, or a tuple ``(rows, columns)`` to fan out: output row ``i``
+    carries the keys of input row ``rows[i]``.  A column is anything
+    ``pyarrow.array`` takes (a NumPy array, a list).
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    n_keys = len(keys)
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            out = fn(*batch.columns[n_keys:])
+            key_cols = batch.columns[:n_keys]
+            if isinstance(out, tuple):
+                rows, out = out
+                take = pa.array(rows, type=pa.int64())
+                key_cols = [c.take(take) for c in key_cols]
+            arrays = [
+                c.cast(arrow_schema.field(k).type) for k, c in enumerate(key_cols)
+            ]
+            arrays += [
+                pa.array(c, type=arrow_schema.field(n_keys + j).type)
+                for j, c in enumerate(out)
+            ]
+            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+    # a frame that is already exactly ``keys + inputs`` (an operator's
+    # own staging projection) needs no second select: reading its
+    # columns reuses the schema the operator typed its keys from
+    cols = [*keys, *inputs]
+    pruned = df if df.columns == cols else df.select(*cols)
+    return pruned.mapInArrow(worker_fn(run), schema)

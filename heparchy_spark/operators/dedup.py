@@ -1,14 +1,15 @@
 """Deduplication operators — [ext] north-star pipeline ops (SURVEY.md §2.12).
 
-All hot paths are JVM-side column algebra (hash/array functions); no Python
-UDFs.  Scale notes:
+Hot paths are JVM-side column algebra (hash/array functions), except the
+MinHash signature pass, a vectorized Python map.  Scale notes:
 
 - exact: map-side partial dedup via groupBy on a 256-bit content hash; one
   shuffle on the hash (uniform by construction — no skew).
-- MinHash LSH: signatures are computed scan-side (num_perm array transforms),
-  band buckets are exploded (|docs| x bands rows) and candidate pairs come
-  from an equi self-join on (band, band_hash) — never an all-pairs product.
-  Verification (exact Jaccard) touches only candidates.
+- MinHash LSH: signatures and band buckets come from one vectorized NumPy
+  pass per Arrow batch (``_band_table`` on ``map_columns``), |docs| x bands
+  rows, and candidate pairs come from an equi self-join on (band,
+  band_hash) — never an all-pairs product.  Verification (exact Jaccard)
+  touches only candidates.
 - SimHash: 64-bit fingerprint folded from token hashes with bit-count
   aggregation; near-dups = pairs at Hamming distance <= t, found by the
   standard pigeonhole block trick (split 64 bits into t+1 blocks; equal pair
@@ -25,10 +26,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from heparchy_spark.functions.literals import array_lit, sql_ident
-from heparchy_spark.functions.worker import worker_fn
+from heparchy_spark.functions.worker import map_columns
 from heparchy_spark.operators.banding import hamming_pairs
 
 __all__ = [
+    "normalize_sql",
     "normalize_text",
     "exact_dedup",
     "shingle_hash_stream",
@@ -50,13 +52,19 @@ __all__ = [
 ]
 
 
-def normalize_text(col: str) -> Column:
+def normalize_sql(col: str) -> str:
     """Lowercase, strip non-alphanumerics, collapse whitespace, trim (dedup
-    canon) of the named column — one SQL expression, one py4j command."""
-    return F.expr(
+    canon) of the named column, as SQL text."""
+    return (
         f"trim(regexp_replace(regexp_replace(lower({sql_ident(col)}),"
         r" '[^a-z0-9\\s]', ' '), '\\s+', ' '))"
     )
+
+
+def normalize_text(col: str) -> Column:
+    """``normalize_sql`` as a Column — one SQL expression, one py4j
+    command."""
+    return F.expr(normalize_sql(col))
 
 
 def exact_dedup(
@@ -221,49 +229,6 @@ def duplicated_ngram_spans(
     )
 
 
-# xxHash-64 primes (public algorithm constants; same values as
-# tools/xxh64.py, restated here so executors need no tools/ import)
-_XXP1 = 0x9E3779B185EBCA87
-_XXP2 = 0xC2B2AE3D27D4EB4F
-_XXP3 = 0x165667B19E3779F9
-_XXP4 = 0x85EBCA77C2B2AE63
-_XXP5 = 0x27D4EB2F165667C5
-
-
-def _np_xxh64_long(value, seed):  # pragma: no cover - exercised via Spark
-    """Vectorized XXH64 of int64 words (Spark's ``XxHash64.hashLong``),
-    NumPy uint64 in/out, bit-identical to ``tools/xxh64.hash_long``."""
-    import numpy as np
-
-    u = np.uint64
-    h = seed + u((_XXP5 + 8) & ((1 << 64) - 1))
-    k1 = value * u(_XXP2)
-    k1 = ((k1 << u(31)) | (k1 >> u(33))) * u(_XXP1)
-    h = h ^ k1
-    h = ((h << u(27)) | (h >> u(37))) * u(_XXP1) + u(_XXP4)
-    h = h ^ (h >> u(33))
-    h = h * u(_XXP2)
-    h = h ^ (h >> u(29))
-    h = h * u(_XXP3)
-    return h ^ (h >> u(32))
-
-
-def _np_xxh64_int(value: int, seed):  # pragma: no cover - via Spark
-    """Vectorized XXH64 4-byte path (Spark hashes int literals this way):
-    scalar int ``value`` against a uint64 seed array."""
-    import numpy as np
-
-    u = np.uint64
-    h = seed + u((_XXP5 + 4) & ((1 << 64) - 1))
-    h = h ^ u(((value & 0xFFFFFFFF) * _XXP1) & ((1 << 64) - 1))
-    h = ((h << u(23)) | (h >> u(41))) * u(_XXP2) + u(_XXP3)
-    h = h ^ (h >> u(33))
-    h = h * u(_XXP2)
-    h = h ^ (h >> u(29))
-    h = h * u(_XXP3)
-    return h ^ (h >> u(32))
-
-
 def _band_table(sets: DataFrame, num_perm: int, bands: int) -> DataFrame:
     """(__id, band, bucket) LSH band table from a (__id, __shh) sets frame.
 
@@ -274,20 +239,23 @@ def _band_table(sets: DataFrame, num_perm: int, bands: int) -> DataFrame:
     ONLY query slower at 8 cores than 32 by >3x), and the JVM evaluates
     64 multiply-add-min expression trees per shingle occurrence where
     NumPy does 64 SIMD passes over the contiguous value buffer.  The
-    arithmetic is bit-identical by construction: ``t1 = h & 2^32-1``,
-    ``t2 = xxh64_int(1, xxh64_long(h, 42)) & 2^32-1`` (exactly Spark's
-    ``xxhash64(__e, lit(1))`` chain), ``sig_j = min(t1 + j*t2)`` (values
-    < 2^38, no wrap in either engine), band bucket = chained
-    ``xxh64_long`` over the band's row slice seeded 42 (Spark's
+    arithmetic is bit-identical by construction (``functions.xxh64``):
+    ``t1 = h & 2^32-1``, ``t2 = hash_int(1, hash_long(h, 42)) & 2^32-1``
+    (exactly Spark's ``xxhash64(__e, lit(1))`` chain), ``sig_j = min(t1 +
+    j*t2)`` (values < 2^38, no wrap in either engine), band bucket =
+    chained ``hash_long`` over the band's row slice seeded 42 (Spark's
     multi-arg ``xxhash64``) — pinned by tests/test_expected_fixtures.py
     and the _band_table equivalence test.  Only (__id, __shh) crosses
-    the Python boundary (column-pruned select before mapInArrow).
+    the Python boundary (one ``map_columns`` pass, fanned out to
+    ``bands`` rows per document).
 
     This is the persistable near-dup index sidecar shape: banding any
     two tables built with the same (num_perm, bands, shingle_n) is a
     plain (band, bucket) equi-join.
     """
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+    from heparchy_spark.functions import xxh64
 
     rows = num_perm // bands
     out_type = StructType(
@@ -298,51 +266,35 @@ def _band_table(sets: DataFrame, num_perm: int, bands: int) -> DataFrame:
         ]
     )
 
-    def gen(batches):  # pragma: no cover - runs on executors
+    def band(shh):  # pragma: no cover - runs on executors
         import numpy as np
-        import pyarrow as pa
 
         u = np.uint64
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0)
-            shh = batch.column(1)
-            off = shh.offsets.to_numpy().astype(np.int64)
-            vals = shh.values.to_numpy(zero_copy_only=False).astype(np.uint64)
-            # a sliced ListArray's offsets are absolute into the shared
-            # values buffer; rebase so reduceat's implicit final segment
-            # ends exactly at the last list's end
-            vals = vals[off[0] : off[-1]]
-            off = off - off[0]
-            # docs with no shingles have no row by construction
-            # (hashed_shingles_df groups an existing stream); an empty
-            # list would silently corrupt reduceat, so refuse loudly
-            if (off[1:] == off[:-1]).any():
-                raise ValueError("_band_table: empty shingle set")
-            starts = off[:-1]
-            t1 = vals & u(0xFFFFFFFF)
-            t2 = _np_xxh64_int(1, _np_xxh64_long(vals, u(42))) & u(0xFFFFFFFF)
-            sig = np.empty((n, num_perm), dtype=np.uint64)
-            for j in range(num_perm):
-                sig[:, j] = np.minimum.reduceat(t1 + u(j) * t2, starts)
-            buckets = np.empty((n, bands), dtype=np.uint64)
-            for b in range(bands):
-                h = np.full(n, 42, dtype=np.uint64)
-                for r in range(rows):
-                    h = _np_xxh64_long(sig[:, b * rows + r], h)
-                buckets[:, b] = h
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(pa.array(np.repeat(np.arange(n), bands))),
-                    pa.array(np.tile(np.arange(bands, dtype=np.int32), n)),
-                    pa.array(buckets.reshape(-1).view(np.int64)),
-                ],
-                names=["__id", "band", "bucket"],
-            )
+        vals, off = xxh64.spans(shh)
+        vals = vals.astype(np.uint64)
+        # docs with no shingles have no row by construction
+        # (hashed_shingles_df groups an existing stream); an empty
+        # list would silently corrupt reduceat, so refuse loudly
+        if (off[1:] == off[:-1]).any():
+            raise ValueError("_band_table: empty shingle set")
+        n, starts = len(shh), off[:-1]
+        t1 = vals & u(0xFFFFFFFF)
+        t2 = xxh64.hash_int(1, xxh64.hash_long(vals, xxh64.SEED)) & u(0xFFFFFFFF)
+        sig = np.empty((n, num_perm), dtype=np.uint64)
+        for j in range(num_perm):
+            sig[:, j] = np.minimum.reduceat(t1 + u(j) * t2, starts)
+        buckets = np.empty((n, bands), dtype=np.uint64)
+        for b in range(bands):
+            h = np.full(n, xxh64.SEED)
+            for r in range(rows):
+                h = xxh64.hash_long(sig[:, b * rows + r], h)
+            buckets[:, b] = h
+        return np.repeat(np.arange(n), bands), [
+            np.tile(np.arange(bands, dtype=np.int32), n),
+            buckets.reshape(-1).view(np.int64),
+        ]
 
-    return sets.select("__id", "__shh").mapInArrow(worker_fn(gen), out_type)
+    return map_columns(sets, band, out_type, ["__id"], ["__shh"])
 
 
 def minhash_near_dup_pairs(

@@ -43,6 +43,26 @@ from pyspark.sql import Column, DataFrame, Window
 from heparchy_spark.operators.sweep import prefix_sum, range_bucket
 
 
+def _ecdf_counts(
+    df: DataFrame, value_col: str, is_first_col: str, n_buckets: int
+) -> tuple[DataFrame, DataFrame]:
+    """The two ECDFs KS and W1 read, as integer counts: ``cum`` holds one
+    row per distinct value ``__v`` with the per-sample counts
+    ``__da``/``__db`` and their distributed prefix sums
+    ``__da_cum``/``__db_cum``; ``n`` is the 1-row sample sizes
+    ``(__na, __nb)``."""
+    ia = F.col(is_first_col).cast("long")
+    pv = df.groupBy(F.col(value_col).alias("__v")).agg(
+        F.sum(ia).alias("__da"),
+        F.sum(F.lit(1) - ia).alias("__db"),
+    )
+    cum = prefix_sum(pv, "__v", ["__da", "__db"], n_buckets=n_buckets)
+    n = cum.agg(
+        F.max("__da_cum").alias("__na"), F.max("__db_cum").alias("__nb")
+    )
+    return cum, n
+
+
 def ks_two_sample(
     df: DataFrame,
     value_col: str,
@@ -56,15 +76,7 @@ def ks_two_sample(
     ``min(n_a, n_b) * max(n_a, n_b) < 2^63`` (~3e9 rows per side) —
     beyond that, switch the final compare to decimal.
     """
-    ia = F.col(is_first_col).cast("long")
-    pv = df.groupBy(F.col(value_col).alias("__v")).agg(
-        F.sum(ia).alias("__da"),
-        F.sum(F.lit(1) - ia).alias("__db"),
-    )
-    cum = prefix_sum(pv, "__v", ["__da", "__db"], n_buckets=n_buckets)
-    n = cum.agg(
-        F.max("__da_cum").alias("__na"), F.max("__db_cum").alias("__nb")
-    )
+    cum, n = _ecdf_counts(df, value_col, is_first_col, n_buckets)
     return (
         cum.crossJoin(F.broadcast(n))
         .agg(
@@ -277,12 +289,7 @@ def wasserstein_1d(
     """
     from heparchy_spark.queries.numeric import dsum
 
-    ia = F.col(is_first_col).cast("long")
-    pv = df.groupBy(F.col(value_col).alias("__v")).agg(
-        F.sum(ia).alias("__da"),
-        F.sum(F.lit(1) - ia).alias("__db"),
-    )
-    cum = prefix_sum(pv, "__v", ["__da", "__db"], n_buckets=n_buckets)
+    cum, n = _ecdf_counts(df, value_col, is_first_col, n_buckets)
     # re-bucket with prefix_sum's own equi-width rule for the
     # distributed successor: in-bucket lead + next-bucket-min boundary
     bucketed = range_bucket(cum, "__v", n_buckets, "__b")
@@ -299,9 +306,6 @@ def wasserstein_1d(
             "__next_v",
             F.coalesce("__lead_v", "__nextb_v", F.col("__v")),
         )
-    )
-    n = cum.agg(
-        F.max("__da_cum").alias("__na"), F.max("__db_cum").alias("__nb")
     )
     term = F.round(
         (F.col("__next_v") - F.col("__v"))

@@ -529,7 +529,7 @@ def int8_quantize_stats(
     array and the min/max/scale scalars are materialized as columns BEFORE
     the per-element lambdas reference them, so interpreted HOF evaluation
     reads a column instead of recomputing an array aggregate per element
-    (same pitfall as ``text.fingerprint`` — see that docstring).
+    (a computed argument is inlined into every lambda call).
     Constant vectors (scale == 0) quantize to q = 0 with zero error.
     """
     staged = df.select(

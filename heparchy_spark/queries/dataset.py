@@ -13,7 +13,7 @@ from heparchy_spark.operators.dataset import (
 from heparchy_spark.operators.sweep import prefix_sum, range_bucket
 from heparchy_spark.operators.text import token_count
 from heparchy_spark.queries import register
-from heparchy_spark.queries.numeric import davg, sql_davg
+from heparchy_spark.queries.numeric import davg, sql_bin_of, sql_davg
 from heparchy_spark.queries.tables import load
 from heparchy_spark.queries.text import _TOKCOUNT_SQL
 from heparchy_spark.queries.dedup import _JACCARD_PAIRS_06_SQL
@@ -722,11 +722,8 @@ def _calibration_sql() -> str:
       FROM ({scored}) sc JOIN documents d ON sc.doc_id = d.doc_id
     )
     , r AS (SELECT MIN(score) AS lo, MAX(score) AS hi FROM s)
-    SELECT CASE WHEN (SELECT hi FROM r) = (SELECT lo FROM r) THEN 0
-                ELSE LEAST(9, CAST(FLOOR(
-                  (score - (SELECT lo FROM r))
-                  / (((SELECT hi FROM r) - (SELECT lo FROM r)) / 10)
-                ) AS INT)) END AS bin,
+    SELECT {sql_bin_of("score", "(SELECT lo FROM r)", "(SELECT hi FROM r)", 10)}
+             AS bin,
            COUNT(*) AS n_docs,
            ROUND({sql_dsum('score', 8)} / COUNT(*), 6) AS mean_score,
            ROUND(CAST(SUM(y) AS DOUBLE) / COUNT(*), 6) AS pos_rate
@@ -1043,9 +1040,7 @@ def _pr_curve_sql() -> str:
     ),
     bounds AS (SELECT MIN(s) AS lo, MAX(s) AS hi FROM scored),
     binned AS (
-      SELECT CASE WHEN hi = lo THEN 0
-             ELSE LEAST(9, CAST(FLOOR((s - lo) / ((hi - lo) / 10))
-                                AS INTEGER)) END AS bin,
+      SELECT {sql_bin_of("s", "lo", "hi", 10)} AS bin,
              COUNT(*) AS n,
              CAST(SUM(y) AS BIGINT) AS npos
       FROM scored CROSS JOIN bounds GROUP BY 1

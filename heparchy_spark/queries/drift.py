@@ -17,12 +17,15 @@ from heparchy_spark.operators.drift import (
     psi_fixed_bins,
 )
 from heparchy_spark.queries import register
+from heparchy_spark.queries.numeric import sql_bin_of
 from heparchy_spark.queries.tables import load
 
 # Shared split: events before/after the midpoint of the observed range.
 _MID_SQL = """
       SELECT (epoch_us(MIN(ts)) + epoch_us(MAX(ts))) // 2 AS mid FROM events
 """
+# The oracle's bin of ``value`` over the global range ``r``.
+_BIN_SQL = sql_bin_of("value", "(SELECT lo FROM r)", "(SELECT hi FROM r)", 10)
 
 
 def _halved_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -155,11 +158,7 @@ def drift_value_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events
     ),
     binned AS (
-      SELECT CASE WHEN (SELECT hi FROM r) = (SELECT lo FROM r) THEN 0
-                  ELSE LEAST(9, CAST(FLOOR(
-                    (value - (SELECT lo FROM r))
-                    / (((SELECT hi FROM r) - (SELECT lo FROM r)) / 10)
-                  ) AS INT)) END AS bin,
+      SELECT {_BIN_SQL} AS bin,
              SUM(ia) AS n_first,
              SUM(1 - ia) AS n_second
       FROM lab GROUP BY 1
@@ -214,11 +213,7 @@ def drift_value_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events
     ),
     binned AS (
-      SELECT CASE WHEN (SELECT hi FROM r) = (SELECT lo FROM r) THEN 0
-                  ELSE LEAST(9, CAST(FLOOR(
-                    (value - (SELECT lo FROM r))
-                    / (((SELECT hi FROM r) - (SELECT lo FROM r)) / 10)
-                  ) AS INT)) END AS bin,
+      SELECT {_BIN_SQL} AS bin,
              SUM(ia) AS n_first,
              SUM(1 - ia) AS n_second
       FROM lab GROUP BY 1

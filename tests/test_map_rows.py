@@ -1,6 +1,7 @@
 """``functions.worker.map_rows``: the per-row Python map behind the
 multimodal and text operators — 1:1 maps, filters and fan-outs through one
-column-pruned ``mapInArrow`` typed from the declared schema."""
+column-pruned ``mapInArrow`` typed from the declared schema — and its
+column-at-a-time twin ``map_columns``."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ import re
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
-from heparchy_spark.functions.worker import map_rows
+from heparchy_spark.functions.worker import map_columns, map_rows
 from heparchy_spark.plans.inspect import executed_plan
 
 
@@ -143,6 +144,48 @@ def test_only_keys_and_inputs_reach_the_python_map(spark, tmp_path):
     schema = _schema(("id", T.LongType(), False), ("t", T.StringType(), False))
     out = map_rows(df, row, schema, ["id"], ["s"])
     assert sorted(r.t for r in out.collect()) == ["0!", "1!", "2!", "3!"]
+    plan = executed_plan(out)
+    args = re.search(r"MapInArrow \w+\(([^)]*)\)", plan).group(1)
+    assert [re.sub(r"#\d+L?$", "", a.strip()) for a in args.split(",")] == ["id", "s"]
+    assert re.search(r"ReadSchema: struct<id:bigint,s:string>", plan)
+
+
+def test_map_columns_whole_columns_fan_out_and_pruning(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    spark.range(0, 9, numPartitions=2).select(
+        "id",
+        F.lit("junk").alias("junk"),
+        F.when(F.col("id") == 4, F.lit(None))
+        .otherwise(F.repeat(F.lit("ab"), F.col("id").cast("int")))
+        .alias("s"),
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+
+    def lengths(s):
+        import pyarrow.compute as pc
+
+        return [pc.utf8_length(s)]
+
+    def fan(s):
+        import numpy as np
+
+        n = len(s)
+        return np.repeat(np.arange(n), 2), [np.tile([0, 1], n).astype(np.int32)]
+
+    schema = _schema(("id", T.LongType(), False), ("n", T.IntegerType(), True))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        out = map_columns(df, lengths, schema, ["id"], ["s"])
+        got = {r.id: r.n for r in out.collect()}
+        fanned = map_columns(df, fan, schema, ["id"], ["s"]).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert out.schema == schema
+    assert got == {i: (None if i == 4 else 2 * i) for i in range(9)}
+    want = [(i, k) for i in range(9) for k in (0, 1)]
+    assert sorted(tuple(r) for r in fanned) == want
     plan = executed_plan(out)
     args = re.search(r"MapInArrow \w+\(([^)]*)\)", plan).group(1)
     assert [re.sub(r"#\d+L?$", "", a.strip()) for a in args.split(",")] == ["id", "s"]

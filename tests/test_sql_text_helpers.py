@@ -1,14 +1,17 @@
-"""The SQL-text vector and fingerprint helpers on edge inputs.
+"""The SQL-text vector helpers and the text fingerprints on edge inputs.
 
-``dot``, ``l2_norm``, ``cosine``, ``hyperplane_bucket``,
-``random_projection`` (operators/similarity.py) and ``fingerprint`` /
-``fingerprint_df`` (operators/text.py) were Column trees of Python lambdas
-before they became SQL text.  The expected values below were recorded
-from those lambda forms and must be matched bit for bit: NaN, signed
-zeros, infinities, a null vector, a null element, ragged lengths
+``dot``, ``l2_norm``, ``cosine``, ``hyperplane_bucket`` and
+``random_projection`` (operators/similarity.py) were Column trees of
+Python lambdas before they became SQL text, and so was the fingerprint
+fold that ``fingerprint_df`` (operators/text.py) now runs as the NumPy
+kernel ``functions.xxh64.fingerprints``.  The expected values below were
+recorded from those lambda forms and must be matched bit for bit: NaN,
+signed zeros, infinities, a null vector, a null element, ragged lengths
 (``zip_with`` pads the short side with null), empty arrays, the
 zero-norm cosine that ANSI division rejects, and text that is empty,
-shorter than the n-gram, non-ASCII or null.  Doubles are written as
+shorter than the n-gram, non-ASCII or null.  The raw-text fingerprints
+are checked on the kernel and on its plain-Python mirror
+(``tools/build_expected.fingerprint_raw``).  Doubles are written as
 ``float.hex`` so that -0.0 and +0.0 differ.
 """
 
@@ -16,9 +19,14 @@ from __future__ import annotations
 
 import math
 import struct
+import sys
+from pathlib import Path
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
+
+from heparchy_spark.functions.xxh64 import fingerprints
 
 from heparchy_spark.operators.similarity import (
     cosine,
@@ -27,7 +35,10 @@ from heparchy_spark.operators.similarity import (
     l2_norm,
     random_projection,
 )
-from heparchy_spark.operators.text import fingerprint, fingerprint_df
+from heparchy_spark.operators.text import fingerprint_df
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+from build_expected import fingerprint_raw  # noqa: E402
 
 INF, NAN = float("inf"), float("nan")
 VECTORS = [  # (id, a, b); 3-dim planes below
@@ -205,13 +216,12 @@ def test_fingerprint_matches_lambda_form(spark):
         short = df.where(F.col("id") <= 12)
         got = dict(fingerprint_df(short, "text", "id", ngram).collect())
         assert got == want, ngram
-    got = {
-        r[0]: (r[1], r[2])
-        for r in df.selectExpr(
-            "id", fingerprint("text"), fingerprint("text", 2)
-        ).collect()
-    }
-    assert got == FP_RAW
+    ids, texts = zip(*TEXTS)
+    mirror = {i: (fingerprint_raw(t), fingerprint_raw(t, 2)) for i, t in TEXTS}
+    assert mirror == FP_RAW
+    arr = pa.array(texts, pa.string())
+    kernel = zip(fingerprints(arr, 4).tolist(), fingerprints(arr, 2).tolist())
+    assert dict(zip(ids, kernel)) == FP_RAW
 
 
 def test_helpers_are_sql_text_quoting_argument_names(spark):

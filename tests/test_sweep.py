@@ -73,6 +73,37 @@ def test_bin_of_boundaries(spark):
     ]
 
 
+def test_oracle_bin_agrees_with_bin_of_on_nulls(spark):
+    """The oracles' bucket text (``queries.numeric.sql_bin_of``, on
+    DuckDB) gives what ``bin_of`` gives on Spark, a null value included:
+    DuckDB's ``LEAST`` skips a null, so an unguarded oracle put it in
+    the last bin."""
+    import duckdb
+
+    from heparchy_spark.queries.numeric import sql_bin_of
+
+    rows = [
+        (0.0, 0.0, 10.0),
+        (4.99, 0.0, 10.0),
+        (10.0, 0.0, 10.0),
+        (3.0, 3.0, 3.0),
+        (None, 0.0, 10.0),
+        (None, 3.0, 3.0),
+    ]
+    df = spark.createDataFrame(rows, "v double, lo double, hi double")
+    b = bin_of(F.col("v"), F.col("lo"), F.col("hi"), 10)
+    want = [r.b for r in df.select(b.alias("b")).collect()]
+    values = ", ".join(
+        f"({i}, {'NULL' if v is None else v}, {lo}, {hi})"
+        for i, (v, lo, hi) in enumerate(rows)
+    )
+    got = duckdb.sql(
+        f"SELECT {sql_bin_of('v', 'lo', 'hi', 10)} AS b"
+        f" FROM (VALUES {values}) t(i, v, lo, hi) ORDER BY i"
+    ).fetchall()
+    assert [r[0] for r in got] == want == [0, 4, 9, 0, None, None]
+
+
 def test_interval_concurrency_half_open(spark):
     t0 = dt.datetime(2024, 1, 1)
 

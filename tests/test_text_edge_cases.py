@@ -121,23 +121,18 @@ def test_fingerprints_deterministic(docs):
     assert a[0] == a[8] and a[0] != a[1]
 
 
-def test_fingerprint_df_matches_inline_expression(docs):
-    # fingerprint_df is the exploded-stream rewrite; the inline
-    # fingerprint() HOF expression is the reference — values must be
-    # bit-identical on every doc (incl. empty, short, unicode, null).
-    import pyspark.sql.functions as F
+def test_fingerprint_df_matches_mirror(docs):
+    # the plain-Python fold (tools/build_expected.fingerprint) is the
+    # reference — values must be bit-identical on every doc (incl. empty,
+    # short, unicode, null).
+    import sys
+    from pathlib import Path
 
-    from heparchy_spark.operators.dedup import normalize_text
-    from heparchy_spark.operators.text import fingerprint
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    from build_expected import fingerprint
 
     fast = {r["doc_id"]: r["fp64"] for r in fingerprint_df(docs, "text", "doc_id").collect()}
-    ref = {
-        r["doc_id"]: r["fp64"]
-        for r in docs.select("doc_id", normalize_text("text").alias("__norm"))
-        .select("doc_id", F.expr(fingerprint("__norm")).alias("fp64"))
-        .collect()
-    }
-    assert fast == ref
+    assert fast == {did: fingerprint(text) for did, text in ROWS}
 
 
 def test_text_profile_no_crash(docs):

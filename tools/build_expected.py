@@ -83,14 +83,21 @@ def spark_round(x: float, scale: int = 6) -> float:
 # text / dedup expected values
 # --------------------------------------------------------------------------
 def fingerprint(text: str | None, ngram: int = 4) -> int:
-    norm = normalize_text(text)
-    if norm is None:
+    """Mirror of operators/text.py ``fingerprint_df``: the n-gram fold
+    of the normalized text."""
+    return fingerprint_raw(normalize_text(text), ngram)
+
+
+def fingerprint_raw(s: str | None, ngram: int = 4) -> int:
+    """Mirror of ``functions.xxh64.fingerprints``: xxhash64 fold over
+    the character n-grams of ``s`` as given."""
+    if s is None:
         return 42  # Spark xxhash64 of an all-null input returns the seed
-    if len(norm) < ngram:
-        return xxhash64(norm)
+    if len(s) < ngram:
+        return xxhash64(s)
     acc = 0
-    for i in range(len(norm) - ngram + 1):
-        acc = xxhash64(acc, xxhash64(norm[i : i + ngram]))
+    for i in range(len(s) - ngram + 1):
+        acc = xxhash64(acc, xxhash64(s[i : i + ngram]))
     return acc
 
 
