@@ -121,10 +121,10 @@ def test_fingerprints_deterministic(docs):
     assert a[0] == a[8] and a[0] != a[1]
 
 
-def test_fingerprint_df_matches_mirror(docs):
+def test_fingerprint_df_matches_inline_expression(docs):
     # the plain-Python fold (tools/build_expected.fingerprint) is the
-    # reference — values must be bit-identical on every doc (incl. empty,
-    # short, unicode, null).
+    # reference expression — values must be bit-identical on every doc
+    # (incl. empty, short, unicode, null).
     import sys
     from pathlib import Path
 
