@@ -1,7 +1,7 @@
 """One wrapper for every Python function the package sends to Spark's
 Python workers (``mapInPandas``, ``mapInArrow``, ``applyInPandas``,
-``applyInPandasWithState``, ``pandas_udf``), and one per-row map over
-columns built on it (``map_rows``).
+``applyInPandasWithState``, ``pandas_udf``), and the columnar and
+per-row maps built on it (``map_columns``, ``map_rows``).
 
 A reused Python worker starts each task in
 ``pyspark.worker_util.setup_spark_files``, which calls
@@ -25,13 +25,12 @@ counts its parameters to decide whether to pass the grouping key), adds
 no plan node, and references nothing of this package, so it unpickles on
 a worker that cannot import ``heparchy_spark``.
 
-``map_rows`` is the per-row Python map every decode or byte-level operator
-runs: one column-pruned ``mapInArrow`` that calls a plain Python function
-once per row and types its output batches from the declared schema, so an
-operator keeps only its per-row function and its output schema.
-``map_columns`` is its column-at-a-time twin for vectorized kernels: the
-function gets a batch's input columns as Arrow arrays and returns whole
-output columns.
+``map_columns`` is the Python map every vectorized kernel runs: one
+column-pruned ``mapInArrow`` that hands a function a batch's input
+columns as Arrow arrays and types the whole output columns it returns
+from the declared schema.  ``map_rows`` is the same map for a plain
+per-row Python function (every decode or byte-level operator), so an
+operator keeps only its function and its output schema.
 """
 
 from __future__ import annotations
@@ -85,66 +84,24 @@ def worker_fn(fn):
     return run
 
 
-def map_rows(df, fn, schema, keys, inputs):
-    """``fn`` over every row of ``df``, as one ``mapInArrow``.
-
-    Only ``keys + inputs`` cross the Python boundary.  ``fn`` is called
-    once per row with the row's ``inputs`` values (one or more columns;
-    Python objects, ``None`` for null) and yields tuples of the non-key
-    fields of ``schema``, in order; each yielded tuple becomes one output
-    row: the row's ``keys`` values followed by the tuple.  Yielding
-    nothing drops the row and yielding several fans it out, so 1:1 maps,
-    filters and fan-outs share this one path.  ``schema`` is the whole output schema,
-    ``keys`` first (they take its names and types); the output batches
-    are typed from it with ``to_arrow_schema``, so a nullable column
-    holds ``None`` exactly, whatever the other rows of the batch hold.
-
-    Setup that ``fn`` needs once (a basis matrix, a lookup table) is
-    built before the call and captured by ``fn``, never per row.
-    """
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(schema)
-    n_keys = len(keys)
-
-    def run(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            cols = [c.to_pylist() for c in batch.columns[n_keys:]]
-            src, out = [], []
-            for i, row in enumerate(zip(*cols)):
-                for values in fn(*row):
-                    src.append(i)
-                    out.append(values)
-            if not out:
-                continue
-            take = pa.array(src, type=pa.int64())
-            arrays = [
-                batch.column(k).take(take).cast(arrow_schema.field(k).type)
-                for k in range(n_keys)
-            ]
-            arrays += [
-                pa.array(values, type=arrow_schema.field(n_keys + j).type)
-                for j, values in enumerate(zip(*out))
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-    return df.select(*keys, *inputs).mapInArrow(worker_fn(run), schema)
-
-
 def map_columns(df, fn, schema, keys, inputs):
     """``fn`` over every Arrow batch of ``df``, as one ``mapInArrow``.
 
-    The column-at-a-time twin of ``map_rows``, with the same pruning
-    (only ``keys + inputs`` cross the Python boundary) and the same
-    output typing from ``schema`` (``keys`` first).  ``fn`` is called
-    once per non-empty batch with the batch's ``inputs`` columns as Arrow
+    ``keys`` and ``inputs`` are SQL text (a column name, or an
+    expression ``AS`` a name), selected in one projection: only they
+    cross the Python boundary.  ``fn`` is called once per non-empty batch with the batch's ``inputs`` columns as Arrow
     arrays (read offsets through ``functions.xxh64.spans``) and returns
     either a list of the non-key output columns, one value per input
-    row, or a tuple ``(rows, columns)`` to fan out: output row ``i``
-    carries the keys of input row ``rows[i]``.  A column is anything
-    ``pyarrow.array`` takes (a NumPy array, a list).
+    row, or a tuple ``(rows, columns)`` to filter or fan out: output row
+    ``i`` carries the keys of input row ``rows[i]``.  A column is
+    anything ``pyarrow.array`` takes (a NumPy array, a list, a tuple).
+    ``schema`` is the whole output schema, ``keys`` first (they take its
+    names and types); the output batches are typed from it with
+    ``to_arrow_schema``, so a nullable column holds ``None`` exactly,
+    whatever the other rows of the batch hold.
+
+    Setup that ``fn`` needs once (a basis matrix, a lookup table) is
+    built before the call and captured by ``fn``, never per batch.
     """
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -161,6 +118,8 @@ def map_columns(df, fn, schema, keys, inputs):
             key_cols = batch.columns[:n_keys]
             if isinstance(out, tuple):
                 rows, out = out
+                if len(rows) == 0:
+                    continue
                 take = pa.array(rows, type=pa.int64())
                 key_cols = [c.take(take) for c in key_cols]
             arrays = [
@@ -172,9 +131,27 @@ def map_columns(df, fn, schema, keys, inputs):
             ]
             yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
-    # a frame that is already exactly ``keys + inputs`` (an operator's
-    # own staging projection) needs no second select: reading its
-    # columns reuses the schema the operator typed its keys from
-    cols = [*keys, *inputs]
-    pruned = df if df.columns == cols else df.select(*cols)
-    return pruned.mapInArrow(worker_fn(run), schema)
+    return df.selectExpr(*keys, *inputs).mapInArrow(worker_fn(run), schema)
+
+
+def map_rows(df, fn, schema, keys, inputs):
+    """``fn`` over every row of ``df``: ``map_columns`` with a per-row
+    loop.
+
+    ``fn`` is called once per row with the row's ``inputs`` values (one
+    or more columns; Python objects, ``None`` for null) and yields
+    tuples of the non-key fields of ``schema``, in order; each yielded
+    tuple becomes one output row: the row's ``keys`` values followed by
+    the tuple.  Yielding nothing drops the row and yielding several fans
+    it out, so 1:1 maps, filters and fan-outs share this one path.
+    """
+
+    def rows(*arrays):
+        src, out = [], []
+        for i, row in enumerate(zip(*(a.to_pylist() for a in arrays))):
+            for values in fn(*row):
+                src.append(i)
+                out.append(values)
+        return src, list(zip(*out))
+
+    return map_columns(df, rows, schema, keys, inputs)

@@ -151,6 +151,19 @@ def hash_bytes(buf, starts, lengths, seed=SEED):
     return out
 
 
+# documents per ``fingerprints`` kernel call are cut so that each call
+# reads at most this many text bytes (a longer document is one call on
+# its own): a call peaks at about 64 bytes per text byte (character
+# starts, gram positions and hashes, the hash temporaries), so at most
+# ~70 MB whatever the Arrow batch size
+SLICE_BYTES = 1 << 20
+# the fold steps all documents still folding together while at least
+# this many are; past that, one NumPy step (~35 ufunc calls, 35-45 us)
+# costs more than folding each remaining document in plain Python
+# (~1.7 us per gram), so the longest documents finish there
+TAIL_DOCS = 16
+
+
 def fingerprints(strings, ngram: int):
     """The ``fingerprint_df`` fold over an Arrow string array, as
     int64: per document, ``acc = xxhash64(acc, xxhash64(gram))`` from
@@ -158,13 +171,33 @@ def fingerprints(strings, ngram: int):
     semantics: characters, not bytes); text shorter than ``ngram``
     characters hashes whole, and a null gives 42 (the seed).
 
-    Character starts are the bytes that are not UTF-8 continuation
-    bytes.  The documents are ordered by gram count, descending, so the
-    documents still folding at step ``t`` are a prefix, and each step is
-    one vectorized ``hash_long`` pair over that prefix."""
+    The documents are folded in runs of at most ``SLICE_BYTES`` text
+    bytes (``_fold``)."""
     buf, off = spans(strings)
-    n = len(strings)
     valid = strings.is_valid().to_numpy(zero_copy_only=False)
+    out = np.empty(len(strings), np.uint64)
+    a = 0
+    while a < len(strings):
+        b = int(np.searchsorted(off, off[a] + SLICE_BYTES, side="right")) - 1
+        b = max(b, a + 1)
+        out[a:b] = _fold(buf[off[a] : off[b]], off[a : b + 1] - off[a],
+                         valid[a:b], ngram)
+        a = b
+    return out.view(np.int64)
+
+
+def _fold(buf, off, valid, ngram: int):
+    """``fingerprints`` of the documents at ``off`` in ``buf``, uint64.
+
+    Character starts are the bytes that are not UTF-8 continuation
+    bytes.  Every gram is hashed in one ``hash_bytes`` pass.  The
+    documents are ordered by gram count, descending, so the documents
+    still folding at step ``t`` are a prefix, and each step is one
+    vectorized ``_step`` over that prefix while it holds at least
+    ``TAIL_DOCS`` documents; the longer documents then finish in
+    ``_fold_tail``, so the number of NumPy steps never depends on the
+    longest document."""
+    n = len(valid)
     cs = np.flatnonzero((buf & 0xC0) != 0x80)  # character starts
     first = np.searchsorted(cs, off)  # first char of each doc, + the end
     chars = np.diff(first)
@@ -173,18 +206,61 @@ def fingerprints(strings, ngram: int):
     out = np.full(n, SEED, np.uint64)
     short = np.flatnonzero(valid & (grams == 0))
     out[short] = hash_bytes(buf, off[short], off[short + 1] - off[short])
-    gofs = np.cumsum(grams) - grams  # each doc's first gram in ``hg``
+    gofs = np.cumsum(grams) - grams  # each doc's first gram in ``k``
     pos = np.repeat(first[:-1] - gofs, grams) + np.arange(grams.sum())
-    hg = hash_bytes(buf, cs[pos], cs[pos + ngram] - cs[pos])
+    with np.errstate(over="ignore"):
+        k = _round(_U(0), hash_bytes(buf, cs[pos], cs[pos + ngram] - cs[pos]))
+    del cs, pos
     order = np.argsort(-grams, kind="stable")
     order = order[: np.count_nonzero(grams)]
+    steps = grams[order]
     base = gofs[order]
-    live = np.searchsorted(-grams[order], -np.arange(grams.max(initial=0)))
+    tail = steps[TAIL_DOCS - 1] if len(order) >= TAIL_DOCS else 0
+    live = np.searchsorted(-steps, -np.arange(tail))
     acc = np.zeros(len(order), np.uint64)
-    for t, m in enumerate(live):
-        acc[:m] = hash_long(hg[base[:m] + t], hash_long(acc[:m], SEED))
+    with np.errstate(over="ignore"):
+        for t, m in enumerate(live):
+            acc[:m] = _step(acc[:m], k[base[:m] + t])
+    for i in np.flatnonzero(steps > tail):
+        ks = k[base[i] + tail : base[i] + steps[i]].tolist()
+        acc[i] = _fold_tail(int(acc[i]), ks)
     out[order] = acc
-    return out.view(np.int64)
+    return out
+
+
+def _step(acc, k):
+    """``hash_long(v, hash_long(acc, SEED))`` for ``k = _round(0, v)``:
+    one fold step, the second hash's input round taken ahead."""
+    h = (hash_long(acc, SEED) + (P5 + _U(8))) ^ k
+    return _fmix(_rotl(h, 27) * P1 + P4)
+
+
+_M = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (int(p) for p in (P1, P2, P3, P4, P5))
+
+
+def _fold_tail(acc: int, ks: list) -> int:
+    """``_step`` folded over ``ks`` in plain Python ints, for the few
+    documents that outlast the others in a ``_fold``."""
+    c = (int(SEED) + _P5 + 8) & _M
+    for k in ks:
+        a = acc * _P2 & _M
+        a = ((a << 31 | a >> 33) & _M) * _P1 & _M
+        h = c ^ a
+        h = (((h << 27 | h >> 37) & _M) * _P1 + _P4) & _M
+        h ^= h >> 33
+        h = h * _P2 & _M
+        h ^= h >> 29
+        h = h * _P3 & _M
+        h ^= h >> 32
+        h = ((h + _P5 + 8) & _M) ^ k
+        h = (((h << 27 | h >> 37) & _M) * _P1 + _P4) & _M
+        h ^= h >> 33
+        h = h * _P2 & _M
+        h ^= h >> 29
+        h = h * _P3 & _M
+        acc = h ^ h >> 32
+    return acc
 
 
 cloudpickle.register_pickle_by_value(sys.modules[__name__])

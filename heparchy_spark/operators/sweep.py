@@ -28,8 +28,9 @@ The same decomposition drives ``operators/skyline.py`` (prefix MAX);
 this module is the SUM/amount form with multi-column support.
 
 Step 1's equi-width bucket is the one place the corpus bins a value by
-its range: ``bin_of`` is the expression, ``range_bucket`` adds the
-broadcast (min, max) bounds it reads.  The drift histograms, the
+its range: ``bin_of`` is the expression (``sql_bin_of`` its text for
+the DuckDB oracles), ``range_bucket`` adds the broadcast (min, max)
+bounds it reads.  The drift histograms, the
 calibration and PR curves and the skyline all bucket through them.
 """
 
@@ -54,6 +55,18 @@ def bin_of(v: Column, lo: Column, hi: Column, n: int) -> Column:
         v.isNotNull(), F.when(hi == lo, F.lit(0)).otherwise(bucket)
     )
 
+
+
+def sql_bin_of(v: str, lo: str, hi: str, n: int) -> str:
+    """``bin_of`` as SQL text for the DuckDB oracles: the same bucket,
+    null for a null ``v`` (DuckDB's ``LEAST`` also skips a null
+    argument, so without the guard a null value would land in bucket
+    ``n - 1``)."""
+    return (
+        f"CASE WHEN {v} IS NULL THEN NULL WHEN {hi} = {lo} THEN 0 "
+        f"ELSE LEAST({n - 1}, CAST(FLOOR(({v} - {lo}) / (({hi} - {lo}) / {n}))"
+        " AS INTEGER)) END"
+    )
 
 def range_bucket(
     df: DataFrame,

@@ -143,32 +143,30 @@ def fingerprint_df(
     whole and null text gives 42.  Mirror:
     ``tools/build_expected.fingerprint``.
 
-    The normalization is one projection and the fold is one
-    column-pruned ``map_columns`` pass of ``functions.xxh64.fingerprints``
+    One column-pruned ``map_columns`` pass: its projection normalizes
+    the text and its kernel, ``functions.xxh64.fingerprints``, folds it
     (a NumPy port of Spark's xxhash64, vectorized across the documents
     of a batch).  Measured on a 4-core machine (``local[4]``, warm, noop
-    sink): at sf0.1 (5000 docs, 3.2M grams) the query takes 0.50-0.55 s,
-    against 2.17-2.22 s for the ``transform(sequence(...))`` +
+    sink): at sf0.1 (5000 docs, 1.47M grams) the query takes 0.50-0.55
+    s, against 2.17-2.22 s for the ``transform(sequence(...))`` +
     ``aggregate`` fold that Spark evaluated as an interpreted HOF, about
-    0.7 us per gram; the llm_pipeline benchmark's canary-normalized
-    ``text_fingerprints`` call went from 186-207 ms to 103-127 ms at
-    sf0.01 (5 interleaved pairs).  Still a shuffle-free map: it scales
-    with scan bandwidth."""
+    1.5 us per gram on these documents (at most 574 characters) and
+    quadratic in a document's length (its ``substr`` walks to each gram's position): with one
+    100k-character document added to the sf0.01 documents, 27-28 s
+    against 0.46-0.53 s now (SCALE.md "Python boundary").  Still a
+    shuffle-free map: it scales with scan bandwidth."""
     from heparchy_spark.functions import xxh64
     from heparchy_spark.operators.dedup import normalize_sql
 
-    normed = df.selectExpr(
-        sql_ident(id_col), f"{normalize_sql(text_col)} AS __norm"
-    )
     schema = T.StructType(
-        [normed.schema[id_col], T.StructField("fp64", T.LongType(), False)]
+        [df.schema[id_col], T.StructField("fp64", T.LongType(), False)]
     )
     return map_columns(
-        normed,
+        df,
         lambda texts: [xxh64.fingerprints(texts, ngram)],
         schema,
-        [id_col],
-        ["__norm"],
+        [sql_ident(id_col)],
+        [f"{normalize_sql(text_col)} AS __norm"],
     )
 
 

@@ -10,10 +10,10 @@ from heparchy_spark.operators.dataset import (
     split_assign,
     stratified_sample,
 )
-from heparchy_spark.operators.sweep import prefix_sum, range_bucket
+from heparchy_spark.operators.sweep import prefix_sum, range_bucket, sql_bin_of
 from heparchy_spark.operators.text import token_count
 from heparchy_spark.queries import register
-from heparchy_spark.queries.numeric import davg, sql_bin_of, sql_davg
+from heparchy_spark.queries.numeric import davg, sql_davg
 from heparchy_spark.queries.tables import load
 from heparchy_spark.queries.text import _TOKCOUNT_SQL
 from heparchy_spark.queries.dedup import _JACCARD_PAIRS_06_SQL

@@ -16,8 +16,8 @@ from heparchy_spark.operators.drift import (
     log_odds_terms,
     psi_fixed_bins,
 )
+from heparchy_spark.operators.sweep import sql_bin_of
 from heparchy_spark.queries import register
-from heparchy_spark.queries.numeric import sql_bin_of
 from heparchy_spark.queries.tables import load
 
 # Shared split: events before/after the midpoint of the observed range.

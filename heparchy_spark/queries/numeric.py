@@ -59,18 +59,6 @@ def sql_davg(expr: str) -> str:
     )
 
 
-def sql_bin_of(v: str, lo: str, hi: str, n: int) -> str:
-    """Oracle text of ``operators.sweep.bin_of``: the equi-width bucket
-    ``0..n-1`` of ``v`` over ``[lo, hi]``, null for a null ``v`` (DuckDB's
-    ``LEAST`` skips a null argument, so without the guard a null value
-    would land in bucket ``n - 1``)."""
-    return (
-        f"CASE WHEN {v} IS NULL THEN NULL WHEN {hi} = {lo} THEN 0 "
-        f"ELSE LEAST({n - 1}, CAST(FLOOR(({v} - {lo}) / (({hi} - {lo}) / {n}))"
-        " AS INTEGER)) END"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Exact scaled-LONG sums — the fast path beside dsum's decimal accumulation
 # ---------------------------------------------------------------------------

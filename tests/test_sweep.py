@@ -13,6 +13,7 @@ from heparchy_spark.operators.sweep import (
     interval_concurrency,
     prefix_sum,
     range_bucket,
+    sql_bin_of,
 )
 from heparchy_spark.plans import executed_plan
 
@@ -74,13 +75,11 @@ def test_bin_of_boundaries(spark):
 
 
 def test_oracle_bin_agrees_with_bin_of_on_nulls(spark):
-    """The oracles' bucket text (``queries.numeric.sql_bin_of``, on
+    """The oracles' bucket text (``operators.sweep.sql_bin_of``, on
     DuckDB) gives what ``bin_of`` gives on Spark, a null value included:
     DuckDB's ``LEAST`` skips a null, so an unguarded oracle put it in
     the last bin."""
     import duckdb
-
-    from heparchy_spark.queries.numeric import sql_bin_of
 
     rows = [
         (0.0, 0.0, 10.0),

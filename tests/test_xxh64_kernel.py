@@ -6,8 +6,8 @@ The inputs cover null, empty and 1-3 character text, text of exactly
 ``ngram`` characters, and 2-, 3- and 4-byte UTF-8 characters, at
 ``ngram`` 1, 2, 4 and 10 (10 four-byte characters are a 40-byte gram,
 which takes the >= 32-byte stripe path).  A sliced Arrow array (non-zero
-offset) and a Spark run cut into 7-row Arrow batches read the same
-values."""
+offset), documents thousands of characters long, and a Spark run cut
+into 7-row Arrow batches read the same values."""
 
 from __future__ import annotations
 
@@ -58,6 +58,30 @@ def test_fingerprints_match_mirror(ngram):
     large = pa.array(texts[40:], pa.large_string())
     assert xxh64.fingerprints(large, ngram).tolist() == want[40:]
 
+
+
+def test_fingerprints_long_documents_match_mirror(monkeypatch):
+    """Documents of thousands of characters among short ones: the fold
+    runs the shared NumPy steps while ``TAIL_DOCS`` documents are still
+    folding and finishes the longest in plain Python; with a small
+    ``SLICE_BYTES`` one array takes several kernel calls, and a document
+    longer than the cap is a call on its own.  Every way reads the
+    mirror's values."""
+    rnd = random.Random(11)
+    texts = _texts(11, 40) + [
+        "".join(rnd.choice(ALPHABET) for _ in range(n))
+        for n in (20000, 5000, 3000, 700)
+    ]
+    rnd.shuffle(texts)
+    want = [fingerprint_raw(t, 4) for t in texts]
+    arr = pa.array(texts, pa.string())
+    assert xxh64.fingerprints(arr, 4).tolist() == want
+    longest = max(range(len(texts)), key=lambda i: len(texts[i] or ""))
+    alone = xxh64.fingerprints(arr[longest : longest + 1], 4).tolist()
+    assert alone == [want[longest]]
+    monkeypatch.setattr(xxh64, "SLICE_BYTES", 256)
+    assert xxh64.fingerprints(arr, 4).tolist() == want
+    assert xxh64.fingerprints(arr[3:], 4).tolist() == want[3:]
 
 def test_hash_paths_match_mirror():
     rnd = random.Random(7)
