@@ -89,10 +89,11 @@ def map_columns(df, fn, schema, keys, inputs):
 
     ``keys`` and ``inputs`` are SQL text (a column name, or an
     expression ``AS`` a name), selected in one projection: only they
-    cross the Python boundary.  ``fn`` is called once per non-empty batch with the batch's ``inputs`` columns as Arrow
-    arrays (read offsets through ``functions.xxh64.spans``) and returns
-    either a list of the non-key output columns, one value per input
-    row, or a tuple ``(rows, columns)`` to filter or fan out: output row
+    cross the Python boundary.  ``fn`` is called once per non-empty
+    batch with the batch's ``inputs`` columns as Arrow arrays (read
+    offsets through ``functions.xxh64.spans``) and returns either a
+    list of the non-key output columns, one value per input row, or a
+    tuple ``(rows, columns)`` to filter or fan out: output row
     ``i`` carries the keys of input row ``rows[i]``.  A column is
     anything ``pyarrow.array`` takes (a NumPy array, a list, a tuple).
     ``schema`` is the whole output schema, ``keys`` first (they take its

@@ -147,7 +147,7 @@ def fingerprint_df(
     the text and its kernel, ``functions.xxh64.fingerprints``, folds it
     (a NumPy port of Spark's xxhash64, vectorized across the documents
     of a batch).  Measured on a 4-core machine (``local[4]``, warm, noop
-    sink): at sf0.1 (5000 docs, 1.47M grams) the query takes 0.50-0.55
+    sink): at sf0.1 (5000 docs, 1.47M grams) the query takes 0.55-0.62
     s, against 2.17-2.22 s for the ``transform(sequence(...))`` +
     ``aggregate`` fold that Spark evaluated as an interpreted HOF, about
     1.5 us per gram on these documents (at most 574 characters) and
