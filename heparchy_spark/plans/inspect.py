@@ -22,19 +22,31 @@ from pyspark.sql import DataFrame, SparkSession
 if TYPE_CHECKING:
     from heparchy_spark.queries import QuerySpec
 
+# Vectorized Python map nodes (Arrow batches to a Python worker)
+_PYMAP_VECTORIZED = (
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+    "MapInArrow",
+    "ArrowEvalPython",
+)
+# Python map nodes, for the broadcast walk of ``_pymap_broadcasts``
+_PYMAP = (*_PYMAP_VECTORIZED, "BatchEvalPython")
+
 # Counted operator markers of the executed plan, coarse enough to survive
-# cosmetic plan-string churn.  ``shuffle`` counts every substring, an AQE
-# initial plan included: the committed fingerprints are pinned to that.
+# cosmetic plan-string churn: each counts every occurrence of any of its
+# node names.  ``shuffle`` counts every substring, an AQE initial plan
+# included: the committed fingerprints are pinned to that.
 MARKERS = {
-    "broadcast_hash_join": "BroadcastHashJoin",
-    "sort_merge_join": "SortMergeJoin",
-    "broadcast_nested_loop": "BroadcastNestedLoopJoin",
-    "cartesian": "CartesianProduct",
-    "shuffle": "Exchange hashpartitioning",
-    "range_exchange": "Exchange rangepartitioning",
-    "expand": "Expand",
-    "generate": "Generate",
-    "python_worker": "BatchEvalPython",  # row-Python UDF: should stay 0
+    "broadcast_hash_join": ("BroadcastHashJoin",),
+    "sort_merge_join": ("SortMergeJoin",),
+    "broadcast_nested_loop": ("BroadcastNestedLoopJoin",),
+    "cartesian": ("CartesianProduct",),
+    "shuffle": ("Exchange hashpartitioning",),
+    "range_exchange": ("Exchange rangepartitioning",),
+    "expand": ("Expand",),
+    "generate": ("Generate",),
+    "python_worker": ("BatchEvalPython",),  # row-Python UDF: should stay 0
+    "python_map": _PYMAP_VECTORIZED,
 }
 
 # Iterative operators that materialize INSIDE the call: their executedPlan
@@ -60,14 +72,6 @@ RUNTIME_MATERIALIZED = {
     "dataset_leakage_safe_split",  # connected-components fixpoint counts
 }
 
-# Python map nodes, for the broadcast walk of ``_pymap_broadcasts``
-_PYMAP = (
-    "MapInPandas",
-    "FlatMapGroupsInPandas",
-    "MapInArrow",
-    "ArrowEvalPython",
-    "BatchEvalPython",
-)
 # Join hints that pin a spillable, AQE-skew-splittable shape at any size.
 _DEMOTION_HINTS = frozenset({"merge", "shuffle_hash"})
 _HINT_RE = re.compile(r"ResolvedHint \(strategy=(\w+)")
@@ -125,7 +129,7 @@ def has_partition_filters(df: DataFrame, *cols: str) -> bool:
 
 def has_broadcast_join(df: DataFrame) -> bool:
     plan = executed_plan(df)
-    return any(MARKERS[k] in plan for k in _BROADCAST_JOINS)
+    return any(m in plan for k in _BROADCAST_JOINS for m in MARKERS[k])
 
 
 def _shuffle_count(plan: str) -> int:
@@ -194,7 +198,7 @@ class PlanFacts:
 
 def facts_from_plan(executed: str, analyzed: str) -> PlanFacts:
     """Reduce an executed-plan and an analyzed-plan string to facts."""
-    markers = {k: executed.count(v) for k, v in MARKERS.items()}
+    markers = {k: sum(map(executed.count, v)) for k, v in MARKERS.items()}
     return PlanFacts(
         markers=markers,
         escalating_hints=frozenset(_HINT_RE.findall(analyzed))

@@ -10,14 +10,16 @@ Mirrors the reference API (``/root/reference/heparchy/read/hdf.py``):
 - ``len(proc)`` is metadata-only, no scan (``:444-445`` — P5),
 - ``proc[n]`` is a point lookup by key arithmetic, as the reference's
   (``:454-466`` — P3): ``chunk_id = n // evts_per_chunk`` names one chunk
-  directory, and Arrow reads the event's rows from its files with an
-  ``event_id`` filter that row-group stats prune — no Spark job
-  (``store.read_event``); ``evt.df`` is the same lookup as a
-  partition-pruned DataFrame,
-- column properties are lazy-per-column (``:262-316``): each access reads
-  exactly one column group, as the reference's per-dataset reads do,
-- iteration order is unspecified, like the reference's native B-tree order
-  (``:419-428``); ``proc.event_ids()`` gives numeric order explicitly,
+  directory, and Arrow reads it with no Spark job (``store.read_chunk``);
+  ``evt.df`` is the same lookup as a partition-pruned DataFrame,
+- column properties are lazy-per-column (``:262-316``): a column of a
+  chunk is read once, the first time any event of the chunk asks for it,
+  and each event's rows are a slice of it.  The process reader keeps the
+  last chunk it read of each table, so lookups that revisit a chunk read
+  nothing, and memory is bounded by one chunk per table,
+- iteration walks the chunks, then the events of each, as the reference
+  does (``:447-452``), so events come in ``event_id`` order, with no Spark
+  job; ``proc.event_ids()`` gives the same order as a list,
 - mutation via any mapping raises ``ReadOnlyError`` (``:49-53,140-144``).
 
 Each facade object also exposes the idiomatic Spark surface (``.df``,
@@ -32,6 +34,7 @@ import json
 import typing as ty
 import warnings
 from collections.abc import Mapping
+from dataclasses import dataclass, field
 from pathlib import Path
 
 import numpy as np
@@ -93,6 +96,20 @@ class MapReader(Mapping):
         raise ReadOnlyError("Value deletion not allowed in read mode.")
 
 
+@dataclass
+class _Chunk:
+    """The chunk of one table a process reader read last: its rows'
+    ``event_id`` keys, sorted, and the columns read from it so far."""
+
+    chunk_id: int
+    event_ids: np.ndarray | None = None
+    cols: dict[str, pa.Array] = field(default_factory=dict)
+
+    def rows(self, event_id: int) -> slice:
+        lo, hi = np.searchsorted(self.event_ids, (event_id, event_id + 1))
+        return slice(int(lo), int(hi))
+
+
 class HepEventReader:
     """Cursor over one event (``read/hdf.py:175-361``). Like the reference,
     the process reader reuses a single instance while iterating
@@ -103,13 +120,13 @@ class HepEventReader:
         self._event_id: int = -1
         self._chunk_id: int = -1
         self._evt_meta: dict | None = None
-        self._cache: dict[str, np.ndarray] = {}
+        # a copy's own rows, by (table, column); None on the shared cursor
+        self._held: dict[tuple[str, str], pa.Array] | None = None
 
     def _bind(self, event_id: int, evt_meta: dict | None = None) -> None:
         self._event_id = int(event_id)
         self._chunk_id = store_mod.chunk_of(self._event_id, self._proc.evts_per_chunk)
         self._evt_meta = evt_meta
-        self._cache = {}
 
     # -- identity / metadata ----------------------------------------------
     @property
@@ -124,23 +141,26 @@ class HepEventReader:
 
     def _meta(self) -> dict:
         if self._evt_meta is None:
-            rows = _records(self._rows("events"))
+            rows = _records(pa.table(self._rows("events")))
             if not rows:
                 raise KeyError(f"event {self._event_id} not found")
             self._evt_meta = rows[0]
         return self._evt_meta
 
-    def _rows(self, table: str, columns: list[str] | None = None) -> pa.Table:
-        """This event's rows of ``table``, read by Arrow from its one chunk
-        directory — no Spark job (``read/hdf.py:454-466``)."""
-        return store_mod.read_event(
-            self._proc._file.path,
-            table,
-            self._proc.key,
-            self._chunk_id,
-            self._event_id,
-            columns,
-        )
+    def _rows(self, table: str, columns: list[str] | None = None) -> dict[str, pa.Array]:
+        """This event's rows of ``columns`` of ``table`` (all when
+        ``None``), in row-index order: slices of the chunk the process
+        reader holds — no Spark job (``read/hdf.py:454-466``)."""
+        held = self._held
+        if held is not None and columns is not None:
+            if all((table, c) in held for c in columns):
+                return {c: held[table, c] for c in columns}
+        chunk = self._proc._chunk(table, self._chunk_id, columns)
+        rows = chunk.rows(self._event_id)
+        out = {c: chunk.cols[c][rows] for c in columns or chunk.cols}
+        if held is not None:
+            held.update({(table, c): pa.concat_arrays([a]) for c, a in out.items()})
+        return out
 
     # -- pruned single-event DataFrame ------------------------------------
     @property
@@ -153,12 +173,10 @@ class HepEventReader:
         )
 
     def _fetch(self, cols: list[str]) -> dict[str, np.ndarray]:
-        missing = [c for c in cols if c not in self._cache]
-        if missing:
-            tbl = self._rows("particles", ["pcl_idx", *missing]).sort_by("pcl_idx")
-            for c in missing:
-                self._cache[c] = tbl[c].to_numpy()
-        return {c: self._cache[c] for c in cols}
+        return {
+            c: a.to_numpy(zero_copy_only=False)
+            for c, a in self._rows("particles", cols).items()
+        }
 
     # -- column properties, lazy per access (read/hdf.py:262-316) ---------
     @property
@@ -191,16 +209,16 @@ class HepEventReader:
 
     @property
     def edges(self) -> np.ndarray:
-        tbl = self._rows("edges", ["edge_idx", "src", "dst"]).sort_by("edge_idx")
-        out = np.empty(tbl.num_rows, dtype=EDGE_DTYPE)
-        out["src"] = tbl["src"].to_numpy().astype("int32")
-        out["dst"] = tbl["dst"].to_numpy().astype("int32")
+        d = self._rows("edges", ["src", "dst"])
+        out = np.empty(len(d["src"]), dtype=EDGE_DTYPE)
+        out["src"] = d["src"].to_numpy(zero_copy_only=False).astype("int32")
+        out["dst"] = d["dst"].to_numpy(zero_copy_only=False).astype("int32")
         return out
 
     @property
     def edge_weights(self) -> np.ndarray:
-        tbl = self._rows("edges", ["edge_idx", "weight"]).sort_by("edge_idx")
-        return tbl["weight"].to_numpy().astype("float64")
+        w = self._rows("edges", ["weight"])["weight"]
+        return w.to_numpy(zero_copy_only=False).astype("float64")
 
     # -- masks / custom / meta mappings ------------------------------------
     @property
@@ -264,10 +282,18 @@ class HepEventReader:
         return out
 
     def copy(self) -> "HepEventReader":
-        """Detach a copy of the shared cursor (``read/hdf.py:356-361``)."""
+        """Detach a copy of the shared cursor (``read/hdf.py:356-361``):
+        it keeps its own copy of the event's rows read so far, so it still
+        reads after the cursor has moved to another chunk."""
         new = HepEventReader(self._proc)
         new._bind(self._event_id, self._evt_meta)
-        new._cache = dict(self._cache)
+        new._held = dict(self._held or {})
+        for table, chunk in self._proc._chunks.items():
+            if chunk.chunk_id == self._chunk_id:
+                rows = chunk.rows(self._event_id)
+                new._held.update(
+                    {(table, c): pa.concat_arrays([a[rows]]) for c, a in chunk.cols.items()}
+                )
         return new
 
 
@@ -287,6 +313,27 @@ class HepProcessReader:
             self._meta.get("evts_per_chunk") or self._file.evts_per_chunk
         )
         self._evt = HepEventReader(self)  # shared cursor, read/hdf.py:432
+        self._schemas: dict[str, pa.Schema] = {}
+        self._chunks: dict[str, _Chunk] = {}  # the last chunk read, per table
+
+    def _chunk(self, table: str, chunk_id: int, columns: list[str] | None) -> _Chunk:
+        """Chunk ``chunk_id`` of ``table`` with ``columns`` (all when
+        ``None``) read: the kept chunk when it is that one, else a new one
+        in its place. Only columns not read yet are read."""
+        if table not in self._schemas:
+            self._schemas[table] = store_mod.arrow_schema(self._file.path, table)
+        schema = self._schemas[table]
+        chunk = self._chunks.get(table)
+        if chunk is None or chunk.chunk_id != chunk_id:
+            chunk = self._chunks[table] = _Chunk(chunk_id)
+        missing = [c for c in columns or schema.names if c not in chunk.cols]
+        if missing:
+            tbl = store_mod.read_chunk(
+                self._file.path, table, self.key, chunk_id, missing, schema
+            )
+            chunk.event_ids = tbl["event_id"].to_numpy()
+            chunk.cols.update({c: tbl[c].combine_chunks() for c in missing})
+        return chunk
 
     # -- Spark-native surface ----------------------------------------------
     @property
@@ -413,14 +460,14 @@ class HepProcessReader:
         return self.events.select("event_id").sort("event_id")
 
     def __iter__(self) -> ty.Iterator[HepEventReader]:
-        """Sequential scan; order unspecified (``read/hdf.py:419-428,447-452``).
-        The single shared cursor is rebound per event — ``copy()`` to hold one."""
-        it = self.events.select(
-            "event_id", "num_pcls", "num_edges", "mask_keys", "custom_keys", "custom_meta"
-        ).toLocalIterator()
-        for row in it:
-            self._evt._bind(row["event_id"], row.asDict())
-            yield self._evt
+        """Sequential scan, chunk by chunk and event by event within each
+        (``read/hdf.py:447-452``): ``event_id`` order, one read of the
+        chunk's ``events`` rows per chunk and no Spark job. The single
+        shared cursor is rebound per event — ``copy()`` to hold one."""
+        for chunk_id in range(-(-len(self) // self.evts_per_chunk)):
+            for row in _records(pa.table(self._chunk("events", chunk_id, None).cols)):
+                self._evt._bind(row["event_id"], row)
+                yield self._evt
 
 
 class HepReader:

@@ -15,15 +15,16 @@ pruning, so a point lookup touches exactly one chunk directory (SURVEY.md P2/P3)
 and counts are served from the ``events``/``processes`` metadata tables
 without scanning particles (P5, mirroring ``read/hdf.py:444-445,255-260``).
 
-The facade's per-chunk and per-event I/O runs no Spark job: the reference
-appends a chunk and reads one event with plain h5py calls
-(``write/hdf.py:439-456``, ``read/hdf.py:454-466``), and so does this layer
-with Arrow. ``write_chunk`` puts one Parquet file into the chunk's Hive
-directory (``chunk_dir``, escaped as Spark escapes it) under a hidden name
-and renames it into place; ``read_event`` reads one event's rows from that
-directory's visible files with an ``event_id`` filter that Parquet
-row-group statistics prune. Scans stay Spark (``read_table``), and both
-sides see the same files.
+The facade's per-chunk I/O runs no Spark job: the reference appends a
+chunk and reads one event with plain h5py calls (``write/hdf.py:439-456``,
+``read/hdf.py:454-466``), and so does this layer with Arrow.
+``write_chunk`` puts one Parquet file into the chunk's Hive directory
+(``chunk_dir``, escaped as Spark escapes it) under a hidden name and
+renames it into place; ``read_chunk`` reads the asked-for columns of every
+visible file in that directory, sorted by ``(event_id, <row index>)``, so
+a reader slices any event of the chunk out of one read per column, and
+walking the chunks in order visits the events in ``event_id`` order.
+Scans stay Spark (``read_table``), and both sides see the same files.
 """
 
 from __future__ import annotations
@@ -33,8 +34,9 @@ import os
 import uuid
 from pathlib import Path
 
+import numpy as np
 import pyarrow as pa
-import pyarrow.dataset as ds
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
@@ -54,6 +56,7 @@ __all__ = [
     "read_marker",
     "is_store",
     "read_table",
+    "merge_schema",
     "save_table_schema",
     "schema_sidecar_path",
     "chunk_of",
@@ -61,7 +64,7 @@ __all__ = [
     "arrow_schema",
     "write_part",
     "write_chunk",
-    "read_event",
+    "read_chunk",
     "read_processes",
     "nested_events",
 ]
@@ -143,16 +146,18 @@ def save_table_schema(root: str | Path, name: str, schema) -> None:
     """
     p = schema_sidecar_path(root, name)
     if p.exists():
-        old = T.StructType.fromJson(json.loads(p.read_text()))
-        have = {f.name for f in old.fields}
-        merged = T.StructType(
-            list(old.fields)
-            + [f for f in schema.fields if f.name not in have]
-        )
-    else:
-        merged = schema
+        schema = merge_schema(T.StructType.fromJson(json.loads(p.read_text())), schema)
     p.parent.mkdir(parents=True, exist_ok=True)
-    p.write_text(json.dumps(merged.jsonValue()))
+    p.write_text(json.dumps(schema.jsonValue()))
+
+
+def merge_schema(old: T.StructType | None, new: T.StructType) -> T.StructType:
+    """Union by name of two schemas of one table, ``old``'s fields first;
+    a name in both keeps ``old``'s type."""
+    if old is None:
+        return new
+    have = {f.name for f in old.fields}
+    return T.StructType(list(old.fields) + [f for f in new.fields if f.name not in have])
 
 
 def read_table(spark: SparkSession, root: str | Path, name: str) -> DataFrame:
@@ -201,7 +206,7 @@ def write_part(directory: Path, data: pa.Table, codec: str) -> None:
     """Write ``data`` as one Spark-named part file in ``directory``.
 
     The file is written under a hidden ``.``-prefixed name, which Spark's
-    file listing and ``read_event`` both skip, then renamed into place, so
+    file listing and ``read_chunk`` both skip, then renamed into place, so
     a reader sees the whole file or none of it. Zero rows write no file,
     as a Spark append of an empty frame does. The schema sidecar, not the
     footer, carries the table's schema; floating-point columns, whose
@@ -250,39 +255,64 @@ def _data_files(top: Path) -> list[str]:
     )
 
 
-def _read_dir(
-    directory: Path,
-    schema: pa.Schema,
-    columns: list[str] | None,
-    where: ds.Expression | None,
-) -> pa.Table:
-    """Rows of the data files under ``directory``; a column a file lacks
-    reads as null."""
-    files = _data_files(directory)
-    if not files:
-        empty = schema.empty_table()
-        return empty.select(columns) if columns is not None else empty
-    return ds.dataset(files, schema=schema, format="parquet").to_table(
-        columns=columns, filter=where
-    )
+# The column that orders one event's rows of each partitioned table
+_ROW_INDEX = {"particles": "pcl_idx", "events": None, "edges": "edge_idx"}
 
 
-def read_event(
+def _read_files(files: list[str], schema: pa.Schema, columns: list[str]) -> pa.Table:
+    """``columns`` of the data ``files``, typed as in ``schema``; a column
+    a file lacks reads as null."""
+    target = pa.schema([schema.field(c) for c in columns])
+    parts = []
+    for path in files:
+        f = pq.ParquetFile(path)
+        have = set(f.schema_arrow.names)
+        tbl = f.read(columns=[c for c in columns if c in have])
+        parts.append(
+            pa.table(
+                [
+                    tbl[c] if c in have else pa.nulls(tbl.num_rows, target.field(c).type)
+                    for c in columns
+                ],
+                names=columns,
+            ).cast(target)
+        )
+    return pa.concat_tables(parts) if parts else target.empty_table()
+
+
+def _sorted(tbl: pa.Table, keys: list[str]) -> bool:
+    """Whether ``tbl``'s rows are in ascending ``keys`` order."""
+    steps = [np.diff(tbl[k].to_numpy()) for k in keys]
+    ok = steps[-1] > 0
+    for step in reversed(steps[:-1]):
+        ok = (step > 0) | ((step == 0) & ok)
+    return bool(ok.all())
+
+
+def read_chunk(
     root: str | Path,
     table: str,
     process: str,
     chunk_id: int,
-    event_id: int,
-    columns: list[str] | None = None,
+    columns: list[str],
+    schema: pa.Schema,
 ) -> pa.Table:
-    """One event's rows of a partitioned ``table``, read from its chunk
-    directory alone."""
-    return _read_dir(
-        chunk_dir(root, table, process, chunk_id),
-        arrow_schema(root, table),
-        columns,
-        ds.field("event_id") == event_id,
+    """One chunk's rows of a partitioned ``table``: its sort keys and
+    ``columns``, sorted by ``(event_id, <row index>)``.
+
+    ``schema`` is the table's ``arrow_schema``. Each visible file of the
+    chunk directory is read with ``pq.ParquetFile``, no Spark job; files
+    that are already in key order, as ``HepWriter`` writes them, skip the
+    sort, and files written by Spark (compaction, the HDF5 bridge) need
+    not be.
+    """
+    keys = ["event_id"] + ([_ROW_INDEX[table]] if _ROW_INDEX[table] else [])
+    tbl = _read_files(
+        _data_files(chunk_dir(root, table, process, chunk_id)),
+        schema,
+        keys + [c for c in columns if c not in keys],
     )
+    return tbl if _sorted(tbl, keys) else tbl.sort_by([(k, "ascending") for k in keys])
 
 
 def read_processes(
@@ -291,12 +321,13 @@ def read_processes(
     columns: list[str] | None = None,
 ) -> pa.Table:
     """Rows of the ``processes`` table, all or the one named ``process``."""
-    return _read_dir(
-        Path(table_path(root, "processes")),
-        arrow_schema(root, "processes"),
-        columns,
-        None if process is None else ds.field("process") == process,
+    schema = arrow_schema(root, "processes")
+    tbl = _read_files(
+        _data_files(Path(table_path(root, "processes"))), schema, schema.names
     )
+    if process is not None:
+        tbl = tbl.filter(pc.field("process") == process)
+    return tbl if columns is None else tbl.select(columns)
 
 
 def chunk_of(event_id: int, evts_per_chunk: int) -> int:

@@ -17,7 +17,8 @@ validation semantics:
 Execution model: events buffer driver-side as NumPy and flush one chunk at
 a time: per table, one Arrow table sorted by ``event_id``, written by
 ``store.write_chunk`` as one Parquet file in the chunk's Hive directory,
-and the ``processes`` row the same way on close. No Spark job runs: like
+and the ``processes`` row the same way on close, when each table's schema
+sidecar is written once, the union of its chunks' schemas. No Spark job runs: like
 the reference's h5py appends, a flush is file I/O in the writing process.
 Single-writer sequential ingest is the reference's own model (one Python
 process appending events); the *parallel* scale path is the HDF5/source
@@ -403,6 +404,7 @@ class HepWriter:
         )
         self.evts_per_chunk = evts_per_chunk
         self._process_rows: list[dict] = []
+        self._schemas: dict[str, T.StructType] = {}  # per table, saved on close
 
     def __enter__(self) -> "HepWriter":
         if self.path.exists():
@@ -432,8 +434,7 @@ class HepWriter:
         """One chunk's events, one Arrow table and one Parquet file per
         store table. Events arrive in ``event_id`` order and particles in
         ``pcl_idx`` order, so each file is sorted by ``(event_id,
-        pcl_idx)``: its row-group stats on event_id serve point lookups
-        (SURVEY.md P3)."""
+        pcl_idx)`` and ``store.read_chunk`` reads it without a sort."""
         chunk_id = batch[0]["chunk_id"]
         mask_keys = sorted({k for ev in batch for k in ev["masks"]})
         custom_keys = sorted({k for ev in batch for k in ev["custom"]})
@@ -495,7 +496,7 @@ class HepWriter:
     def _write(
         self, table: str, schema: T.StructType, process: str, chunk_id: int, data: pa.Table
     ) -> None:
-        store_mod.save_table_schema(self.path, table, schema)
+        self._schemas[table] = store_mod.merge_schema(self._schemas.get(table), schema)
         store_mod.write_chunk(self.path, table, process, chunk_id, data, self.codec)
 
     def _commit_process(
@@ -524,7 +525,10 @@ class HepWriter:
     def __exit__(self, exc_type, exc_value, exc_tb) -> None:
         if exc_type is not None:
             return
-        store_mod.save_table_schema(self.path, "processes", PROCESSES_SCHEMA)
+        # each table's schema sidecar once, the union of its chunks' schemas;
+        # the marker goes last, so a store cut short is no store
+        for table, schema in {**self._schemas, "processes": PROCESSES_SCHEMA}.items():
+            store_mod.save_table_schema(self.path, table, schema)
         store_mod.write_part(
             Path(store_mod.table_path(self.path, "processes")),
             pa.Table.from_pylist(self._process_rows, schema=to_arrow_schema(PROCESSES_SCHEMA)),

@@ -61,8 +61,7 @@ def make_event(rng: np.random.Generator, n: int | None = None) -> dict:
 
 
 def assert_files_event_sorted(table_dir) -> None:
-    """Every data file of a store table is sorted by ``event_id`` (tight
-    row-group stats for point lookups inside a chunk file)."""
+    """Every data file of a store table is sorted by ``event_id``."""
     import pyarrow.parquet as pq
 
     from heparchy_spark.sources.maintenance import _parquet_files

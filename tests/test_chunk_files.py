@@ -1,5 +1,5 @@
 """Chunk files of the hep store: ``HepWriter`` flushes each chunk and the
-reader facade reads each event with Arrow, straight from the chunk's Hive
+reader facade reads each chunk with Arrow, straight from its Hive
 directory and with no Spark job, while Spark scans the same files."""
 
 from __future__ import annotations
@@ -78,8 +78,9 @@ def test_hive_escaped_process_roundtrip(spark, tmp_path):
 
 
 def test_facade_io_runs_no_spark_job(spark, tmp_path):
-    """A chunk flush, the writer close and each single-event read run no
-    Spark job; a Spark scan of the same store does (the probe works)."""
+    """A chunk flush, the writer close, each single-event read and an
+    iteration run no Spark job; a Spark scan of the same store does (the
+    probe works)."""
     root = tmp_path / "s"
     rng = np.random.default_rng(43)
     events = [make_event(rng) for _ in range(5)]
@@ -111,6 +112,7 @@ def test_facade_io_runs_no_spark_job(spark, tmp_path):
         "edge_weights": lambda: r["p"][3].edge_weights,
         "count": lambda: r["p"][3].count,
         "custom_meta": lambda: r["p"][3].custom_meta["n"],
+        "iterate": lambda: [e.pmu for e in r["p"]],
     }
     assert {k: spark_jobs(spark, f) for k, f in reads.items()} == {k: [] for k in reads}
     assert spark_jobs(spark, lambda: r["p"].particles.count())

@@ -174,6 +174,22 @@ def test_fact_counts_keep_their_meanings():
     assert facts_from_plan(sibling, "").pymap_broadcasts == 0
 
 
+def test_python_map_marker_counts_vectorized_nodes_only():
+    """``python_map`` counts each vectorized Python map node; the row UDF
+    stays ``python_worker`` alone."""
+    executed = "\n".join(
+        [
+            "+- MapInArrow f(k#1)",
+            "   +- MapInPandas g(k#1)",
+            "      +- FlatMapGroupsInPandas [k#1], h(k#1)",
+            "         +- ArrowEvalPython [u(k#1)#2]",
+            "            +- BatchEvalPython [v(k#1)#3]",
+        ]
+    )
+    got = fingerprint(facts_from_plan(executed, ""))
+    assert (got["python_map"], got["python_worker"]) == (4, 1)
+
+
 def real_kinds(df) -> list[str]:
     return violations(spec(), plan_facts(df))
 
@@ -194,6 +210,16 @@ def test_real_broadcast_hint_is_an_offender(spark):
     assert real_kinds(df) == ["undeclared-broadcast-hint"]
     merged = spark.range(10).join(spark.range(5).hint("merge"), "id")
     assert real_kinds(merged) == []
+
+
+def test_real_python_map_is_counted(spark):
+    def ident(batches):
+        yield from batches
+
+    df = spark.range(10).mapInArrow(ident, "id long")
+    got = fingerprint(plan_facts(df))
+    assert (got["python_map"], got["python_worker"]) == (1, 0)
+    assert fingerprint(plan_facts(spark.range(10)))["python_map"] == 0
 
 
 def test_real_cross_join_is_an_offender(spark):
