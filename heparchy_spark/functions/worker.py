@@ -1,7 +1,7 @@
 """One wrapper for every Python function the package sends to Spark's
-Python workers (``mapInPandas``, ``mapInArrow``, ``applyInPandas``,
-``applyInPandasWithState``, ``pandas_udf``), and the columnar and
-per-row maps built on it (``map_columns``, ``map_rows``).
+Python workers (``mapInArrow``, ``arrow_udf``, ``applyInPandas``,
+``applyInPandasWithState``), and the columnar and per-row maps built on
+it (``map_columns``, ``map_rows``).
 
 A reused Python worker starts each task in
 ``pyspark.worker_util.setup_spark_files``, which calls
@@ -25,12 +25,16 @@ counts its parameters to decide whether to pass the grouping key), adds
 no plan node, and references nothing of this package, so it unpickles on
 a worker that cannot import ``heparchy_spark``.
 
-``map_columns`` is the Python map every vectorized kernel runs: one
-column-pruned ``mapInArrow`` that hands a function a batch's input
-columns as Arrow arrays and types the whole output columns it returns
-from the declared schema.  ``map_rows`` is the same map for a plain
-per-row Python function (every decode or byte-level operator), so an
-operator keeps only its function and its output schema.
+The boundary is Arrow.  A kernel that adds one column per row is an
+``arrow_udf`` wrapped here (``@arrow_udf(type)`` then ``@worker_fn``):
+it plans as ``ArrowEvalPython``, so only its input columns cross and the
+JVM keeps the rest of the row.  ``map_columns`` is the Python map for
+every kernel that filters, fans out or reshapes rows: one column-pruned
+``mapInArrow`` that hands a function a batch's input columns as Arrow
+arrays and types the whole output columns it returns from the declared
+schema.  ``map_rows`` is the same map for a plain per-row Python
+function (every decode or byte-level operator), so an operator keeps
+only its function and its output schema.
 """
 
 from __future__ import annotations

@@ -11,7 +11,9 @@ over uint64 arrays, mirrored in plain Python by ``tools/xxh64.py``:
 - ``fingerprints``: the rolling character n-gram fold of
   ``operators/text.py`` ``fingerprint_df``, vectorized across documents.
 
-``spans`` is the one place a sliced Arrow array's offsets are rebased.
+``spans`` is the one place a sliced Arrow array's offsets are rebased;
+``matrix`` reads a list column of vectors through it as one 2-D float64
+array, and ``list_array`` writes a 2-D array back as a list column.
 
 The module is registered with cloudpickle to pickle by value: a function
 sent to Python workers that calls into it carries the module along, so
@@ -26,7 +28,15 @@ import sys
 import numpy as np
 from pyspark import cloudpickle
 
-__all__ = ["fingerprints", "hash_bytes", "hash_int", "hash_long", "spans"]
+__all__ = [
+    "fingerprints",
+    "hash_bytes",
+    "hash_int",
+    "hash_long",
+    "list_array",
+    "matrix",
+    "spans",
+]
 
 _U = np.uint64
 P1 = _U(0x9E3779B185EBCA87)
@@ -92,6 +102,29 @@ def spans(arr):
     else:
         values = np.frombuffer(bufs[2], np.uint8)
     return values[off[0] : off[-1]], off - off[0]
+
+
+def matrix(arr):
+    """An Arrow list array of equal-length numeric vectors as a
+    ``(len, dim)`` float64 NumPy matrix, one row per element; a null
+    component reads as NaN.  A null or ragged row raises ``ValueError``
+    (the rows do not form a matrix)."""
+    if arr.null_count:
+        raise ValueError("a null row in a vector column")
+    values, off = spans(arr)
+    dim = int(off[1]) if len(arr) else 0
+    if np.any(np.diff(off) != dim):
+        raise ValueError("ragged rows in a vector column")
+    return values.astype(np.float64).reshape(len(arr), dim)
+
+
+def list_array(m):
+    """The rows of a 2-D NumPy array as an Arrow list array (the inverse
+    of ``matrix``), its values of ``m``'s dtype."""
+    import pyarrow as pa
+
+    off = np.arange(len(m) + 1, dtype=np.int32) * m.shape[1]
+    return pa.ListArray.from_arrays(off, np.ascontiguousarray(m).ravel())
 
 
 def _words(buf, starts, at, size: int):

@@ -5,9 +5,11 @@ The FULL-corpus Lloyd iteration — complementing ``similarity.train_centroids``
 you use when the model itself must see every row (corpus partitioning for
 mixture balancing, semantic sharding, per-cluster dedup):
 
-- **Assignment** is a broadcast-centroid vectorized pandas UDF — one BLAS
-  matmul per Arrow batch, centroids ride in the task closure (k x dim
-  doubles, tiny).  No shuffle: assignment is a pure map over the scan.
+- **Assignment** is ``nearest_centroid``, a broadcast-centroid Arrow
+  UDF — one BLAS matmul per Arrow batch, centroids ride in the task
+  closure (k x dim doubles, tiny).  No shuffle: assignment is a pure map
+  over the scan.  ``similarity.ivf_assign`` and
+  ``similarity.incremental_ivf_assign`` assign with the same kernel.
 - **Update** is one combinable aggregation per iteration: posexplode the
   vector to (cluster, dim, component) and decimal-accumulate per
   (cluster, dim) — k*dim result rows from a map-side-combined shuffle, the
@@ -33,33 +35,49 @@ map-side combine collapses them to (k * dim) per task before the exchange.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.functions import arrow_udf
 
 from heparchy_spark.functions.worker import worker_fn
+from heparchy_spark.functions.xxh64 import list_array, matrix
 
-__all__ = ["kmeans_fit_assign"]
+__all__ = ["kmeans_fit_assign", "nearest_centroid"]
 
 
-def _assign_udf(cents: np.ndarray):
-    """Vectorized nearest-centroid assignment against a closure-captured
-    centroid matrix.  ``d2 = |c|^2 - 2 x.c`` drops the |x|^2 term (constant
-    per row, argmin-invariant); ties take the lowest cluster id (NumPy
-    argmin first-match) — mirrored exactly in tools/build_expected.py."""
-    from pyspark.sql.functions import pandas_udf
+def nearest_centroid(centroids: np.ndarray, nprobe: int = 1):
+    """The nearest-centroid kernel: an Arrow UDF over a vector column
+    against the closure-captured centroid matrix, giving each vector its
+    nearest centroid's id (``int``), or for ``nprobe > 1`` the ids of its
+    ``nprobe`` nearest, nearest first (``array<int>``).
 
-    c = np.ascontiguousarray(cents, dtype="float64")
+    ``d2 = |c|^2 - 2 x.c`` drops the |x|^2 term (constant per row,
+    argmin-invariant); ties take the lowest cluster id (NumPy argmin
+    first-match, a stable argsort) — mirrored exactly in
+    tools/build_expected.py."""
+    c = np.ascontiguousarray(centroids, dtype="float64")
     cn2 = (c**2).sum(axis=1)
 
-    @pandas_udf("int")
-    @worker_fn
-    def nearest(v: pd.Series) -> pd.Series:
-        x = np.stack(v.to_numpy()).astype("float64")
-        d2 = cn2[None, :] - 2.0 * (x @ c.T)
-        return pd.Series(d2.argmin(axis=1).astype("int32"))
+    def d2(v):
+        return cn2[None, :] - 2.0 * (matrix(v) @ c.T)
 
-    return nearest
+    if nprobe == 1:
+
+        @arrow_udf("int")
+        @worker_fn
+        def nearest(v: pa.Array) -> pa.Array:
+            return pa.array(d2(v).argmin(axis=1).astype("int32"))
+
+        return nearest
+
+    @arrow_udf("array<int>")
+    @worker_fn
+    def nearest_k(v: pa.Array) -> pa.Array:
+        idx = np.argsort(d2(v), axis=1, kind="stable")[:, :nprobe]
+        return list_array(idx.astype("int32"))
+
+    return nearest_k
 
 
 def kmeans_fit_assign(
@@ -92,7 +110,7 @@ def kmeans_fit_assign(
     )
 
     for _ in range(iters):
-        assigned = base.withColumn("__c", _assign_udf(cents)(F.col("__vec")))
+        assigned = base.withColumn("__c", nearest_centroid(cents)("__vec"))
         # One combinable agg: k*dim decimal sums + per-cluster counts.
         # The components explode off the ASSIGNED row itself (the vector
         # is right there) — no id-keyed shuffle join per round.
@@ -122,7 +140,7 @@ def kmeans_fit_assign(
                     new[c, d] = _round8(acc[c, d] / cnt[c])
         cents = new
 
-    final = base.withColumn("__c", _assign_udf(cents)(F.col("__vec")))
+    final = base.withColumn("__c", nearest_centroid(cents)("__vec"))
     dist2 = _dist2_udf(cents)
     return final.select(
         F.col("__id").alias(id_col),
@@ -145,15 +163,12 @@ def _round8(x: float) -> float:
 def _dist2_udf(cents: np.ndarray):
     """True squared distance to an already-chosen centroid — the exact
     ``((x - c) ** 2).sum()`` form, identical in the mirror."""
-    from pyspark.sql.functions import pandas_udf
-
     c = np.ascontiguousarray(cents, dtype="float64")
 
-    @pandas_udf("double")
+    @arrow_udf("double")
     @worker_fn
-    def d2(v: pd.Series, cl: pd.Series) -> pd.Series:
-        x = np.stack(v.to_numpy()).astype("float64")
+    def d2(v: pa.Array, cl: pa.Array) -> pa.Array:
         chosen = c[cl.to_numpy()]
-        return pd.Series(((x - chosen) ** 2).sum(axis=1))
+        return pa.array(((matrix(v) - chosen) ** 2).sum(axis=1))
 
     return d2

@@ -21,12 +21,16 @@ not be a column of one of those names.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql.functions import arrow_udf
 
 from heparchy_spark.functions.literals import array_sql, sql_ident
-from heparchy_spark.functions.worker import worker_fn
+from heparchy_spark.functions.worker import map_columns, worker_fn
+from heparchy_spark.functions.xxh64 import list_array, matrix
+from heparchy_spark.operators.clustering import _dist2_udf, nearest_centroid
 
 __all__ = [
     "dot",
@@ -238,10 +242,11 @@ def _bounded_sample(
     sample_size: int,
     order_col: str | None,
     hash_order: bool = False,
-) -> pd.DataFrame:
-    """Driver-side training sample, deterministic when ``order_col`` is
-    given (orderBy pushes a TakeOrdered — per-partition top-n then a
-    single bounded merge, no global sort barrier).
+) -> np.ndarray:
+    """Driver-side training sample as a ``(rows, dim)`` float64 matrix,
+    deterministic when ``order_col`` is given (orderBy pushes a
+    TakeOrdered — per-partition top-n then a single bounded merge, no
+    global sort barrier).
 
     ``hash_order`` orders by ``xxhash64(order_col)`` instead of the raw
     id: still fully deterministic, but the sample SPANS the corpus
@@ -252,7 +257,7 @@ def _bounded_sample(
     of vectors, sum n_c^2 12.8x uniform — the quadratic pair blow-up a
     clusterer exists to prevent)."""
     if order_col is None:
-        return df.select(vec_col).limit(sample_size).toPandas()
+        return _collect_matrix(df.select(vec_col).limit(sample_size))
     key = (
         F.xxhash64(F.col(order_col)) if hash_order else F.col(order_col)
     )
@@ -289,12 +294,14 @@ def _bounded_sample(
             if filtered.count() >= sample_size:
                 bounded = filtered
                 break
-    return (
-        bounded.orderBy("__ord")
-        .limit(sample_size)
-        .select(F.col("__vec").alias(vec_col))
-        .toPandas()
+    return _collect_matrix(
+        bounded.orderBy("__ord").limit(sample_size).select("__vec")
     )
+
+
+def _collect_matrix(df: DataFrame) -> np.ndarray:
+    """The one vector column of ``df``, collected as a float64 matrix."""
+    return matrix(df.toArrow().column(0).combine_chunks())
 
 
 def train_centroids(
@@ -320,8 +327,7 @@ def train_centroids(
     the WHOLE corpus rather than its id-order head (see
     ``_bounded_sample``); prefer it whenever the table grows or drifts
     over time and n exceeds ``sample_size``."""
-    pdf = _bounded_sample(df, vec_col, sample_size, order_col, hash_order)
-    x = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+    x = _bounded_sample(df, vec_col, sample_size, order_col, hash_order)
     rng = np.random.RandomState(seed)
     cents = x[rng.choice(len(x), size=min(n_centroids, len(x)), replace=False)]
     for _ in range(iters):
@@ -350,35 +356,11 @@ def ivf_assign(
     nprobe: int = 1,
     out_col: str = "__cent",
 ) -> DataFrame:
-    """Attach nearest-centroid id(s). Vectorized Arrow-batched pandas UDF —
-    one BLAS matmul per batch; centroids ride along in the task closure
-    (tiny: C x dim doubles). nprobe=1 labels base vectors; nprobe>1 emits
-    an array for query-side multi-probing."""
-    from pyspark.sql.functions import pandas_udf
-
-    cents = np.ascontiguousarray(centroids, dtype="float64")
-    cn2 = (cents**2).sum(axis=1)
-
-    if nprobe == 1:
-
-        @pandas_udf("int")
-        @worker_fn
-        def nearest(v: pd.Series) -> pd.Series:
-            x = np.stack(v.to_numpy()).astype("float64")
-            d2 = cn2[None, :] - 2.0 * (x @ cents.T)
-            return pd.Series(d2.argmin(axis=1).astype("int32"))
-
-        return df.withColumn(out_col, nearest(F.col(vec_col)))
-
-    @pandas_udf("array<int>")
-    @worker_fn
-    def nearest_k(v: pd.Series) -> pd.Series:
-        x = np.stack(v.to_numpy()).astype("float64")
-        d2 = cn2[None, :] - 2.0 * (x @ cents.T)
-        idx = np.argsort(d2, axis=1)[:, :nprobe].astype("int32")
-        return pd.Series(list(idx))
-
-    return df.withColumn(out_col, nearest_k(F.col(vec_col)))
+    """Attach nearest-centroid id(s): ``clustering.nearest_centroid``,
+    one BLAS matmul per Arrow batch; centroids ride along in the task
+    closure (tiny: C x dim doubles). nprobe=1 labels base vectors;
+    nprobe>1 emits an array for query-side multi-probing."""
+    return df.withColumn(out_col, nearest_centroid(centroids, nprobe)(vec_col))
 
 
 def ivf_topk(
@@ -447,7 +429,7 @@ def incremental_ivf_assign(
     match, is_near_dup = false) — silence is not evidence of novelty.
 
     Scale shape: assignment is the broadcast-centroid BLAS matmul of
-    ``clustering._assign_udf`` (k x dim doubles in the task closure, a
+    ``clustering.nearest_centroid`` (k x dim doubles in the task closure, a
     pure map over the batch scan — no shuffle, no retrain); the
     near-dup screen is the cluster-bounded equi-join (candidates ~
     |batch| * cell occupancy, never |batch| x |corpus|), and seen-seen
@@ -463,9 +445,7 @@ def incremental_ivf_assign(
     the max/threshold comparisons, so the plain-NumPy fixture mirror
     replays the whole pipeline bit-for-bit.
     """
-    from heparchy_spark.operators.clustering import _assign_udf, _dist2_udf
-
-    nearest = _assign_udf(centroids)
+    nearest = nearest_centroid(centroids)
     d2 = _dist2_udf(centroids)
     newa = (
         new_df.select(
@@ -667,7 +647,7 @@ def hamming_topk(
 def label_centroids(
     df: DataFrame, emb_col: str, label_col: str
 ) -> DataFrame:
-    """Per-label mean embedding via a grouped-aggregate pandas UDF — the
+    """Per-label mean embedding via a grouped-aggregate Arrow UDF — the
     UDAF extension point of the surface (SURVEY.md §2.11).
 
     Each group's vectors arrive as one Arrow batch; the mean is a single
@@ -683,10 +663,10 @@ def label_centroids(
     salt + two-phase mean (sum/count) if one label dominates.
     """
 
-    @F.pandas_udf("array<double>")
+    @arrow_udf("array<double>")
     @worker_fn
-    def centroid(v: pd.Series) -> list:
-        return [float(x) for x in np.mean(np.stack(v.to_numpy()), axis=0)]
+    def centroid(v: pa.Array) -> list:
+        return np.mean(matrix(v), axis=0).tolist()
 
     return df.groupBy(label_col).agg(
         centroid(F.col(emb_col).cast("array<double>")).alias("centroid")
@@ -719,7 +699,7 @@ def semantic_dedup(
     Scale shape: candidate pairs come from an equi-join on the cluster
     id — the clustering is exactly what makes semantic dedup tractable
     (C clusters of n/C vectors each bound the pair count by n²/C, vs n²
-    all-pairs).  Centroids broadcast twice (a pandas-UDF closure for
+    all-pairs).  Centroids broadcast twice (an Arrow-UDF closure for
     assignment, a tiny literal frame for distances); everything else is
     column algebra inside codegen.
 
@@ -776,7 +756,7 @@ def semantic_dedup(
         F.asc("dist_to_centroid"), F.asc("__id")
     )
     # Persisted: the pair self-join and the final survivor join would
-    # otherwise re-run the pandas-UDF assignment lineage three times.
+    # otherwise re-run the Arrow-UDF assignment lineage three times.
     # One row per vector (id, cluster, dist, vector, norm) — the same
     # per-doc staging contract as the minhash/simhash aggregates;
     # released below once the materialized result frame is cached.
@@ -874,8 +854,7 @@ def pq_train(
     makes the sample — hence the codebooks — deterministic on
     multi-partition input (see ``train_centroids``).
     """
-    pdf = _bounded_sample(df, vec_col, sample_size, order_col)
-    x = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+    x = _bounded_sample(df, vec_col, sample_size, order_col)
     dim = x.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -901,26 +880,24 @@ def pq_train(
 def pq_encode(
     df: DataFrame, vec_col: str, codebooks: np.ndarray, out_col: str = "__codes"
 ) -> DataFrame:
-    """Attach the m-byte PQ code (array<int>) per vector — one vectorized
-    pandas UDF, one argmin per subspace per Arrow batch.  At 100 TB this
+    """Attach the m-byte PQ code (array<int>) per vector — one Arrow
+    UDF, one argmin per subspace per Arrow batch.  At 100 TB this
     is the 4-32x storage shrink that makes the candidate scan memory-
     resident; codebooks ride in the task closure (m * n_codes * sub
     doubles)."""
-    from pyspark.sql.functions import pandas_udf
-
     books = np.ascontiguousarray(codebooks, dtype="float64")
     m, _, sub = books.shape
 
-    @pandas_udf("array<int>")
+    @arrow_udf("array<int>")
     @worker_fn
-    def encode(v: pd.Series) -> pd.Series:
-        x = np.stack(v.to_numpy()).astype("float64")
+    def encode(v: pa.Array) -> pa.Array:
+        x = matrix(v)
         codes = np.empty((len(x), m), dtype="int32")
         for s in range(m):
             xs = x[:, s * sub : (s + 1) * sub]
             d2 = ((xs[:, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
             codes[:, s] = d2.argmin(axis=1).astype("int32")
-        return pd.Series(list(codes))
+        return list_array(codes)
 
     return df.withColumn(out_col, encode(F.col(vec_col)))
 
@@ -1260,7 +1237,7 @@ def broadcast_decontaminate(
     Scale shape: the EVAL side is small by nature (benchmarks are 1e3-1e5
     rows), so it is collected once and rides the task closure as a
     normalized matrix (the IVF-centroid pattern) while the 100 TB train
-    side streams through ``mapInPandas`` — a pure map over the scan: zero
+    side streams through ``map_columns`` — a pure map over the scan: zero
     shuffles, zero joins, no candidate-generation recall dial.  Each Arrow
     batch does ONE BLAS matmul against the eval matrix, then only the few
     pairs that clear a 1e-6-loosened matmul screen are re-scored with a
@@ -1271,56 +1248,51 @@ def broadcast_decontaminate(
     ev = eval_df.select(
         F.col(id_col).alias("__eid"),
         F.col(vec_col).cast("array<double>").alias("__ev"),
-    ).collect()
+    ).toArrow()
     # id columns keep their INPUT types (string doc ids are as common as
-    # longs) — same derivation as mmr_rerank, not a hardcoded long.
-    e_type = {f.name: f.dataType.simpleString() for f in eval_df.schema}[
-        id_col
-    ]
-    t_type = {f.name: f.dataType.simpleString() for f in train.schema}[
-        id_col
-    ]
-    out_schema = (
-        f"eval_id {e_type}, train_id {t_type}, cosine_sim double"
+    # longs), not a hardcoded long.
+    schema = T.StructType(
+        [
+            T.StructField("train_id", train.schema[id_col].dataType),
+            T.StructField("eval_id", eval_df.schema[id_col].dataType),
+            T.StructField("cosine_sim", T.DoubleType()),
+        ]
     )
-    spark = train.sparkSession
-    if not ev:
-        return spark.createDataFrame([], out_schema)
-    eids = [r["__eid"] for r in ev]
-    em = np.stack([np.asarray(r["__ev"], dtype="float64") for r in ev])
+    if not ev.num_rows:
+        empty = train.sparkSession.createDataFrame([], schema)
+        return empty.select("eval_id", "train_id", "cosine_sim")
+    eids = ev.column(0).to_pylist()
+    em = matrix(ev.column(1).combine_chunks())
     em_n = em / np.linalg.norm(em, axis=1, keepdims=True)
     evl = [list(map(float, v)) for v in em]
 
-    src = train.select(
-        F.col(id_col).alias("__tid"),
-        F.col(vec_col).cast("array<double>").alias("__tv"),
-    )
+    def scan(tv):
+        x = matrix(tv)
+        xn = x / np.linalg.norm(x, axis=1, keepdims=True)
+        sims = xn @ em_n.T
+        ti, ei = np.nonzero(sims >= threshold - 1e-6)
+        rows, eval_ids, cos = [], [], []
+        for t, e in zip(ti, ei):
+            qv = evl[e]
+            # sequential fold — the engine-portable dot (see docstring)
+            d = 0.0
+            nt = 0.0
+            nq = 0.0
+            for a, b in zip(x[t], qv):
+                d += float(a) * float(b)
+                nt += float(a) * float(a)
+                nq += float(b) * float(b)
+            cs = d / (nt**0.5 * nq**0.5)
+            if cs >= threshold:
+                rows.append(t)
+                eval_ids.append(eids[e])
+                cos.append(cs)
+        return rows, [eval_ids, cos]
 
-    def scan(batches):
-        for pdf in batches:
-            x = np.stack(pdf["__tv"].to_numpy()).astype("float64")
-            xn = x / np.linalg.norm(x, axis=1, keepdims=True)
-            sims = xn @ em_n.T
-            ti, ei = np.nonzero(sims >= threshold - 1e-6)
-            rows = []
-            for t, e in zip(ti, ei):
-                tv = pdf["__tv"].iloc[t]
-                qv = evl[e]
-                # sequential fold — the engine-portable dot (see docstring)
-                d = 0.0
-                nt = 0.0
-                nq = 0.0
-                for a, b in zip(tv, qv):
-                    d += float(a) * float(b)
-                    nt += float(a) * float(a)
-                    nq += float(b) * float(b)
-                cs = d / (nt**0.5 * nq**0.5)
-                if cs >= threshold:
-                    rows.append(
-                        (eids[e], pdf["__tid"].iloc[t], cs)
-                    )
-            yield pd.DataFrame(
-                rows, columns=["eval_id", "train_id", "cosine_sim"]
-            )
-
-    return src.mapInPandas(worker_fn(scan), out_schema)
+    return map_columns(
+        train,
+        scan,
+        schema,
+        [f"{sql_ident(id_col)} AS train_id"],
+        [f"CAST({sql_ident(vec_col)} AS ARRAY<DOUBLE>)"],
+    ).select("eval_id", "train_id", "cosine_sim")

@@ -10,10 +10,12 @@ signals (length, punctuation ratio, stopword ratio, mean word length).
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql.functions import arrow_udf
 
 from heparchy_spark.functions.literals import sql_ident
 from heparchy_spark.functions.worker import map_columns, map_rows, worker_fn
@@ -639,6 +641,27 @@ def word_freqs(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
+def _bpe_merges(rules: list[tuple[str, str]]):
+    """``merge(syms)``: the symbol list ``syms`` after each BPE merge
+    rule ``(left, right)`` of ``rules`` in turn, each one greedy left to
+    right.  A closure, so it travels to Python workers by value."""
+
+    def merge(syms: list) -> list:
+        for left, right in rules:
+            out, i = [], 0
+            while i < len(syms):
+                if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
+                    out.append(left + right)
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            syms = out
+        return syms
+
+    return merge
+
+
 def bpe_train(
     df: DataFrame,
     text_col: str,
@@ -658,10 +681,10 @@ def bpe_train(
     words, not corpus size.  Each merge iteration is: adjacent-pair
     explode + weighted count (vocab-sized shuffle), a 1-row argmax
     collect (bounded by construction), and a vectorized merge of the
-    winning pair applied per word.  The merge itself is an Arrow-batched
-    pandas UDF: greedy left-to-right pair replacement is inherently
-    sequential within a word, and the vocab table is off the corpus
-    hot path where the no-Python-UDF rule applies.
+    winning pair applied per word.  The merge itself is an Arrow UDF
+    (``_bpe_merges``): greedy left-to-right pair replacement is
+    inherently sequential within a word, and the vocab table is off the
+    corpus hot path where the no-Python-UDF rule applies.
 
     Tie-break: (pair_count DESC, left ASC, right ASC) — fully
     deterministic, mirrored by the plain-Python fixture oracle.
@@ -726,33 +749,15 @@ def bpe_train(
         left, right, n = top[0].l, top[0].r, int(top[0].n)
         merges.append((idx, left, right, n))
 
-        def make_merge_udf(left: str, right: str):
-            # factory freezes the pair by value: the UDF lives on in the
-            # persisted frame's lineage, and a late recomputation must
-            # not see a LATER iteration's loop variables
-            @F.pandas_udf("array<string>")
-            @worker_fn
-            def merge_pair(s: pd.Series) -> pd.Series:
-                def m(syms: list) -> list:
-                    out, i = [], 0
-                    while i < len(syms):
-                        if (
-                            i + 1 < len(syms)
-                            and syms[i] == left
-                            and syms[i + 1] == right
-                        ):
-                            out.append(left + right)
-                            i += 2
-                        else:
-                            out.append(syms[i])
-                            i += 1
-                    return out
+        # pickled when applied below, so it keeps this iteration's pair
+        merge = _bpe_merges([(left, right)])
 
-                return s.map(m)
+        @arrow_udf("array<string>")
+        @worker_fn
+        def merge_pair(s: pa.Array) -> pa.Array:
+            out = [merge(syms) for syms in s.to_pylist()]
+            return pa.array(out, pa.list_(pa.string()))
 
-            return merge_pair
-
-        merge_pair = make_merge_udf(left, right)
         new_vocab = vocab.select(
             "freq", merge_pair("syms").alias("syms")
         ).persist()
@@ -873,30 +878,14 @@ def bpe_encode_counts(
     """
     from heparchy_spark.operators.dedup import normalize_text
 
-    rules = list(merges)
+    merge = _bpe_merges(list(merges))
 
-    @F.pandas_udf("int")
+    @arrow_udf("int")
     @worker_fn
-    def encode_len(s: pd.Series) -> pd.Series:
-        def enc(w: str) -> int:
-            syms = list(w) + ["</w>"]
-            for left, right in rules:
-                out, i = [], 0
-                while i < len(syms):
-                    if (
-                        i + 1 < len(syms)
-                        and syms[i] == left
-                        and syms[i + 1] == right
-                    ):
-                        out.append(left + right)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                syms = out
-            return len(syms)
-
-        return s.map(enc).astype("int32")
+    def encode_len(s: pa.Array) -> pa.Array:
+        return pa.array(
+            [len(merge(list(w) + ["</w>"])) for w in s.to_pylist()], pa.int32()
+        )
 
     ts = df.select(
         F.col(id_col).alias("__id"),
@@ -1095,8 +1084,9 @@ def unigram_lm_train(
     Distributed shape: the ONLY corpus-scale pass is the word-frequency
     aggregate (the wordcount shuffle).  Seeding explodes substrings of
     the DISTINCT-WORD table (bounded by vocabulary, not corpus); each
-    EM iteration is one Arrow-batched ``mapInPandas`` Viterbi pass over
-    that same word table — the per-word DP is inherently sequential,
+    EM iteration is one ``map_rows`` Viterbi pass over that same word
+    table, yielding ``(piece, freq)`` per piece of each word's best path
+    — the per-word DP is inherently sequential,
     and the word table is off the corpus hot path where the
     no-Python-UDF rule applies — plus one exact integer count
     aggregate; the candidate vocabulary (<= ``seed_size`` + alphabet)
@@ -1175,21 +1165,12 @@ def unigram_lm_train(
         table = dict(lp)
         _ml = max_len
 
-        def estep(batches):
-            for pdf in batches:
-                agg: dict = {}
-                for w, freq in zip(pdf["w"], pdf["freq"]):
-                    seg = _unigram_viterbi(str(w), table, _ml)
-                    if seg is None:
-                        continue
-                    for piece in seg:
-                        agg[piece] = agg.get(piece, 0) + int(freq)
-                yield pd.DataFrame(
-                    {"s": list(agg), "n": list(agg.values())}
-                )
+        def estep(w, freq):
+            for piece in _unigram_viterbi(w, table, _ml) or ():
+                yield piece, freq
 
         used = (
-            words.mapInPandas(worker_fn(estep), schema=count_schema)
+            map_rows(words, estep, count_schema, [], ["w", "freq"])
             .groupBy("s")
             .agg(F.sum("n").alias("n"))
             .collect()
@@ -1229,7 +1210,7 @@ def unigram_encode_counts(
     byte-fallback convention), deterministically.
 
     Scale shape mirrors :func:`bpe_encode_counts`: the Viterbi DP runs
-    once per DISTINCT word (Arrow-batched pandas over the distinct-word
+    once per DISTINCT word (an Arrow UDF over the distinct-word
     table); per-document totals come from joining the exploded token
     stream back to the encoded distinct-word table — AQE-sized, no
     broadcast hint, since the frame is unbounded at web scale — plus
@@ -1246,14 +1227,14 @@ def unigram_encode_counts(
     table = dict(vocab)
     max_len = max((len(s) for s in table), default=1)
 
-    @F.pandas_udf("int")
-    @worker_fn
-    def encode_len(s: pd.Series) -> pd.Series:
-        def enc(w: str) -> int:
-            seg = _unigram_viterbi(w, table, max_len)
-            return len(seg) if seg is not None else len(w)
+    def enc(w: str) -> int:
+        seg = _unigram_viterbi(w, table, max_len)
+        return len(seg) if seg is not None else len(w)
 
-        return s.map(enc).astype("int32")
+    @arrow_udf("int")
+    @worker_fn
+    def encode_len(s: pa.Array) -> pa.Array:
+        return pa.array([enc(w) for w in s.to_pylist()], pa.int32())
 
     ts = df.select(
         F.col(id_col).alias("__id"),
@@ -1303,9 +1284,9 @@ def rouge_l_pairs(
     Scale shape: ``pairs`` is the BOUNDED output of a banded candidate
     generator (MinHash LSH, simhash, dHash...), so the two text joins
     ship only candidate documents and the O(n*m) LCS dynamic program
-    runs in Arrow-batched ``mapInPandas`` over pair count, never corpus
-    size.  ``normalize_text`` is evaluated ABOVE the candidate joins —
-    per surviving pair row, not per corpus row — so the corpus pays
+    runs in one ``map_rows`` pass over pair count, never corpus size.
+    ``normalize_text`` is evaluated ABOVE the candidate joins — per
+    surviving pair row, not per corpus row — so the corpus pays
     zero extra regex passes beyond the generator's own (the BM25
     scan-once rule; the Project sits above the join and Catalyst never
     pushes expressions back down through one).  Integer LCS (row-
@@ -1344,68 +1325,45 @@ def rouge_l_pairs(
         ]
     )
 
-    def score(batches: ty.Iterator[pd.DataFrame]) -> ty.Iterator[pd.DataFrame]:
-        import numpy as np
+    def lcs(a: list, b: list) -> int:
+        # Row-vectorized LCS: dp[i][j] = max(prev[j-1] + eq,
+        # prev[j], cur[j-1]).  The extra cur[j-1]/prev[j] terms in
+        # the eq case are subsumed by dp's unit-step monotonicity
+        # (dp[i][j-1] <= dp[i-1][j-1]+1 and dp[i-1][j] <=
+        # dp[i-1][j-1]+1), so the value equals the textbook
+        # recurrence cell for cell; the cur[j-1] running max is
+        # np.maximum.accumulate.  Same integer table, NumPy row
+        # ops instead of a Python cell loop.
+        if not a or not b:
+            return 0
+        if len(a) > len(b):
+            a, b = b, a  # loop over the shorter side (LCS symmetric)
+        codes: dict = {}
+        bc = np.fromiter(
+            (codes.setdefault(w, len(codes)) for w in b),
+            dtype=np.int64,
+            count=len(b),
+        )
+        prev = np.zeros(len(b) + 1, dtype=np.int32)
+        cur = np.empty(len(b) + 1, dtype=np.int32)
+        for x in a:
+            xc = codes.get(x, -1)
+            np.maximum(prev[1:], prev[:-1] + (bc == xc), out=cur[1:])
+            cur[0] = 0
+            np.maximum.accumulate(cur, out=cur)
+            prev, cur = cur, prev
+        return int(prev[-1])
 
-        def lcs(a: list, b: list) -> int:
-            # Row-vectorized LCS: dp[i][j] = max(prev[j-1] + eq,
-            # prev[j], cur[j-1]).  The extra cur[j-1]/prev[j] terms in
-            # the eq case are subsumed by dp's unit-step monotonicity
-            # (dp[i][j-1] <= dp[i-1][j-1]+1 and dp[i-1][j] <=
-            # dp[i-1][j-1]+1), so the value equals the textbook
-            # recurrence cell for cell; the cur[j-1] running max is
-            # np.maximum.accumulate.  Same integer table, NumPy row
-            # ops instead of a Python cell loop.
-            if not a or not b:
-                return 0
-            if len(a) > len(b):
-                a, b = b, a  # loop over the shorter side (LCS symmetric)
-            codes: dict = {}
-            bc = np.fromiter(
-                (codes.setdefault(w, len(codes)) for w in b),
-                dtype=np.int64,
-                count=len(b),
-            )
-            prev = np.zeros(len(b) + 1, dtype=np.int32)
-            cur = np.empty(len(b) + 1, dtype=np.int32)
-            for x in a:
-                xc = codes.get(x, -1)
-                np.maximum(prev[1:], prev[:-1] + (bc == xc), out=cur[1:])
-                cur[0] = 0
-                np.maximum.accumulate(cur, out=cur)
-                prev, cur = cur, prev
-            return int(prev[-1])
+    def score(sa, sb):
+        ref = [w for w in (sa or "").split(" ") if w]
+        cand = [w for w in (sb or "").split(" ") if w]
+        ln = lcs(ref, cand)
+        p = ln / len(cand) if cand else 0.0
+        r = ln / len(ref) if ref else 0.0
+        f = 2 * p * r / (p + r) if (p + r) > 0 else 0.0
+        yield ln, round(p, 6), round(r, 6), round(f, 6)
 
-        for pdf in batches:
-            rows = []
-            for ia, ib, sa, sb in zip(
-                pdf["id_a"], pdf["id_b"], pdf["__ta"], pdf["__tb"]
-            ):
-                ref = [w for w in str(sa or "").split(" ") if w]
-                cand = [w for w in str(sb or "").split(" ") if w]
-                ln = lcs(ref, cand)
-                p = ln / len(cand) if cand else 0.0
-                r = ln / len(ref) if ref else 0.0
-                f = 2 * p * r / (p + r) if (p + r) > 0 else 0.0
-                rows.append(
-                    {
-                        "id_a": ia,
-                        "id_b": ib,
-                        "lcs_len": ln,
-                        "rouge_p": round(p, 6),
-                        "rouge_r": round(r, 6),
-                        "rouge_f": round(f, 6),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id_a", "id_b", "lcs_len",
-                    "rouge_p", "rouge_r", "rouge_f",
-                ],
-            )
-
-    return joined.mapInPandas(worker_fn(score), schema=schema)
+    return map_rows(joined, score, schema, ["id_a", "id_b"], ["__ta", "__tb"])
 
 
 def lm_perplexity(
@@ -1434,8 +1392,8 @@ def lm_perplexity(
     contract; see ``heparchy_spark.queries.numeric``).
 
     Scale shape mirrors :func:`unigram_encode_counts`: the Viterbi DP
-    runs once per DISTINCT word (Arrow-batched pandas over the
-    distinct-word table), totals come from the AQE-sized token-stream
+    runs once per DISTINCT word (an Arrow UDF over the distinct-word
+    table), totals come from the AQE-sized token-stream
     join plus one combinable aggregate.  Zero driver collects.
 
     ``distinct_words`` optionally supplies a precomputed one-row-per-
@@ -1450,25 +1408,21 @@ def lm_perplexity(
     max_len = max((len(s) for s in table), default=1)
     unk_lp = min(table.values(), default=0.0) - 1.0
 
-    @F.pandas_udf("n_tok int, lp double")
-    @worker_fn
-    def enc(s: pd.Series) -> pd.DataFrame:
-        def one(w: str) -> tuple[int, float]:
-            seg = _unigram_viterbi(w, table, max_len)
-            if seg is None:
-                return len(w), len(w) * unk_lp
-            lp = 0.0
-            for piece in seg:
-                lp += table[piece]
-            return len(seg), lp
+    def one(w: str) -> tuple[int, float]:
+        seg = _unigram_viterbi(w, table, max_len)
+        if seg is None:
+            return len(w), len(w) * unk_lp
+        lp = 0.0
+        for piece in seg:
+            lp += table[piece]
+        return len(seg), lp
 
-        pairs = [one(w) for w in s]
-        return pd.DataFrame(
-            {
-                "n_tok": pd.array([p[0] for p in pairs], dtype="int32"),
-                "lp": [p[1] for p in pairs],
-            }
-        )
+    out_type = pa.struct([("n_tok", pa.int32()), ("lp", pa.float64())])
+
+    @arrow_udf("n_tok int, lp double")
+    @worker_fn
+    def enc(s: pa.Array) -> pa.Array:
+        return pa.array([one(w) for w in s.to_pylist()], out_type)
 
     ts = df.select(
         F.col(id_col).alias("__id"),

@@ -22,12 +22,16 @@ from pyspark.sql import DataFrame, SparkSession
 if TYPE_CHECKING:
     from heparchy_spark.queries import QuerySpec
 
-# Vectorized Python map nodes (Arrow batches to a Python worker)
+# Vectorized Python map nodes (Arrow batches to a Python worker); a
+# grouped-aggregate UDF plans as ``ArrowAggregatePython`` from Spark 4.1,
+# ``AggregateInPandas`` before
 _PYMAP_VECTORIZED = (
     "MapInPandas",
     "FlatMapGroupsInPandas",
     "MapInArrow",
     "ArrowEvalPython",
+    "AggregateInPandas",
+    "ArrowAggregatePython",
 )
 # Python map nodes, for the broadcast walk of ``_pymap_broadcasts``
 _PYMAP = (*_PYMAP_VECTORIZED, "BatchEvalPython")

@@ -1060,7 +1060,7 @@ def dedup_fs_em_params(spark: SparkSession, sf_dir: str) -> DataFrame:
     "id_a) for the MinHash-LSH near-dup candidate pairs — the dedup-QA "
     "metric separating order-preserving rewrites from bag-of-shingle "
     "coincidences the Jaccard verifier cannot tell apart.  The LCS "
-    "dynamic program runs in Arrow-batched mapInPandas over the "
+    "dynamic program runs in one map_rows pass over the "
     "BOUNDED pair set (never corpus-scale); integer LCS + int/int "
     "divisions keep scores engine-exact.  Oracle = independent "
     "plain-Python mirror over the mirrored pair pipeline, precomputed "

@@ -178,9 +178,9 @@ def similarity_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFram
     "of the full train/assign/probe pipeline, precomputed — the seeded "
     "sample covers the whole sf0.01 table, so the quantizer trajectory "
     "is deterministic): seeded Lloyd coarse quantizer "
-    "(driver-side sample), vectorized pandas-UDF cell assignment, equi-join "
-    "on cell id with nprobe=2 multi-probing — the nprobe/C-cost scale path "
-    "beside LSH.",
+    "(driver-side sample), Arrow-UDF cell assignment (nearest_centroid), "
+    "equi-join on cell id with nprobe=2 multi-probing — the nprobe/C-cost "
+    "scale path beside LSH.",
     expects_broadcast="bounded query batch + fixed centroid codebook",
 )
 def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -259,7 +259,7 @@ def similarity_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Per-label mean embedding (class centroids), exploded to one row "
     "per (label, position): posexplode + per-position decimal-accumulated "
     "avg — one shuffle on (label, pos), all JVM. The UDAF twin "
-    "(grouped-agg pandas UDF returning the centroid array) is "
+    "(grouped-aggregate Arrow UDF returning the centroid array) is "
     "operators.similarity.label_centroids, pytest-asserted equal.",
 )
 def similarity_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -284,7 +284,7 @@ def similarity_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected_fixture_sql("similarity_pq_topk"),
     doc="Product-quantization ADC top-10 for 5 query vectors: per-subspace "
     "seeded Lloyd codebooks (8 x 16, trained driver-side on the bounded "
-    "sample), pandas-UDF encoding, broadcast LUT join + decimal-summed "
+    "sample), Arrow-UDF encoding, broadcast LUT join + decimal-summed "
     "partial distances (operators/similarity.py pq_*). Deterministic at "
     "fixture scale; oracle = plain-NumPy mirror of the whole train/encode/"
     "ADC pipeline, precomputed.",
@@ -1092,7 +1092,7 @@ def _decon_eval(emb: DataFrame) -> DataFrame:
     doc="Embedding-level eval-set decontamination: exact (eval, train) "
     "cosine matches at >= 0.99 over a synthetic eval set of 50 planted "
     "near-copies + 50 novel vectors — every contaminated pair found, no "
-    "recall dial.  The eval matrix rides the mapInPandas closure "
+    "recall dial.  The eval matrix rides the map_columns closure "
     "(bounded by nature) against a pure-map scan of the train side: "
     "zero shuffles at any train scale; candidates screen through one "
     "matmul per Arrow batch, survivors re-score with the engine-portable "

@@ -1386,7 +1386,7 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     "candidates, 3 hard-EM (Viterbi) rounds over the distinct-word "
     "table, +1-smoothed probabilities from exact integer usage "
     "counts; top-48 by (uses desc, subword asc).  One corpus-scale "
-    "wordcount shuffle; the EM passes are Arrow-batched mapInPandas "
+    "wordcount shuffle; the EM passes are map_rows Viterbi "
     "DP over the bounded word table (the vocab path where the "
     "no-Python-UDF rule permits it).  Oracle = independent "
     "plain-Python mirror, precomputed (operators/text.py "

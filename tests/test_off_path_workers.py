@@ -5,8 +5,9 @@ A driver that has the repository on its own ``sys.path`` only (not on
 Python workers that cannot import the package.  Every function those
 workers run must travel by value: ``functions.worker`` closures and the
 ``functions.xxh64`` kernels registered with cloudpickle.  The subprocess
-runs ``text_fingerprints`` and ``dedup_minhash_lsh_pairs`` there, and
-their rows must equal the plain-Python expected fixtures of
+runs ``NAMES`` there (the xxh64 kernels, the nearest-centroid and
+squared-distance Arrow UDFs, and the shared BPE merge loop), and their
+rows must equal the plain-Python expected fixtures of
 ``tools/build_expected.py`` (run in this session instead, the
 dedup query would leave its persisted frames in the shared session's
 cache, where later builds of related queries pick them up)."""
@@ -24,7 +25,12 @@ import pyarrow.parquet as pq
 
 ROOT = Path(__file__).resolve().parent.parent
 SF = "/root/testdata/sf0.01"
-NAMES = ["text_fingerprints", "dedup_minhash_lsh_pairs"]
+NAMES = [
+    "text_fingerprints",
+    "dedup_minhash_lsh_pairs",
+    "similarity_kmeans_assign",
+    "text_bpe_encode_counts",
+]
 
 _RUN = textwrap.dedent(
     """

@@ -184,10 +184,12 @@ def test_python_map_marker_counts_vectorized_nodes_only():
             "      +- FlatMapGroupsInPandas [k#1], h(k#1)",
             "         +- ArrowEvalPython [u(k#1)#2]",
             "            +- BatchEvalPython [v(k#1)#3]",
+            "               +- ArrowAggregatePython [k#1], [w(v#4)#5]",
+            "                  +- AggregateInPandas [k#1], [w(v#4)#5]",
         ]
     )
     got = fingerprint(facts_from_plan(executed, ""))
-    assert (got["python_map"], got["python_worker"]) == (4, 1)
+    assert (got["python_map"], got["python_worker"]) == (6, 1)
 
 
 def real_kinds(df) -> list[str]:
@@ -220,6 +222,21 @@ def test_real_python_map_is_counted(spark):
     got = fingerprint(plan_facts(df))
     assert (got["python_map"], got["python_worker"]) == (1, 0)
     assert fingerprint(plan_facts(spark.range(10)))["python_map"] == 0
+
+
+def test_real_grouped_aggregate_udf_is_counted(spark):
+    """A grouped-aggregate Arrow UDF (``label_centroids``) is a Python map
+    node, also under a broadcast."""
+    from heparchy_spark.operators.similarity import label_centroids
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 2.0], 0), (2, [3.0, 4.0], 1)],
+        "id long, e array<double>, label int",
+    )
+    cents = label_centroids(emb, "e", "label")
+    assert fingerprint(plan_facts(cents))["python_map"] == 1
+    joined = emb.join(F.broadcast(cents), "label")
+    assert plan_facts(joined).pymap_broadcasts == 1
 
 
 def test_real_cross_join_is_an_offender(spark):

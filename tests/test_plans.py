@@ -306,6 +306,25 @@ def test_no_private_jvm_handles_outside_plans():
     assert hits == []
 
 
+def test_no_pandas_at_the_vector_and_tokenizer_boundary():
+    """The clustering, similarity and text operators cross to Python
+    through Arrow (``arrow_udf``, ``functions.worker.map_columns`` /
+    ``map_rows``): a ``pandas_udf``, a ``mapInPandas`` or a module-level
+    ``import pandas`` in them fails here."""
+    import re
+    from pathlib import Path
+
+    ops = Path(__file__).resolve().parent.parent / "heparchy_spark/operators"
+    banned = re.compile(r"pandas_udf|mapInPandas|^(?:import|from) pandas\b")
+    hits = [
+        f"{name}:{i}"
+        for name in ("clustering.py", "similarity.py", "text.py")
+        for i, line in enumerate((ops / name).read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert hits == []
+
+
 def test_equi_width_buckets_only_in_sweep():
     """The equi-width bucket is written once, as ``bin_of`` in
     ``operators/sweep.py``; every other module buckets through it (or

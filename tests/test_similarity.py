@@ -783,17 +783,17 @@ def test_bounded_sample_prefilter_identical_to_naive_sort_limit(spark):
             *[(F.col("id") % (i + 3)).cast("float") for i in range(4)]
         ).alias("v"),
     )
+    def rows(frame):
+        return [list(v) for v in frame.toPandas()["v"]]
+
     for hashed in (False, True):
         key = F.xxhash64(F.col("vid")) if hashed else F.col("vid")
-        ref = df.orderBy(key).select("v").limit(1000).toPandas()
+        ref = rows(df.orderBy(key).select("v").limit(1000))
         got = _bounded_sample(df, "v", 1000, "vid", hash_order=hashed)
-        assert len(got) == 1000
-        assert all(
-            list(a) == list(b) for a, b in zip(got["v"], ref["v"])
-        ), f"sample changed (hash_order={hashed})"
+        assert got.shape == (1000, 4)
+        assert got.tolist() == ref, f"sample changed (hash_order={hashed})"
     # frame smaller than 4*sample_size: fallback path, every row kept
     tiny = df.limit(300)
     got = _bounded_sample(tiny, "v", 1000, "vid")
-    ref = tiny.orderBy("vid").select("v").toPandas()
-    assert len(got) == 300
-    assert all(list(a) == list(b) for a, b in zip(got["v"], ref["v"]))
+    assert got.shape == (300, 4)
+    assert got.tolist() == rows(tiny.orderBy("vid").select("v"))

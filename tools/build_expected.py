@@ -1446,7 +1446,7 @@ def ann_ivf_topk(
     qidx = [i for i, v in enumerate(vec_ids) if v < n_queries]
     xq = x_all[qidx]
     d2q = cn2[None, :] - 2.0 * (xq @ cents.T)
-    probes = np.argsort(d2q, axis=1)[:, :nprobe]
+    probes = np.argsort(d2q, axis=1, kind="stable")[:, :nprobe]
     cands = []
     for row, qi in enumerate(qidx):
         cells = set(int(c) for c in probes[row])
